@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.Searcher
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark (driver contract): runs the relational operator suite
@@ -257,15 +257,13 @@ object Bench {
     def p50of(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     // forced-distributed broadcast kernel: runs stay executor-side
     // (flatMapGroups by salt), norms read from the broadcast
-    val dist = new Searcher(spark, out)
-    dist.DriverKernelMaxPostings = 0
+    val dist = new Searcher(spark, Seq(out), SearchConfig(driverKernelMaxPostings = 0))
     dist.search(BenchQueries.head, 10)
     val distLats = minPerQuery(Seq.fill(3)(
       BenchQueries.map(q => time(dist.search(q, 10))._2)))
     // beyond-norms shuffle strategy: postings cogrouped with docstats by
     // salt range — unbounded corpus size, nothing broadcast
-    val shuf = new Searcher(spark, out)
-    shuf.NormsMaxDocs = 0
+    val shuf = new Searcher(spark, Seq(out), SearchConfig(normsMaxDocs = 0))
     shuf.search(BenchQueries.head, 10)
     val shufLats = minPerQuery(Seq.fill(3)(
       BenchQueries.map(q => time(shuf.search(q, 10))._2)))
@@ -296,7 +294,7 @@ object Bench {
     val tBatchDist = Seq.fill(3)(
       time(batcherD.searchManyDistributed(batch, 10))._2).min
 
-    // MultiSearcher over base + 4 delta segments — the typical long-running
+    // a searcher over base + 4 delta segments — the typical long-running
     // upsert deployment (one big base, small deltas; router picks a strategy
     // per segment)
     val deltaDirs = (0 until 4).map { d =>
@@ -310,7 +308,7 @@ object Bench {
         IndexConfig(buckets = 16, saltRange = 1L << 14, shufflePartitions = cores))
       ddir
     }
-    val multi = new graft.query.MultiSearcher(spark, out +: deltaDirs)
+    val multi = new Searcher(spark, out +: deltaDirs)
     multi.search(BenchQueries.head, 10)
     val multiLats = minPerQuery(Seq.fill(3)(
       BenchQueries.map(q => time(multi.search(q, 10))._2)))

@@ -2,7 +2,7 @@ package graft
 
 import graft.oracle.ExactScorer
 import graft.ops.{AnnIndex, Dedup, Multimodal}
-import graft.query.Searcher
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -273,7 +273,7 @@ object EngineQueries {
         .orderBy(col("query"))
     }),
 
-    // Q8/ST + K4 at scale: base + delta segments searched by MultiSearcher
+    // Q8/ST + K4 at scale: base + delta segments searched by one Searcher
     // with a mass delete-by-query on the base, across BOTH tombstone regimes
     // (broadcast sorted-array vs forced distributed anti-join) — row per
     // query asserting the two regimes stay rank-identical
@@ -303,9 +303,9 @@ object EngineQueries {
       // mass delete on the base: drop one whole source
       graft.index.IndexOps.deleteByQueryInPlace(s, work, "repo:src9")
       val queries = Seq("data table merge", "graftmarker", "filter join sort")
-      val bc = new graft.query.MultiSearcher(s, Seq(work, delta))
-      val sh = new graft.query.MultiSearcher(s, Seq(work, delta))
-      sh.TombstonesMaxBroadcast = 0 // force the distributed-anti-join regime
+      val bc = new Searcher(s, Seq(work, delta))
+      // force the distributed-anti-join regime
+      val sh = new Searcher(s, Seq(work, delta), SearchConfig(tombstonesMaxBroadcast = 0))
       val rows = queries.map { q =>
         val a = bc.search(q, 10).toSeq
         val b = sh.search(q, 10).toSeq

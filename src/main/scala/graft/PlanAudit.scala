@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.Searcher
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,8 +71,7 @@ object PlanAudit {
         "signature recompute appears in the plan.")
 
     // round 2: the dictionary probe path (scale path, no driver collect)
-    val probeSearcher = new Searcher(spark, idx)
-    probeSearcher.DictionaryMaxDriverTerms = 0
+    val probeSearcher = new Searcher(spark, Seq(idx), SearchConfig(dictionaryMaxDriverTerms = 0))
     val dictProbe = spark.read.parquet(s"$idx/dictionary")
       .filter(col("term").isin(terms: _*) &&
         col("field").isin("content", "path", "repo"))
@@ -113,8 +112,8 @@ object PlanAudit {
         "projections.")
 
     // round 5: the big-fq regime's filtered docstats side — the shape every
-    // fq-over-broadcast-bound query cogroups against (Searcher.searchShuffle
-    // with fq): QueryFilter's match set SEMI-joins docstats, nothing driver-
+    // fq-over-broadcast-bound query cogroups against (the docstats shuffle
+    // route with fq): QueryFilter's match set SEMI-joins docstats, nothing driver-
     // materialized
     val fqStats = spark.read.parquet(s"$idx/docstats")
       .select(col("docId"), col("salt"), col("lenContent"), col("lenPath"), col("lenRepo"))

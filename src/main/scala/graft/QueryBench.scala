@@ -2,12 +2,12 @@ package graft
 
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.{MultiSearcher, Searcher}
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 
 /** One-off query-strategy benchmark (results land in BENCH/BASELINE.md):
   * per-strategy p50/p95 latency (driver-local vs forced-distributed
-  * broadcast vs docstats-cogroup shuffle), MultiSearcher latency as delta
+  * broadcast vs docstats-cogroup shuffle), multi-segment latency as delta
   * segments accrete (base + 1/4/16), and batched throughput via searchMany.
   *
   * Usage: runMain graft.QueryBench [nDocs] [cores]   (defaults 200000, 16)
@@ -65,11 +65,9 @@ object QueryBench {
     println(s"== query strategies, nDocs=$nDocs cores=$cores (21 samples each) ==")
     val local = new Searcher(spark, baseDir)
     measure("driver-local kernel", q => local.search(q, 10))
-    val dist = new Searcher(spark, baseDir)
-    dist.DriverKernelMaxPostings = 0
+    val dist = new Searcher(spark, Seq(baseDir), SearchConfig(driverKernelMaxPostings = 0))
     measure("distributed broadcast", q => dist.search(q, 10))
-    val shuf = new Searcher(spark, baseDir)
-    shuf.NormsMaxDocs = 0
+    val shuf = new Searcher(spark, Seq(baseDir), SearchConfig(normsMaxDocs = 0))
     measure("docstats-cogroup shuffle", q => shuf.search(q, 10))
 
     // ---- q + fq (Solr filter query) on each regime: broadcast predicate
@@ -78,8 +76,8 @@ object QueryBench {
     val fqStr = Some("lang:scala OR lang:java")
     measure("driver-local kernel + fq", q => local.search(q, 10, fq = fqStr))
     measure("distributed bcast + fq", q => dist.search(q, 10, fq = fqStr))
-    val fqSemi = new Searcher(spark, baseDir)
-    fqSemi.FqMaxBroadcast = 0 // every fq routes to the docstats semi-join
+    // every fq routes to the docstats semi-join
+    val fqSemi = new Searcher(spark, Seq(baseDir), SearchConfig(fqMaxBroadcast = 0))
     measure("fq semi-join regime", q => fqSemi.search(q, 10, fq = fqStr))
     fqSemi.close()
 
@@ -99,7 +97,7 @@ object QueryBench {
     println(f"searchManyDistributed batch=64: ${batch.size / tBatchD}%8.1f queries/sec " +
       f"(${tBatchD * 1000 / batch.size}%6.2f ms/query amortized, one job)")
 
-    // ---- MultiSearcher vs delta-segment count ----
+    // ---- searcher latency vs delta-segment count ----
     val deltaDirs = (0 until 16).map { d =>
       val ddir = tmpDir(s"qbdelta$d")
       val ddocs = spark.range(nDocs + d * 2000L, nDocs + (d + 1) * 2000L)
@@ -109,12 +107,12 @@ object QueryBench {
       ddir
     }
     Seq(1, 4, 16).foreach { n =>
-      val multi = new MultiSearcher(spark, baseDir +: deltaDirs.take(n))
+      val multi = new Searcher(spark, baseDir +: deltaDirs.take(n))
       measure(s"multisearch base+$n deltas", q => multi.search(q, 10))
       multi.close()
     }
     // batched multi-segment: one job per segment for the whole batch
-    val multiB = new MultiSearcher(spark, baseDir +: deltaDirs.take(4))
+    val multiB = new Searcher(spark, baseDir +: deltaDirs.take(4))
     multiB.searchManyDistributed(batch.take(4), 10) // warm
     val tMultiB = (1 to 3).map(_ => time(multiB.searchManyDistributed(batch, 10))).min
     println(f"multisearch batched base+4 batch=64: ${batch.size / tMultiB}%8.1f queries/sec " +

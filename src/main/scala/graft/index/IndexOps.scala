@@ -87,7 +87,7 @@ object IndexOps {
     * with [[QueryFilter.matchingDocs]] (pushed-filter scans), write them as
     * a tombstone file straight from the DataFrame, commit. NOTHING is
     * driver-materialized — the bulk-delete regime the shuffle search
-    * strategy pairs with ([[graft.query.Searcher.TombstonesMaxBroadcast]]).
+    * strategy pairs with ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`).
     * Returns the new snapshot id.
     */
   def deleteByQueryInPlace(spark: SparkSession, indexDir: String, query: String): Long =
@@ -95,7 +95,7 @@ object IndexOps {
       QueryFilter.matchingDocs(spark, indexDir, query).select(col("docId")))
 
   /** Q8 in-place upsert: tombstone the replaced keys in the base segment and
-    * build the incoming batch as a DELTA segment — a [[graft.query.MultiSearcher]]
+    * build the incoming batch as a DELTA segment — a [[graft.query.Searcher]]
     * over (base, delta) then scores exactly like a merged rebuilt index, at
     * O(incoming) cost. Key resolution is DISTRIBUTED (docstats semi-joined
     * with the incoming keys; tombstone file written from the DataFrame), so

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the old snapshot; readers only ever see fully-committed tombstone sets.
   *
   * Two consumption regimes (the Searcher routes on [[count]]):
-  *  - below [[graft.query.Searcher.TombstonesMaxBroadcast]]: a sorted
+  *  - up to [[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`: a sorted
   *    primitive Array[Long] broadcast (8 B/id — Lucene's liveDocs-bitset
   *    analog), binary-search membership in the kernel;
   *  - above it: nothing is ever driver-materialized — the docstats cogroup
@@ -26,16 +26,14 @@ import org.apache.spark.sql.functions._
   */
 object Tombstones {
 
-  /** Below this stored-tombstone count, commits skip the prior-file dedup
-    * anti-join (see commitDeletesDF): 1/8 of the default broadcast routing
-    * bound ([[graft.query.Searcher.TombstonesMaxBroadcast]] = 2^23), so the
+  /** Default stored-tombstone count below which commits skip the prior-file
+    * dedup anti-join (the `dedupSkipBound` of commitDeletes/commitDeletesDF):
+    * 1/8 of the default broadcast routing bound
+    * ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast` = 2^23), so the
     * worst-case count inflation from never-deduped re-deletes is 12.5% of
     * the threshold — routing exactness is preserved where it matters.
-    * `var` as a test seam (IndexOpsSpec pins both regimes); @volatile so a
-    * commit racing a concurrent mutation reads a coherent value instead of
-    * flipping dedup/skip behavior non-deterministically (ADVICE r6).
     */
-  @volatile var DedupSkipBound: Long = (1L << 23) / 8
+  val DedupSkipBound: Long = (1L << 23) / 8
 
 
   /** Visible tombstone files per the CURRENT snapshot (not just ls — a
@@ -109,10 +107,12 @@ object Tombstones {
   /** Append a tombstone file with these docIds and commit a new snapshot
     * naming it. Returns the new snapshot id.
     */
-  def commitDeletes(spark: SparkSession, indexDir: String, docIds: Seq[Long]): Long = {
+  def commitDeletes(spark: SparkSession, indexDir: String, docIds: Seq[Long],
+                    dedupSkipBound: Long = DedupSkipBound): Long = {
     import spark.implicits._
     val distinctIds = docIds.distinct
-    commitDeletesDF(spark, indexDir, distinctIds.toDF("docId"), distinctIds.size.toLong)
+    commitDeletesDF(spark, indexDir, distinctIds.toDF("docId"), distinctIds.size.toLong,
+      dedupSkipBound)
   }
 
   /** Distributed commit: write the (docId) DataFrame as the next tombstone
@@ -120,19 +120,20 @@ object Tombstones {
     * backfill-upsert shape. `knownCount` skips the count job when the caller
     * already knows the DISTINCT id count (-1 = count here).
     *
-    * Once the stored count reaches [[DedupSkipBound]], deletes dedupe
+    * Once the stored count reaches `dedupSkipBound`, deletes dedupe
     * against the already-visible tombstones on write (an anti-join over
     * O(total deleted) tombstone data — same cost class as the delete
     * itself), so `tombstoneCount` tracks the stored-row reader cost and
     * cannot drift past the broadcast routing bound
-    * ([[graft.query.Searcher.TombstonesMaxBroadcast]]) on re-deletes alone
+    * ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`) on re-deletes alone
     * (VERDICT r4 nit). Below the bound the anti-join is SKIPPED — each
     * small delete would otherwise re-scan the whole tombstone history
     * (ADVICE r5) — so re-deleted ids may be stored more than once there;
     * readers dedupe on load and the count stays the honest reader cost.
     */
   def commitDeletesDF(spark: SparkSession, indexDir: String, docIds: DataFrame,
-                      knownCount: Long = -1L): Long = {
+                      knownCount: Long = -1L,
+                      dedupSkipBound: Long = DedupSkipBound): Long = {
     val snap = new Snapshot(indexDir)
     val props = snap.readProps()
     val prev = props.get("tombstones").filter(_.nonEmpty).toSeq
@@ -150,11 +151,11 @@ object Tombstones {
     // across tombstone files are harmless to exclusion readers (sorted-
     // array membership and anti-join semantics both tolerate them), the
     // stored-row count remains the honest READER COST either way, and the
-    // inflation is bounded by DedupSkipBound itself (once the count crosses
+    // inflation is bounded by dedupSkipBound itself (once the count crosses
     // the bound every later commit dedupes again), i.e. <= 12.5% of the
     // routing threshold worst-case.
     val currentCount = props.get("tombstoneCount").map(_.toLong).getOrElse(0L)
-    val dedupSkipped = prev.isEmpty || currentCount < DedupSkipBound
+    val dedupSkipped = prev.isEmpty || currentCount < dedupSkipBound
     val df =
       if (dedupSkipped) df0
       else df0.join(

@@ -48,7 +48,7 @@ final class DictProbe(spark: SparkSession, dictPath: String,
     } else None
 
   /** Driver-resident resolved entries right now (collected map + LRU) —
-    * the quantity [[graft.query.MultiSearcher]] budgets globally.
+    * the quantity a multi-segment [[Searcher]] budgets globally.
     */
   private[graft] def residentEntries: Long = collectedTerms + cacheSize
 

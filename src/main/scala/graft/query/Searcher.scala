@@ -2,12 +2,16 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.core._
-import graft.index.{IndexMeta, Snapshot}
+import graft.index.{IndexBuilder, IndexMeta, Snapshot, Tombstones}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
+import scala.concurrent.duration.Duration
 
 /** One parsed edismax clause: a query word and its per-field analyzed term.
   * Mirrors Lucene edismax structure: per word, a DisjunctionMax over qf
@@ -51,6 +55,7 @@ object QueryPlan {
   * output by construction (same Codec calls).
   */
 final class DecodedBlocks(val blocks: Array[PostingBlock]) {
+  DecodedBlocks.built.incrementAndGet()
   // AtomicReferenceArray: the DRIVER batch path (searchMany) shares one
   // cache across kernelPool threads — the race is benign (two threads
   // decode identical content; volatile set publishes a fully-written
@@ -77,6 +82,11 @@ final class DecodedBlocks(val blocks: Array[PostingBlock]) {
     }
     a
   }
+}
+
+object DecodedBlocks {
+  /** Caches built in this JVM (specs assert the capped batch path builds none). */
+  private[graft] val built = new AtomicLong(0)
 }
 
 /** Lazy block-at-a-time posting iterator over one (field, term)'s runs within
@@ -205,82 +215,249 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   def quantLen(fi: Int, docId: Long): Int = SmallFloat.byte4ToInt(bytes(fi)(docId.toInt))
 }
 
-/** Top-k retrieval over a built index (SURVEY.md §3.2 step 5).
+/** Search thresholds, fixed for a searcher's lifetime. Each bounds one
+  * driver- or broadcast-resident structure; past it a segment routes to the
+  * strategy that keeps that data distributed. Every route is rank-identical,
+  * so a spec or bench forces a regime by setting its bound to 0:
   *
-  * Two physical strategies, both rank-identical (EngineSpec gates this):
+  *  - `driverKernelMaxPostings = 0` forces the DISTRIBUTED KERNEL: a segment
+  *    whose matched postings exceed the bound scores on executors instead of
+  *    collecting its runs to the driver kernel.
+  *  - `normsMaxDocs = 0` forces the DOCSTATS SHUFFLE: a segment with more
+  *    docs never broadcasts its norms (1 byte/doc/field; 1 << 31 docs is
+  *    ~6 GB); its runs cogroup with docstats by salt range instead.
+  *  - `tombstonesMaxBroadcast = 0` also forces the DOCSTATS SHUFFLE: a
+  *    segment with more stored tombstones never broadcasts them (8 B/id;
+  *    1 << 23 ids = 64 MB); a distributed anti-join excludes them.
+  *  - `fqMaxBroadcast = 0` forces the fq SEMI-JOIN: a filter matching more of
+  *    a segment's docs is persisted and semi-joins the docstats side of the
+  *    shuffle strategy instead of riding the kernel as a sorted-array
+  *    broadcast.
+  *  - `dictionaryMaxDriverTerms = 0` forces per-query dictionary probes
+  *    ([[DictProbe]]); below it a segment's vocabulary is collected to the
+  *    driver once. The bound is global, split evenly across segments.
+  *  - `dictionaryMaxCacheTerms` bounds the LRU of probed dfs, also global and
+  *    split evenly across segments.
+  */
+case class SearchConfig(
+    driverKernelMaxPostings: Long = 4L << 20,
+    normsMaxDocs: Long = 1L << 31,
+    tombstonesMaxBroadcast: Long = 1L << 23,
+    fqMaxBroadcast: Long = 1L << 23,
+    dictionaryMaxDriverTerms: Long = 1L << 22,
+    dictionaryMaxCacheTerms: Int = 1 << 20)
+
+/** Top-k retrieval over an index held as a list of segments (SURVEY.md §3.2
+  * step 5): a built index plus any delta segments from upserts or streaming
+  * ingest ([[graft.index.IndexOps.upsertDelta]],
+  * [[graft.streaming.StreamingIngest]]). A single index is the one-segment
+  * case. As in Lucene, BM25 statistics are merged across segments once:
   *
-  *  - BROADCAST (default): dictionary loaded once into a driver map; norms
-  *    broadcast as dense byte arrays; per query ONE shuffle-free Spark job —
-  *    postings scan (term filter pushed to parquet row groups) ->
-  *    mapPartitions DAAT/WAND kernel -> per-partition top-k -> driver merge.
-  *    Right while norms fit executor memory (1 byte/doc/field).
+  *   N      = sum of segment doc counts
+  *   df(t)  = sum of segment dictionary dfs
+  *   avgLen = sum of segment length totals / N
   *
-  *  - SHUFFLE: posting runs cogrouped with docstats BY SALT RANGE; unbounded
-  *    corpus size, one shuffle of the (tiny) term-filtered runs. The scale
-  *    path when broadcast norms no longer fit.
+  * Each segment's kernel runs with these global stats and its own norms; a
+  * hit's docId is global (segment offset + local docId, offsets cumulative in
+  * the given order) and ties break on it, so segments [A, B] score exactly
+  * like one merged index of A then B.
+  *
+  * Per query and segment, a three-way router picks the physical strategy
+  * (all rank-identical; EngineSpec and MultiSearcherSpec gate this):
+  *
+  *  - DRIVER KERNEL (default): the term-filtered posting runs are collected
+  *    once and cached on the driver (the Lucene query-cache analog), norms
+  *    are read from the broadcast's local value — a repeat term runs no
+  *    Spark job at all.
+  *  - DISTRIBUTED KERNEL (matched postings above `driverKernelMaxPostings`):
+  *    one shuffle-free job — postings scan (term filter pushed to parquet
+  *    row groups) -> DAAT/WAND kernel per salt group with broadcast norms ->
+  *    per-group top-k -> driver merge.
+  *  - DOCSTATS SHUFFLE (norms, tombstones or the fq beyond their broadcast
+  *    bounds): runs cogroup with docstats by salt range; nothing is
+  *    broadcast, unbounded in corpus size and delete volume.
+  *
+  * Thresholds come from one immutable [[SearchConfig]]. The searcher pins the
+  * segments' snapshots and is dead after [[close]]; open a new one for the
+  * next snapshot or segment set.
   *
   * Deliberately NOT Serializable: the searcher holds multi-MB driver state
-  * (the resolved dictionary map, the posting-run cache), and a lambda that
+  * (the resolved dictionary maps, the posting-run caches), and a lambda that
   * accidentally captures `this` would silently ship all of it in EVERY
   * task binary (measured 7.4 MB/job at a 200k-doc index — it more than
   * tripled distributed query latency). Executor-side closures may reference
   * only local vals and [[Searcher]]'s static helpers; a regression now
   * fails loudly with NotSerializableException instead.
   */
-class Searcher(spark: SparkSession, indexDir: String) {
+class Searcher(spark: SparkSession, segmentDirs: Seq[String],
+               val config: SearchConfig = SearchConfig()) {
   import spark.implicits._
+  import Searcher._
 
-  val meta: IndexMeta = IndexMeta.fromProps(new Snapshot(indexDir).readProps())
+  /** A one-index searcher with the default [[SearchConfig]]. */
+  def this(spark: SparkSession, indexDir: String) = this(spark, Seq(indexDir))
+
+  require(segmentDirs.nonEmpty, "a searcher needs at least one segment")
+
   val DefaultFields: Seq[String] = Seq("content", "path", "repo")
 
-  /** Vocabulary cutoff below which the whole dictionary is collected once to
-    * the driver (lowest latency). Above it — code corpora at 100x scale have
-    * vocabularies that must never be driver-collected — lookups become
-    * per-query pushed-filter probes with an LRU of resolved dfs
-    * ([[DictProbe]]). Answer-identical either way (EngineSpec gates with
-    * `DictionaryMaxDriverTerms = 0`). Set BEFORE the first query.
+  /** Per-segment state, built lazily and reused across queries. The driver
+    * dictionary and run-cache bounds are budgeted across the searcher: each
+    * segment gets an equal slice, so N segments hold no more driver entries
+    * than one (BatchSearchSpec gates the dictionary sum).
     */
-  var DictionaryMaxDriverTerms: Long = 1L << 22
+  private final class Segment(val idx: Int, val dir: String, val meta: IndexMeta,
+                              val offset: Long) {
+    val dict = new DictProbe(spark, s"$dir/dictionary",
+      config.dictionaryMaxDriverTerms / segmentDirs.size,
+      math.max(1, config.dictionaryMaxCacheTerms / segmentDirs.size))
 
-  private lazy val dict = new DictProbe(spark, s"$indexDir/dictionary", DictionaryMaxDriverTerms)
-  private[graft] def dictProbes: Long = dict.probes.get()
+    lazy val tombstoneCount: Long = Tombstones.count(spark, dir)
 
-  /** df lookup for a key set (probe- or driver-cached per the threshold). */
-  def dfOf(keys: Set[(String, String)]): Map[(String, String), Long] = dict.dfOf(keys)
+    /** Tombstoned docIds broadcast once as a sorted array; kernels
+      * binary-search-skip them. Only the broadcast regime touches this.
+      */
+    lazy val tombstonesBc: Broadcast[Array[Long]] =
+      track(spark.sparkContext.broadcast(Tombstones.loadSorted(spark, dir)))
 
-  /** Tombstone volume above which the broadcast strategies are OFF the
-    * table: the planner routes to [[searchShuffle]], where tombstones are
-    * excluded by a distributed anti-join on the docstats side and nothing is
-    * driver-materialized. Below it, tombstones broadcast as a SORTED
-    * primitive Array[Long] (8 B/id, binary-search membership) — the
-    * liveDocs-bitset regime. 1 << 23 ids = 64 MB broadcast.
+    /** Dense norms broadcast once (docIds are dense ranks 0..n-1). */
+    lazy val normsBc: Broadcast[NormTable] = track {
+      normBuilds.incrementAndGet()
+      val fields = DefaultFields.toArray
+      val n = meta.nDocs.toInt
+      val arrs = fields.map(_ => new Array[Byte](n))
+      spark.read.parquet(s"$dir/docstats")
+        .select($"docId", $"lenContent", $"lenPath", $"lenRepo")
+        .as[(Long, Int, Int, Int)]
+        .collect()
+        .foreach { case (id, lc, lp, lr) =>
+          arrs(0)(id.toInt) = SmallFloat.intToByte4(lc)
+          arrs(1)(id.toInt) = SmallFloat.intToByte4(lp)
+          arrs(2)(id.toInt) = SmallFloat.intToByte4(lr)
+        }
+      spark.sparkContext.broadcast(NormTable(fields, arrs))
+    }
+
+    /** Norms and tombstones both fit their broadcast bounds. */
+    def broadcastRegime: Boolean =
+      meta.nDocs <= config.normsMaxDocs && tombstoneCount <= config.tombstonesMaxBroadcast
+
+    // postings DataFrames with the file index cached across queries, planned
+    // under the query and batch sessions so kernel stages inherit their conf
+    private lazy val postingsDF: DataFrame = querySession.read.parquet(s"$dir/postings")
+    private lazy val batchPostingsDF: DataFrame =
+      batchQuerySession.read.parquet(s"$dir/postings")
+
+    def filteredRuns(keys: Set[(String, String)],
+                     batch: Boolean = false): Dataset[PostingRun] = {
+      val termList = keys.map(_._2).toSeq
+      val fieldList = keys.map(_._1).toSeq
+      // bucket prunes PARTITION DIRECTORIES (only the terms' buckets are even
+      // listed); term/field prune row groups inside the surviving files
+      val bucketList = termList.map(b => IndexBuilder.bucketOf(b, meta.buckets)).distinct
+      (if (batch) batchPostingsDF else postingsDF)
+        .filter($"bucket".isin(bucketList: _*) &&
+          $"term".isin(termList: _*) && $"field".isin(fieldList: _*))
+        .as[PostingRun]
+    }
+
+    /** Driver-resident posting runs per (field, term), for the driver
+      * kernel only: once fetched, repeat queries over a term skip the Spark
+      * job entirely. Memory is O(cached postings), bounded by this
+      * segment's share of [[Searcher.RunCacheMaxTerms]].
+      */
+    private val runCache =
+      new ConcurrentHashMap[(String, String), Array[PostingRun]]()
+    private val runCacheMax = math.max(1, RunCacheMaxTerms / segmentDirs.size)
+
+    def fetchRuns(keys: Set[(String, String)]): Array[PostingRun] = {
+      val missing = keys.filterNot(runCache.containsKey)
+      val fetched: Map[(String, String), Array[PostingRun]] =
+        if (missing.isEmpty) Map.empty
+        else {
+          driverRunFetches.incrementAndGet()
+          val rows = filteredRuns(missing).collect()
+          // record empties too: a dictionary term with zero runs in range
+          // must not be re-fetched every query
+          val byKey = rows.groupBy(r => (r.field, r.term))
+          val all = missing.iterator
+            .map(k => k -> byKey.getOrElse(k, Array.empty[PostingRun])).toMap
+          all.foreach { case (k, v) => if (runCache.size < runCacheMax) runCache.put(k, v) }
+          all
+        }
+      keys.iterator.flatMap(k => fetched.getOrElse(k, runCache.getOrDefault(k, Array.empty)))
+        .toArray
+    }
+  }
+
+  private val segments: IndexedSeq[Segment] = {
+    var offset = 0L
+    segmentDirs.zipWithIndex.map { case (dir, i) =>
+      val meta = IndexMeta.fromProps(new Snapshot(dir).readProps())
+      val seg = new Segment(i, dir, meta, offset)
+      offset += meta.nDocs
+      seg
+    }.toIndexedSeq
+  }
+
+  /** N: documents across all segments. */
+  val totalDocs: Long = segments.iterator.map(_.meta.nDocs).sum
+
+  /** Per-field average length across all segments ([[Searcher.mergeAvgLen]]). */
+  val globalAvgLen: Map[String, Double] = mergeAvgLen(segments.map(_.meta))
+
+  /** The index's meta; only a one-segment searcher has one. */
+  def meta: IndexMeta = {
+    require(segments.size == 1, s"meta is per segment; this searcher has ${segments.size}")
+    segments.head.meta
+  }
+
+  /** Norm-table builds: at most one docstats collect per segment. */
+  private[graft] val normBuilds = new AtomicLong(0)
+
+  /** Posting-run collects to the driver. Cache hits and the executor-side
+    * routes leave it alone.
     */
-  var TombstonesMaxBroadcast: Long = 1L << 23
+  private[graft] val driverRunFetches = new AtomicLong(0)
 
-  private lazy val tombstoneCount: Long =
-    graft.index.Tombstones.count(spark, indexDir)
+  /** fq resolution jobs issued (repeat fqs stay cached). */
+  private[graft] val fqResolves = new AtomicLong(0)
 
-  /** Tombstoned docIds of the pinned snapshot (K4 in-place deletes) —
-    * broadcast once as a sorted array; kernels binary-search-skip them
-    * during scoring. Only the small regime touches this (see
-    * [[TombstonesMaxBroadcast]]).
+  private[graft] def dictProbes: Long = segments.iterator.map(_.dict.probes.get()).sum
+
+  /** Resident driver dictionary entries across all segments (collected maps
+    * plus LRU caches); bounded by the global budget at any segment count.
     */
-  lazy val tombstonesBc: Broadcast[Array[Long]] = track(
-    spark.sparkContext.broadcast(graft.index.Tombstones.loadSorted(spark, indexDir)))
+  private[graft] def residentDictEntries: Long =
+    segments.iterator.map(_.dict.residentEntries).sum
+
+  /** Global df per key (summed over segments); absent keys are omitted. */
+  def dfOf(keys: Set[(String, String)]): Map[(String, String), Long] =
+    sumDfs(keys, eachSegment(_.dict.dfOf(keys)))
+
+  def globalDf(key: (String, String)): Long = dfOf(Set(key)).getOrElse(key, 0L)
 
   /** Broadcasts created by this searcher ([[close]] inventory). */
-  private val liveBroadcasts =
-    new java.util.concurrent.ConcurrentLinkedQueue[Broadcast[_]]()
+  private val liveBroadcasts = new ConcurrentLinkedQueue[Broadcast[_]]()
   private def track[T](bc: Broadcast[T]): Broadcast[T] = { liveBroadcasts.add(bc); bc }
   private[graft] def liveBroadcastCount: Int = liveBroadcasts.size()
 
-  /** Release the norm/tombstone broadcasts. The searcher is dead after
-    * close — open a new one for the next snapshot generation.
+  /** Persisted fq match sets ([[close]] inventory — unpersist is
+    * in-flight-safe, unlike broadcast destroy: a concurrent query just
+    * recomputes the missing blocks).
+    */
+  private val livePersists = new ConcurrentLinkedQueue[DataFrame]()
+  private[graft] def livePersistCount: Int = livePersists.size()
+
+  /** Release every norm, tombstone and fq broadcast and every persisted fq
+    * set. Without this, a long-lived service cycling snapshots or segment
+    * sets accretes them in the block managers for the JVM's lifetime.
+    * In-flight queries on other threads must have completed.
     */
   def close(): Unit = {
     var bc = liveBroadcasts.poll()
     while (bc != null) {
-      Searcher.destroyQuietly(bc)
+      destroyQuietly(bc)
       bc = liveBroadcasts.poll()
     }
     var df = livePersists.poll()
@@ -289,23 +466,6 @@ class Searcher(spark: SparkSession, indexDir: String) {
       catch { case scala.util.control.NonFatal(_) => }
       df = livePersists.poll()
     }
-  }
-
-  /** Dense norms broadcast once per searcher. */
-  lazy val normsBc: Broadcast[NormTable] = track {
-    val fields = DefaultFields.toArray
-    val n = meta.nDocs.toInt
-    val arrs = fields.map(_ => new Array[Byte](n))
-    spark.read.parquet(s"$indexDir/docstats")
-      .select($"docId", $"lenContent", $"lenPath", $"lenRepo")
-      .as[(Long, Int, Int, Int)]
-      .collect()
-      .foreach { case (id, lc, lp, lr) =>
-        arrs(0)(id.toInt) = SmallFloat.intToByte4(lc)
-        arrs(1)(id.toInt) = SmallFloat.intToByte4(lp)
-        arrs(2)(id.toInt) = SmallFloat.intToByte4(lr)
-      }
-    spark.sparkContext.broadcast(NormTable(fields, arrs))
   }
 
   /** Dedicated session for the kernel-stage jobs: same SparkContext (shared
@@ -318,7 +478,7 @@ class Searcher(spark: SparkSession, indexDir: String) {
     * parallelism-first target at total/cores without touching the caller's
     * session, where normal byte-based coalescing is right.
     */
-  private lazy val querySession: SparkSession = Searcher.newQuerySession(spark)
+  private lazy val querySession: SparkSession = newQuerySession(spark)
 
   /** Session for BATCHED kernel jobs ([[searchManyDistributed]]): same
     * context, SQL conf tuned for throughput instead of latency. The
@@ -332,135 +492,273 @@ class Searcher(spark: SparkSession, indexDir: String) {
     * floors the post-shuffle coalesce at 4x parallelism (capped by the
     * index's salt-group count naturally).
     */
-  private lazy val batchQuerySession: SparkSession = Searcher.newBatchSession(spark)
+  private lazy val batchQuerySession: SparkSession = newBatchSession(spark)
 
-  /** Re-used postings DataFrame (file index cached across queries); planned
-    * under [[querySession]] so every strategy's kernel stage inherits the
-    * compute-dense coalescing conf.
+  /** `f` over every segment, in parallel on [[Searcher.segmentPool]] the way
+    * Lucene overlaps per-segment searches (latency tracks the slowest
+    * segment, not the sum); one segment runs inline. Failures propagate.
     */
-  private lazy val postingsDF: DataFrame = querySession.read.parquet(s"$indexDir/postings")
+  private def eachSegment[T](f: Segment => T): Seq[T] = inParallel(segments, segmentPool)(f)
 
-  /** [[postingsDF]] planned under [[batchQuerySession]] for the batched
-    * kernel jobs.
-    */
-  private lazy val batchPostingsDF: DataFrame =
-    batchQuerySession.read.parquet(s"$indexDir/postings")
-
-  /** Parsed clauses + idf map + mm gate + exact posting volume (sum of dfs —
-    * the driver-vs-distributed kernel selector, free from the same lookup).
-    */
-  private def plan(query: String, fields: Seq[String])
-      : Option[(Array[Clause], Map[(String, String), Double], Int, Long)] = {
+  /** Parse, look up global dfs and idfs; None when nothing can match. */
+  private def plan(query: String, fields: Seq[String]): Option[Plan] = {
     val cls = QueryPlan.clauses(query, fields)
     if (cls.isEmpty) return None
     val needed = cls.flatMap(_.perField.toSeq).toSet
-    val dfMap = dict.dfOf(needed)
-    if (dfMap.isEmpty) return None
-    val n = meta.nDocs
-    val idfMap = dfMap.map { case (k2, df) => k2 -> BM25.idf(n, df) }
-    Some((cls, idfMap, BM25.minShouldMatch(cls.length), dfMap.valuesIterator.sum))
+    val segDfs = eachSegment(_.dict.dfOf(needed))
+    val dfs = sumDfs(needed, segDfs)
+    if (dfs.isEmpty) None
+    else Some(Plan(cls, dfs.map { case (key, df) => key -> BM25.idf(totalDocs, df) },
+      BM25.minShouldMatch(cls.length),
+      segDfs.map(d => dfs.keysIterator.map(d.getOrElse(_, 0L)).sum).toIndexedSeq))
   }
 
-  private def filteredRuns(keys: Set[(String, String)],
-                           batch: Boolean = false): Dataset[PostingRun] = {
-    val termList = keys.map(_._2).toSeq
-    val fieldList = keys.map(_._1).toSeq
-    // bucket prunes PARTITION DIRECTORIES (only the terms' buckets are even
-    // listed); term/field prune row groups inside the surviving files
-    val bucketList = termList.map(b => graft.index.IndexBuilder.bucketOf(b, meta.buckets)).distinct
-    (if (batch) batchPostingsDF else postingsDF)
-      .filter($"bucket".isin(bucketList: _*) &&
-        $"term".isin(termList: _*) && $"field".isin(fieldList: _*))
-      .as[PostingRun]
-  }
-
-  /** Driver-resident hot-term posting cache (the Lucene query-cache analog
-    * for the driver-local kernel): once a (field, term)'s runs are fetched,
-    * repeat queries over that term skip the Spark job entirely. Bounded by
-    * [[RunCacheMaxTerms]] — memory is O(cached postings), the same data the
-    * kernel holds during a query. Only the driver-local strategy uses it;
-    * the distributed strategies stream runs straight to executors.
+  /** Ranked retrieval, optionally constrained to an fq's matching docs
+    * (Solr `q` + `fq` semantics: the filter never contributes to the score —
+    * BM25 ranks exactly as without it; the filter gates which docs may
+    * enter the top-k INSIDE the kernel, so k results are returned whenever
+    * k matching docs exist, never a post-filtered underfill). WAND pruning
+    * stays admissible: the filter only suppresses heap offers, so the
+    * threshold is never higher than the unfiltered run's. The fq is
+    * evaluated per segment on that segment's own docId space, which is
+    * identical to evaluating it on the merged index.
     */
-  var RunCacheMaxTerms: Int = 8192
-  private val runCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[PostingRun]]()
-  /** Spark fetches performed (for tests/telemetry — cache-hit queries don't move it). */
-  private[graft] val cacheFetches = new java.util.concurrent.atomic.AtomicLong(0)
+  def search(query: String, k: Int, fields: Seq[String] = DefaultFields,
+             fq: Option[String] = None): Array[Hit] =
+    plan(query, fields).fold(Array.empty[Hit])(searchPlanned(_, k, fq, null))
 
-  private def fetchRuns(keys: Set[(String, String)]): Array[PostingRun] = {
-    val missing = keys.filterNot(runCache.containsKey)
-    val fetched: Map[(String, String), Array[PostingRun]] =
-      if (missing.isEmpty) Map.empty
-      else {
-        cacheFetches.incrementAndGet()
-        val rows = filteredRuns(missing).collect()
-        // record empties too: a dictionary term with zero runs in range must
-        // not be re-fetched every query
-        val byKey = rows.groupBy(r => (r.field, r.term))
-        val all = missing.iterator.map(k => k -> byKey.getOrElse(k, Array.empty[PostingRun])).toMap
-        all.foreach { case (k, v) => if (runCache.size < RunCacheMaxTerms) runCache.put(k, v) }
-        all
+  private def searchPlanned(p: Plan, k: Int, fq: Option[String],
+                            sharedDec: IndexedSeq[DecodeCache]): Array[Hit] = {
+    val top = new TopK(k)
+    eachSegment(seg => searchSegment(seg, p, k, fq,
+      if (sharedDec == null) null else sharedDec(seg.idx)))
+      .foreach(_.foreach(top.offer))
+    top.sortedHits
+  }
+
+  /** One segment's hits (global docIds) through the three-way router. A
+    * segment with no matching postings returns before fq resolution, so it
+    * never pays a filter job for a cache entry this query cannot read.
+    */
+  private def searchSegment(seg: Segment, p: Plan, k: Int, fq: Option[String],
+                            sharedDec: DecodeCache): Array[Hit] = {
+    val postings = p.segPostings(seg.idx)
+    if (postings == 0) return Array.empty
+    val fqSet = fq.map(resolveFq(seg, _))
+    if (fqSet.exists(_.count == 0)) return Array.empty
+    // locals only from here on: executor closures must not capture `this`
+    val fqBc = fqSet.flatMap(_.sorted)
+    val (cls, idfMap, minMatch) = (p.clauses, p.idfMap, p.minMatch)
+    val fieldArr = DefaultFields.toArray
+    val avgLen = globalAvgLen
+    val hits: Array[Hit] =
+      if ((fq.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
+        // a big fq semi-joins docstats from its PERSISTED resolution; a
+        // broadcastable one rides the kernel predicate
+        shuffleScore(querySession, seg.dir, seg.filteredRuns(idfMap.keySet),
+          fqSet.flatMap(_.docs), fqBc,
+          (rs, ql, excl) => Kernel.scoreSalt(rs, ql, cls, fieldArr, idfMap,
+            avgLen, minMatch, k, excl))
+      else if (postings > config.driverKernelMaxPostings) {
+        val bc = seg.normsBc
+        val tsBc = seg.tombstonesBc
+        gatedJob {
+          seg.filteredRuns(idfMap.keySet)
+            .groupByKey(_.salt)
+            .flatMapGroups { (_, it) =>
+              val nt = bc.value
+              Kernel.scoreSalt(it.toArray, (fi, d) => nt.quantLen(fi, d),
+                cls, fieldArr, idfMap, avgLen, minMatch, k,
+                excludedFn(tsBc.value, fqBc.map(_.value).orNull))
+            }
+            .collect()
+        }
+      } else {
+        val nt = seg.normsBc.value // local value; no broadcast needed on driver
+        val excl = excludedFn(seg.tombstonesBc.value, fqBc.map(_.value).orNull)
+        seg.fetchRuns(idfMap.keySet).groupBy(_.salt).iterator.flatMap { case (salt, rs) =>
+          // batch calls (searchMany) pass a per-call shared decode cache:
+          // the batch's queries share head terms, so each (salt, field,
+          // term)'s blocks decode once for the whole batch instead of
+          // once per query (the distributed path's scoreBatch analog)
+          val dec =
+            if (sharedDec == null) null
+            else rs.groupBy(r => (r.field, r.term)).map { case (k2, arr) =>
+              k2 -> sharedDec.computeIfAbsent((salt, k2._1, k2._2),
+                _ => new DecodedBlocks(arr.sortBy(_.salt).flatMap(_.blocks)))
+            }
+          Kernel.scoreSalt(rs, (fi, d) => nt.quantLen(fi, d),
+            cls, fieldArr, idfMap, avgLen, minMatch, k, excl, dec)
+        }.toArray
       }
-    keys.iterator.flatMap(k => fetched.getOrElse(k, runCache.getOrDefault(k, Array.empty))).toArray
+    if (seg.offset == 0) hits else hits.map(h => Hit(seg.offset + h.docId, h.score))
   }
 
-  /** Corpus-size cutoff for the broadcast-norms strategies: norms cost
-    * 1 byte/doc/field on the driver and every executor, so beyond this the
-    * planner routes to [[searchShuffle]] (docstats never move — cogrouped by
-    * salt range), which is unbounded in corpus size. 1 << 31 docs ≈ 6 GB of
-    * norms; at the 10^12-doc target the shuffle strategy is the only shape
-    * that exists, and it is rank-identical (EngineSpec gates all three).
+  /** Batched retrieval — the amortized-throughput shape for batch workloads:
+    * per segment, ONE Spark job fetches every cache-missing term of the
+    * batch's driver-kernel queries, then each query runs the standard
+    * router (driver-kernel queries become pure cache hits, so per-query
+    * marginal cost is just the kernel), fanned out over
+    * [[Searcher.kernelPool]] — the kernels are independent CPU-bound
+    * scorers, so batch throughput scales with driver cores (every shared
+    * structure is concurrent: run caches, LRU dict caches, counters). Each
+    * query's segments fan out on the separate segment pool, so the nested
+    * blocking is acyclic. Results are identical to calling [[search]] per
+    * query, in order.
     */
-  var NormsMaxDocs: Long = 1L << 31
+  def searchMany(queries: Seq[String], k: Int,
+                 fields: Seq[String] = DefaultFields,
+                 fq: Option[String] = None): Seq[Array[Hit]] = {
+    val plans = queries.map(plan(_, fields))
+    val planned = plans.flatten
+    // ONE decode cache per segment for the whole batch (thread-safe):
+    // queries sharing terms share the block decode. Decoded arrays are ~6×
+    // the packed bytes and live for the whole call, so the caches are only
+    // used while the batch's SUMMED planned postings (an overcount — shared
+    // terms count once per query) stay under a driver-safe cap.
+    val sharedDec =
+      if (planned.iterator.map(_.segPostings.sum).sum <= SharedDecodeMaxPostings)
+        segments.map(_ => new DecodeCache())
+      else null
+    // SAME router as [[search]]: only broadcast-regime segments run the
+    // driver kernel, so only they prefetch
+    eachSegment { seg =>
+      if (seg.broadcastRegime) {
+        val keys = planned.iterator.filter { p =>
+          val n = p.segPostings(seg.idx)
+          n > 0 && n <= config.driverKernelMaxPostings
+        }.flatMap(_.idfMap.keySet).toSet
+        if (keys.nonEmpty) seg.fetchRuns(keys)
+      }
+    }
+    inParallel(plans, kernelPool)(p => p.fold(Array.empty[Hit])(searchPlanned(_, k, fq, sharedDec)))
+  }
+
+  /** Bulk retrieval for the SCALE regime — ONE Spark job per segment scores
+    * the whole batch. [[searchMany]] amortizes well while the driver kernel
+    * exists, but at the 10^12-doc target every query is distributed and the
+    * per-query path pays the Spark job floor (~0.2-0.3 s) batch-size times.
+    * Here all queries' terms ride one term-filtered scan per segment: runs
+    * group by salt as usual, and inside each salt group the kernel runs once
+    * PER QUERY over that query's terms' runs ([[Searcher.scoreBatch]]),
+    * emitting (queryIdx, Hit); the driver merges per-query top-k. Each
+    * segment follows [[search]]'s router minus the driver kernel: broadcast
+    * norms while they fit, else the docstats cogroup (norms never
+    * materialize, tombstones excluded by the distributed anti-join).
+    *
+    * Results are identical to calling [[search]] per query, in order
+    * (BatchSearchSpec gates every route bit-for-bit). Cost model: the job
+    * reads the union of the batch's posting runs once — queries sharing
+    * head terms share the scan — so batch latency tracks total distinct
+    * posting volume plus ONE job floor per segment, not batch size.
+    */
+  def searchManyDistributed(queries: Seq[String], k: Int,
+                            fields: Seq[String] = DefaultFields,
+                            fq: Option[String] = None): Seq[Array[Hit]] = {
+    val parsed = queries.map(QueryPlan.clauses(_, fields))
+    val needed = parsed.iterator.flatMap(_.iterator.flatMap(_.perField)).toSet
+    if (needed.isEmpty) return queries.map(_ => Array.empty[Hit])
+    // ONE df resolution per segment for the whole batch
+    val segDfs = eachSegment(_.dict.dfOf(needed))
+    val dfs = sumDfs(needed, segDfs)
+    val plans = parsed.zipWithIndex.flatMap { case (cls, qi) =>
+      val idf = cls.iterator.flatMap(_.perField)
+        .flatMap(key => dfs.get(key).map(df => key -> BM25.idf(totalDocs, df))).toMap
+      if (idf.isEmpty) None else Some(BatchPlan(qi, cls, idf, BM25.minShouldMatch(cls.length)))
+    }.toArray
+    if (plans.isEmpty) return queries.map(_ => Array.empty[Hit])
+    val allKeys = plans.iterator.flatMap(_.idfMap.keySet).toSet
+    val fieldArr = DefaultFields.toArray
+    val avgLen = globalAvgLen
+    val plansBc = spark.sparkContext.broadcast(plans)
+    val tagged: Seq[Array[(Int, Hit)]] =
+      try eachSegment { seg =>
+        val segKeys = allKeys.filter(key => segDfs(seg.idx).getOrElse(key, 0L) > 0)
+        // same zero-match short-circuit before fq resolution as [[search]]
+        val fqSet = if (segKeys.isEmpty) None else fq.map(resolveFq(seg, _))
+        if (segKeys.isEmpty || fqSet.exists(_.count == 0)) Array.empty[(Int, Hit)]
+        else {
+          val fqBc = fqSet.flatMap(_.sorted)
+          val runs = seg.filteredRuns(segKeys, batch = true)
+          val local: Array[(Int, Hit)] =
+            if ((fq.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
+              shuffleScore(batchQuerySession, seg.dir, runs, fqSet.flatMap(_.docs), fqBc,
+                (rs, ql, excl) => scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, k, excl))
+            else {
+              val bc = seg.normsBc
+              val tsBc = seg.tombstonesBc
+              // r7 note: a plan-chunked variant (split the batch's plans
+              // across (chunk, salt) tasks to smooth the 2.8× max/median
+              // salt-collision tail, guide §2.6) was built and MEASURED
+              // WORSE here — 245.8 → 238.0 q/s at 32 cores: duplicating the
+              // run stream per chunk forfeits the per-task shared-decode
+              // cache (task CPU 80 → 86 s) and the packing gain never
+              // covered it. The one-task-per-salt-hash shape stands.
+              gatedJob {
+                runs.groupByKey(_.salt)
+                  .flatMapGroups { (_, it) =>
+                    val nt = bc.value
+                    scoreBatch(it.toArray, plansBc.value,
+                      (fi, d) => nt.quantLen(fi, d), fieldArr, avgLen, k,
+                      excludedFn(tsBc.value, fqBc.map(_.value).orNull))
+                  }
+                  .collect()
+              }
+            }
+          if (seg.offset == 0) local
+          else local.map { case (qi, h) => (qi, Hit(seg.offset + h.docId, h.score)) }
+        }
+      } finally destroyQuietly(plansBc)
+    val tops = Array.fill(queries.length)(new TopK(k))
+    tagged.foreach(_.foreach { case (qi, h) => tops(qi).offer(h) })
+    tops.map(_.sortedHits).toSeq
+  }
+
+  private def segmentOf(globalId: Long): Segment =
+    segments.reverseIterator.find(_.offset <= globalId).get
+
+  /** Resolve a global docId back to (segmentDir, localDocId). */
+  def locate(globalId: Long): (String, Long) = {
+    val seg = segmentOf(globalId)
+    (seg.dir, globalId - seg.offset)
+  }
+
+  /** Hits joined with document identity — the user-facing result shape
+    * (`fl=*,score`): each hit's segment docstats row, one broadcast join per
+    * segment holding hits, global docIds and rank order preserved.
+    */
+  def searchDF(query: String, k: Int, fields: Seq[String] = DefaultFields,
+               fq: Option[String] = None): DataFrame = {
+    val bySeg = search(query, k, fields, fq).zipWithIndex
+      .groupBy { case (h, _) => segmentOf(h.docId).idx }
+    // no hits: the first segment's empty join still carries the schema
+    val used = segments.filter(s => bySeg.contains(s.idx))
+    (if (used.isEmpty) segments.take(1) else used).map { seg =>
+      val hitsDF = spark.createDataFrame(bySeg.getOrElse(seg.idx, Array.empty[(Hit, Int)]).toSeq
+        .map { case (h, i) => (h.docId - seg.offset, h.score, i + 1) })
+        .toDF("docId", "score", "rank")
+      spark.read.parquet(s"${seg.dir}/docstats")
+        .select("docId", "repo", "path", "commit", "lang", "sha")
+        .join(broadcast(hitsDF), "docId")
+        .select($"rank", ($"docId" + seg.offset).as("docId"), $"score",
+          $"repo", $"path", $"commit", $"lang", $"sha")
+    }.reduce(_ unionByName _).orderBy($"rank")
+  }
 
   // ---- filter queries (Solr q + fq — the reference consumer's dominant
-  // query shape: every catalog search carries visibility/type filters) ----
+  // query shape: every catalog search carries visibility/type filters),
+  // resolved per segment ----
 
-  /** Matching-doc cutoff for the broadcast fq regime: below it the filter
-    * set rides as a sorted docId array (8 B/id, binary-search membership
-    * fused into the kernel's exclusion predicate — the liveDocs shape
-    * tombstones already use); above it the query routes to the shuffle
-    * strategy where the fq set SEMI-joins the docstats side distributively
-    * and nothing is ever driver-materialized.
+  /** Solr-filterCache analog: resolved (segment, fq) -> match set, bounded
+    * LRU. Eviction releases a big-fq entry's PERSISTED match set
+    * (unpersist is in-flight-safe), so the bound really bounds storage;
+    * evicted BROADCASTS stay in the [[close]] inventory (destroy under an
+    * in-flight query is not safe).
     */
-  var FqMaxBroadcast: Long = 1L << 23
-
-  /** Solr-filterCache analog: resolved fq -> (count, broadcast) entries,
-    * bounded LRU. Eviction drops the MAP entry only — the evicted broadcast
-    * stays in the [[close]] inventory rather than being destroyed under a
-    * possibly in-flight query (the realistic working set is a handful of
-    * hot visibility filters, so eviction is rare by construction).
-    */
-  var FqCacheMaxEntries: Int = 64
-
-  /** Resolved filter query: matching-doc count + sorted-array broadcast
-    * (below [[FqMaxBroadcast]]) or a PERSISTED docId DataFrame (above it —
-    * the semi-join regime; persisting makes the filter resolve-once like
-    * Solr's filterCache instead of re-deriving the match set per query:
-    * measured 2.7x -> 1.33x the unfiltered shuffle p50 at 200k docs,
-    * BENCH/BASELINE.md). Exactly one of the two is set. Unpersist/destroy
-    * happens via [[close]]'s inventories.
-    */
-  private case class FqSet(count: Long, sorted: Option[Broadcast[Array[Long]]],
-                           docs: Option[DataFrame])
-
-  /** Persisted fq match-set DataFrames ([[close]] inventory — unpersist is
-    * in-flight-safe, unlike broadcast destroy: a concurrent query just
-    * recomputes the missing blocks).
-    */
-  private val livePersists =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private[graft] def livePersistCount: Int = livePersists.size()
-
   private val fqCache =
-    new java.util.LinkedHashMap[String, FqSet](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, FqSet]): Boolean = {
+    new java.util.LinkedHashMap[(Int, String), FqSet](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Int, String), FqSet]): Boolean = {
         val evict = size() > FqCacheMaxEntries
-        // a big-fq entry's PERSISTED match set is released on eviction —
-        // unpersist is in-flight-safe (a concurrent query recomputes the
-        // missing blocks), so the LRU bound really bounds storage, not just
-        // map entries; evicted BROADCASTS stay in the close() inventory
-        // (destroy under an in-flight query is not safe)
         if (evict) e.getValue.docs.foreach { df =>
           try df.unpersist() catch { case scala.util.control.NonFatal(_) => }
           livePersists.remove(df)
@@ -468,29 +766,28 @@ class Searcher(spark: SparkSession, indexDir: String) {
         evict
       }
     }
-  private val fqInFlight = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[FqSet]]()
-  /** fq resolution jobs issued (tests assert repeat fqs stay cached). */
-  private[graft] val fqResolves = new java.util.concurrent.atomic.AtomicLong(0)
+  private val fqInFlight =
+    new ConcurrentHashMap[(Int, String), java.util.concurrent.CompletableFuture[FqSet]]()
 
-  /** Resolve an fq once per searcher (concurrent misses on the same fq share
-    * one resolution — same in-flight pattern as [[DictProbe]]).
+  /** Resolve an fq once per (segment, searcher); concurrent misses on the
+    * same key share one resolution (same in-flight pattern as [[DictProbe]]).
     */
-  private def resolveFq(fqs: String): FqSet = {
-    val hit = fqCache.synchronized(fqCache.get(fqs))
+  private def resolveFq(seg: Segment, fqs: String): FqSet = {
+    val key = (seg.idx, fqs)
+    val hit = fqCache.synchronized(fqCache.get(key))
     if (hit != null) return hit
     val fut = new java.util.concurrent.CompletableFuture[FqSet]()
-    val prior = fqInFlight.putIfAbsent(fqs, fut)
+    val prior = fqInFlight.putIfAbsent(key, fut)
     if (prior != null) prior.join()
     else {
       // a prior resolver may have completed and retired its in-flight entry
       // between our cache miss and the putIfAbsent win — re-check before
       // resolving, or this fq double-persists and the first copy strands
       // until close()
-      val raced = fqCache.synchronized(fqCache.get(fqs))
+      val raced = fqCache.synchronized(fqCache.get(key))
       if (raced != null) {
         fut.complete(raced)
-        fqInFlight.remove(fqs, fut)
+        fqInFlight.remove(key, fut)
         return raced
       }
       try {
@@ -499,41 +796,48 @@ class Searcher(spark: SparkSession, indexDir: String) {
         // filterCache-style — then intersect; the combined set caches
         // under the canonical composite key like any other fq
         val set =
-          if (fqs.contains(Searcher.FqAndSep))
-            combineFq(fqs.split(java.util.regex.Pattern.quote(Searcher.FqAndSep))
-              .toSeq.map(resolveFq))
-          else resolveSingleFq(fqs)
-        fqCache.synchronized(fqCache.put(fqs, set))
+          if (fqs.contains(FqAndSep))
+            combineFq(fqs.split(java.util.regex.Pattern.quote(FqAndSep))
+              .toSeq.map(resolveFq(seg, _)))
+          else resolveSingleFq(seg, fqs)
+        fqCache.synchronized(fqCache.put(key, set))
         fut.complete(set)
         set
       } catch {
         case t: Throwable => fut.completeExceptionally(t); throw t
-      } finally fqInFlight.remove(fqs, fut)
+      } finally fqInFlight.remove(key, fut)
     }
   }
 
-  private def resolveSingleFq(fqs: String): FqSet = {
-    fqResolves.incrementAndGet()
-    // persist BEFORE the count so the count job doubles as cache
-    // materialization; small sets collect from the cache and release it
-    val docs = graft.index.QueryFilter
-      .matchingDocs(querySession, indexDir, fqs).select($"docId")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = docs.count()
-    if (n <= FqMaxBroadcast) {
-      val arr = docs.as[Long].collect()
+  /** Match set as a sorted-array broadcast (up to `fqMaxBroadcast` docs) or
+    * a PERSISTED docId DataFrame (above it — the semi-join regime; persisting
+    * makes the filter resolve-once like Solr's filterCache: measured 2.7x ->
+    * 1.33x the unfiltered shuffle p50 at 200k docs, BENCH/BASELINE.md).
+    * The count job doubles as the cache materialization.
+    */
+  private def persistedOrBroadcast(docs: DataFrame): FqSet = {
+    val pdf = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = pdf.count()
+    if (n <= config.fqMaxBroadcast) {
+      val arr = pdf.as[Long].collect()
       java.util.Arrays.sort(arr)
-      docs.unpersist()
+      pdf.unpersist()
       FqSet(n, Some(track(spark.sparkContext.broadcast(arr))), None)
     } else {
-      livePersists.add(docs)
-      FqSet(n, None, Some(docs))
+      livePersists.add(pdf)
+      FqSet(n, None, Some(pdf))
     }
+  }
+
+  private def resolveSingleFq(seg: Segment, fqs: String): FqSet = {
+    fqResolves.incrementAndGet()
+    persistedOrBroadcast(
+      graft.index.QueryFilter.matchingDocs(querySession, seg.dir, fqs).select($"docId"))
   }
 
   /** Intersect component resolutions (multi-fq conjunction, Solr docset ∩
     * docset). The result is broadcastable whenever ANY component is
-    * (|∩| <= the smallest component <= FqMaxBroadcast), so the mixed
+    * (|∩| <= the smallest component <= fqMaxBroadcast), so the mixed
     * small+big case always lands in the sorted-array regime; the all-big
     * case chains docId semi-joins — nothing driver-materialized — and
     * routes by the combined count exactly like a single big fq.
@@ -545,309 +849,16 @@ class Searcher(spark: SparkSession, indexDir: String) {
     val smalls = sets.flatMap(_.sorted).map(_.value)
     val bigs = sets.flatMap(_.docs)
     if (bigs.isEmpty) {
-      val arr = smalls.reduce(Searcher.intersectSorted)
+      val arr = smalls.reduce(intersectSorted)
       FqSet(arr.length, Some(track(spark.sparkContext.broadcast(arr))), None)
     } else if (smalls.nonEmpty) {
-      val seed = smalls.reduce(Searcher.intersectSorted)
-      var df = spark.createDataset(seed).toDF("docId")
+      val seed = smalls.reduce(intersectSorted)
+      var df = spark.createDataset(seed.toSeq).toDF("docId")
       bigs.foreach(b => df = df.join(b, Seq("docId"), "left_semi"))
       val out = df.as[Long].collect()
       java.util.Arrays.sort(out)
       FqSet(out.length, Some(track(spark.sparkContext.broadcast(out))), None)
-    } else {
-      var df = bigs.head
-      bigs.tail.foreach(b => df = df.join(b, Seq("docId"), "left_semi"))
-      val pdf = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = pdf.count()
-      if (n <= FqMaxBroadcast) {
-        val arr = pdf.as[Long].collect()
-        java.util.Arrays.sort(arr)
-        pdf.unpersist()
-        FqSet(n, Some(track(spark.sparkContext.broadcast(arr))), None)
-      } else {
-        livePersists.add(pdf)
-        FqSet(n, None, Some(pdf))
-      }
-    }
-  }
-
-  /** Ranked retrieval, optionally constrained to an fq's matching docs
-    * (Solr `q` + `fq` semantics: the filter never contributes to the score —
-    * BM25 ranks exactly as without it; the filter gates which docs may
-    * enter the top-k INSIDE the kernel, so k results are returned whenever
-    * k matching docs exist, never a post-filtered underfill). WAND pruning
-    * stays admissible: the filter only suppresses heap offers, so the
-    * threshold is never higher than the unfiltered run's.
-    */
-  def search(query: String, k: Int, fields: Seq[String] = DefaultFields,
-             fq: Option[String] = None): Array[Hit] = fq match {
-    case None =>
-      if (meta.nDocs <= NormsMaxDocs && tombstoneCount <= TombstonesMaxBroadcast)
-        searchBroadcast(query, k, fields)
-      else searchShuffle(query, k, fields)
-    case Some(f) =>
-      val set = resolveFq(f)
-      if (set.count == 0) Array.empty
-      else set.sorted match {
-        case Some(bc)
-          if meta.nDocs <= NormsMaxDocs && tombstoneCount <= TombstonesMaxBroadcast =>
-          searchBroadcast(query, k, fields, Some(bc))
-        case _ => searchShuffle(query, k, fields, fq)
-      }
-  }
-
-  /** Cutoff (postings) below which the query runs its kernel on the driver.
-    * Mutable so tests can force the distributed branch.
-    */
-  var DriverKernelMaxPostings: Long = 4L << 20
-
-  /** Cap on a batch's summed planned postings below which [[searchMany]]
-    * shares one decoded-block cache across the batch (decoded arrays are
-    * ~6× the packed bytes and live for the call; ~64M postings ≈ 1 GB
-    * decoded worst case). Mutable test seam.
-    */
-  @volatile var SharedDecodeMaxPostings: Long = 64L << 20
-
-  /** Default strategy: broadcast norms; runs are co-located BY SALT either on
-    * the driver (small queries: one collect job, no shuffle at all) or via a
-    * groupByKey of the term-filtered runs (tiny shuffle; docstats never move).
-    */
-  def searchBroadcast(query: String, k: Int, fields: Seq[String] = DefaultFields,
-                      fqBc: Option[Broadcast[Array[Long]]] = None,
-                      sharedDec: java.util.concurrent.ConcurrentHashMap[
-                        (Int, String, String), DecodedBlocks] = null): Array[Hit] = {
-    plan(query, fields) match {
-      case None => Array.empty
-      case Some((cls, idfMap, minMatch, postings)) =>
-        val avgLen = meta.avgLen
-        val fieldArr = DefaultFields.toArray
-        if (postings <= DriverKernelMaxPostings) {
-          val nt = normsBc.value // local value; no broadcast needed on driver
-          val runs = fetchRuns(idfMap.keySet)
-          val excl = Searcher.excludedFn(tombstonesBc.value, fqBc.map(_.value).orNull)
-          val localHits = runs.groupBy(_.salt).iterator.flatMap { case (salt, rs) =>
-            // batch calls (searchMany) pass a per-call shared decode cache:
-            // the batch's queries share head terms, so each (salt, field,
-            // term)'s blocks decode once for the whole batch instead of
-            // once per query (the distributed path's scoreBatch analog)
-            val dec =
-              if (sharedDec == null) null
-              else rs.groupBy(r => (r.field, r.term)).map { case (k2, arr) =>
-                k2 -> sharedDec.computeIfAbsent((salt, k2._1, k2._2),
-                  _ => new DecodedBlocks(arr.sortBy(_.salt).flatMap(_.blocks)))
-              }
-            Kernel.scoreSalt(rs, (fi, d) => nt.quantLen(fi, d),
-              cls, fieldArr, idfMap, avgLen, minMatch, k, excl, dec)
-          }.toArray
-          merge(localHits, k)
-        } else {
-          val bc = normsBc
-          val tsBc = tombstonesBc
-          val fqB = fqBc // local val: the closure must not capture `this`
-          val localHits = Searcher.gatedJob {
-            filteredRuns(idfMap.keySet)
-              .groupByKey(_.salt)
-              .flatMapGroups { (_, it) =>
-                val nt = bc.value
-                Kernel.scoreSalt(it.toArray, (fi, d) => nt.quantLen(fi, d),
-                  cls, fieldArr, idfMap, avgLen, minMatch, k,
-                  Searcher.excludedFn(tsBc.value, fqB.map(_.value).orNull))
-              }
-              .collect()
-          }
-          merge(localHits, k)
-        }
-    }
-  }
-
-  /** Batched retrieval — the amortized-throughput shape for batch workloads:
-    * ONE Spark job fetches every cache-missing term across the whole batch,
-    * then each query runs the standard strategy (driver-local queries become
-    * pure cache hits, so per-query marginal cost is just the kernel), fanned
-    * out over [[Searcher.kernelPool]] — the kernels are independent
-    * CPU-bound scorers, so batch throughput scales with driver cores (every
-    * shared structure is concurrent: run cache, LRU dict cache, counters).
-    * Results are identical to calling [[search]] per query, in order.
-    */
-  def searchMany(queries: Seq[String], k: Int,
-                 fields: Seq[String] = DefaultFields,
-                 fq: Option[String] = None): Seq[Array[Hit]] = {
-    // one fq resolution for the whole batch (cached for the next one)
-    val fqSet = fq.map(resolveFq)
-    if (fqSet.exists(_.count == 0)) return queries.map(_ => Array.empty[Hit])
-    val fqBc = fqSet.flatMap(_.sorted)
-    // SAME regime router as [[search]]: past the norms/tombstone broadcast
-    // bounds every query of the batch must take the shuffle strategy —
-    // routing to searchBroadcast there would driver-materialize the very
-    // norm table / tombstone array those bounds exist to keep distributed
-    val broadcastRegime =
-      meta.nDocs <= NormsMaxDocs && tombstoneCount <= TombstonesMaxBroadcast
-    // ONE decode cache for the whole batch (thread-safe; kernels fan out
-    // over kernelPool): queries sharing terms share the block decode.
-    // Memory bound: decoded arrays are ~6× the packed bytes and live for
-    // the whole call, so the cache is only used when the batch's SUMMED
-    // planned postings (an overcount — shared terms count once per query,
-    // so the guard is conservative) stay under a driver-safe cap.
-    val plannedPostings = queries.iterator
-      .flatMap(q => plan(q, fields)).map(_._4).sum
-    val sharedDec =
-      if (plannedPostings <= SharedDecodeMaxPostings)
-        new java.util.concurrent.ConcurrentHashMap[
-          (Int, String, String), DecodedBlocks]()
-      else null
-    def one(q: String): Array[Hit] =
-      if (!broadcastRegime || (fq.isDefined && fqBc.isEmpty))
-        searchShuffle(q, k, fields, fq)
-      else searchBroadcast(q, k, fields, fqBc, sharedDec)
-    val prefetch =
-      if (!broadcastRegime) Set.empty[(String, String)]
-      else queries.flatMap(q => plan(q, fields)).flatMap {
-        case (_, idfMap, _, postings) =>
-          if (postings <= DriverKernelMaxPostings) idfMap.keySet
-          else Set.empty[(String, String)]
-      }.toSet
-    if (prefetch.nonEmpty) fetchRuns(prefetch)
-    if (queries.lengthCompare(1) <= 0) queries.map(one)
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = Searcher.kernelPool
-      Await.result(
-        Future.sequence(queries.map(q => Future(one(q)))),
-        Duration.Inf)
-    }
-  }
-
-  /** Bulk retrieval for the SCALE regime — ONE Spark job scores the whole
-    * batch. [[searchMany]] amortizes beautifully while the driver kernel
-    * exists, but at the 10^12-doc target every query is distributed and the
-    * per-query path pays the Spark job floor (~0.2-0.3 s) batch-size times.
-    * Here all queries' terms ride one term-filtered scan: runs group by salt
-    * as usual, and inside each salt group the kernel runs once PER QUERY
-    * over that query's terms' runs ([[Searcher.scoreBatch]]), emitting
-    * (queryIdx, Hit); the driver merges per-query top-k. Strategy follows
-    * the same router as [[search]]: broadcast norms while they fit, else
-    * the docstats cogroup (norms never materialize, tombstones excluded by
-    * the distributed anti-join).
-    *
-    * Results are identical to calling [[search]] per query, in order
-    * (BatchSearchSpec gates both shapes bit-for-bit). Cost model: the job
-    * reads the union of the batch's posting runs once — queries sharing
-    * head terms share the scan — so batch latency tracks total distinct
-    * posting volume plus ONE job floor, not batch size.
-    */
-  def searchManyDistributed(queries: Seq[String], k: Int,
-                            fields: Seq[String] = DefaultFields,
-                            fq: Option[String] = None): Seq[Array[Hit]] = {
-    // ONE fq for the whole batch (the bulk-probe shape: score a million
-    // quality queries WITHIN the lang:en slice) — resolved once, riding the
-    // job as either the broadcast predicate or the docstats semi-join
-    val fqSet = fq.map(resolveFq)
-    if (fqSet.exists(_.count == 0)) return queries.map(_ => Array.empty[Hit])
-    val fqBcOpt = fqSet.flatMap(_.sorted)
-    val fqSemiJoin = fq.isDefined && fqBcOpt.isEmpty
-    val planned = queries.map(q => plan(q, fields))
-    val plans = planned.zipWithIndex.collect {
-      case (Some((cls, idf, mm, _)), qi) => BatchPlan(qi, cls, idf, mm)
-    }.toArray
-    if (plans.isEmpty) return queries.map(_ => Array.empty[Hit])
-    val allKeys = plans.iterator.flatMap(_.idfMap.keySet).toSet
-    val fieldArr = DefaultFields.toArray
-    val avgLen = meta.avgLen
-    val kk = k
-    val plansBc = spark.sparkContext.broadcast(plans)
-    val tagged: Array[(Int, Hit)] =
-      try {
-        if (!fqSemiJoin &&
-            meta.nDocs <= NormsMaxDocs && tombstoneCount <= TombstonesMaxBroadcast) {
-          val bc = normsBc
-          val tsBc = tombstonesBc
-          val fqB = fqBcOpt // local val: the closure must not capture `this`
-          // r7 note: a plan-chunked variant (split the batch's plans across
-          // (chunk, salt) tasks to smooth the 2.8× max/median salt-collision
-          // tail, guide §2.6) was built and MEASURED WORSE here — 245.8 →
-          // 238.0 q/s at 32 cores: duplicating the run stream per chunk
-          // forfeits the per-task shared-decode cache (task CPU 80 → 86 s)
-          // and the packing gain never covered it. Reverted; the one-task-
-          // per-salt-hash shape stands.
-          Searcher.gatedJob {
-            filteredRuns(allKeys, batch = true)
-              .groupByKey(_.salt)
-              .flatMapGroups { (_, it) =>
-                val nt = bc.value
-                Searcher.scoreBatch(it.toArray, plansBc.value,
-                  (fi, d) => nt.quantLen(fi, d), fieldArr, avgLen, kk,
-                  Searcher.excludedFn(tsBc.value, fqB.map(_.value).orNull))
-              }
-              .collect()
-          }
-        } else {
-          // big-fq regime: the PERSISTED resolution semi-joins docstats
-          // (resolve-once); a broadcastable fq that lands here because the
-          // corpus routed to shuffle rides the kernel predicate instead
-          Searcher.shuffleScore(batchQuerySession, indexDir,
-            filteredRuns(allKeys, batch = true),
-            fqSet.flatMap(_.docs), fqBcOpt,
-            (rs, ql, excl) =>
-              Searcher.scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, kk, excl))
-        }
-      } finally Searcher.destroyQuietly(plansBc)
-    val tops = Array.fill(queries.length)(new TopK(k))
-    tagged.foreach { case (qi, h) => tops(qi).offer(h) }
-    tops.map(_.sortedHits).toSeq
-  }
-
-  /** Scale strategy: cogroup runs with docstats by salt range (no broadcast).
-    * Tombstones here are FULLY DISTRIBUTED: the docstats side is anti-joined
-    * against the tombstone table before the cogroup (both keyed by docId —
-    * AQE picks broadcast vs shuffle), so a posting with no surviving
-    * docstats row is a deleted doc and is skipped in the kernel. Nothing
-    * about deletes ever reaches the driver — the mass delete-by-query
-    * regime.
-    */
-  def searchShuffle(query: String, k: Int, fields: Seq[String] = DefaultFields,
-                    fq: Option[String] = None): Array[Hit] = {
-    // fq on the shuffle strategy, two shapes: a broadcastable set rides the
-    // kernel as the sorted-array predicate (no extra join at all); a bigger
-    // set SEMI-joins the docstats side from its PERSISTED resolution
-    // (resolve-once, like Solr's filterCache), so "no surviving docstats
-    // row" uniformly means tombstoned OR filtered out
-    val fqSet = fq.map(resolveFq)
-    if (fqSet.exists(_.count == 0)) return Array.empty
-    val fqB = fqSet.flatMap(_.sorted)
-    plan(query, fields) match {
-      case None => Array.empty
-      case Some((cls, idfMap, minMatch, _)) =>
-        val avgLen = meta.avgLen
-        val fieldArr = DefaultFields.toArray
-        val localHits = Searcher.shuffleScore(querySession, indexDir,
-          filteredRuns(idfMap.keySet), fqSet.flatMap(_.docs), fqB,
-          (rs, ql, excl) => Kernel.scoreSalt(rs, ql, cls, fieldArr, idfMap,
-            avgLen, minMatch, k, excl))
-        merge(localHits, k)
-    }
-  }
-
-  private def merge(localHits: Array[Hit], k: Int): Array[Hit] = {
-    val top = new TopK(k)
-    localHits.foreach(top.offer)
-    top.sortedHits
-  }
-
-  /** Hits joined with document identity — the user-facing result shape
-    * (`fl=*,score`, /root/reference/solr/config/solrconfig.xml:124-127).
-    */
-  def searchDF(query: String, k: Int, fields: Seq[String] = DefaultFields,
-               fq: Option[String] = None): DataFrame = {
-    val hits = search(query, k, fields, fq)
-    val hitsDF = spark.createDataFrame(hits.zipWithIndex.map { case (h, i) =>
-      (h.docId, h.score, i + 1)
-    }).toDF("docId", "score", "rank")
-    val docs = spark.read.parquet(s"$indexDir/docstats")
-      .select("docId", "repo", "path", "commit", "lang", "sha")
-    docs.join(broadcast(hitsDF), "docId")
-      .orderBy($"rank")
-      .select("rank", "docId", "score", "repo", "path", "commit", "lang", "sha")
+    } else persistedOrBroadcast(bigs.tail.foldLeft(bigs.head)(_.join(_, Seq("docId"), "left_semi")))
   }
 
   // ---- multi-fq overloads: repeated filter queries INTERSECT (Solr's
@@ -859,19 +870,19 @@ class Searcher(spark: SparkSession, indexDir: String) {
 
   def search(query: String, k: Int, fields: Seq[String],
              fqs: Seq[String]): Array[Hit] =
-    search(query, k, fields, Searcher.combineFqParams(fqs))
+    search(query, k, fields, combineFqParams(fqs))
 
   def searchMany(queries: Seq[String], k: Int, fields: Seq[String],
                  fqs: Seq[String]): Seq[Array[Hit]] =
-    searchMany(queries, k, fields, Searcher.combineFqParams(fqs))
+    searchMany(queries, k, fields, combineFqParams(fqs))
 
   def searchManyDistributed(queries: Seq[String], k: Int, fields: Seq[String],
                             fqs: Seq[String]): Seq[Array[Hit]] =
-    searchManyDistributed(queries, k, fields, Searcher.combineFqParams(fqs))
+    searchManyDistributed(queries, k, fields, combineFqParams(fqs))
 
   def searchDF(query: String, k: Int, fields: Seq[String],
                fqs: Seq[String]): DataFrame =
-    searchDF(query, k, fields, Searcher.combineFqParams(fqs))
+    searchDF(query, k, fields, combineFqParams(fqs))
 }
 
 object Searcher {
@@ -882,6 +893,98 @@ object Searcher {
     * `Seq(a, b)` and `Seq(b, a)` share one cache entry.
     */
   private[query] val FqAndSep = "\u0000&&\u0000"
+
+  /** Driver run-cache bound in (field, term) entries per searcher, split
+    * evenly across its segments.
+    */
+  private val RunCacheMaxTerms = 8192
+
+  /** Bound on resolved (segment, fq) entries per searcher. The realistic
+    * working set is a handful of hot visibility filters.
+    */
+  private val FqCacheMaxEntries = 64
+
+  /** Cap on summed postings below which a batch shares one decoded-block
+    * cache: [[Searcher.searchMany]]'s planned postings on the driver,
+    * [[scoreBatch]]'s salt-group block postings on an executor. Decoded
+    * arrays are ~6× the packed bytes and live for the call or task; ~64M
+    * postings ≈ 1 GB decoded worst case.
+    */
+  private val SharedDecodeMaxPostings: Long = 64L << 20
+
+  /** SQL conf of every searcher's query sessions: keep AQE but drop the
+    * partition-coalescing floor so the parallelism-first target is
+    * total/cores — posting runs are COMPRESSED, and the 1 MB byte floor was
+    * collapsing kernel stages to a handful of tasks (see the searcher's
+    * `querySession`).
+    */
+  private val QuerySessionConf: Map[String, String] =
+    Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16kb")
+
+  private def newQuerySession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    QuerySessionConf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** The batch kernel is a throughput stage: several even scheduling waves
+    * of small tasks beat the latency-optimal one-wave shape — a task count
+    * of ~1.25x cores leaves most cores idle for the whole second wave
+    * (measured: 40 tasks at 32 cores = wall 2x median task). Floors the
+    * post-shuffle coalesce at 4x parallelism with enough initial partitions
+    * to coalesce DOWN from; the index's salt-group count caps the effective
+    * fan-out.
+    */
+  private def newBatchSession(spark: SparkSession): SparkSession = {
+    val s = newQuerySession(spark)
+    val p = spark.sparkContext.defaultParallelism
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionNum", (4 * p).toString)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (32 * p).toString)
+    s
+  }
+
+  /** One query's plan: parsed clauses, idf per (field, term) from the
+    * global dfs, the mm gate, and each segment's matched posting volume
+    * (the router's driver-vs-distributed selector).
+    */
+  private final case class Plan(clauses: Array[Clause],
+                                idfMap: Map[(String, String), Double],
+                                minMatch: Int, segPostings: IndexedSeq[Long])
+
+  /** Resolved filter query: matching-doc count + sorted-array broadcast or
+    * persisted docId DataFrame (exactly one of the two is set).
+    */
+  private final case class FqSet(count: Long, sorted: Option[Broadcast[Array[Long]]],
+                                 docs: Option[DataFrame])
+
+  /** [[Searcher.searchMany]]'s per-segment shared decode cache, keyed by
+    * (salt, field, term).
+    */
+  private type DecodeCache = ConcurrentHashMap[(Int, String, String), DecodedBlocks]
+
+  /** Global df per key from per-segment dfs (absent keys omitted); the
+    * identity for one segment.
+    */
+  private def sumDfs(keys: Set[(String, String)],
+                     perSegment: Seq[Map[(String, String), Long]]): Map[(String, String), Long] =
+    if (perSegment.size == 1) perSegment.head
+    else keys.iterator.map(key => key -> perSegment.iterator.map(_.getOrElse(key, 0L)).sum)
+      .filter(_._2 > 0).toMap
+
+  /** Exact global average field lengths: each segment's integer length sum
+    * is recovered as round(avgLen · nDocs) — exact while sums stay below
+    * 2^51 — and the Long total is divided by N once. For one segment this
+    * gives back the builder's own `sum / nDocs` bit for bit; for several it
+    * equals a merged index's value, where summing `avgLen · nDocs` as
+    * doubles could be off in the last bit.
+    */
+  private[graft] def mergeAvgLen(metas: Seq[IndexMeta]): Map[String, Double] = {
+    val n = metas.iterator.map(_.nDocs).sum
+    metas.flatMap(_.avgLen.keys).distinct.map { f =>
+      f -> metas.iterator.map(m => Math.round(m.avgLen.getOrElse(f, 0.0) * m.nDocs)).sum
+        .toDouble / n
+    }.toMap
+  }
 
   /** Canonicalize repeated fq params into the composite form the
     * resolve/cache layer understands (None when no non-empty filter).
@@ -905,58 +1008,16 @@ object Searcher {
     java.util.Arrays.copyOf(out, n)
   }
 
-  /** Sorted-array tombstone membership — STATIC so executor lambdas that
-    * use it capture the (small) array, never the Searcher instance.
-    */
-  private[query] def deletedFn(ts: Array[Long]): Long => Boolean =
-    if (ts.isEmpty) _ => false
-    else d => java.util.Arrays.binarySearch(ts, d) >= 0
-
-  /** Kernel exclusion predicate: tombstoned OR (when an fq rides along)
-    * outside the filter's sorted docId set. STATIC like [[deletedFn]] so
-    * executor closures capture two small arrays, never a Searcher.
+  /** Kernel exclusion predicate: tombstoned (sorted-array membership) OR,
+    * when an fq rides along, outside the filter's sorted docId set. STATIC
+    * so executor closures capture two small arrays, never a Searcher.
     */
   private[query] def excludedFn(ts: Array[Long], fqSorted: Array[Long]): Long => Boolean = {
-    val del = deletedFn(ts)
+    val del: Long => Boolean =
+      if (ts.isEmpty) _ => false
+      else d => java.util.Arrays.binarySearch(ts, d) >= 0
     if (fqSorted == null) del
     else d => del(d) || java.util.Arrays.binarySearch(fqSorted, d) < 0
-  }
-
-  /** SQL conf applied to every searcher's dedicated query session (read at
-    * that searcher's first kernel job; set before constructing searchers to
-    * override). Default: keep AQE but drop the partition-coalescing floor
-    * so the parallelism-first target is total/cores — posting runs are
-    * COMPRESSED, and the 1 MB byte floor was collapsing kernel stages to a
-    * handful of tasks (see [[Searcher.querySession]]'s scaladoc).
-    */
-  @volatile var QuerySessionConf: Map[String, String] =
-    Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16kb")
-
-  private[query] def newQuerySession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    QuerySessionConf.foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
-
-  /** Extra conf for the BATCH query session on top of [[QuerySessionConf]]
-    * (set before constructing searchers to override). The batch kernel is a
-    * throughput stage: several even scheduling waves of small tasks beat the
-    * latency-optimal one-wave shape — a task count of ~1.25x cores leaves
-    * most cores idle for the whole second wave (measured: 40 tasks at 32
-    * cores = wall 2x median task). Floors the post-shuffle coalesce at
-    * 4x parallelism with enough initial partitions to coalesce DOWN from;
-    * the index's salt-group count caps the effective fan-out.
-    */
-  @volatile var BatchSessionConf: Map[String, String] = Map.empty
-
-  private[query] def newBatchSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    val p = spark.sparkContext.defaultParallelism
-    QuerySessionConf.foreach { case (k, v) => s.conf.set(k, v) }
-    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionNum", (4 * p).toString)
-    s.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (32 * p).toString)
-    BatchSessionConf.foreach { case (k, v) => s.conf.set(k, v) }
-    s
   }
 
   /** Destroy a broadcast, swallowing only NON-fatal failures (a broadcast
@@ -970,13 +1031,13 @@ object Searcher {
     }
 
   /** Cap on CONCURRENT Spark-job-launching queries across all searchers in
-    * this JVM. [[Searcher.searchMany]]/[[MultiSearcher.searchMany]] fan
-    * queries across [[kernelPool]] (driver cores) — right for the CPU-bound
-    * driver kernels, but a batch whose queries fall through to a distributed
-    * strategy would otherwise launch up to ncores concurrent Spark ACTIONS, a
-    * thundering herd on the scheduler (head-term jobs serialize on executor
-    * slots anyway, so concurrency past a few buys nothing and inflates every
-    * job's wall time). Driver-kernel queries never touch this gate.
+    * this JVM. [[Searcher.searchMany]] fans queries across [[kernelPool]]
+    * (driver cores) — right for the CPU-bound driver kernels, but a batch
+    * whose queries fall through to a distributed strategy would otherwise
+    * launch up to ncores concurrent Spark ACTIONS, a thundering herd on the
+    * scheduler (head-term jobs serialize on executor slots anyway, so
+    * concurrency past a few buys nothing and inflates every job's wall
+    * time). Driver-kernel queries never touch this gate.
     */
   val MaxConcurrentDistributedQueries: Int =
     math.min(4, math.max(2, Runtime.getRuntime.availableProcessors() / 8))
@@ -999,8 +1060,7 @@ object Searcher {
   }
 
   /** The docstats-cogroup scoring job shared by every shuffle-strategy
-    * route (single-query, batched, and the MultiSearcher segment analogs —
-    * formerly four hand-copies): term-filtered runs cogroup with the
+    * route (single-query and batched): term-filtered runs cogroup with the
     * segment's docstats BY SALT RANGE after tombstones (anti-join) and any
     * big-fq match set (semi-join) filter the docstats side; `score` runs
     * once per salt group against an injected quantized-length lookup and
@@ -1019,7 +1079,7 @@ object Searcher {
       implicit enc: org.apache.spark.sql.Encoder[T]): Array[T] = {
     import session.implicits._
     val stats = fqDocs.foldLeft(
-        graft.index.Tombstones.exclude(session, dir,
+        Tombstones.exclude(session, dir,
           session.read.parquet(s"$dir/docstats")
             .select($"docId", $"salt", $"lenContent", $"lenPath", $"lenRepo"))) {
         (df, cached) => df.join(cached, Seq("docId"), "left_semi")
@@ -1060,6 +1120,11 @@ object Searcher {
     * runs (plans sharing a term share the decoded group). STATIC: the
     * flatMapGroups closure must capture plans/norm/tombstone broadcasts
     * only, never a Searcher.
+    *
+    * The shared decode cache is bounded like the driver batch path's: when
+    * the salt group's summed block postings exceed `maxDecodePostings`, each
+    * plan's iterators decode into their own buffers instead (same decode
+    * calls, bit-identical hits).
     */
   private[graft] def scoreBatch(
       runs: Array[PostingRun],
@@ -1068,7 +1133,8 @@ object Searcher {
       fields: Array[String],
       avgLen: Map[String, Double],
       k: Int,
-      deleted: Long => Boolean): Iterator[(Int, Hit)] = {
+      deleted: Long => Boolean,
+      maxDecodePostings: Long = SharedDecodeMaxPostings): Iterator[(Int, Hit)] = {
     if (runs.isEmpty) Iterator.empty
     else {
       val byKey = runs.groupBy(r => (r.field, r.term))
@@ -1078,8 +1144,11 @@ object Searcher {
       // batch's plans re-decoded the shared head terms' blocks from
       // scratch (measured ~80× redundant decode per salt task at batch
       // 1024 over the bench vocabulary).
+      var blockPostings = 0L
+      runs.foreach(r => r.blocks.foreach(b => blockPostings += b.n))
       val decCache: Map[(String, String), DecodedBlocks] =
-        byKey.map { case (key, rs) =>
+        if (blockPostings > maxDecodePostings) null
+        else byKey.map { case (key, rs) =>
           key -> new DecodedBlocks(rs.sortBy(_.salt).flatMap(_.blocks))
         }
       plans.iterator.flatMap { p =>
@@ -1092,19 +1161,39 @@ object Searcher {
 
   private val EmptyRuns: Array[PostingRun] = Array.empty
 
+  /** `f` over `xs` in parallel on `pool`, order-preserving; zero or one
+    * element runs inline (no pool hop). Failures propagate.
+    */
+  private def inParallel[A, T](xs: Seq[A], pool: ExecutionContext)(f: A => T): Seq[T] =
+    if (xs.lengthCompare(1) <= 0) xs.map(f)
+    else {
+      implicit val ec: ExecutionContext = pool
+      Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
+    }
+
+  private def daemonPool(threads: Int, name: String): ExecutionContextExecutorService =
+    ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(threads, (r: Runnable) => {
+        val t = new Thread(r, name)
+        t.setDaemon(true)
+        t
+      }))
+
   /** Shared bounded pool for [[Searcher.searchMany]]'s per-query kernel
     * fan-out, sized to the driver's cores (the kernels are CPU-bound).
     * Daemon threads — never blocks JVM exit.
     */
-  private[query] lazy val kernelPool: scala.concurrent.ExecutionContextExecutorService =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(2, Runtime.getRuntime.availableProcessors()),
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-searchmany")
-          t.setDaemon(true)
-          t
-        }))
+  private lazy val kernelPool: ExecutionContextExecutorService =
+    daemonPool(math.max(2, Runtime.getRuntime.availableProcessors()), "graft-searchmany")
+
+  /** Shared bounded pool for the per-segment fan-out: Spark jobs submitted
+    * from separate threads overlap in the scheduler, while the bound keeps
+    * a very wide segment list from flooding it. Distinct from [[kernelPool]]
+    * and segment tasks never wait on it, so a query blocking on its
+    * segments cannot deadlock.
+    */
+  private lazy val segmentPool: ExecutionContextExecutorService =
+    daemonPool(8, "graft-multisearch")
 }
 
 /** The per-salt-range scoring kernel. Pure Scala over primitive arrays — the

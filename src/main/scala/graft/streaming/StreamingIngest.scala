@@ -75,7 +75,7 @@ object StreamingIngest {
     * (or had already run), None while the policy declines.
     *
     * Reader contract: the compacted segment replaces `base` (when passed)
-    * plus the folded deltas — readers swap their MultiSearcher to
+    * plus the folded deltas — readers swap their Searcher to
     * `Seq(compacted)` only if base was merged, else `Seq(base, compacted)`;
     * old dirs are retired by the caller once unpinned (commit-gated as
     * always). RE-ENTRY SAFE: until the caller retires the folded delta
@@ -116,7 +116,7 @@ object StreamingIngest {
       .filter(f => f.isDirectory && f.getName.startsWith("delta-"))
       .filter(f => new Snapshot(f.getPath).currentId >= 0)
       // numeric sort by batch id: lexicographic would order delta-10 before
-      // delta-2 and silently permute MultiSearcher's global docId space
+      // delta-2 and silently permute the Searcher's global docId space
       .sortBy(f => f.getName.stripPrefix("delta-").toLong)
       .map(_.getPath).toSeq
   }

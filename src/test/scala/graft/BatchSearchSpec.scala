@@ -3,7 +3,7 @@ package graft
 import graft.core.Hit
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.{MultiSearcher, Searcher}
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,8 +56,8 @@ class BatchSearchSpec extends AnyFunSuite {
   }
 
   test("batched distributed == per-query search (forced docstats-cogroup route)") {
-    val s = new Searcher(spark, tmp)
-    s.NormsMaxDocs = 0 // beyond-norms regime: nothing broadcast, cogroup only
+    // beyond-norms regime: nothing broadcast, cogroup only
+    val s = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     val perQuery = batch.map(q => s.search(q, 10))
     val batched = s.searchManyDistributed(batch, 10)
     assertSame(batched, perQuery, "cogroup")
@@ -72,8 +72,7 @@ class BatchSearchSpec extends AnyFunSuite {
     val bcast = new Searcher(spark, work)
     val perQuery = batch.map(q => bcast.search(q, 10))
     assertSame(bcast.searchManyDistributed(batch, 10), perQuery, "tombstone broadcast")
-    val shuf = new Searcher(spark, work)
-    shuf.NormsMaxDocs = 0
+    val shuf = new Searcher(spark, Seq(work), SearchConfig(normsMaxDocs = 0))
     assertSame(shuf.searchManyDistributed(batch, 10), perQuery, "tombstone cogroup")
   }
 
@@ -87,21 +86,19 @@ class BatchSearchSpec extends AnyFunSuite {
     IndexBuilder.build(spark, b, segB, cfg)
 
     // route 1: everything driver-local
-    val m1 = new MultiSearcher(spark, Seq(segA, segB))
+    val m1 = new Searcher(spark, Seq(segA, segB))
     val perQuery = batch.map(q => m1.search(q, 10))
     assertSame(m1.searchManyDistributed(batch, 10), perQuery, "multi driver")
 
     // route 2: forced distributed flatMapGroups per segment (ONE job per
     // segment for the whole batch — driverRunFetches must stay at zero)
-    val m2 = new MultiSearcher(spark, Seq(segA, segB))
-    m2.DriverKernelMaxPostings = 0
+    val m2 = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = 0))
     assertSame(m2.searchManyDistributed(batch, 10), perQuery, "multi distributed")
     assert(m2.driverRunFetches.get() == 0,
       "forced-distributed batch must not collect runs to the driver")
 
     // route 3: forced docstats cogroup per segment
-    val m3 = new MultiSearcher(spark, Seq(segA, segB))
-    m3.NormsMaxDocs = 0
+    val m3 = new Searcher(spark, Seq(segA, segB), SearchConfig(normsMaxDocs = 0))
     assertSame(m3.searchManyDistributed(batch, 10), perQuery, "multi shuffle")
 
     m1.close(); m2.close(); m3.close()
@@ -156,11 +153,11 @@ class BatchSearchSpec extends AnyFunSuite {
   test("searchMany honors the shuffle-regime router: no broadcast materialization") {
     // mass-delete / beyond-norms regime: search() routes every query to the
     // shuffle strategy; searchMany must follow the SAME router — the
-    // pre-fix path called searchBroadcast unconditionally, lazily
+    // pre-fix path took the broadcast strategy unconditionally, lazily
     // materializing the full tombstone array + norm table on the driver in
     // exactly the regimes the bounds exist to keep distributed
-    val s = new Searcher(spark, tmp)
-    s.NormsMaxDocs = 0 // corpus "outgrew" broadcast norms
+    // corpus "outgrew" broadcast norms
+    val s = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     val expected = batch.map(q => s.search(q, 10).toSeq)
     val got = s.searchMany(batch, 10).map(_.toSeq)
     assert(got == expected, "shuffle-regime batch must equal per-query search")
@@ -170,8 +167,8 @@ class BatchSearchSpec extends AnyFunSuite {
   }
 
   test("concurrent distributed queries are capped by the global gate") {
-    val s = new Searcher(spark, tmp)
-    s.DriverKernelMaxPostings = 0 // every query launches a Spark job
+    // every query launches a Spark job
+    val s = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
     Searcher.maxInFlightObserved.set(0)
     val queries = (0 until 32).map(i => batch(i % batch.size))
     val expected = batch.map(q => s.search(q, 10))
@@ -196,9 +193,10 @@ class BatchSearchSpec extends AnyFunSuite {
         IndexConfig(buckets = 8, blockSize = 64, saltRange = 400, shufflePartitions = 4))
       d
     }
-    val m = new MultiSearcher(spark, dirs)
-    m.DictionaryMaxDriverTerms = 0 // force the probe path everywhere
-    m.DictionaryMaxCacheTerms = 60 // global LRU budget, split 10/segment
+    // force the probe path everywhere, with a global LRU budget split
+    // 10/segment
+    val m = new Searcher(spark, dirs,
+      SearchConfig(dictionaryMaxDriverTerms = 0, dictionaryMaxCacheTerms = 60))
     val qs = Seq("buffer", "lazy implicit", "binary search tree implementation",
       "def class import return", s"${CodeCorpus.Vocab(100)} ${CodeCorpus.Vocab(500)}")
     val single = dirs.map(d => new Searcher(spark, d))
@@ -208,7 +206,7 @@ class BatchSearchSpec extends AnyFunSuite {
     assert(m.residentDictEntries <= 60,
       s"resident dict entries ${m.residentDictEntries} exceed the global budget")
     // answers unchanged vs an unbudgeted searcher over the same segments
-    val unbudgeted = new MultiSearcher(spark, dirs)
+    val unbudgeted = new Searcher(spark, dirs)
     qs.foreach { q =>
       assert(m.search(q, 10).toSeq == unbudgeted.search(q, 10).toSeq,
         s"budgeted answers diverged for '$q'")

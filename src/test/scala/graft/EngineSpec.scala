@@ -4,7 +4,7 @@ import graft.core._
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig, Snapshot}
 import graft.oracle.ExactScorer
-import graft.query.Searcher
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -88,14 +88,14 @@ class EngineSpec extends AnyFunSuite {
   test("hot-term run cache: repeat query skips the Spark fetch, same results") {
     val fresh = new Searcher(spark, tmp)
     val first = fresh.search("buffer binary search", 10)
-    val fetchesAfterFirst = fresh.cacheFetches.get()
+    val fetchesAfterFirst = fresh.driverRunFetches.get()
     assert(fetchesAfterFirst >= 1)
     val second = fresh.search("buffer binary search", 10)
-    assert(fresh.cacheFetches.get() == fetchesAfterFirst, "repeat must be cache-served")
+    assert(fresh.driverRunFetches.get() == fetchesAfterFirst, "repeat must be cache-served")
     assert(first.toSeq == second.toSeq)
     // overlapping query: only the NEW term (def) triggers one more fetch
     val third = fresh.search("buffer def", 10)
-    assert(fresh.cacheFetches.get() == fetchesAfterFirst + 1)
+    assert(fresh.driverRunFetches.get() == fetchesAfterFirst + 1)
     assert(third.nonEmpty)
   }
 
@@ -104,7 +104,7 @@ class EngineSpec extends AnyFunSuite {
     val batch = Seq("buffer", "binary search tree implementation",
       "def class import return", "café")
     val batched = fresh.searchMany(batch, 10)
-    assert(fresh.cacheFetches.get() == 1, "whole batch = one Spark fetch")
+    assert(fresh.driverRunFetches.get() == 1, "whole batch = one Spark fetch")
     val oneByOne = batch.map(q => searcher.search(q, 10))
     batched.zip(oneByOne).zip(batch).foreach { case ((b, s), q) =>
       assert(b.toSeq == s.toSeq, s"[$q]")
@@ -112,8 +112,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("probe-path dictionary (DictionaryMaxDriverTerms=0): identical answers, no full collect") {
-    val forced = new Searcher(spark, tmp)
-    forced.DictionaryMaxDriverTerms = 0 // vocabulary must never reach the driver
+    // vocabulary must never reach the driver
+    val forced = new Searcher(spark, Seq(tmp), SearchConfig(dictionaryMaxDriverTerms = 0))
     val queries = Seq("buffer", "binary search tree implementation",
       "def class import return", "parse merge", "nosuchtermxyz")
     queries.foreach { q =>
@@ -176,8 +176,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("NormsMaxDocs=0 auto-routes to the shuffle strategy, identical answers") {
     meta // force the index build
-    val big = new Searcher(spark, tmp)
-    big.NormsMaxDocs = 0 // corpus "too big" for broadcast norms
+    // corpus "too big" for broadcast norms
+    val big = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     Seq("buffer", "parse merge", "binary search tree implementation").foreach { q =>
       assert(big.search(q, 10).toSeq == searcher.search(q, 10).toSeq, s"[$q]")
     }
@@ -213,15 +213,22 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("all three physical strategies are rank-identical") {
+    // the default config runs the driver-local kernel here; each forced
+    // config pins one other route
+    val grouped = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
+    val shuffle = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     queries.foreach { case (q, k) =>
-      val a = searcher.searchBroadcast(q, k).toSeq // driver-local kernel
-      searcher.DriverKernelMaxPostings = 0L // force distributed grouped kernel
-      val a2 = try searcher.searchBroadcast(q, k).toSeq
-      finally searcher.DriverKernelMaxPostings = 4L << 20
-      val b = searcher.searchShuffle(q, k).toSeq
+      val a = searcher.search(q, k).toSeq // driver-local kernel
+      val a2 = grouped.search(q, k).toSeq // distributed grouped kernel
+      val b = shuffle.search(q, k).toSeq // docstats cogroup
       assert(a == b, s"[$q] driver-kernel vs shuffle")
       assert(a2 == b, s"[$q] grouped-broadcast vs shuffle")
     }
+    assert(searcher.driverRunFetches.get() > 0, "default config must use the driver kernel")
+    assert(grouped.driverRunFetches.get() == 0 && shuffle.driverRunFetches.get() == 0,
+      "forced routes must not collect runs to the driver")
+    assert(shuffle.liveBroadcastCount == 0, "the shuffle route broadcasts nothing")
+    grouped.close(); shuffle.close()
   }
 
   test("mm gates multi-term matches") {

@@ -3,7 +3,7 @@ package graft
 import graft.core.Hit
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig, QueryFilter}
-import graft.query.{MultiSearcher, Searcher}
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[QueryFilter.matchingDocs]], first k taken. The engine must reproduce it
   * bit-for-bit on every strategy route — driver kernel, forced-distributed
   * flatMapGroups, forced docstats-cogroup, the forced big-fq semi-join
-  * regime — with tombstones, batched, and across MultiSearcher segments.
+  * regime — with tombstones, batched, and across segments.
   */
 class FilteredSearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -74,10 +74,9 @@ class FilteredSearchSpec extends AnyFunSuite {
 
   test("fq identical on the forced-distributed and cogroup routes") {
     val base = new Searcher(spark, tmp)
-    val dist = new Searcher(spark, tmp)
-    dist.DriverKernelMaxPostings = 0
-    val shuf = new Searcher(spark, tmp)
-    shuf.NormsMaxDocs = 0 // semi-join regime via searchShuffle
+    val dist = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
+    // semi-join regime via the docstats shuffle
+    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     // distributed routes cost a Spark job per (q, fq): two queries spanning
     // head-term and multi-term mm shapes x three fq grammar shapes keep the
     // route-identity gate while bounding suite wall time
@@ -90,8 +89,8 @@ class FilteredSearchSpec extends AnyFunSuite {
   }
 
   test("big-fq regime (forced semi-join) is identical to the broadcast regime") {
-    val big = new Searcher(spark, tmp)
-    big.FqMaxBroadcast = 0 // every fq routes to the docstats semi-join
+    // every fq routes to the docstats semi-join
+    val big = new Searcher(spark, Seq(tmp), SearchConfig(fqMaxBroadcast = 0))
     val bc = new Searcher(spark, tmp)
     for (q <- queries.take(2); f <- fqs.take(3)) {
       assert(big.search(q, 10, fq = Some(f)).toSeq ==
@@ -125,8 +124,7 @@ class FilteredSearchSpec extends AnyFunSuite {
       new java.io.File(tmp), new java.io.File(work))
     graft.index.IndexOps.deleteByQueryInPlace(spark, work, "repo:repo-0001")
     val s = new Searcher(spark, work)
-    val shuf = new Searcher(spark, work)
-    shuf.NormsMaxDocs = 0
+    val shuf = new Searcher(spark, Seq(work), SearchConfig(normsMaxDocs = 0))
     for (f <- Seq("lang:scala OR lang:java", "lang:c OR repo:repo-0001")) {
       val ok = allowed(work, f) // matchingDocs already excludes tombstones
       val expect = reference(s, "buffer", 10, ok)
@@ -153,8 +151,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(s.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery, "searchMany")
     assert(s.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == perQuery,
       "searchManyDistributed")
-    val dist = new Searcher(spark, tmp)
-    dist.NormsMaxDocs = 0
+    val dist = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     assert(dist.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == perQuery,
       "searchManyDistributed cogroup")
     s.close(); dist.close()
@@ -179,10 +176,9 @@ class FilteredSearchSpec extends AnyFunSuite {
     // to the sorted-array form and the other to the persisted semi-join
     // form; ALL-BIG: both semi-join. Same bits either way.
     val counts = Seq("repo:repo-0003", "NOT lang:md").map(f => allowed(tmp, f).size)
-    val mixed = new Searcher(spark, tmp)
-    mixed.FqMaxBroadcast = (counts.min + counts.max) / 2
-    val allBig = new Searcher(spark, tmp)
-    allBig.FqMaxBroadcast = 0
+    val mixed = new Searcher(spark, Seq(tmp),
+      SearchConfig(fqMaxBroadcast = (counts.min + counts.max) / 2))
+    val allBig = new Searcher(spark, Seq(tmp), SearchConfig(fqMaxBroadcast = 0))
     for (q <- queries.take(2)) {
       val ok = allowed(tmp, "repo:repo-0003").intersect(allowed(tmp, "NOT lang:md"))
       val expect = reference(s, q, 10, ok)
@@ -206,8 +202,8 @@ class FilteredSearchSpec extends AnyFunSuite {
       "searchMany multi-fq")
     assert(s.searchManyDistributed(queries, 10, s.DefaultFields, fseq)
       .map(_.toSeq) == perQ, "searchManyDistributed multi-fq")
-    // MultiSearcher plumbing (single segment: global == local ids)
-    val m = new MultiSearcher(spark, Seq(tmp))
+    // segment-list plumbing (single segment: global == local ids)
+    val m = new Searcher(spark, Seq(tmp))
     assert(queries.take(2).map(q =>
       m.search(q, 10, m.DefaultFields, fseq).toSeq) == perQ.take(2), "multi")
     m.close(); s.close(); mixed.close(); allBig.close()
@@ -221,7 +217,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     val b = spark.range(900, 1500).as[Long].map(i => CodeCorpus.genDoc(i, 20))
     IndexBuilder.build(spark, a, segA, cfg)
     IndexBuilder.build(spark, b, segB, cfg)
-    val m = new MultiSearcher(spark, Seq(segA, segB))
+    val m = new Searcher(spark, Seq(segA, segB))
     // global allowed set: each segment's matching LOCAL ids re-based by its
     // offset — what a single merged index's filter would match
     def globalAllowed(f: String): Set[Long] =
@@ -234,11 +230,9 @@ class FilteredSearchSpec extends AnyFunSuite {
     // forced routes + batch shape agree
     val f = Some("lang:scala OR lang:java")
     val expect = queries.map(q => m.search(q, 10, fq = f).toSeq)
-    val m2 = new MultiSearcher(spark, Seq(segA, segB))
-    m2.DriverKernelMaxPostings = 0
+    val m2 = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = 0))
     assert(queries.map(q => m2.search(q, 10, fq = f).toSeq) == expect, "multi dist")
-    val m3 = new MultiSearcher(spark, Seq(segA, segB))
-    m3.NormsMaxDocs = 0
+    val m3 = new Searcher(spark, Seq(segA, segB), SearchConfig(normsMaxDocs = 0))
     assert(queries.map(q => m3.search(q, 10, fq = f).toSeq) == expect, "multi shuffle")
     assert(m.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == expect,
       "multi batched")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.query.{BatchPlan, Clause, Kernel, Searcher, TopK}
+import graft.query.{BatchPlan, Clause, DecodedBlocks, Kernel, Searcher, TopK}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
@@ -202,93 +202,136 @@ class KernelPropertySpec extends AnyFunSuite {
       "both block-edge outliers must rank first")
   }
 
+  /** One random batch universe for the scoreBatch specs: salted runs with
+    * exact block metadata, 2-6 plans whose queries overlap on a small
+    * vocabulary, a random k and random deletes.
+    */
+  private case class BatchUniverse(nDocs: Int, runs: Array[PostingRun],
+                                   plans: Array[BatchPlan], nQueries: Int,
+                                   quantLenOf: (Int, Long) => Int,
+                                   avgLen: Map[String, Double], k: Int,
+                                   deleted: Long => Boolean)
+
+  /** None when the draw has no postings or no plan with a known term. */
+  private def batchUniverse(rng: scala.util.Random): Option[BatchUniverse] = {
+    val vocab = Array("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    val nDocs = 1 + rng.nextInt(200)
+    val saltRange = 32 + rng.nextInt(96)
+    val blockSize = 1 + rng.nextInt(8)
+    val lens = Array.tabulate(3, nDocs)((_, _) => 1 + rng.nextInt(300))
+    def quantLenOf(fi: Int, d: Long): Int = SmallFloat.quantizeLength(lens(fi)(d.toInt))
+    val avgLen = fields.zipWithIndex.map { case (f, fi) =>
+      f -> lens(fi).map(_.toDouble).sum / nDocs
+    }.toMap
+    val byKey = mutable.Map.empty[(String, String), Seq[(Long, Int)]]
+    fields.foreach { f =>
+      vocab.foreach { term =>
+        val density = if (rng.nextBoolean()) 0.05 else 0.4
+        val ps = (0L until nDocs.toLong)
+          .filter(_ => rng.nextDouble() < density)
+          .map(d => d -> (1 + rng.nextInt(5)))
+        if (ps.nonEmpty) byKey((f, term)) = ps
+      }
+    }
+    if (byKey.isEmpty) return None
+    val fieldIdx = fields.zipWithIndex.toMap
+    val runs: Array[PostingRun] = byKey.toArray.flatMap { case ((f, term), ps) =>
+      ps.groupBy(p => (p._1 / saltRange).toInt).toSeq.sortBy(_._1).map {
+        case (salt, saltPs) =>
+          val blocks = mkBlocks(saltPs.sortBy(_._1), blockSize,
+            quantLenOf, fieldIdx(f))
+          PostingRun(0, f, term, salt, saltPs.length.toLong,
+            saltPs.map(_._2.toLong).sum, saltPs.map(_._2).max, blocks)
+      }
+    }
+    val n = nDocs.toLong
+    // 2-6 overlapping queries: words drawn from a small vocab so plans
+    // share (field, term) groups within a salt
+    val nQueries = 2 + rng.nextInt(5)
+    val plans = (0 until nQueries).flatMap { qi =>
+      val words = (0 to rng.nextInt(3)).map(_ => vocab(rng.nextInt(vocab.length)))
+      val clauses = words.map { w =>
+        Clause(w, fields.filter(_ => rng.nextDouble() < 0.8).map(_ -> w).toMap)
+      }.filter(_.perField.nonEmpty).toArray
+      val idfMap = clauses.flatMap(_.perField.toSeq).distinct.flatMap { key =>
+        byKey.get(key).map(ps => key -> BM25.idf(n, ps.length.toLong))
+      }.toMap
+      if (clauses.isEmpty || idfMap.isEmpty) None
+      else Some(BatchPlan(qi, clauses, idfMap, BM25.minShouldMatch(clauses.length)))
+    }.toArray
+    if (plans.isEmpty) return None
+    val k = 1 + rng.nextInt(8)
+    val deletedSet =
+      (0L until nDocs.toLong).filter(_ => rng.nextDouble() < 0.1).toSet
+    Some(BatchUniverse(nDocs, runs, plans, nQueries, quantLenOf, avgLen, k, deletedSet.contains))
+  }
+
   test("scoreBatch == per-plan scoreSalt on 100 random universes x random batches") {
     // the batched executor kernel (Searcher.scoreBatch) must be EXACTLY the
     // per-query kernel run plan-by-plan: same runs selected per plan (shared
     // (field, term) groups), same per-salt top-k, same tagging — attacked
     // with random universes and batches whose queries OVERLAP on terms
     val rng = new scala.util.Random(20260818L)
-    val vocab = Array("alpha", "beta", "gamma", "delta", "eps", "zeta")
     var compared = 0
     var nonEmpty = 0
     (1 to 100).foreach { caze =>
-      val nDocs = 1 + rng.nextInt(200)
-      val saltRange = 32 + rng.nextInt(96)
-      val blockSize = 1 + rng.nextInt(8)
-      val lens = Array.tabulate(3, nDocs)((_, _) => 1 + rng.nextInt(300))
-      def quantLenOf(fi: Int, d: Long): Int = SmallFloat.quantizeLength(lens(fi)(d.toInt))
-      val avgLen = fields.zipWithIndex.map { case (f, fi) =>
-        f -> lens(fi).map(_.toDouble).sum / nDocs
-      }.toMap
-      val byKey = mutable.Map.empty[(String, String), Seq[(Long, Int)]]
-      fields.foreach { f =>
-        vocab.foreach { term =>
-          val density = if (rng.nextBoolean()) 0.05 else 0.4
-          val ps = (0L until nDocs.toLong)
-            .filter(_ => rng.nextDouble() < density)
-            .map(d => d -> (1 + rng.nextInt(5)))
-          if (ps.nonEmpty) byKey((f, term)) = ps
-        }
-      }
-      if (byKey.nonEmpty) {
-        val fieldIdx = fields.zipWithIndex.toMap
-        val runs: Array[PostingRun] = byKey.toArray.flatMap { case ((f, term), ps) =>
-          ps.groupBy(p => (p._1 / saltRange).toInt).toSeq.sortBy(_._1).map {
-            case (salt, saltPs) =>
-              val blocks = mkBlocks(saltPs.sortBy(_._1), blockSize,
-                quantLenOf, fieldIdx(f))
-              PostingRun(0, f, term, salt, saltPs.length.toLong,
-                saltPs.map(_._2.toLong).sum, saltPs.map(_._2).max, blocks)
-          }
-        }
-        val n = nDocs.toLong
-        // 2-6 overlapping queries: words drawn from a small vocab so plans
-        // share (field, term) groups within a salt
-        val nQueries = 2 + rng.nextInt(5)
-        val plans = (0 until nQueries).flatMap { qi =>
-          val words = (0 to rng.nextInt(3)).map(_ => vocab(rng.nextInt(vocab.length)))
-          val clauses = words.map { w =>
-            Clause(w, fields.filter(_ => rng.nextDouble() < 0.8).map(_ -> w).toMap)
-          }.filter(_.perField.nonEmpty).toArray
-          val idfMap = clauses.flatMap(_.perField.toSeq).distinct.flatMap { key =>
-            byKey.get(key).map(ps => key -> BM25.idf(n, ps.length.toLong))
-          }.toMap
-          if (clauses.isEmpty || idfMap.isEmpty) None
-          else Some(BatchPlan(qi, clauses, idfMap, BM25.minShouldMatch(clauses.length)))
-        }.toArray
-        if (plans.nonEmpty) {
-          val k = 1 + rng.nextInt(8)
-          val deletedSet =
-            (0L until nDocs.toLong).filter(_ => rng.nextDouble() < 0.1).toSet
-          val deleted: Long => Boolean = deletedSet.contains
-          val bySalt = runs.groupBy(_.salt).toSeq.sortBy(_._1)
+      batchUniverse(rng).foreach { u =>
+        import u._
+        val bySalt = runs.groupBy(_.salt).toSeq.sortBy(_._1)
 
-          // batched path: scoreBatch per salt group, merged per query
-          val batchTops = Array.fill(nQueries)(new TopK(k))
+        // batched path: scoreBatch per salt group, merged per query
+        val batchTops = Array.fill(nQueries)(new TopK(k))
+        bySalt.foreach { case (_, rs) =>
+          Searcher.scoreBatch(rs, plans, quantLenOf, fields, avgLen, k, deleted)
+            .foreach { case (qi, h) => batchTops(qi).offer(h) }
+        }
+        // reference: the per-query kernel, plan by plan
+        plans.foreach { p =>
+          val top = new TopK(k)
           bySalt.foreach { case (_, rs) =>
-            Searcher.scoreBatch(rs, plans, quantLenOf, fields, avgLen, k, deleted)
-              .foreach { case (qi, h) => batchTops(qi).offer(h) }
+            val qRuns = rs.filter(r => p.idfMap.contains((r.field, r.term)))
+            Kernel.scoreSalt(qRuns, quantLenOf, p.clauses, fields, p.idfMap,
+              avgLen, p.minMatch, k, deleted).foreach(top.offer)
           }
-          // reference: the per-query kernel, plan by plan
-          plans.foreach { p =>
-            val top = new TopK(k)
-            bySalt.foreach { case (_, rs) =>
-              val qRuns = rs.filter(r => p.idfMap.contains((r.field, r.term)))
-              Kernel.scoreSalt(qRuns, quantLenOf, p.clauses, fields, p.idfMap,
-                avgLen, p.minMatch, k, deleted).foreach(top.offer)
-            }
-            val expect = top.sortedHits.toSeq
-            val got = batchTops(p.qi).sortedHits.toSeq
-            assert(got == expect,
-              s"case $caze qi=${p.qi}: nDocs=$nDocs k=$k " +
-                s"words=${p.clauses.map(_.word).mkString(",")}")
-            compared += 1
-            if (expect.nonEmpty) nonEmpty += 1
-          }
+          val expect = top.sortedHits.toSeq
+          val got = batchTops(p.qi).sortedHits.toSeq
+          assert(got == expect,
+            s"case $caze qi=${p.qi}: nDocs=$nDocs k=$k " +
+              s"words=${p.clauses.map(_.word).mkString(",")}")
+          compared += 1
+          if (expect.nonEmpty) nonEmpty += 1
         }
       }
     }
     assert(compared >= 200, s"only $compared plan comparisons")
     assert(nonEmpty >= 100, s"only $nonEmpty non-empty result sets")
+  }
+
+  test("scoreBatch past its decode cap: no shared DecodedBlocks, bit-identical hits") {
+    // a salt group whose block postings exceed the cap decodes per
+    // iterator instead of through the shared cache; a cap of 0 forces that
+    // on every group and must not change a single bit
+    val rng = new scala.util.Random(20261017L)
+    var compared = 0
+    (1 to 60).foreach { caze =>
+      batchUniverse(rng).foreach { u =>
+        import u._
+        val bySalt = runs.groupBy(_.salt).toSeq.sortBy(_._1).map(_._2)
+        def tagged(cap: Option[Long]): Seq[(Int, Hit)] = bySalt.flatMap { rs =>
+          cap.fold(Searcher.scoreBatch(rs, plans, quantLenOf, fields, avgLen, k, deleted))(
+            c => Searcher.scoreBatch(rs, plans, quantLenOf, fields, avgLen, k, deleted, c))
+        }
+        val builtBefore = DecodedBlocks.built.get()
+        val cached = tagged(None)
+        val builtCached = DecodedBlocks.built.get()
+        assert(builtCached > builtBefore, s"case $caze: default cap must share decodes")
+        val capped = tagged(Some(0L))
+        assert(DecodedBlocks.built.get() == builtCached,
+          s"case $caze: capped run built a DecodedBlocks")
+        assert(capped == cached, s"case $caze: capped hits differ (nDocs=$nDocs k=$k)")
+        compared += 1
+      }
+    }
+    assert(compared >= 30, s"only $compared universes compared")
   }
 }

@@ -2,13 +2,13 @@ package graft
 
 import graft.corpus.CodeCorpus
 import graft.index.IndexConfig
-import graft.query.MultiSearcher
+import graft.query.Searcher
 import graft.streaming.StreamingIngest
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The composed compaction lifecycle drill (VERDICT r4 #5): streaming ingest
   * accretes delta segments -> maintainDeltas folds them -> readers swap
-  * MultiSearcher generations -> old generation close()s -> retired dirs
+  * multi-segment Searcher generations -> old generation close()s -> retired dirs
   * delete — ALL while queries run on another thread, score-identical
   * throughout, and every generation's broadcasts are released. The pieces
   * are individually gated (StreamingSpec, MultiSearcherSpec); this is the
@@ -45,7 +45,7 @@ class LifecycleSpec extends AnyFunSuite {
     val queries = Seq(("buffer", None), ("binary search tree implementation", None),
       ("def class import return", None),
       ("buffer", Some("lang:scala OR lang:java")))
-    @volatile var current = new MultiSearcher(spark, deltas)
+    @volatile var current = new Searcher(spark, deltas)
     val gen0 = current
     val expected: Map[(String, Option[String]), Seq[Double]] =
       queries.map { case (q, f) =>
@@ -92,7 +92,7 @@ class LifecycleSpec extends AnyFunSuite {
 
     // --- swap readers to generation 1, then close generation 0 once its
     // in-flight queries drain (the close() contract)
-    val gen1 = new MultiSearcher(spark, Seq(compacted.get))
+    val gen1 = new Searcher(spark, Seq(compacted.get))
     val mark = iterations.get()
     current = gen1
     while (iterations.get() < mark + 3) Thread.sleep(10) // gen1 serving

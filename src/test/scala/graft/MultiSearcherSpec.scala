@@ -1,8 +1,8 @@
 package graft
 
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.{MultiSearcher, Searcher}
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta}
+import graft.query.{SearchConfig, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-segment search must score EXACTLY like one merged index: same N,
@@ -37,7 +37,7 @@ class MultiSearcherSpec extends AnyFunSuite {
 
   test("base + delta segments score identically to the merged index") {
     val single = new Searcher(spark, combinedDir)
-    val multi = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val multi = new Searcher(spark, Seq(segADir, segBDir))
     assert(multi.totalDocs == 1200)
 
     val combinedSha = shaOf(combinedDir)
@@ -68,7 +68,7 @@ class MultiSearcherSpec extends AnyFunSuite {
   }
 
   test("global stats merge: N, avgLen, df") {
-    val multi = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val multi = new Searcher(spark, Seq(segADir, segBDir))
     val single = new Searcher(spark, combinedDir)
     assert(multi.totalDocs == single.meta.nDocs)
     multi.globalAvgLen.foreach { case (f, avg) =>
@@ -78,8 +78,29 @@ class MultiSearcherSpec extends AnyFunSuite {
       single.dfOf(Set(("content", "buffer")))(("content", "buffer")))
   }
 
+  test("global avgLen merge is exact: a merged index's length sum / N, bit for bit") {
+    // pure arithmetic over IndexMeta pairs: each segment's avgLen is its
+    // builder's sum / nDocs, so the merge must give (sumA + sumB) / N
+    // exactly — summing avgLen · nDocs as doubles is off in the last bit
+    // in some of these cases — and one segment must give back its own avgLen
+    val rng = new scala.util.Random(20261017L)
+    def meta(n: Long, sum: Long) = IndexMeta(n, Map("content" -> sum.toDouble / n), 8, 256, 64)
+    var doubleSumOff = 0
+    (1 to 20000).foreach { i =>
+      val (nA, nB) = (1L + rng.nextInt(1000000), 1L + rng.nextInt(1000000))
+      val (sumA, sumB) = ((rng.nextDouble() * nA * 5000).toLong, (rng.nextDouble() * nB * 5000).toLong)
+      val (a, b) = (meta(nA, sumA), meta(nB, sumB))
+      val exact = (sumA + sumB).toDouble / (nA + nB)
+      assert(Searcher.mergeAvgLen(Seq(a, b))("content") == exact, s"case $i: two segments")
+      assert(Searcher.mergeAvgLen(Seq(a))("content") == a.avgLen("content"), s"case $i: one segment")
+      val doubleSum = (a.avgLen("content") * nA + b.avgLen("content") * nB) / (nA + nB)
+      if (doubleSum != exact) doubleSumOff += 1
+    }
+    assert(doubleSumOff > 0, "no case where the double-sum merge is off: the spec has no teeth")
+  }
+
   test("per-segment norms built once, reused across repeated queries") {
-    val multi = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val multi = new Searcher(spark, Seq(segADir, segBDir))
     val first = multi.search("buffer def class", 10)
     assert(first.nonEmpty)
     val buildsAfterFirst = multi.normBuilds.get()
@@ -94,7 +115,7 @@ class MultiSearcherSpec extends AnyFunSuite {
   }
 
   test("distributed strategies: identical hits, zero driver run collects") {
-    val baseline = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val baseline = new Searcher(spark, Seq(segADir, segBDir))
     val queries = Seq("buffer", "def class import return", "buffer sort merge",
       "binary search tree implementation")
     val expected = queries.map(q => baseline.search(q, 10).toSeq)
@@ -102,16 +123,14 @@ class MultiSearcherSpec extends AnyFunSuite {
 
     // force the big-postings branch: every segment must route its runs through
     // flatMapGroups with broadcast norms — no posting run may reach the driver
-    val dist = new MultiSearcher(spark, Seq(segADir, segBDir))
-    dist.DriverKernelMaxPostings = 0
+    val dist = new Searcher(spark, Seq(segADir, segBDir), SearchConfig(driverKernelMaxPostings = 0))
     val gotDist = queries.map(q => dist.search(q, 10).toSeq)
     assert(gotDist == expected, "distributed-kernel hits differ")
     assert(dist.driverRunFetches.get() == 0,
       "forced-distributed path collected posting runs to the driver")
 
     // force the beyond-norms branch: docstats cogroup, norms never built
-    val shuf = new MultiSearcher(spark, Seq(segADir, segBDir))
-    shuf.NormsMaxDocs = 0
+    val shuf = new Searcher(spark, Seq(segADir, segBDir), SearchConfig(normsMaxDocs = 0))
     val gotShuf = queries.map(q => shuf.search(q, 10).toSeq)
     assert(gotShuf == expected, "shuffle-cogroup hits differ")
     assert(shuf.driverRunFetches.get() == 0 && shuf.normBuilds.get() == 0,
@@ -119,7 +138,7 @@ class MultiSearcherSpec extends AnyFunSuite {
   }
 
   test("searchMany: batched results identical to per-query search, in order") {
-    val multi = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val multi = new Searcher(spark, Seq(segADir, segBDir))
     val batch = Seq("buffer", "def class import return", "buffer sort merge",
       "binary search tree implementation", "café", "buffer", "nosuchtermxyz")
     val batched = multi.searchMany(batch, 10)
@@ -132,14 +151,14 @@ class MultiSearcherSpec extends AnyFunSuite {
 
   test("close() releases per-segment broadcasts; next generation rebuilds cleanly") {
     // generation 1: searcher over (A, B) builds norm + tombstone broadcasts
-    val gen1 = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val gen1 = new Searcher(spark, Seq(segADir, segBDir))
     val first = gen1.search("buffer def class", 10)
     assert(first.nonEmpty)
     assert(gen1.liveBroadcastCount > 0, "search must have created broadcasts")
     // segment swap: a long-lived service opens the next generation and closes
     // the old one — its whole broadcast inventory must drain (destroy()),
     // not accrete in the block manager for the JVM's lifetime
-    val gen2 = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val gen2 = new Searcher(spark, Seq(segADir, segBDir))
     gen1.close()
     assert(gen1.liveBroadcastCount == 0, "close must drain every broadcast")
     val again = gen2.search("buffer def class", 10)
@@ -149,7 +168,7 @@ class MultiSearcherSpec extends AnyFunSuite {
   }
 
   test("searchDF: multisegment result rows carry correct per-segment identity") {
-    val multi = new MultiSearcher(spark, Seq(segADir, segBDir))
+    val multi = new Searcher(spark, Seq(segADir, segBDir))
     val hits = multi.search("buffer", 10)
     val rows = multi.searchDF("buffer", 10).collect()
     assert(rows.length == hits.length)

@@ -63,7 +63,7 @@ class StreamingSpec extends AnyFunSuite {
     def shaOf(d: String): Map[Long, String] =
       spark.read.parquet(s"$d/docstats").select("docId", "sha")
         .as[(Long, String)].collect().toMap
-    val multi = new graft.query.MultiSearcher(spark,
+    val multi = new Searcher(spark,
       StreamingIngest.committedDeltas(out).filterNot(_.contains("compact")))
     val single = new Searcher(spark, compacted.get)
     val singleSha = shaOf(compacted.get)
