@@ -699,17 +699,23 @@ object RelationalQueries {
     // interpreted-HOF chain can't constant-fold a broadcast column). The
     // query norm is folded once on the driver with the same left-to-right
     // IEEE summation the aggregate() HOF uses, so every emitted value is
-    // bit-identical; per-row work drops from 3 dot passes to 2.
+    // bit-identical; per-row work drops from 3 dot passes to 2. Without a
+    // query vector the same projection runs over no rows: an empty result
+    // with the usual schema, as the oracle's cross join gives.
     "q_cosine_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
         .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-      val qv: Array[Double] = emb.filter(col("vec_id") === 0)
-        .select(col("v")).first().getSeq[Double](0).toArray
-      val qNorm = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-      val qvCol = array(qv.map(lit): _*)
+      val (rows, qvCol, qNorm) = emb.filter(col("vec_id") === 0)
+        .select(col("v")).head(1).headOption match {
+        case Some(r) =>
+          val qv = r.getSeq[Double](0).toArray
+          (emb.filter(col("vec_id") =!= 0), array(qv.map(lit): _*),
+            math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x)))
+        case None => (emb.filter(lit(false)), col("v"), 1.0)
+      }
       def dot(x: Column, y: Column): Column =
         aggregate(zip_with(x, y, (a, b) => a * b), lit(0.0), (acc, v) => acc + v)
-      emb.filter(col("vec_id") =!= 0)
+      rows
         .select(col("vec_id"),
           round(dot(col("v"), qvCol) /
             (sqrt(dot(col("v"), col("v"))) * lit(qNorm)), 4)

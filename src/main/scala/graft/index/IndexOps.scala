@@ -311,10 +311,19 @@ object IndexOps {
   *   clause     := [NOT] field:value | [NOT] field:* | *:*
   *   query      := clause (OR clause)*
   *
-  * `field:*`    -> field-exists test on docstats
-  * `field:value`-> exact keyword match for string fields (repo/lang/...) or
-  *                 analyzed-term postings lookup for `content`/`path`
-  * OR           -> union of matching docId sets; NOT -> complement.
+  * A query compiles to ONE predicate over one docstats scan, so resolving
+  * it is one Spark job for keyword and exists clauses:
+  *
+  * `field:value` -> `coalesce(field = value, false)` for keyword fields
+  *                  (repo/lang/...); for `content`/`path`, a marker column
+  *                  from a left-outer join with the analyzed term's decoded
+  *                  postings
+  * `field:*`     -> the field-exists test on docstats
+  * `*:*`         -> true (a leading NOT is ignored)
+  * NOT           -> negation of the whole clause predicate: a doc whose
+  *                  value is null matches `NOT field:value`, as it would
+  *                  with a complement of the match set
+  * OR            -> `||` of the clause predicates
   */
 object QueryFilter {
 
@@ -338,51 +347,69 @@ object QueryFilter {
       }
     }.toSeq
 
-  /** docIds (and doc columns) matching the query — DataFrame set algebra:
-    * term clauses prune via parquet pushdown on the postings/docstats scans;
-    * negation is an anti-join against the clause's match set.
+  /** Fields whose term clauses read postings instead of a docstats column. */
+  private val PostingsFields = Set("content", "path")
+
+  /** Live docstats rows (every docstats column) matching the query:
+    * [[filter]] over the index's tables, committed tombstones excluded.
     */
-  def matchingDocs(spark: SparkSession, indexDir: String, query: String): DataFrame = {
-    val stats = spark.read.parquet(s"$indexDir/docstats")
-    val clauses = parse(query)
-
-    def clauseDocs(c: Clause): DataFrame = c match {
-      case MatchAll => stats
-      case ExistsClause(field, neg) =>
-        val pred = field match {
-          case "content" => col("lenContent") > 0
-          case "path" => col("lenPath") > 0
-          case "repo" => col("lenRepo") > 0
-          case other => col(other).isNotNull
-        }
-        stats.filter(if (neg) !pred else pred)
-      case TermClause(field, value, neg) =>
-        val positive: DataFrame = field match {
-          case "content" | "path" =>
-            val term = graft.analysis.Analyzer.analyzeField(field, value)
-              .headOption.getOrElse(value)
-            val buckets = IndexMeta.fromProps(new Snapshot(indexDir).readProps()).buckets
-            val matched = spark.read.parquet(s"$indexDir/postings")
-              .filter(col("bucket") === IndexBuilder.bucketOf(term, buckets) &&
-                col("field") === field && col("term") === term)
-              .select(explode(col("blocks")).as("b"))
-              .select(col("b.docsDelta").as("docsDelta"), col("b.n").as("n"))
-              .as[(Array[Byte], Int)](org.apache.spark.sql.Encoders.product[(Array[Byte], Int)])
-              .flatMap(t => graft.core.Codec.decodeDocIds(t._1, t._2))(
-                org.apache.spark.sql.Encoders.scalaLong)
-              .toDF("docId").distinct()
-            stats.join(matched, "docId")
-          case other =>
-            stats.filter(col(other) === value)
-        }
-        if (neg) stats.join(positive.select("docId"), Seq("docId"), "left_anti")
-        else positive
-    }
-
-    // committed tombstones are invisible to every filter query
+  def matchingDocs(spark: SparkSession, indexDir: String, query: String): DataFrame =
     Tombstones.exclude(spark, indexDir,
-      clauses.map(clauseDocs).reduce { (a, b) =>
-        a.unionByName(b).dropDuplicates("docId")
-      })
+      filter(spark.read.parquet(s"$indexDir/docstats"),
+        spark.read.parquet(s"$indexDir/postings"),
+        IndexMeta.fromProps(new Snapshot(indexDir).readProps()).buckets, query))
+
+  /** `stats` rows matching the query, with `stats`' columns; tombstones are
+    * NOT excluded. `postings` and `buckets` are only used by `content:` and
+    * `path:` term clauses.
+    */
+  def filter(stats: DataFrame, postings: => DataFrame, buckets: => Int,
+             query: String): DataFrame = {
+    val clauses = parse(query).zipWithIndex
+    def marker(i: Int): String = s"_fq$i"
+    // read once, and only when a clause needs them
+    lazy val postingsDF = postings
+    lazy val nBuckets = buckets
+    val marked = clauses.foldLeft(stats) {
+      case (df, (TermClause(field, value, _), i)) if PostingsFields(field) =>
+        df.join(termDocs(postingsDF, nBuckets, field, value).withColumn(marker(i), lit(true)),
+          Seq("docId"), "left_outer")
+      case (df, _) => df
+    }
+    val predicate = clauses.map { case (c, i) =>
+      val (pred, neg) = c match {
+        case MatchAll => (lit(true), false)
+        case ExistsClause(field, n) =>
+          val exists = field match {
+            case "content" => col("lenContent") > 0
+            case "path" => col("lenPath") > 0
+            case "repo" => col("lenRepo") > 0
+            case other => col(other).isNotNull
+          }
+          (exists, n)
+        case TermClause(field, _, n) if PostingsFields(field) =>
+          (coalesce(col(marker(i)), lit(false)), n)
+        case TermClause(field, value, n) => (coalesce(col(field) === value, lit(false)), n)
+      }
+      if (neg) !pred else pred
+    }.reduce(_ || _)
+    marked.filter(predicate).select(stats.columns.map(col).toIndexedSeq: _*)
+  }
+
+  /** docIds in the analyzed term's postings, decoded from its blocks. A doc
+    * posts a (field, term) once, so the ids are distinct without a shuffle.
+    */
+  private def termDocs(postings: DataFrame, buckets: Int, field: String,
+                       value: String): DataFrame = {
+    val term = graft.analysis.Analyzer.analyzeField(field, value).headOption.getOrElse(value)
+    postings
+      .filter(col("bucket") === IndexBuilder.bucketOf(term, buckets) &&
+        col("field") === field && col("term") === term)
+      .select(explode(col("blocks")).as("b"))
+      .select(col("b.docsDelta").as("docsDelta"), col("b.n").as("n"))
+      .as[(Array[Byte], Int)](org.apache.spark.sql.Encoders.product[(Array[Byte], Int)])
+      .flatMap(t => graft.core.Codec.decodeDocIds(t._1, t._2))(
+        org.apache.spark.sql.Encoders.scalaLong)
+      .toDF("docId")
   }
 }

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.core._
-import graft.index.{IndexBuilder, IndexMeta, Snapshot, Tombstones}
+import graft.index.{IndexBuilder, IndexMeta, QueryFilter, Snapshot, Tombstones}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -320,13 +320,19 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     lazy val tombstonesBc: Broadcast[Array[Long]] =
       track(spark.sparkContext.broadcast(Tombstones.loadSorted(spark, dir)))
 
+    /** The segment's docstats, read once: the norm-table build and every fq
+      * resolution plan over it, so neither re-lists files nor re-reads the
+      * parquet schema.
+      */
+    lazy val docstatsDF: DataFrame = querySession.read.parquet(s"$dir/docstats")
+
     /** Dense norms broadcast once (docIds are dense ranks 0..n-1). */
     lazy val normsBc: Broadcast[NormTable] = track {
       normBuilds.incrementAndGet()
       val fields = DefaultFields.toArray
       val n = meta.nDocs.toInt
       val arrs = fields.map(_ => new Array[Byte](n))
-      spark.read.parquet(s"$dir/docstats")
+      docstatsDF
         .select($"docId", $"lenContent", $"lenPath", $"lenRepo")
         .as[(Long, Int, Int, Int)]
         .collect()
@@ -344,7 +350,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
     // postings DataFrames with the file index cached across queries, planned
     // under the query and batch sessions so kernel stages inherit their conf
-    private lazy val postingsDF: DataFrame = querySession.read.parquet(s"$dir/postings")
+    lazy val postingsDF: DataFrame = querySession.read.parquet(s"$dir/postings")
     private lazy val batchPostingsDF: DataFrame =
       batchQuerySession.read.parquet(s"$dir/postings")
 
@@ -420,7 +426,9 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private[graft] val driverRunFetches = new AtomicLong(0)
 
-  /** fq resolution jobs issued (repeat fqs stay cached). */
+  /** Single-fq resolutions (repeat fqs stay cached). Each is one docstats
+    * scan job, plus the postings stages of any `content:`/`path:` clause.
+    */
   private[graft] val fqResolves = new AtomicLong(0)
 
   private[graft] def dictProbes: Long = segments.iterator.map(_.dict.probes.get()).sum
@@ -813,26 +821,44 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     * a PERSISTED docId DataFrame (above it — the semi-join regime; persisting
     * makes the filter resolve-once like Solr's filterCache: measured 2.7x ->
     * 1.33x the unfiltered shuffle p50 at 200k docs, BENCH/BASELINE.md).
-    * The count job doubles as the cache materialization.
+    * `maxRows` bounds the set's size. When it fits the bound, the set is
+    * collected by its one scan job and nothing is persisted. Otherwise one
+    * job both counts the set and fills the persisted cache, and its tasks
+    * return counts only, so the driver never receives more than the bound:
+    * a set past the bound is already materialized for the semi-join, and a
+    * set that fits is collected from the cache.
     */
-  private def persistedOrBroadcast(docs: DataFrame): FqSet = {
-    val pdf = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = pdf.count()
-    if (n <= config.fqMaxBroadcast) {
-      val arr = pdf.as[Long].collect()
+  private def persistedOrBroadcast(docs: DataFrame, maxRows: Long): FqSet = {
+    def broadcastSorted(arr: Array[Long]): FqSet = {
       java.util.Arrays.sort(arr)
-      pdf.unpersist()
-      FqSet(n, Some(track(spark.sparkContext.broadcast(arr))), None)
-    } else {
-      livePersists.add(pdf)
-      FqSet(n, None, Some(pdf))
+      FqSet(arr.length, Some(track(spark.sparkContext.broadcast(arr))), None)
+    }
+    if (maxRows <= config.fqMaxBroadcast) broadcastSorted(docs.as[Long].collect())
+    else {
+      val pdf = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val n = spark.sparkContext.runJob(pdf.queryExecution.toRdd,
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => it.size.toLong).sum
+      if (n <= config.fqMaxBroadcast) {
+        val arr = if (n == 0) Array.emptyLongArray else pdf.as[Long].collect()
+        pdf.unpersist()
+        broadcastSorted(arr)
+      } else {
+        livePersists.add(pdf)
+        FqSet(n, None, Some(pdf))
+      }
     }
   }
 
+  /** One fq's match set on a segment: [[graft.index.QueryFilter.filter]]
+    * over the segment's own docstats and postings DataFrames. Tombstoned
+    * docs stay in the set; every scoring route excludes them already.
+    */
   private def resolveSingleFq(seg: Segment, fqs: String): FqSet = {
     fqResolves.incrementAndGet()
     persistedOrBroadcast(
-      graft.index.QueryFilter.matchingDocs(querySession, seg.dir, fqs).select($"docId"))
+      QueryFilter.filter(seg.docstatsDF, seg.postingsDF, seg.meta.buckets, fqs)
+        .select($"docId"),
+      seg.meta.nDocs)
   }
 
   /** Intersect component resolutions (multi-fq conjunction, Solr docset ∩
@@ -858,7 +884,8 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       val out = df.as[Long].collect()
       java.util.Arrays.sort(out)
       FqSet(out.length, Some(track(spark.sparkContext.broadcast(out))), None)
-    } else persistedOrBroadcast(bigs.tail.foldLeft(bigs.head)(_.join(_, Seq("docId"), "left_semi")))
+    } else persistedOrBroadcast(bigs.tail.foldLeft(bigs.head)(_.join(_, Seq("docId"), "left_semi")),
+      sets.iterator.map(_.count).min)
   }
 
   // ---- multi-fq overloads: repeated filter queries INTERSECT (Solr's
@@ -951,8 +978,12 @@ object Searcher {
                                 idfMap: Map[(String, String), Double],
                                 minMatch: Int, segPostings: IndexedSeq[Long])
 
-  /** Resolved filter query: matching-doc count + sorted-array broadcast or
-    * persisted docId DataFrame (exactly one of the two is set).
+  /** A resolved filter query on one segment — the filterCache entry. `count`
+    * is the match-set size; exactly one form of the set is held: `sorted`,
+    * the docIds as a sorted-array broadcast that the kernels binary-search
+    * (up to `fqMaxBroadcast` docs), or `docs`, a persisted docId DataFrame
+    * that semi-joins the docstats side of the shuffle strategy (above it).
+    * Tombstoned docs may be in the set; the scoring routes exclude them.
     */
   private final case class FqSet(count: Long, sorted: Option[Broadcast[Array[Long]]],
                                  docs: Option[DataFrame])

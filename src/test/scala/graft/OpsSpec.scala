@@ -127,6 +127,16 @@ class OpsSpec extends AnyFunSuite {
       s"sig probe must push to parquet:\n$pushed")
   }
 
+  test("q_cosine_topk without a query vector: empty result with the usual schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graftcos").toString
+    spark.read.parquet(embPath).filter($"vec_id" =!= 0)
+      .write.parquet(s"$dir/embeddings.parquet")
+    val q = RelationalQueries.queries("q_cosine_topk")
+    val none = q(spark, dir) // planned without a plan-time throw
+    assert(none.collect().isEmpty)
+    assert(none.schema == q(spark, new java.io.File(embPath).getParent).schema)
+  }
+
   test("embedding near-dup: LSH pairs are a subset of exact pairs, decent recall") {
     val emb = spark.read.parquet(embPath).filter($"vec_id" < 150)
     val exact = Similarity.cosinePairs(emb, "vec_id", "embedding", minCos = 0.1)
