@@ -8,66 +8,42 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark (driver contract): runs the relational operator suite
   * on SPARK_GRAFT_SF_DIR plus the engine headline — synthetic-corpus index
   * build (docs/sec) and BM25 top-k query latency — and prints ONE JSON line.
+  * Also the one bench library: the other measuring mains (ScalingBench,
+  * DedupScaleBench, PlanAudit) take their sessions, timing, min-of-N and
+  * load sentinels from here.
   */
 object Bench {
+
+  /** Local-mode cores for a bench session: SPARK_GRAFT_CPUS when set, else
+    * every core of this machine.
+    */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Multi-executor session: `local-cluster[workers, coresPerWorker, memMB]`
     * spawns one real JVM per executor — the faithful single-box proxy for a
     * multi-executor cluster (own heap/GC per executor, like real nodes),
     * unlike local[n] threads sharing one JVM.
     */
-  def newClusterSession(workers: Int, coresPerWorker: Int, memMB: Int = 4096): SparkSession = {
-    val localDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-tmp"
-      else System.getProperty("java.io.tmpdir")
-    val totalCores = workers * coresPerWorker
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$workers,$coresPerWorker,$memMB]")
-      .appName("graft-bench-cluster")
-      .config("spark.executor.memory", s"${memMB - 512}m")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
+  def newClusterSession(workers: Int, coresPerWorker: Int, memMB: Int = 4096): SparkSession =
+    session(s"local-cluster[$workers,$coresPerWorker,$memMB]", "graft-bench-cluster",
+      shufflePartitions = workers * coresPerWorker * 2, Map(
+        "spark.executor.memory" -> s"${memMB - 512}m",
+        "spark.executor.extraClassPath" -> sys.props("java.class.path"),
         // each executor JVM must size its service threads for ITS core slice,
         // not the whole box — 8 JVMs each spawning nproc GC/JIT threads
         // oversubscribes the box into thrashing (measured 3x slowdown)
-        s"-XX:ActiveProcessorCount=$coresPerWorker " +
-          s"-XX:ParallelGCThreads=$coresPerWorker " +
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_GC", "") + " " +
-          "-XX:CICompilerCount=2 " +
-          "--add-opens=java.base/java.lang=ALL-UNNAMED " +
-          "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED " +
-          "--add-opens=java.base/java.lang.reflect=ALL-UNNAMED " +
-          "--add-opens=java.base/java.io=ALL-UNNAMED " +
-          "--add-opens=java.base/java.net=ALL-UNNAMED " +
-          "--add-opens=java.base/java.nio=ALL-UNNAMED " +
-          "--add-opens=java.base/java.util=ALL-UNNAMED " +
-          "--add-opens=java.base/java.util.concurrent=ALL-UNNAMED " +
-          "--add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.nio.cs=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.security.action=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED")
-      .config("spark.sql.shuffle.partitions", (totalCores * 2).toString)
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "true"))
-      // on this box every shuffle/cache byte is a tmpfs memcpy from ONE
-      // socket's bandwidth pool — a denser codec trades plentiful CPU for
-      // the scarce resource (default lz4; zstd measured via this knob)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // temp streaming checkpoints (q_stream_window) really are temporary:
-      // delete them on stop instead of leaking /tmp dirs + a shutdown WARN
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        "spark.executor.extraJavaOptions" ->
+          (s"-XX:ActiveProcessorCount=$coresPerWorker " +
+            s"-XX:ParallelGCThreads=$coresPerWorker -XX:CICompilerCount=2 " +
+            org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())))
 
-  def newSession(cpus: String): SparkSession = {
+  def newSession(cpus: Int): SparkSession =
+    session(s"local[$cpus]", "graft-bench", shufflePartitions = cpus * 2)
+
+  /** The configuration every bench session shares, plus `extra`. */
+  private def session(master: String, appName: String, shufflePartitions: Int,
+                      extra: Map[String, String] = Map.empty): SparkSession = {
     // Shuffle dirs on tmpfs when available: on a real cluster shuffle IO is
     // spread across every node's local disks; on this single box one shared
     // disk would otherwise be the (non-representative) scaling bottleneck.
@@ -75,9 +51,9 @@ object Bench {
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-tmp"
       else System.getProperty("java.io.tmpdir")
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
+      .master(master)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.local.dir", localDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -85,6 +61,7 @@ object Bench {
       // delete them on stop instead of leaking /tmp dirs + a shutdown WARN
       .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
       .config("spark.ui.enabled", "false")
+      .config(extra)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -92,11 +69,9 @@ object Bench {
 
   /** Corpus size scaled to the testdata SF so bench cost tracks the round. */
   def corpusDocs(sfDir: String): Long =
-    sys.env.get("SPARK_GRAFT_BENCH_DOCS").map(_.toLong).getOrElse {
-      if (sfDir.contains("0.1")) 50000L
-      else if (sfDir.contains("0.01")) 5000L
-      else 1000L
-    }
+    if (sfDir.contains("0.1")) 50000L
+    else if (sfDir.contains("0.01")) 5000L
+    else 1000L
 
   def time[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -198,8 +173,7 @@ object Bench {
     val sm = if (timing) Some(StageMetrics.install(spark)) else None
     val (_, tBuild) = time {
       IndexBuilder.build(spark, docs, out,
-        IndexConfig(buckets = 64, saltRange = 1L << 16, shufflePartitions = cores * 2,
-          chunkDocs = sys.env.get("SPARK_GRAFT_CHUNK_DOCS").map(_.toInt).getOrElse(16384)))
+        IndexConfig(buckets = 64, saltRange = 1L << 16, shufflePartitions = cores * 2))
     }
     sm.foreach(_.report(s"build nDocs=$nDocs cores=$cores"))
     // Every sub-second query metric below is the per-query MIN of 3 passes
@@ -348,8 +322,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = newSession(cpus)
+    val spark = newSession(defaultCpus)
 
     // session warm-up, untimed: one scan+aggregate triggers the parquet
     // reader, codegen and JIT paths the first measured query would otherwise

@@ -29,13 +29,13 @@ import org.apache.spark.sql.functions._
   * writes BENCH/DEDUP_SCALE_LAST.md.
   *
   * Usage: runMain graft.DedupScaleBench [nDocs] [cpus]
-  * [corpus|spans|hotspans|decon|funnel|lines|cms|all] (defaults 1000000, 32,
-  * corpus; SPARK_DRIVER_MEM sizes the forked heap)
+  * [corpus|spans|hotspans|decon|funnel|lines|cms|all] (defaults 1000000,
+  * [[Bench.defaultCpus]], corpus; SPARK_DRIVER_MEM sizes the forked heap)
   */
 object DedupScaleBench {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 1000000L
-    val cpus = if (args.length > 1) args(1) else "32"
+    val cpus = if (args.length > 1) args(1).toInt else Bench.defaultCpus
     val legsArg = if (args.length > 2) args(2) else "corpus"
     val legs: Seq[String] =
       if (legsArg == "all")

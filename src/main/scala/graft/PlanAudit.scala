@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.newSession(Bench.defaultCpus)
     val sb = new StringBuilder
     sb.append("# PLANS — explain(formatted) audit\n\n")
     sb.append(s"Generated by `runMain graft.PlanAudit $sfDir`.\n")

@@ -646,10 +646,10 @@ object RelationalQueries {
     // checkpoint dir every batch — at the session's core-scaled partition
     // count that was 64 store directories for a state of O(windows × event
     // types) rows. State partitions are sized to the STATE, not the cores
-    // (env-overridable for corpus-scale state), and the checkpoint goes on
-    // the same tmpfs policy as the session's shuffle dirs. The session conf
-    // is restored after the stream finishes; results are partitioning-
-    // independent (the oracle hash proves it).
+    // (at most 8), and the checkpoint goes on the same tmpfs policy as the
+    // session's shuffle dirs. The session conf is restored after the
+    // stream finishes; results are partitioning-independent (the oracle
+    // hash proves it).
     "q_stream_window" -> ((s, dir) => {
       val schema = t(s, dir, "events").schema
       // FileStreamSource requires a directory; stage the single-file table
@@ -667,8 +667,7 @@ object RelationalQueries {
         .agg(count(lit(1)).as("cnt"))
         .select(col("w.start").as("window_start"), col("event_type"), col("cnt"))
       val name = "q_stream_window_tbl"
-      val stateParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS",
-        math.min(8, s.sparkContext.defaultParallelism).toString)
+      val stateParts = math.min(8, s.sparkContext.defaultParallelism).toString
       val ckptRoot =
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-stream-ckpt"
         else System.getProperty("java.io.tmpdir")

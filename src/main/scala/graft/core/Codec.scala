@@ -13,7 +13,7 @@ import java.nio.ByteBuffer
   *
   * Why not plain varints (the round-1..5 format): the query kernel decodes
   * millions of blocks per batch and sits on the memory-bandwidth ceiling at
-  * full thread count (QueryScalingBench rounds 5-6). Bit-packing attacks
+  * full thread count (`ScalingBench query`, rounds 5-6). Bit-packing attacks
   * both sides of that ceiling at once: fewer bytes streamed (a 1-byte
   * varint gap becomes 0-6 bits here) and a branch-free shift/mask decode
   * loop instead of a per-byte continuation-bit branch.

@@ -5,8 +5,9 @@ package graft.docprep
   * UCLALibrary/californica config/authorities YAMLs: public LoC / Creative
   * Commons / IIIF URIs and MARC language codes). The TABLES are a data-only
   * port, stored as classpath TSV resources under
-  * `graft/controlled_vocab/` (id <TAB> label) and regenerated by
-  * tools/gen_controlled_fields.py; parity requires the exact entries.
+  * `graft/controlled_vocab/` (id <TAB> label), extracted from the
+  * reference's controlled_fields.py (FIXTURES.md §3); parity requires the
+  * exact entries.
   *
   * Maps are id -> label ("id" = the reference Enum member name, usually a
   * URI; "label" = the human-readable term). Loaded once per JVM; used as

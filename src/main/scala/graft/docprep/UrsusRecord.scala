@@ -100,7 +100,7 @@ object UrsusRecord {
   /** pysolr _from_python: `%Y-%m-%dT%H:%M:%SZ` via strftime — note Python's
     * `%Y` does NOT zero-pad years below 1000 ('935-01-01T00:00:00Z'), so the
     * padded ISO year is un-padded here for byte parity with the reference
-    * (gated by tools/ursus_parity.py against the actual pydantic model).
+    * (matched against the actual pydantic model; FIXTURES.md §3).
     */
   private def solrDates(endpoints: Column): Column =
     when(endpoints.isNotNull,
@@ -111,25 +111,41 @@ object UrsusRecord {
   /** Project a CSV-shaped frame (columns named by the reference's csv
     * headers) into the UrsusSolrRecord columns.
     *
+    * r7: the projection's ~170 Column trees are a PURE function of
+    * (input schema, now) — building them dominated the per-invocation cost
+    * (probe at sf0.1: 0.6 s tree construction + 0.3 s analysis vs 0.2 s
+    * execution), so they are memoized per (columns, now), for at most
+    * [[ProjCacheMaxEntries]] keys; a key past that bound builds its trees
+    * uncached. Column objects are immutable unresolved expression trees;
+    * reusing them across DataFrames of the same schema is exactly how
+    * builtins are shared.
+    *
     * @param now fixed timestamp for `timestamp`/`system_modified_dtsi`
     *            (the reference stamps datetime.now; a fixed instant keeps
     *            the projection deterministic — pass None to omit)
     */
-  /** r7: the projection's ~170 Column trees are a PURE function of
-    * (input schema, now) — building them dominated the per-invocation cost
-    * (probe at sf0.1: 0.6 s tree construction + 0.3 s analysis vs 0.2 s
-    * execution), so they are memoized per (columns, now). Column objects
-    * are immutable unresolved expression trees; reusing them across
-    * DataFrames of the same schema is exactly how builtins are shared.
+  def project(df: DataFrame, now: Option[String] = None): DataFrame = {
+    val key = (df.columns.toSeq, now)
+    val (dCols, cCols) = Option(projCache.get(key)).getOrElse {
+      val built = buildCols(df, now)
+      // inserts serialize on the map, so the bound holds under concurrency
+      projCache.synchronized {
+        if (projCache.size < ProjCacheMaxEntries) projCache.putIfAbsent(key, built)
+      }
+      built
+    }
+    df.select(dCols: _*).select(cCols: _*)
+  }
+
+  /** Bound on memoized (columns, now) keys: each entry pins ~170 Column
+    * trees for the JVM's lifetime, and every distinct `now` is a new key.
     */
+  private[graft] val ProjCacheMaxEntries = 16
+
   private val projCache = new java.util.concurrent.ConcurrentHashMap[
     (Seq[String], Option[String]), (Seq[Column], Seq[Column])]()
 
-  def project(df: DataFrame, now: Option[String] = None): DataFrame = {
-    val (dCols, cCols) = projCache.computeIfAbsent((df.columns.toSeq, now),
-      _ => buildCols(df, now))
-    df.select(dCols: _*).select(cCols: _*)
-  }
+  private[graft] def projCacheSize: Int = projCache.size
 
   private def buildCols(df: DataFrame,
                         now: Option[String]): (Seq[Column], Seq[Column]) = {

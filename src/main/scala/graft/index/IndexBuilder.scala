@@ -307,18 +307,14 @@ object IndexBuilder {
           }
       }
     // persist only when both stages consume it (a resumed postings-only build
-    // reads the fused pass once — no point caching). Storage level knob:
+    // reads the fused pass once — no point caching). Storage level:
     // MEMORY_AND_DISK columnar is the measured winner here (DISK_ONLY
     // serialized rows cost 23.6k -> 14.5k docs/s at 1.6M/16c: BuildEmit's
     // binary payloads serialize poorly row-wise but pack well columnar) —
     // the OPPOSITE of the withDocIds corpus cache, where rows are wide text.
     val needBoth = needDocstats && needPostings
-    val emitLevel = sys.env.get("SPARK_GRAFT_EMIT_CACHE") match {
-      case Some("DISK_ONLY") => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
     lazy val src: Dataset[BuildEmit] =
-      if (needBoth) emitted.persist(emitLevel)
+      if (needBoth) emitted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else emitted
 
     // ---- stage: docstats (map-side rows out of the fused pass; the timed

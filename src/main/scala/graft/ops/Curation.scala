@@ -21,7 +21,14 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   /** Stage-budget table (stage, n_docs, sum_tokens), one row per funnel
-    * stage, ordered by stage. Thresholds are the battery's (sized so every
+    * stage, ordered by stage.
+    *
+    * EAGER: unlike the lazy operators it composes, this runs the whole
+    * funnel at call time (19 Spark jobs over the sf0.01 `documents` table)
+    * and returns a local relation of 5 rows sorted by stage; acting on the
+    * result only sorts those rows.
+    *
+    * Thresholds are the battery's (sized so every
     * gate bites on the synthetic corpora: ~9% fail strict language
     * dominance, ~45% the token floor, ~5% share a prefix fingerprint).
     *

@@ -46,7 +46,7 @@ object QueryPlan {
 
 /** Per-(field, term) decoded-block cache, shared by every query of a BATCH
   * that touches the term within one task (r7, guide §1.2 per-task work —
-  * found by StageMetrics on the 32-core QueryScalingBench leg: a 1024-query
+  * found by StageMetrics on the 32-core `ScalingBench query` leg: a 1024-query
   * batch over a ~25-term vocabulary decoded the SAME blocks ~80× per salt
   * task; decode was the dominant share of 153 task-CPU-seconds/run).
   * Blocks decode LAZILY on first touch — a block every query WAND-skips is
@@ -105,7 +105,7 @@ final class PostingIterator(runs: Array[PostingRun], cache: DecodedBlocks = null
   private var done = blocks.isEmpty
   // REUSED decode buffers, sized once to the largest block: the kernel
   // decodes millions of blocks per batch and the decode loop is memory-
-  // bandwidth-bound at full thread count (QueryScalingBench round 5) —
+  // bandwidth-bound at full thread count (`ScalingBench query`, round 5) —
   // two fresh arrays + a ByteBuffer per block was pure allocation traffic
   // on the hottest path. tfs decode LAZILY per block: WAND's pivot skipping
   // scans THROUGH many blocks by docId without ever reading a tf, so the
@@ -482,7 +482,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     * delta+varint COMPRESSED — a coalesced partition holds ~10-30x its bytes
     * in decoded postings, and the measured kernel stage collapsed to 4-6
     * tasks regardless of cores (batch of 256 ran FLAT from 8 to 32 cores,
-    * QueryScalingBench round 5). Lowering the coalesce floor keeps the
+    * `ScalingBench query`, round 5). Lowering the coalesce floor keeps the
     * parallelism-first target at total/cores without touching the caller's
     * session, where normal byte-based coalescing is right.
     */
@@ -490,7 +490,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
   /** Session for BATCHED kernel jobs ([[searchManyDistributed]]): same
     * context, SQL conf tuned for throughput instead of latency. The
-    * round-6 profile (QueryScalingBench, SPARK_GRAFT_TIMING): the batched
+    * round-6 profile (`ScalingBench query`, SPARK_GRAFT_TIMING): the batched
     * kernel stage coalesced to ~1.25x cores tasks (40 at 32 cores), so the
     * whole second scheduling wave ran 8 tasks on 32 cores — wall = 2x the
     * median task while task-CPU inflation at 32 threads was only ~13%.

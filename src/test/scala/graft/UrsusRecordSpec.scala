@@ -108,8 +108,8 @@ class UrsusRecordSpec extends AnyFunSuite {
   test("normalized date machinery: year_isim, date_dtsim, dtsort, A<=B validity") {
     val r = project("Date.normalized" -> "1941-10/1942|~|935")
     assert(intsOf(r, "year_isim") == Seq(935, 1941, 1942))
-    // python strftime %Y does not zero-pad (reference parity, gated by
-    // tools/ursus_parity.py against the actual pydantic model)
+    // python strftime %Y does not zero-pad (reference parity, matched
+    // against the actual pydantic model; FIXTURES.md §3)
     assert(seqOf(r, "date_dtsim") == Seq("935-01-01T00:00:00Z",
       "1941-10-01T00:00:00Z", "1942-01-01T00:00:00Z"))
     assert(get[String](r, "date_dtsort") == "935-01-01T00:00:00Z")
@@ -144,6 +144,23 @@ class UrsusRecordSpec extends AnyFunSuite {
   test("member_of_collection_ids from Parent ARK via make_ursus_id") {
     val r = project("Parent ARK" -> "ark:/21198/zz001nx6px")
     assert(seqOf(r, "member_of_collection_ids_ssim") == Seq("xp6xn100zz-89112"))
+  }
+
+  test("projection cache stays bounded across distinct `now` values") {
+    val df = one("Visibility" -> "open", "Language" -> "eng")
+    val cap = UrsusRecord.ProjCacheMaxEntries
+    val nows = (0 to cap).map(i => f"2026-01-${i + 1}%02dT00:00:00Z")
+    val rows = nows.map(n => UrsusRecord.project(df, now = Some(n)).collect()(0))
+    assert(UrsusRecord.projCacheSize <= cap)
+    // cached and uncached projections agree: only the stamped fields differ
+    val stamped = Set("timestamp", "system_modified_dtsi")
+    def unstamped(r: Row): Seq[Any] =
+      r.schema.fieldNames.toSeq.filterNot(stamped).map(r.getAs[Any])
+    rows.zip(nows).foreach { case (r, n) =>
+      assert(get[String](r, "timestamp") == n)
+      assert(get[String](r, "system_modified_dtsi") == n)
+      assert(unstamped(r) == unstamped(rows.head))
+    }
   }
 
   test("reference fixture csv projects end-to-end (tests/fixtures/anais_work_simple.csv)") {

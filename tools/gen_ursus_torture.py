@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Generate fixtures/ursus_torture_wide.csv — a systematic edge-branch corpus
-for the Ursus parity harness (tools/ursus_parity.py). Covers every branch the
+for the Ursus parity runs (FIXTURES.md §3). Covers every branch the
 reference's own test suite exercises (tests/test_ursus_solr_record.py):
 rights statements incl. the pd alias and CC URIs, every visibility value and
 the Item Status override, object-type mapping, language codes/names/unknowns,
