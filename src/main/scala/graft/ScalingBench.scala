@@ -48,6 +48,15 @@ import graft.query.Searcher
 object ScalingBench {
   private val coresPerWorker = 4
 
+  /** (executor JVMs, cores each) of a `cluster` leg at `n` cores: the one
+    * expression that both builds the leg's session and describes it.
+    */
+  private def clusterShape(n: Int): (Int, Int) =
+    (math.max(1, n / coresPerWorker), math.min(n, coresPerWorker))
+
+  /** Lines of a child's stderr echoed when its leg fails. */
+  private val FailedLegTailLines = 40
+
   def main(args: Array[String]): Unit = {
     val rest = args.drop(1)
     args.headOption match {
@@ -60,7 +69,9 @@ object ScalingBench {
   }
 
   /** Runs `graft.ScalingBench <args>` in a fresh child JVM, requires exit 0
-    * and returns the child's stdout line that carries `"tag"`.
+    * and returns the child's stdout line that carries `"tag"`. The child's
+    * stderr (Spark's log, executor launch commands included) goes to a
+    * temporary file; only a failed leg prints its tail.
     */
   private def runChild(tag: String, args: Seq[String]): String = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
@@ -71,14 +82,25 @@ object ScalingBench {
       "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"),
       "graft.ScalingBench") ++ args
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
-    val code = p.waitFor()
-    require(code == 0, s"scaling leg `${args.mkString(" ")}` exited $code")
-    out.find(_.contains("\"" + tag + "\""))
-      .getOrElse(sys.error(s"no $tag line from `${args.mkString(" ")}`"))
+    val errLog = java.nio.file.Files.createTempFile("graft-scaling-leg", ".log")
+    try {
+      val pb = new ProcessBuilder(cmd: _*)
+      pb.redirectError(errLog.toFile)
+      val p = pb.start()
+      val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
+      val code = p.waitFor()
+      if (code != 0) {
+        val lines = java.nio.file.Files.readAllLines(errLog,
+          java.nio.charset.StandardCharsets.ISO_8859_1)
+        System.err.println(
+          s"[scaling] last stderr lines of the failed leg `${args.mkString(" ")}`:")
+        lines.subList(math.max(0, lines.size - FailedLegTailLines), lines.size)
+          .forEach(l => System.err.println(l))
+      }
+      require(code == 0, s"scaling leg `${args.mkString(" ")}` exited $code")
+      out.find(_.contains("\"" + tag + "\""))
+        .getOrElse(sys.error(s"no $tag line from `${args.mkString(" ")}`"))
+    } finally java.nio.file.Files.deleteIfExists(errLog)
   }
 
   private def field(line: String, k: String): Double =
@@ -106,8 +128,10 @@ object ScalingBench {
     if (mode == "single" || mode == "threads-single") {
       val spark =
         if (mode == "threads-single") Bench.newSession(n)
-        else Bench.newClusterSession(math.max(1, n / coresPerWorker),
-          math.min(n, coresPerWorker), execMemMB)
+        else {
+          val (executors, cores) = clusterShape(n)
+          Bench.newClusterSession(executors, cores, execMemMB)
+        }
       // JIT/classloading warm-up: a small throwaway build, NOT measured —
       // without it the first measured run absorbs all compilation cost and
       // the N->4N ratio comes out dishonestly super-linear.
@@ -135,9 +159,10 @@ object ScalingBench {
     val thr4N = at4N("docs_per_sec")
     val eff = (thr4N / thrN) / 4.0
 
+    def jvms(c: Int): String = { val (e, k) = clusterShape(c); s"$e executor JVMs x $k cores" }
     val shape =
       if (mode == "cluster")
-        s"local-cluster: ${math.max(1, n / coresPerWorker)} vs ${4 * n / coresPerWorker} executor JVMs x $coresPerWorker cores, fresh child driver JVM per leg, ABBA best-of-2"
+        s"local-cluster: ${jvms(n)} vs ${jvms(4 * n)}, fresh child driver JVM per leg, ABBA best-of-2"
       else s"local[$n] vs local[${4 * n}] threads, fresh child JVM per leg, ABBA best-of-2"
 
     writeLast("SCALING_LAST.md",

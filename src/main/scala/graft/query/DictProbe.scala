@@ -12,9 +12,13 @@ import org.apache.spark.sql.functions._
   * prunes to O(query terms) parquet row groups via min/max stats — one tiny
   * job per batch of unseen terms, never a vocabulary-sized driver collect.
   * For small vocabularies (below `maxDriverTerms`) the whole table is
-  * collected once instead — lowest latency when it safely fits. Set
-  * `maxDriverTerms = 0` to force the probe path (the strategies are
-  * answer-identical; EngineSpec gates this).
+  * collected once instead — lowest latency when it safely fits. Whether it
+  * fits costs a count job unless `vocabBound`, an upper bound on the
+  * vocabulary known without a job (the [[Searcher]] passes its segment's
+  * [[Searcher.postingsBound]]), already proves it. Set `maxDriverTerms = 0`
+  * to force the probe path (the strategies are answer-identical; EngineSpec
+  * gates this). The table is read with its known schema, so no read runs a
+  * schema-inference job.
   *
   * The probe cache is a BOUNDED LRU (`maxCacheTerms` entries, access-order
   * eviction): a long-lived query service probing unbounded distinct terms
@@ -27,20 +31,25 @@ import org.apache.spark.sql.functions._
 // never ship it in task binaries.
 final class DictProbe(spark: SparkSession, dictPath: String,
                       maxDriverTerms: Long = 1L << 22,
-                      val maxCacheTerms: Int = 1 << 20) {
+                      val maxCacheTerms: Int = 1 << 20,
+                      vocabBound: Long = Long.MaxValue) {
   import spark.implicits._
 
-  private lazy val dictDF: DataFrame = spark.read.parquet(dictPath)
+  private lazy val dictDF: DataFrame =
+    spark.read.schema(Searcher.DictionarySchema).parquet(dictPath)
 
-  /** one count job, metadata-cheap on a (field,term,df,cf) columnar table */
-  private lazy val vocabSize: Long =
-    if (maxDriverTerms <= 0) Long.MaxValue else dictDF.count()
+  /** Whether the vocabulary fits `maxDriverTerms`: free when `vocabBound`
+    * proves it, else one count job, metadata-cheap on a (field,term,df,cf)
+    * columnar table.
+    */
+  private lazy val fitsDriver: Boolean =
+    maxDriverTerms > 0 && (vocabBound <= maxDriverTerms || dictDF.count() <= maxDriverTerms)
 
   /** Entries of the collected-full map, 0 until/unless it materializes. */
   @volatile private var collectedTerms: Long = 0L
 
   private lazy val full: Option[Map[(String, String), Long]] =
-    if (vocabSize <= maxDriverTerms) {
+    if (fitsDriver) {
       val m = dictDF.select($"field", $"term", $"df").collect()
         .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
       collectedTerms = m.size

@@ -4,7 +4,7 @@ import graft.analysis.Analyzer
 import graft.core._
 import graft.index.{IndexBuilder, IndexMeta, QueryFilter, Snapshot, Tombstones}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
@@ -222,7 +222,12 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *
   *  - `driverKernelMaxPostings = 0` forces the DISTRIBUTED KERNEL: a segment
   *    whose matched postings exceed the bound scores on executors instead of
-  *    collecting its runs to the driver kernel.
+  *    collecting its runs to the driver kernel. The bound, split evenly
+  *    across segments, also decides RESIDENCY: a non-empty segment whose
+  *    [[Searcher.postingsBound]] (nDocs × Σ avgLen, free from its snapshot
+  *    props) fits its share holds its whole postings table on the driver,
+  *    collected by one job on first use. A resident segment's postings
+  *    never exceed what one driver-kernel query may already collect.
   *  - `normsMaxDocs = 0` forces the DOCSTATS SHUFFLE: a segment with more
   *    docs never broadcasts its norms (1 byte/doc/field; 1 << 31 docs is
   *    ~6 GB); its runs cogroup with docstats by salt range instead.
@@ -265,10 +270,16 @@ case class SearchConfig(
   * Per query and segment, a three-way router picks the physical strategy
   * (all rank-identical; EngineSpec and MultiSearcherSpec gate this):
   *
-  *  - DRIVER KERNEL (default): the term-filtered posting runs are collected
-  *    once and cached on the driver (the Lucene query-cache analog), norms
-  *    are read from the broadcast's local value — a repeat term runs no
-  *    Spark job at all.
+  *  - DRIVER KERNEL (default): posting runs are scored on the driver, norms
+  *    are read from the broadcast's local value. A RESIDENT segment (its
+  *    postings bound fits its share of `driverKernelMaxPostings`, see
+  *    [[SearchConfig]]) collects its whole postings table in ONE job on
+  *    first use, like Lucene serving from segment files already in memory:
+  *    every later query, new terms included, runs no postings job. Its
+  *    memory is at most its share of the bound and dies with the searcher.
+  *    Other segments collect each query's missing terms' runs and cache
+  *    them (the Lucene query-cache analog) — a repeat term runs no Spark
+  *    job at all.
   *  - DISTRIBUTED KERNEL (matched postings above `driverKernelMaxPostings`):
   *    one shuffle-free job — postings scan (term filter pushed to parquet
   *    row groups) -> DAAT/WAND kernel per salt group with broadcast norms ->
@@ -308,9 +319,19 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private final class Segment(val idx: Int, val dir: String, val meta: IndexMeta,
                               val offset: Long) {
+    // the postings bound also bounds the vocabulary, so a small segment's
+    // dictionary is collected without a count job first
     val dict = new DictProbe(spark, s"$dir/dictionary",
       config.dictionaryMaxDriverTerms / segmentDirs.size,
-      math.max(1, config.dictionaryMaxCacheTerms / segmentDirs.size))
+      math.max(1, config.dictionaryMaxCacheTerms / segmentDirs.size),
+      vocabBound = postingsBound(meta))
+
+    /** The whole postings table fits this segment's share of
+      * `driverKernelMaxPostings` ([[SearchConfig]]): it is served from
+      * [[residentRuns]] instead of per-term fetches.
+      */
+    val resident: Boolean = meta.nDocs > 0 &&
+      postingsBound(meta) <= config.driverKernelMaxPostings / segmentDirs.size
 
     lazy val tombstoneCount: Long = Tombstones.count(spark, dir)
 
@@ -320,11 +341,12 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     lazy val tombstonesBc: Broadcast[Array[Long]] =
       track(spark.sparkContext.broadcast(Tombstones.loadSorted(spark, dir)))
 
-    /** The segment's docstats, read once: the norm-table build and every fq
-      * resolution plan over it, so neither re-lists files nor re-reads the
-      * parquet schema.
+    /** The segment's docstats, read once with the known schema: the
+      * norm-table build and every fq resolution plan over it, so neither
+      * re-lists files nor runs a schema-inference job.
       */
-    lazy val docstatsDF: DataFrame = querySession.read.parquet(s"$dir/docstats")
+    lazy val docstatsDF: DataFrame =
+      querySession.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
 
     /** Dense norms broadcast once (docIds are dense ranks 0..n-1). */
     lazy val normsBc: Broadcast[NormTable] = track {
@@ -350,9 +372,10 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
     // postings DataFrames with the file index cached across queries, planned
     // under the query and batch sessions so kernel stages inherit their conf
-    lazy val postingsDF: DataFrame = querySession.read.parquet(s"$dir/postings")
+    lazy val postingsDF: DataFrame =
+      querySession.read.schema(PostingsSchema).parquet(s"$dir/postings")
     private lazy val batchPostingsDF: DataFrame =
-      batchQuerySession.read.parquet(s"$dir/postings")
+      batchQuerySession.read.schema(PostingsSchema).parquet(s"$dir/postings")
 
     def filteredRuns(keys: Set[(String, String)],
                      batch: Boolean = false): Dataset[PostingRun] = {
@@ -367,16 +390,32 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         .as[PostingRun]
     }
 
-    /** Driver-resident posting runs per (field, term), for the driver
-      * kernel only: once fetched, repeat queries over a term skip the Spark
-      * job entirely. Memory is O(cached postings), bounded by this
+    /** A resident segment's whole postings table by (field, term),
+      * collected by ONE job on first driver-kernel use (counted in
+      * `driverRunFetches`). At most `postingsBound(meta)` postings; held by
+      * this searcher only, so it dies with it.
+      */
+    private lazy val residentRuns: Map[(String, String), Array[PostingRun]] = {
+      driverRunFetches.incrementAndGet()
+      postingsDF.as[PostingRun].collect().groupBy(r => (r.field, r.term))
+    }
+
+    /** A non-resident segment's posting runs per (field, term), for the
+      * driver kernel only: once fetched, repeat queries over a term skip the
+      * Spark job entirely. Memory is O(cached postings), bounded by this
       * segment's share of [[Searcher.RunCacheMaxTerms]].
       */
     private val runCache =
       new ConcurrentHashMap[(String, String), Array[PostingRun]]()
     private val runCacheMax = math.max(1, RunCacheMaxTerms / segmentDirs.size)
 
+    /** The runs of `keys` for the driver kernel: from [[residentRuns]] on a
+      * resident segment, else from the run cache plus one fetch job for the
+      * missing keys.
+      */
     def fetchRuns(keys: Set[(String, String)]): Array[PostingRun] = {
+      if (resident)
+        return keys.iterator.flatMap(residentRuns.getOrElse(_, Array.empty[PostingRun])).toArray
       val missing = keys.filterNot(runCache.containsKey)
       val fetched: Map[(String, String), Array[PostingRun]] =
         if (missing.isEmpty) Map.empty
@@ -420,6 +459,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
   /** Norm-table builds: at most one docstats collect per segment. */
   private[graft] val normBuilds = new AtomicLong(0)
+
+  /** Indices of the segments served from driver memory (see
+    * [[SearchConfig]]); whether one has loaded shows in `driverRunFetches`.
+    */
+  private[graft] def residentSegments: Seq[Int] = segments.filter(_.resident).map(_.idx)
 
   /** Posting-run collects to the driver. Cache hits and the executor-side
     * routes leave it alone.
@@ -745,7 +789,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       val hitsDF = spark.createDataFrame(bySeg.getOrElse(seg.idx, Array.empty[(Hit, Int)]).toSeq
         .map { case (h, i) => (h.docId - seg.offset, h.score, i + 1) })
         .toDF("docId", "score", "rank")
-      spark.read.parquet(s"${seg.dir}/docstats")
+      spark.read.schema(DocStatsSchema).parquet(s"${seg.dir}/docstats")
         .select("docId", "repo", "path", "commit", "lang", "sha")
         .join(broadcast(hitsDF), "docId")
         .select($"rank", ($"docId" + seg.offset).as("docId"), $"score",
@@ -1002,6 +1046,23 @@ object Searcher {
     else keys.iterator.map(key => key -> perSegment.iterator.map(_.getOrElse(key, 0L)).sum)
       .filter(_._2 > 0).toMap
 
+  /** The persisted tables' schemas. Every read passes its table's schema, so
+    * opening a table lists its files but runs no parquet schema-inference
+    * job (SchemaGuardSpec checks them against what each writer leaves).
+    */
+  private[graft] val DocStatsSchema = Encoders.product[DocStats].schema
+  private[graft] val PostingsSchema = Encoders.product[PostingRun].schema
+  private[graft] val DictionarySchema = Encoders.product[DictEntry].schema
+
+  /** An upper bound on a segment's postings, free from its snapshot props:
+    * a document posts each distinct (field, term) once, so the segment's
+    * summed field lengths (nDocs × Σ avgLen, each field's token total
+    * recovered exactly as in [[mergeAvgLen]]) bound its postings — and its
+    * vocabulary, which is never larger than its postings. 0 when empty.
+    */
+  private[graft] def postingsBound(meta: IndexMeta): Long =
+    meta.avgLen.valuesIterator.map(a => Math.round(a * meta.nDocs)).sum
+
   /** Exact global average field lengths: each segment's integer length sum
     * is recovered as round(avgLen · nDocs) — exact while sums stay below
     * 2^51 — and the Long total is divided by N once. For one segment this
@@ -1111,7 +1172,7 @@ object Searcher {
     import session.implicits._
     val stats = fqDocs.foldLeft(
         Tombstones.exclude(session, dir,
-          session.read.parquet(s"$dir/docstats")
+          session.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
             .select($"docId", $"salt", $"lenContent", $"lenPath", $"lenRepo"))) {
         (df, cached) => df.join(cached, Seq("docId"), "left_semi")
       }

@@ -115,34 +115,10 @@ class BatchSearchSpec extends AnyFunSuite {
     // job since the batch path plans under its own session) — the gate is
     // MARGINAL job-count equality, single vs batch
     s.searchManyDistributed(Seq(batch.head), 10)
-    def countJobs(group: String)(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties).exists(
-              p => p.getProperty("spark.jobGroup.id") == group))
-            counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(group, group)
-        body
-        spark.sparkContext.clearJobGroup()
-        // listener bus is async; poll until the count is stable
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val now = counter.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-        last
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val single = countJobs("graft-gate-single") {
+    val single = SparkJobs.count(spark, "graft-gate-single") {
       s.searchManyDistributed(Seq(batch.head), 10)
     }
-    val full = countJobs("graft-gate-batch") {
+    val full = SparkJobs.count(spark, "graft-gate-batch") {
       s.searchManyDistributed(batch, 10)
     }
     assert(single >= 1, "distributed retrieval must launch at least one job")

@@ -86,7 +86,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("hot-term run cache: repeat query skips the Spark fetch, same results") {
-    val fresh = new Searcher(spark, tmp)
+    // a bound below the segment's postings bound keeps it non-resident (so
+    // each new term fetches) while every query here still fits the driver
+    // kernel
+    val bound = Searcher.postingsBound(meta) - 1
+    val fresh = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = bound))
+    assert(fresh.residentSegments.isEmpty)
     val first = fresh.search("buffer binary search", 10)
     val fetchesAfterFirst = fresh.driverRunFetches.get()
     assert(fetchesAfterFirst >= 1)

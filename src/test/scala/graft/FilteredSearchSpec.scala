@@ -145,35 +145,13 @@ class FilteredSearchSpec extends AnyFunSuite {
   }
 
   test("a new keyword fq resolves in one Spark job") {
-    def countJobs(group: String)(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(group, group)
-        try body finally spark.sparkContext.clearJobGroup()
-        // listener bus is async; poll until the count is stable
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val now = counter.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-        last
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val f = Some("lang:java OR NOT repo:repo-0003")
     val s = new Searcher(spark, tmp)
     // runs, dictionary, norms and tombstones are cached by an unfiltered
     // query; what is left of the first filtered one is the fq resolution
     s.search("buffer", 10)
     var hits = Array.empty[Hit]
-    val jobs = countJobs("graft-fq-one-job") { hits = s.search("buffer", 10, fq = f) }
+    val jobs = SparkJobs.count(spark, "graft-fq-one-job") { hits = s.search("buffer", 10, fq = f) }
     assert(jobs == 1, s"a new keyword fq ran $jobs Spark jobs")
     assert(s.fqResolves.get() == 1)
     val ok = allowed(tmp, f.get)

@@ -1,0 +1,120 @@
+package graft
+
+import graft.core.{DictEntry, DocStats, Hit, PostingRun}
+import graft.corpus.CodeCorpus
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta, Snapshot}
+import graft.query.{SearchConfig, Searcher}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Resident segments: a segment whose postings bound (nDocs × Σ avgLen)
+  * fits its share of `driverKernelMaxPostings` collects its whole postings
+  * table in one job and answers every later query with no Spark job; any
+  * other segment keeps per-term fetches. Every route returns the same hits.
+  */
+class ResidentSegmentSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  val cfg: IndexConfig = IndexConfig(buckets = 8, blockSize = 64, saltRange = 128,
+    shufflePartitions = 4, bucketDirs = true)
+
+  private def build(from: Long, n: Long): (String, IndexMeta) = {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftresident").toString
+    val docs = spark.range(from, from + n, 1, 4).as[Long].map(i => CodeCorpus.genDoc(i, 10))
+    (dir, IndexBuilder.build(spark, docs, dir, cfg))
+  }
+
+  lazy val (segA, metaA) = build(0, 400)
+  lazy val (segB, _) = build(400, 300)
+
+  // every query brings terms no earlier one had
+  val stream = Seq("buffer", "def class", "import return", "val var", "if else",
+    "match case", "object trait", "extends override", "private public", "static void")
+
+  private def answers(s: Searcher): Seq[Seq[Hit]] = stream.map(q => s.search(q, 10).toSeq)
+
+  test("a resident segment answers a distinct-term stream with one postings job") {
+    val resident = new Searcher(spark, segA)
+    val perTerm = new Searcher(spark, Seq(segA),
+      SearchConfig(driverKernelMaxPostings = Searcher.postingsBound(metaA) - 1))
+    assert(resident.residentSegments == Seq(0))
+    assert(perTerm.residentSegments.isEmpty)
+    val residentJobs = stream.zipWithIndex.map { case (q, i) =>
+      SparkJobs.count(spark, s"graft-resident-$i")(resident.search(q, 10))
+    }
+    val perTermJobs = stream.zipWithIndex.map { case (q, i) =>
+      SparkJobs.count(spark, s"graft-per-term-$i")(perTerm.search(q, 10))
+    }
+    assert(resident.driverRunFetches.get() == 1, "one load serves the whole stream")
+    assert(perTerm.driverRunFetches.get() == stream.size, "each new term fetches")
+    assert(residentJobs.tail.forall(_ == 0), s"jobs per query: $residentJobs")
+    // the cold jobs (dictionary, norms) are the same on both; the resident
+    // searcher's only postings job replaces one fetch job per query
+    assert(residentJobs.sum == perTermJobs.sum - stream.size + 1,
+      s"resident $residentJobs vs per-term $perTermJobs")
+    resident.close(); perTerm.close()
+  }
+
+  test("resident hits are bit-identical to per-term fetches and the distributed kernel") {
+    val resident = new Searcher(spark, segA)
+    val perTerm = new Searcher(spark, Seq(segA),
+      SearchConfig(driverKernelMaxPostings = Searcher.postingsBound(metaA) - 1))
+    val distributed = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = 0))
+    val expect = answers(distributed)
+    assert(expect.count(_.nonEmpty) > stream.size / 2)
+    assert(answers(resident) == expect)
+    assert(answers(perTerm) == expect)
+    // searchMany's prefetch is the same one load
+    val batched = new Searcher(spark, segA)
+    assert(batched.searchMany(stream, 10).map(_.toSeq) == expect)
+    assert(batched.driverRunFetches.get() == 1)
+    assert(distributed.driverRunFetches.get() == 0)
+    Seq(resident, perTerm, distributed, batched).foreach(_.close())
+  }
+
+  test("a halved share below a segment's bound falls back to per-term fetches") {
+    val bound = Searcher.postingsBound(metaA)
+    val alone = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = bound))
+    assert(alone.residentSegments == Seq(0), "the bound fits the whole budget")
+    val pair = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = bound))
+    assert(pair.residentSegments.isEmpty, "each segment's share is half the budget")
+    val both = new Searcher(spark, Seq(segA, segB))
+    assert(both.residentSegments == Seq(0, 1))
+    val distributed =
+      new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = 0))
+    val expect = answers(distributed)
+    assert(answers(pair) == expect)
+    assert(answers(both) == expect)
+    assert(pair.driverRunFetches.get() >= stream.size, "per-term fetches")
+    val fetched = pair.driverRunFetches.get()
+    pair.search(stream.head, 10)
+    assert(pair.driverRunFetches.get() == fetched, "a repeat term is cache-served")
+    assert(both.driverRunFetches.get() == 2, "one load per resident segment")
+    Seq(alone, pair, both, distributed).foreach(_.close())
+  }
+
+  test("an empty segment is never resident and never loads") {
+    // the builder refuses empty input (its stats aggregate reads a null
+    // sum), so the empty segment is written by hand in a build's layout
+    val empty = java.nio.file.Files.createTempDirectory("graftempty").toString
+    val sp = spark
+    import sp.implicits._
+    spark.emptyDataset[DocStats].write.parquet(s"$empty/docstats")
+    spark.emptyDataset[PostingRun].write.parquet(s"$empty/postings")
+    spark.emptyDataset[DictEntry].write.parquet(s"$empty/dictionary")
+    val meta = IndexMeta(0, cfg.fields.map(_ -> Double.NaN).toMap,
+      cfg.buckets, cfg.saltRange, cfg.blockSize)
+    val snap = new Snapshot(empty)
+    snap.init()
+    snap.commit(meta.toProps)
+    assert(Searcher.postingsBound(meta) == 0)
+    val s = new Searcher(spark, Seq(segA, empty))
+    assert(s.residentSegments == Seq(0))
+    val alone = new Searcher(spark, segA)
+    assert(answers(s) == answers(alone))
+    assert(s.searchMany(stream, 10).map(_.toSeq) == answers(alone))
+    assert(s.driverRunFetches.get() == 1, "only the non-empty segment loads")
+    s.close(); alone.close()
+  }
+}
