@@ -3,8 +3,9 @@ package graft.index
 import graft.analysis.Analyzer
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
@@ -62,6 +63,38 @@ case class IndexConfig(
   *    pruning: a query only opens the footers of its terms' buckets).
   */
 object IndexBuilder {
+
+  /** The persisted tables' schemas. Every reader passes its table's schema,
+    * so opening a table lists its files but runs no parquet schema-inference
+    * job, and a table with no data files (the bucketed postings of an empty
+    * build) reads as empty. SchemaGuardSpec checks them against what each
+    * writer leaves.
+    */
+  private[graft] val DocStatsSchema: StructType = Encoders.product[DocStats].schema
+  private[graft] val PostingsSchema: StructType = Encoders.product[PostingRun].schema
+  private[graft] val DictionarySchema: StructType = Encoders.product[DictEntry].schema
+
+  /** (nDocs, content, path and repo length sums) of a docstats table: one
+    * aggregate job; an empty table gives zeros, not null sums.
+    */
+  private[index] def lengthSums(spark: SparkSession, docstatsPath: String): (Long, Long, Long, Long) = {
+    val r = spark.read.schema(DocStatsSchema).parquet(docstatsPath)
+      .agg(count(lit(1)), Seq("lenContent", "lenPath", "lenRepo")
+        .map(c => coalesce(sum(col(c)), lit(0L))): _*)
+      .collect()(0)
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+  }
+
+  /** The meta of a segment with these length sums; an empty one has
+    * average lengths 0.
+    */
+  private[index] def metaOf(sums: (Long, Long, Long, Long), cfg: IndexConfig): IndexMeta = {
+    val (nDocs, lenC, lenP, lenR) = sums
+    def avg(total: Long): Double = if (nDocs == 0) 0.0 else total.toDouble / nDocs
+    IndexMeta(nDocs = nDocs,
+      avgLen = Map("content" -> avg(lenC), "path" -> avg(lenP), "repo" -> avg(lenR)),
+      buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
+  }
 
   def bucketOf(term: String, buckets: Int): Int =
     math.floorMod(scala.util.hashing.MurmurHash3.stringHash(term, 0x9747b28c), buckets)
@@ -235,7 +268,7 @@ object IndexBuilder {
     // dictionary from a NARROW re-read: parquet skips the untouched blocks
     // column entirely, so this scans only (bucket, field, term, df, cf)
     if (!snap.stageDone("dictionary")) timed("dictionary") {
-      writeDictionary(spark.read.parquet(postingsPath)
+      writeDictionary(spark.read.schema(PostingsSchema).parquet(postingsPath)
         .select($"bucket", $"field", $"term", $"df", $"cf"), dictPath, cfg)
       snap.markStageDone("dictionary")
     }
@@ -348,7 +381,7 @@ object IndexBuilder {
     // resume path: postings were committed by an earlier run, so the cache is
     // gone -- aggregate from the postings table (column-pruned scan)
     if (!snap.stageDone("dictionary")) timed("dictionaryResume") {
-      writeDictionary(spark.read.parquet(postingsPath)
+      writeDictionary(spark.read.schema(PostingsSchema).parquet(postingsPath)
         .select($"bucket", $"field", $"term", $"df", $"cf"), dictPath, cfg)
       snap.markStageDone("dictionary")
     }
@@ -365,23 +398,11 @@ object IndexBuilder {
     // full parquet aggregate on any mismatch or on resume paths.
     val stats: (Long, Long, Long, Long) = timed("statsAgg") {
       if (needDocstats && accDocs.value > 0 &&
-          spark.read.parquet(docstatsPath).count() == accDocs.value)
+          spark.read.schema(DocStatsSchema).parquet(docstatsPath).count() == accDocs.value)
         (accDocs.value, accLenC.value, accLenP.value, accLenR.value)
-      else {
-        val r = spark.read.parquet(docstatsPath)
-          .agg(count(lit(1)), sum($"lenContent"), sum($"lenPath"), sum($"lenRepo"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }
+      else lengthSums(spark, docstatsPath)
     }
-    val nDocs = stats._1
-    val meta = IndexMeta(
-      nDocs = nDocs,
-      avgLen = Map(
-        "content" -> stats._2.toDouble / nDocs,
-        "path" -> stats._3.toDouble / nDocs,
-        "repo" -> stats._4.toDouble / nDocs),
-      buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
+    val meta = metaOf(stats, cfg)
     snap.commit(meta.toProps ++ Map("fields" -> cfg.fields.mkString(",")))
     meta
   }

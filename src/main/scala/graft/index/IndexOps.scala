@@ -167,7 +167,7 @@ object IndexOps {
       val parts = segmentDirs.zipWithIndex.map { case (d, i) =>
         val tsB = spark.sparkContext.broadcast(tombs(i))
         val off = offsets(i)
-        spark.read.parquet(s"$d/docstats").as[DocStats]
+        spark.read.schema(IndexBuilder.DocStatsSchema).parquet(s"$d/docstats").as[DocStats]
           .mapPartitions { it =>
             val ts = tsB.value
             val tset = ts.toSet
@@ -190,7 +190,7 @@ object IndexOps {
       val chunkParts = segmentDirs.zipWithIndex.map { case (d, i) =>
         val tsB = spark.sparkContext.broadcast(tombs(i))
         val off = offsets(i)
-        spark.read.parquet(s"$d/postings").as[PostingRun]
+        spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$d/postings").as[PostingRun]
           .mapPartitions { runs =>
             val ts = tsB.value
             val tset = ts.toSet
@@ -237,17 +237,7 @@ object IndexOps {
     }
 
     // ---- meta + commit ----
-    val stats = spark.read.parquet(s"$outDir/docstats")
-      .agg(count(lit(1)), sum(col("lenContent")), sum(col("lenPath")), sum(col("lenRepo")))
-      .collect()(0)
-    val nDocs = stats.getLong(0)
-    val meta = IndexMeta(
-      nDocs = nDocs,
-      avgLen = Map(
-        "content" -> stats.getLong(1).toDouble / nDocs,
-        "path" -> stats.getLong(2).toDouble / nDocs,
-        "repo" -> stats.getLong(3).toDouble / nDocs),
-      buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
+    val meta = IndexBuilder.metaOf(IndexBuilder.lengthSums(spark, s"$outDir/docstats"), cfg)
     snap.commit(meta.toProps ++ Map("fields" -> cfg.fields.mkString(",")))
     meta
   }
@@ -349,6 +339,14 @@ object QueryFilter {
 
   /** Fields whose term clauses read postings instead of a docstats column. */
   private val PostingsFields = Set("content", "path")
+
+  /** Whether the query has a `content:`/`path:` term clause, the only kind
+    * that reads postings; every other clause is a docstats predicate.
+    */
+  def readsPostings(query: String): Boolean = parse(query).exists {
+    case TermClause(field, _, _) => PostingsFields(field)
+    case _ => false
+  }
 
   /** Live docstats rows (every docstats column) matching the query:
     * [[filter]] over the index's tables, committed tombstones excluded.

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Tombstone deletes: a delete is a SMALL committed file of deleted docIds,
   * not a corpus rebuild (round 1's delete cost a full index rebuild — an
@@ -35,6 +36,14 @@ object Tombstones {
     */
   val DedupSkipBound: Long = (1L << 23) / 8
 
+  /** The tombstone files' schema. Every read passes it, so no read runs a
+    * parquet schema-inference job (SchemaGuardSpec checks it against the
+    * files deletes write).
+    */
+  private[graft] val Schema: StructType = StructType(Seq(StructField("docId", LongType)))
+
+  private def read(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(Schema).parquet(files: _*)
 
   /** Visible tombstone files per the CURRENT snapshot (not just ls — a
     * written-but-uncommitted file must stay invisible).
@@ -57,7 +66,7 @@ object Tombstones {
     val props = new Snapshot(indexDir).readProps()
     props.get("tombstoneCount").map(_.toLong).getOrElse {
       val fs = files(indexDir)
-      if (fs.isEmpty) 0L else spark.read.parquet(fs: _*).count()
+      if (fs.isEmpty) 0L else read(spark, fs).count()
     }
   }
 
@@ -65,23 +74,31 @@ object Tombstones {
   def table(spark: SparkSession, indexDir: String): Option[DataFrame] = {
     val fs = files(indexDir)
     if (fs.isEmpty) None
-    else Some(spark.read.parquet(fs: _*).select(col("docId")).distinct())
+    else Some(read(spark, fs).distinct())
   }
 
-  /** Deleted docIds as a SORTED primitive array (for broadcast + binary
-    * search). Caller must gate on [[count]] — this materializes on the
-    * driver.
+  /** Deleted docIds as a SORTED, distinct primitive array (for broadcast +
+    * binary search): one scan job, sorted and deduped on the driver (a
+    * re-deleted id may be stored twice, see [[commitDeletesDF]]). Caller
+    * must gate on [[count]] — this materializes on the driver.
     */
   def loadSorted(spark: SparkSession, indexDir: String): Array[Long] = {
     import spark.implicits._
     val fs = files(indexDir)
     if (fs.isEmpty) Array.emptyLongArray
-    else {
-      val a = spark.read.parquet(fs: _*).select(col("docId")).distinct()
-        .as[Long].collect()
-      java.util.Arrays.sort(a)
-      a
+    else sortedDistinct(read(spark, fs).as[Long].collect())
+  }
+
+  /** `ids` sorted ascending with duplicates dropped (sorts in place). */
+  private def sortedDistinct(ids: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
     }
+    if (n == ids.length) ids else java.util.Arrays.copyOf(ids, n)
   }
 
   /** Deleted docIds as a driver set — small-regime convenience for tests and
@@ -159,8 +176,7 @@ object Tombstones {
     val df =
       if (dedupSkipped) df0
       else df0.join(
-        spark.read.parquet(prev.map(f => s"$indexDir/tombstones/$f.parquet"): _*)
-          .select(col("docId")),
+        read(spark, prev.map(f => s"$indexDir/tombstones/$f.parquet")),
         Seq("docId"), "left_anti")
     // sorted + range-partitioned: parquet min/max row-group stats give the
     // shuffle path cheap per-salt pruning; small deletes stay one file.

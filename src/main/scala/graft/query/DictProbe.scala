@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   * [[Searcher.postingsBound]]), already proves it. Set `maxDriverTerms = 0`
   * to force the probe path (the strategies are answer-identical; EngineSpec
   * gates this). The table is read with its known schema, so no read runs a
-  * schema-inference job.
+  * schema-inference job. When the caller already holds the dfs (a resident
+  * segment sums them from its loaded runs), `loaded` supplies the collected
+  * map instead of the dictionary collect.
   *
   * The probe cache is a BOUNDED LRU (`maxCacheTerms` entries, access-order
   * eviction): a long-lived query service probing unbounded distinct terms
@@ -32,11 +34,12 @@ import org.apache.spark.sql.functions._
 final class DictProbe(spark: SparkSession, dictPath: String,
                       maxDriverTerms: Long = 1L << 22,
                       val maxCacheTerms: Int = 1 << 20,
-                      vocabBound: Long = Long.MaxValue) {
+                      vocabBound: Long = Long.MaxValue,
+                      loaded: Option[() => Map[(String, String), Long]] = None) {
   import spark.implicits._
 
   private lazy val dictDF: DataFrame =
-    spark.read.schema(Searcher.DictionarySchema).parquet(dictPath)
+    spark.read.schema(graft.index.IndexBuilder.DictionarySchema).parquet(dictPath)
 
   /** Whether the vocabulary fits `maxDriverTerms`: free when `vocabBound`
     * proves it, else one count job, metadata-cheap on a (field,term,df,cf)
@@ -50,8 +53,8 @@ final class DictProbe(spark: SparkSession, dictPath: String,
 
   private lazy val full: Option[Map[(String, String), Long]] =
     if (fitsDriver) {
-      val m = dictDF.select($"field", $"term", $"df").collect()
-        .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
+      val m = loaded.fold(dictDF.select($"field", $"term", $"df").collect()
+        .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap)(_())
       collectedTerms = m.size
       Some(m)
     } else None

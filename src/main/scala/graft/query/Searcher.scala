@@ -3,15 +3,16 @@ package graft.query
 import graft.analysis.Analyzer
 import graft.core._
 import graft.index.{IndexBuilder, IndexMeta, QueryFilter, Snapshot, Tombstones}
+import graft.index.IndexBuilder.{DocStatsSchema, PostingsSchema}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap,
+  ConcurrentLinkedQueue, ExecutorService, Executors}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
-import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
-import scala.concurrent.duration.Duration
 
 /** One parsed edismax clause: a query word and its per-field analyzed term.
   * Mirrors Lucene edismax structure: per word, a DisjunctionMax over qf
@@ -223,11 +224,14 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *  - `driverKernelMaxPostings = 0` forces the DISTRIBUTED KERNEL: a segment
   *    whose matched postings exceed the bound scores on executors instead of
   *    collecting its runs to the driver kernel. The bound, split evenly
-  *    across segments, also decides RESIDENCY: a non-empty segment whose
-  *    [[Searcher.postingsBound]] (nDocs × Σ avgLen, free from its snapshot
-  *    props) fits its share holds its whole postings table on the driver,
-  *    collected by one job on first use. A resident segment's postings
-  *    never exceed what one driver-kernel query may already collect.
+  *    across segments, also decides RESIDENCY: a non-empty segment in the
+  *    broadcast regime (its norms and tombstone count fit their bounds)
+  *    whose [[Searcher.residentBound]] (its postings bound nDocs × Σ avgLen
+  *    plus nDocs docstats rows, free from its snapshot props) fits its share
+  *    is loaded to the driver on first use: its postings, docstats rows and
+  *    tombstones, by concurrent jobs. Its dfs, norms, tombstone array and
+  *    docstats-predicate fqs then come from driver memory with no job. What
+  *    a resident segment holds never exceeds its share of the bound.
   *  - `normsMaxDocs = 0` forces the DOCSTATS SHUFFLE: a segment with more
   *    docs never broadcasts its norms (1 byte/doc/field; 1 << 31 docs is
   *    ~6 GB); its runs cogroup with docstats by salt range instead.
@@ -271,19 +275,23 @@ case class SearchConfig(
   * (all rank-identical; EngineSpec and MultiSearcherSpec gate this):
   *
   *  - DRIVER KERNEL (default): posting runs are scored on the driver, norms
-  *    are read from the broadcast's local value. A RESIDENT segment (its
-  *    postings bound fits its share of `driverKernelMaxPostings`, see
-  *    [[SearchConfig]]) collects its whole postings table in ONE job on
-  *    first use, like Lucene serving from segment files already in memory:
-  *    every later query, new terms included, runs no postings job. Its
-  *    memory is at most its share of the bound and dies with the searcher.
-  *    Other segments collect each query's missing terms' runs and cache
-  *    them (the Lucene query-cache analog) — a repeat term runs no Spark
-  *    job at all.
+  *    are read from the broadcast's local value. A RESIDENT segment (see
+  *    [[SearchConfig]]) loads on its first query, like a Lucene reader
+  *    opening a segment's files, norms and liveDocs once: its postings and
+  *    docstats scans (plus its tombstone files, if any) run as concurrent
+  *    jobs. Every later query, new terms and new keyword, exists or `*:*`
+  *    fqs included, runs no Spark job: dfs are summed from the loaded runs,
+  *    norms and the tombstone array come from the loaded rows, and an fq
+  *    runs [[graft.index.QueryFilter.filter]] over the docstats rows as a
+  *    local relation, which Catalyst folds at optimisation time. Its memory
+  *    is at most its share of the bound and dies with the searcher. Other
+  *    segments collect each query's missing terms' runs and cache them (the
+  *    Lucene query-cache analog) — a repeat term runs no Spark job at all.
   *  - DISTRIBUTED KERNEL (matched postings above `driverKernelMaxPostings`):
-  *    one shuffle-free job — postings scan (term filter pushed to parquet
-  *    row groups) -> DAAT/WAND kernel per salt group with broadcast norms ->
-  *    per-group top-k -> driver merge.
+  *    postings scan (term filter pushed to parquet row groups) ->
+  *    `groupByKey(_.salt)` shuffle -> DAAT/WAND kernel per salt group with
+  *    broadcast norms -> per-group top-k -> driver merge; two jobs per call
+  *    (the shuffle's map stage, then the scoring stage).
   *  - DOCSTATS SHUFFLE (norms, tombstones or the fq beyond their broadcast
   *    bounds): runs cogroup with docstats by salt range; nothing is
   *    broadcast, unbounded in corpus size and delete volume.
@@ -319,27 +327,34 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private final class Segment(val idx: Int, val dir: String, val meta: IndexMeta,
                               val offset: Long) {
+    /** Stored tombstones, from the snapshot props (no data read). */
+    val tombstoneCount: Long = Tombstones.count(spark, dir)
+
+    /** Norms and tombstones both fit their broadcast bounds. */
+    val broadcastRegime: Boolean =
+      meta.nDocs <= config.normsMaxDocs && tombstoneCount <= config.tombstonesMaxBroadcast
+
+    /** Served from driver memory ([[SearchConfig]]): a non-empty
+      * broadcast-regime segment whose [[Searcher.residentBound]] fits its
+      * share of `driverKernelMaxPostings`.
+      */
+    val resident: Boolean = meta.nDocs > 0 && broadcastRegime &&
+      residentBound(meta) <= config.driverKernelMaxPostings / segmentDirs.size
+
     // the postings bound also bounds the vocabulary, so a small segment's
-    // dictionary is collected without a count job first
+    // dictionary is collected without a count job first; a resident one's
+    // dfs are summed from its loaded runs instead
     val dict = new DictProbe(spark, s"$dir/dictionary",
       config.dictionaryMaxDriverTerms / segmentDirs.size,
       math.max(1, config.dictionaryMaxCacheTerms / segmentDirs.size),
-      vocabBound = postingsBound(meta))
-
-    /** The whole postings table fits this segment's share of
-      * `driverKernelMaxPostings` ([[SearchConfig]]): it is served from
-      * [[residentRuns]] instead of per-term fetches.
-      */
-    val resident: Boolean = meta.nDocs > 0 &&
-      postingsBound(meta) <= config.driverKernelMaxPostings / segmentDirs.size
-
-    lazy val tombstoneCount: Long = Tombstones.count(spark, dir)
+      vocabBound = postingsBound(meta),
+      loaded = if (resident) Some(() => residentDfs) else None)
 
     /** Tombstoned docIds broadcast once as a sorted array; kernels
       * binary-search-skip them. Only the broadcast regime touches this.
       */
-    lazy val tombstonesBc: Broadcast[Array[Long]] =
-      track(spark.sparkContext.broadcast(Tombstones.loadSorted(spark, dir)))
+    lazy val tombstonesBc: Broadcast[Array[Long]] = track(spark.sparkContext.broadcast(
+      if (resident) loaded.tombstones else Tombstones.loadSorted(spark, dir)))
 
     /** The segment's docstats, read once with the known schema: the
       * norm-table build and every fq resolution plan over it, so neither
@@ -351,24 +366,66 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     /** Dense norms broadcast once (docIds are dense ranks 0..n-1). */
     lazy val normsBc: Broadcast[NormTable] = track {
       normBuilds.incrementAndGet()
-      val fields = DefaultFields.toArray
-      val n = meta.nDocs.toInt
-      val arrs = fields.map(_ => new Array[Byte](n))
-      docstatsDF
-        .select($"docId", $"lenContent", $"lenPath", $"lenRepo")
-        .as[(Long, Int, Int, Int)]
-        .collect()
-        .foreach { case (id, lc, lp, lr) =>
-          arrs(0)(id.toInt) = SmallFloat.intToByte4(lc)
-          arrs(1)(id.toInt) = SmallFloat.intToByte4(lp)
-          arrs(2)(id.toInt) = SmallFloat.intToByte4(lr)
-        }
-      spark.sparkContext.broadcast(NormTable(fields, arrs))
+      spark.sparkContext.broadcast(
+        if (resident) loaded.norms
+        else normTable(docstatsDF.select($"docId", $"lenContent", $"lenPath", $"lenRepo")
+          .as[(Long, Int, Int, Int)].collect().iterator))
     }
 
-    /** Norms and tombstones both fit their broadcast bounds. */
-    def broadcastRegime: Boolean =
-      meta.nDocs <= config.normsMaxDocs && tombstoneCount <= config.tombstonesMaxBroadcast
+    private def normTable(rows: Iterator[(Long, Int, Int, Int)]): NormTable = {
+      val fields = DefaultFields.toArray
+      val arrs = fields.map(_ => new Array[Byte](meta.nDocs.toInt))
+      rows.foreach { case (id, lc, lp, lr) =>
+        arrs(0)(id.toInt) = SmallFloat.intToByte4(lc)
+        arrs(1)(id.toInt) = SmallFloat.intToByte4(lp)
+        arrs(2)(id.toInt) = SmallFloat.intToByte4(lr)
+      }
+      NormTable(fields, arrs)
+    }
+
+    /** What a resident segment holds on the driver: its postings by
+      * (field, term), its norm table, its docstats rows as a local relation
+      * (the fq table) and its sorted tombstones.
+      */
+    private final class Loaded(val runs: Map[(String, String), Array[PostingRun]],
+                               val norms: NormTable, val docstats: DataFrame,
+                               val tombstones: Array[Long])
+
+    /** A resident segment's tables, loaded on first use (counted in
+      * `driverRunFetches`): the docstats and tombstone scans run as jobs
+      * concurrent with the postings collect, so the load takes about one
+      * job's latency. At most [[Searcher.residentBound]] rows; held by this
+      * searcher only, so it dies with it.
+      */
+    private lazy val loaded: Loaded = {
+      driverRunFetches.incrementAndGet()
+      // the forked scans touch no lazy val of this segment: this thread
+      // holds its lock until the load is done
+      val statsDF = docstatsDF.as[DocStats]
+      val stats = forked(spark, loadPool)(statsDF.collect())
+      val dead =
+        if (tombstoneCount == 0) None
+        else Some(forked(spark, loadPool)(Tombstones.loadSorted(spark, dir)))
+      val runs = postingsDF.as[PostingRun].collect().groupBy(r => (r.field, r.term))
+      val rows = await(stats)
+      new Loaded(runs,
+        normTable(rows.iterator.map(r => (r.docId, r.lenContent, r.lenPath, r.lenRepo))),
+        querySession.createDataFrame(rows.toSeq),
+        dead.fold(Array.emptyLongArray)(await))
+    }
+
+    private def residentDfs: Map[(String, String), Long] =
+      loaded.runs.map { case (key, rs) => key -> rs.iterator.map(_.df).sum }
+
+    /** The table a single fq resolves over: a resident segment's local
+      * docstats when the fq is a docstats predicate and its set fits
+      * `fqMaxBroadcast` (Catalyst folds the filter at optimisation time, so
+      * it runs no job), else the docstats scan.
+      */
+    def fqTable(fqs: String): DataFrame =
+      if (resident && meta.nDocs <= config.fqMaxBroadcast && !QueryFilter.readsPostings(fqs))
+        loaded.docstats
+      else docstatsDF
 
     // postings DataFrames with the file index cached across queries, planned
     // under the query and batch sessions so kernel stages inherit their conf
@@ -390,16 +447,6 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         .as[PostingRun]
     }
 
-    /** A resident segment's whole postings table by (field, term),
-      * collected by ONE job on first driver-kernel use (counted in
-      * `driverRunFetches`). At most `postingsBound(meta)` postings; held by
-      * this searcher only, so it dies with it.
-      */
-    private lazy val residentRuns: Map[(String, String), Array[PostingRun]] = {
-      driverRunFetches.incrementAndGet()
-      postingsDF.as[PostingRun].collect().groupBy(r => (r.field, r.term))
-    }
-
     /** A non-resident segment's posting runs per (field, term), for the
       * driver kernel only: once fetched, repeat queries over a term skip the
       * Spark job entirely. Memory is O(cached postings), bounded by this
@@ -409,13 +456,13 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       new ConcurrentHashMap[(String, String), Array[PostingRun]]()
     private val runCacheMax = math.max(1, RunCacheMaxTerms / segmentDirs.size)
 
-    /** The runs of `keys` for the driver kernel: from [[residentRuns]] on a
+    /** The runs of `keys` for the driver kernel: from the loaded runs on a
       * resident segment, else from the run cache plus one fetch job for the
       * missing keys.
       */
     def fetchRuns(keys: Set[(String, String)]): Array[PostingRun] = {
       if (resident)
-        return keys.iterator.flatMap(residentRuns.getOrElse(_, Array.empty[PostingRun])).toArray
+        return keys.iterator.flatMap(loaded.runs.getOrElse(_, Array.empty[PostingRun])).toArray
       val missing = keys.filterNot(runCache.containsKey)
       val fetched: Map[(String, String), Array[PostingRun]] =
         if (missing.isEmpty) Map.empty
@@ -465,13 +512,15 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private[graft] def residentSegments: Seq[Int] = segments.filter(_.resident).map(_.idx)
 
-  /** Posting-run collects to the driver. Cache hits and the executor-side
-    * routes leave it alone.
+  /** Posting-run collects to the driver: per-term fetches, and one per
+    * resident segment's load. Cache hits and the executor-side routes leave
+    * it alone.
     */
   private[graft] val driverRunFetches = new AtomicLong(0)
 
   /** Single-fq resolutions (repeat fqs stay cached). Each is one docstats
-    * scan job, plus the postings stages of any `content:`/`path:` clause.
+    * scan job, plus the postings stages of any `content:`/`path:` clause;
+    * a keyword, exists or `*:*` fq on a resident segment runs none.
     */
   private[graft] val fqResolves = new AtomicLong(0)
 
@@ -550,7 +599,8 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     * Lucene overlaps per-segment searches (latency tracks the slowest
     * segment, not the sum); one segment runs inline. Failures propagate.
     */
-  private def eachSegment[T](f: Segment => T): Seq[T] = inParallel(segments, segmentPool)(f)
+  private def eachSegment[T](f: Segment => T): Seq[T] =
+    inParallel(spark, segments, segmentPool)(f)
 
   /** Parse, look up global dfs and idfs; None when nothing can match. */
   private def plan(query: String, fields: Seq[String]): Option[Plan] = {
@@ -683,7 +733,8 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         if (keys.nonEmpty) seg.fetchRuns(keys)
       }
     }
-    inParallel(plans, kernelPool)(p => p.fold(Array.empty[Hit])(searchPlanned(_, k, fq, sharedDec)))
+    inParallel(spark, plans, kernelPool)(p =>
+      p.fold(Array.empty[Hit])(searchPlanned(_, k, fq, sharedDec)))
   }
 
   /** Bulk retrieval for the SCALE regime — ONE Spark job per segment scores
@@ -894,13 +945,15 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
   }
 
   /** One fq's match set on a segment: [[graft.index.QueryFilter.filter]]
-    * over the segment's own docstats and postings DataFrames. Tombstoned
-    * docs stay in the set; every scoring route excludes them already.
+    * over the segment's own docstats ([[Segment.fqTable]]: driver-local on a
+    * resident segment, so a keyword, exists or `*:*` fq runs no job) and
+    * postings DataFrames. Tombstoned docs stay in the set; every scoring
+    * route excludes them already.
     */
   private def resolveSingleFq(seg: Segment, fqs: String): FqSet = {
     fqResolves.incrementAndGet()
     persistedOrBroadcast(
-      QueryFilter.filter(seg.docstatsDF, seg.postingsDF, seg.meta.buckets, fqs)
+      QueryFilter.filter(seg.fqTable(fqs), seg.postingsDF, seg.meta.buckets, fqs)
         .select($"docId"),
       seg.meta.nDocs)
   }
@@ -1046,14 +1099,6 @@ object Searcher {
     else keys.iterator.map(key => key -> perSegment.iterator.map(_.getOrElse(key, 0L)).sum)
       .filter(_._2 > 0).toMap
 
-  /** The persisted tables' schemas. Every read passes its table's schema, so
-    * opening a table lists its files but runs no parquet schema-inference
-    * job (SchemaGuardSpec checks them against what each writer leaves).
-    */
-  private[graft] val DocStatsSchema = Encoders.product[DocStats].schema
-  private[graft] val PostingsSchema = Encoders.product[PostingRun].schema
-  private[graft] val DictionarySchema = Encoders.product[DictEntry].schema
-
   /** An upper bound on a segment's postings, free from its snapshot props:
     * a document posts each distinct (field, term) once, so the segment's
     * summed field lengths (nDocs × Σ avgLen, each field's token total
@@ -1062,6 +1107,12 @@ object Searcher {
     */
   private[graft] def postingsBound(meta: IndexMeta): Long =
     meta.avgLen.valuesIterator.map(a => Math.round(a * meta.nDocs)).sum
+
+  /** The rows a resident segment holds on the driver: its postings bound
+    * plus one docstats row per document. Residency needs this to fit the
+    * segment's share of `driverKernelMaxPostings` ([[SearchConfig]]).
+    */
+  private[graft] def residentBound(meta: IndexMeta): Long = postingsBound(meta) + meta.nDocs
 
   /** Exact global average field lengths: each segment's integer length sum
     * is recovered as round(avgLen · nDocs) — exact while sums stay below
@@ -1256,26 +1307,36 @@ object Searcher {
   /** `f` over `xs` in parallel on `pool`, order-preserving; zero or one
     * element runs inline (no pool hop). Failures propagate.
     */
-  private def inParallel[A, T](xs: Seq[A], pool: ExecutionContext)(f: A => T): Seq[T] =
+  private def inParallel[A, T](spark: SparkSession, xs: Seq[A], pool: ExecutorService)(
+      f: A => T): Seq[T] =
     if (xs.lengthCompare(1) <= 0) xs.map(f)
-    else {
-      implicit val ec: ExecutionContext = pool
-      Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
-    }
+    else xs.map(x => forked(spark, pool)(f(x))).map(await)
 
-  private def daemonPool(threads: Int, name: String): ExecutionContextExecutorService =
-    ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(threads, (r: Runnable) => {
-        val t = new Thread(r, name)
-        t.setDaemon(true)
-        t
-      }))
+  /** `body` on `pool` under the caller's Spark local properties (job group,
+    * description, scheduler pool) and active session. A pool thread
+    * otherwise keeps the properties of the caller that happened to create
+    * it, so its jobs would be charged to that caller's group.
+    */
+  private def forked[T](spark: SparkSession, pool: ExecutorService)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool)(body)
+
+  /** The future's value, rethrowing the task's own failure. */
+  private def await[T](f: CompletableFuture[T]): T =
+    try f.join()
+    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+
+  private def daemonPool(threads: Int, name: String): ExecutorService =
+    Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, name)
+      t.setDaemon(true)
+      t
+    })
 
   /** Shared bounded pool for [[Searcher.searchMany]]'s per-query kernel
     * fan-out, sized to the driver's cores (the kernels are CPU-bound).
     * Daemon threads — never blocks JVM exit.
     */
-  private lazy val kernelPool: ExecutionContextExecutorService =
+  private lazy val kernelPool: ExecutorService =
     daemonPool(math.max(2, Runtime.getRuntime.availableProcessors()), "graft-searchmany")
 
   /** Shared bounded pool for the per-segment fan-out: Spark jobs submitted
@@ -1284,8 +1345,15 @@ object Searcher {
     * and segment tasks never wait on it, so a query blocking on its
     * segments cannot deadlock.
     */
-  private lazy val segmentPool: ExecutionContextExecutorService =
+  private lazy val segmentPool: ExecutorService =
     daemonPool(8, "graft-multisearch")
+
+  /** Pool for a resident segment's load: its docstats and tombstone scans
+    * run here while the segment's own thread collects the postings. The
+    * tasks are single collects that never wait on a pool, so a segment
+    * task blocking on them cannot deadlock.
+    */
+  private lazy val loadPool: ExecutorService = daemonPool(8, "graft-load")
 }
 
 /** The per-salt-range scoring kernel. Pure Scala over primitive arrays — the

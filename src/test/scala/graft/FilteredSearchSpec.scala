@@ -146,7 +146,13 @@ class FilteredSearchSpec extends AnyFunSuite {
 
   test("a new keyword fq resolves in one Spark job") {
     val f = Some("lang:java OR NOT repo:repo-0003")
-    val s = new Searcher(spark, tmp)
+    // a bound below the resident bound keeps the segment on per-term
+    // fetches and docstats scans
+    val probe = new Searcher(spark, tmp)
+    val bound = Searcher.residentBound(probe.meta)
+    probe.close()
+    val s = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = bound - 1))
+    assert(s.residentSegments.isEmpty)
     // runs, dictionary, norms and tombstones are cached by an unfiltered
     // query; what is left of the first filtered one is the fq resolution
     s.search("buffer", 10)
@@ -162,6 +168,20 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(big.livePersistCount == 1)
     s.close(); big.close()
     assert(big.livePersistCount == 0)
+  }
+
+  test("a new keyword fq on a resident segment runs no job") {
+    val f = Some("lang:java OR NOT repo:repo-0003")
+    val s = new Searcher(spark, tmp)
+    assert(s.residentSegments == Seq(0))
+    // the first query loads the segment; the fq then runs over its rows
+    s.search("buffer", 10)
+    var hits = Array.empty[Hit]
+    val jobs = SparkJobs.count(spark, "graft-fq-resident") { hits = s.search("buffer", 10, fq = f) }
+    assert(jobs == 0, s"a new keyword fq ran $jobs Spark jobs on a resident segment")
+    assert(s.fqResolves.get() == 1)
+    assert(hits.toSeq == reference(s, "buffer", 10, allowed(tmp, f.get)))
+    s.close()
   }
 
   test("batched retrieval honors fq on both batch shapes") {

@@ -3,7 +3,8 @@ package graft
 import graft.analysis.Analyzer
 import graft.core.CodeDoc
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, QueryFilter, Tombstones}
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta, QueryFilter, Snapshot, Tombstones}
+import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,14 +105,18 @@ class QueryFilterSpec extends AnyFunSuite {
     }.mkString(pick(Seq(" OR ", " or ")))
   }
 
-  test("random Q1 filters == brute force over the raw docs (null lang, tombstones)") {
-    import spark.implicits._
-    val (dir, ids, dead) = fixture
+  /** 11 fixed filters plus 30 random ones. */
+  lazy val fqs: Seq[String] = {
     val fixed = Seq("lang:scala", "NOT lang:scala", "NOT lang:md OR lang:md", "lang:*",
       "NOT lang:*", "content:*", "NOT content:*", "NOT content:buffer",
       "path:* OR NOT repo:repo-0003", "NOT *:*", "repo:no-such-repo")
     val rng = new scala.util.Random(20240601L)
-    val fqs = fixed ++ Seq.fill(30)(randomFq(rng))
+    fixed ++ Seq.fill(30)(randomFq(rng))
+  }
+
+  test("random Q1 filters == brute force over the raw docs (null lang, tombstones)") {
+    import spark.implicits._
+    val (dir, ids, dead) = fixture
     // the fixture exercises what it claims to
     assert(bruteForce("NOT lang:*") == Set(ids(docs.size - 2)))
     assert(bruteForce("NOT content:*") == Set(ids(docs.size - 1)))
@@ -131,5 +136,27 @@ class QueryFilterSpec extends AnyFunSuite {
     for (fq <- Seq("lang:scala", "content:buffer OR NOT path:src", "*:*", "repo:*")) {
       assert(cols(QueryFilter.matchingDocs(spark, dir, fq)) == expected, s"fq='$fq'")
     }
+  }
+
+  test("a resident searcher's fq hits are bit-identical to a scanning searcher's") {
+    // the resident segment resolves docstats-predicate fqs over its loaded
+    // rows; the other scans docstats for every fq
+    val (dir, _, dead) = fixture
+    val meta = IndexMeta.fromProps(new Snapshot(dir).readProps())
+    val resident = new Searcher(spark, dir)
+    val scanned = new Searcher(spark, Seq(dir),
+      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(meta) - 1))
+    assert(resident.residentSegments == Seq(0))
+    assert(scanned.residentSegments.isEmpty)
+    var nonEmpty = 0
+    for (fq <- fqs; q <- Seq("buffer", "def class return")) {
+      val got = resident.search(q, 10, fq = Some(fq)).toSeq
+      assert(got == scanned.search(q, 10, fq = Some(fq)).toSeq, s"q='$q' fq='$fq'")
+      assert(got.forall(h => bruteForce(fq)(h.docId) && !dead(h.docId)), s"q='$q' fq='$fq'")
+      if (got.nonEmpty) nonEmpty += 1
+      assert(resident.fqResolves.get() == scanned.fqResolves.get(), s"fq='$fq'")
+    }
+    assert(nonEmpty > fqs.size / 2, "too few filtered queries have hits")
+    resident.close(); scanned.close()
   }
 }

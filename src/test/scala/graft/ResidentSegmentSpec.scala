@@ -1,15 +1,17 @@
 package graft
 
-import graft.core.{DictEntry, DocStats, Hit, PostingRun}
+import graft.core.{CodeDoc, Hit}
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, IndexMeta, Snapshot}
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta}
 import graft.query.{SearchConfig, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Resident segments: a segment whose postings bound (nDocs × Σ avgLen)
-  * fits its share of `driverKernelMaxPostings` collects its whole postings
-  * table in one job and answers every later query with no Spark job; any
-  * other segment keeps per-term fetches. Every route returns the same hits.
+/** Resident segments: a broadcast-regime segment whose resident bound
+  * (postings bound nDocs × Σ avgLen, plus nDocs docstats rows) fits its
+  * share of `driverKernelMaxPostings` loads its postings and docstats by
+  * concurrent jobs on its first query and answers every later query with no
+  * Spark job; any other segment keeps per-term fetches. Every route returns
+  * the same hits.
   */
 class ResidentSegmentSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,10 +36,15 @@ class ResidentSegmentSpec extends AnyFunSuite {
 
   private def answers(s: Searcher): Seq[Seq[Hit]] = stream.map(q => s.search(q, 10).toSeq)
 
+  /** Jobs a resident segment without tombstones opens with: its postings
+    * and docstats scans.
+    */
+  val OpenJobs = 2
+
   test("a resident segment answers a distinct-term stream with one postings job") {
     val resident = new Searcher(spark, segA)
     val perTerm = new Searcher(spark, Seq(segA),
-      SearchConfig(driverKernelMaxPostings = Searcher.postingsBound(metaA) - 1))
+      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(metaA) - 1))
     assert(resident.residentSegments == Seq(0))
     assert(perTerm.residentSegments.isEmpty)
     val residentJobs = stream.zipWithIndex.map { case (q, i) =>
@@ -48,18 +55,18 @@ class ResidentSegmentSpec extends AnyFunSuite {
     }
     assert(resident.driverRunFetches.get() == 1, "one load serves the whole stream")
     assert(perTerm.driverRunFetches.get() == stream.size, "each new term fetches")
-    assert(residentJobs.tail.forall(_ == 0), s"jobs per query: $residentJobs")
-    // the cold jobs (dictionary, norms) are the same on both; the resident
-    // searcher's only postings job replaces one fetch job per query
-    assert(residentJobs.sum == perTermJobs.sum - stream.size + 1,
-      s"resident $residentJobs vs per-term $perTermJobs")
+    // the open's jobs are the whole stream's: dfs and norms come from the
+    // loaded tables, not from dictionary and docstats collects
+    assert(residentJobs.sum == OpenJobs, s"jobs per query: $residentJobs")
+    assert(residentJobs.head == OpenJobs, s"jobs per query: $residentJobs")
+    assert(perTermJobs.forall(_ >= 1), s"each new term fetches: $perTermJobs")
     resident.close(); perTerm.close()
   }
 
   test("resident hits are bit-identical to per-term fetches and the distributed kernel") {
     val resident = new Searcher(spark, segA)
     val perTerm = new Searcher(spark, Seq(segA),
-      SearchConfig(driverKernelMaxPostings = Searcher.postingsBound(metaA) - 1))
+      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(metaA) - 1))
     val distributed = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = 0))
     val expect = answers(distributed)
     assert(expect.count(_.nonEmpty) > stream.size / 2)
@@ -74,7 +81,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
   }
 
   test("a halved share below a segment's bound falls back to per-term fetches") {
-    val bound = Searcher.postingsBound(metaA)
+    val bound = Searcher.residentBound(metaA)
     val alone = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = bound))
     assert(alone.residentSegments == Seq(0), "the bound fits the whole budget")
     val pair = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = bound))
@@ -95,19 +102,10 @@ class ResidentSegmentSpec extends AnyFunSuite {
   }
 
   test("an empty segment is never resident and never loads") {
-    // the builder refuses empty input (its stats aggregate reads a null
-    // sum), so the empty segment is written by hand in a build's layout
     val empty = java.nio.file.Files.createTempDirectory("graftempty").toString
-    val sp = spark
-    import sp.implicits._
-    spark.emptyDataset[DocStats].write.parquet(s"$empty/docstats")
-    spark.emptyDataset[PostingRun].write.parquet(s"$empty/postings")
-    spark.emptyDataset[DictEntry].write.parquet(s"$empty/dictionary")
-    val meta = IndexMeta(0, cfg.fields.map(_ -> Double.NaN).toMap,
-      cfg.buckets, cfg.saltRange, cfg.blockSize)
-    val snap = new Snapshot(empty)
-    snap.init()
-    snap.commit(meta.toProps)
+    val meta = IndexBuilder.build(spark, spark.emptyDataset[CodeDoc](
+      org.apache.spark.sql.Encoders.product[CodeDoc]), empty, cfg)
+    assert(meta.nDocs == 0)
     assert(Searcher.postingsBound(meta) == 0)
     val s = new Searcher(spark, Seq(segA, empty))
     assert(s.residentSegments == Seq(0))
@@ -116,5 +114,19 @@ class ResidentSegmentSpec extends AnyFunSuite {
     assert(s.searchMany(stream, 10).map(_.toSeq) == answers(alone))
     assert(s.driverRunFetches.get() == 1, "only the non-empty segment loads")
     s.close(); alone.close()
+  }
+
+  test("pool threads run a query's jobs under the caller's job group") {
+    // segment tasks run on a shared pool whose threads outlive any one
+    // caller: warm it under another group, then a fresh two-segment
+    // searcher's first query must be charged in full to its own group
+    val warm = new Searcher(spark, Seq(segA, segB))
+    SparkJobs.count(spark, "graft-pool-warm")(warm.search("buffer", 10))
+    val fresh = new Searcher(spark, Seq(segA, segB))
+    assert(fresh.residentSegments == Seq(0, 1))
+    val (inGroup, all) = SparkJobs.countBoth(spark, "graft-pool-query")(fresh.search("buffer", 10))
+    assert(inGroup == all, s"$inGroup of the query's $all jobs ran under its group")
+    assert(inGroup == 2 * OpenJobs, "each segment opens with its own load")
+    warm.close(); fresh.close()
   }
 }

@@ -1,16 +1,17 @@
 package graft
 
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, IndexOps}
+import graft.index.{IndexBuilder, IndexConfig, IndexOps, Tombstones}
 import graft.query.Searcher
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The searcher reads docstats, postings and dictionary with known schemas
-  * instead of inferring them (one job per table). A known schema that drifts
-  * from the files reads nulls silently, so every writer's output is checked
-  * against the schemas the searcher passes.
+/** The searcher, the builder and the tombstone reader read docstats,
+  * postings, dictionary and tombstones with known schemas instead of
+  * inferring them (one job per table). A known schema that drifts from the
+  * files reads nulls silently, so every writer's output is checked against
+  * the schemas the readers pass.
   */
 class SchemaGuardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,11 +40,20 @@ class SchemaGuardSpec extends AnyFunSuite {
   }
 
   private def assertKnownSchemas(indexDir: String, what: String): Unit =
-    Seq("docstats" -> Searcher.DocStatsSchema, "postings" -> Searcher.PostingsSchema,
-        "dictionary" -> Searcher.DictionarySchema).foreach { case (table, known) =>
+    Seq("docstats" -> IndexBuilder.DocStatsSchema, "postings" -> IndexBuilder.PostingsSchema,
+        "dictionary" -> IndexBuilder.DictionarySchema).foreach { case (table, known) =>
       val inferred = spark.read.parquet(s"$indexDir/$table").schema
       assert(byName(known) == byName(inferred), s"$what $table: inferred $inferred")
     }
+
+  private def assertTombstoneSchema(indexDir: String, what: String): Unit = {
+    val files = Tombstones.files(indexDir)
+    assert(files.nonEmpty, s"$what committed no tombstone file")
+    files.foreach { f =>
+      val inferred = spark.read.parquet(f).schema
+      assert(byName(Tombstones.Schema) == byName(inferred), s"$what $f: inferred $inferred")
+    }
+  }
 
   test("known schemas match every writer's files by name and type") {
     val built = Seq(true, false).map { bucketDirs =>
@@ -56,6 +66,13 @@ class SchemaGuardSpec extends AnyFunSuite {
     val delta = tmp("graftschemadelta")
     IndexOps.upsertDelta(spark, base, docs(250, 100), delta, cfg(true))
     assertKnownSchemas(delta, "upsertDelta delta")
+    assertTombstoneSchema(base, "upsertDelta")
+    val s = spark
+    import s.implicits._
+    val victims = spark.read.parquet(s"${built(1)}/docstats")
+      .select($"repo", $"path", $"commit").as[(String, String, String)].take(3)
+    IndexOps.deleteInPlace(spark, built(1), victims.toSeq)
+    assertTombstoneSchema(built(1), "deleteInPlace")
     val merged = tmp("graftschemamerged")
     assert(IndexOps.maintain(spark, base, Seq(delta), merged, cfg(true), maxDeltas = 0).nonEmpty)
     assertKnownSchemas(merged, "maintain output")
@@ -73,10 +90,11 @@ class SchemaGuardSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs(0, 300), dir, cfg(true))
     val s = new Searcher(spark, dir)
     assert(s.residentSegments == Seq(0))
-    // dictionary collect, norms collect, postings load: no schema-inference
-    // or dictionary count jobs
+    // the open's postings and docstats scans, one fewer than the three
+    // (dictionary, norms, postings) it took before: no schema-inference,
+    // dictionary or norms jobs
     val jobs = SparkJobs.count(spark, "graft-cold-first-query")(s.search("buffer", 10))
-    assert(jobs <= 3, s"the first query ran $jobs Spark jobs")
+    assert(jobs <= 2, s"the first query ran $jobs Spark jobs")
     s.close()
   }
 }

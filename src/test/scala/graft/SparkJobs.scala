@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -7,26 +8,31 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Counts the Spark jobs a block of code starts, by job group. */
 object SparkJobs {
-  def count(spark: SparkSession, group: String)(body: => Unit): Int = {
-    val counter = new AtomicInteger(0)
+  def count(spark: SparkSession, group: String)(body: => Unit): Int =
+    countBoth(spark, group)(body)._1
+
+  /** (jobs started under `group`, all jobs started) while `body` runs. */
+  def countBoth(spark: SparkSession, group: String)(body: => Unit): (Int, Int) = {
+    val inGroup = new AtomicInteger(0)
+    val all = new AtomicInteger(0)
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
         if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      // listener bus is async; poll until the count is stable
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(200)
-        val now = counter.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
+          inGroup.incrementAndGet()
       }
-      last
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val sc = spark.sparkContext
+    // earlier jobs' events must not reach the listener
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // every job `body` started has posted its start event; the bus is
+      // asynchronous, so wait until the listener has seen them all
+      ListenerBusAccess.drain(sc)
+      (inGroup.get(), all.get())
+    } finally sc.removeSparkListener(listener)
   }
 }
