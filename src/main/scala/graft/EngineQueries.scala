@@ -56,7 +56,7 @@ object EngineQueries {
                FROM simhash_docs ORDER BY doc_id""")
     }),
 
-    // batched retrieval: one prefetch job for the batch, per-query kernels
+    // batched retrieval: one fetch of the batch's terms, then the driver kernel
     // (golden-oracled; scores round(.,6) like the other goldens)
     "ix_search_batch" -> ((s, dir) => {
       import s.implicits._
@@ -98,16 +98,19 @@ object EngineQueries {
     }),
 
     // the scale-regime batch shape: the WHOLE batch scored by ONE Spark job
-    // (searchManyDistributed); each row carries an agreement flag vs the
-    // per-query strategies, so the golden also gates batch==per-query
+    // (the distributed kernel, forced by its bound); each row carries an
+    // agreement flag vs the per-query driver kernel, so the golden also
+    // gates batch==per-query across the two routes
     // (scores round(.,6) for the committed-golden oracle, like the others)
     "ix_search_batch_distributed" -> ((s, dir) => {
       import s.implicits._
       val idx = SparkEntry.indexFor(s, dir)
-      val searcher = new Searcher(s, idx)
+      val searcher = new Searcher(s, Seq(idx), SearchConfig(driverKernelMaxPostings = 0))
       val batch = Seq("data table merge", "filter join sort", "data", "group query row")
-      val perQuery = batch.map(q => searcher.search(q, 5).toSeq)
-      searcher.searchManyDistributed(batch, 5).zip(batch).zip(perQuery)
+      // the per-query reference takes the default router (the driver kernel here)
+      val ref = new Searcher(s, idx)
+      val perQuery = batch.map(q => ref.search(q, 5).toSeq)
+      searcher.searchMany(batch, 5).zip(batch).zip(perQuery)
         .flatMap { case ((hits, q), ref) =>
           hits.zipWithIndex.map { case (h, i) =>
             (q, i + 1, h.docId,

@@ -2,13 +2,14 @@ package graft
 
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.Searcher
+import graft.query.{SearchConfig, Searcher}
 
 /** The north rule's two-cluster-size scaling evidence: the SAME work at N
   * and 4N cores, throughput at both and efficiency = (thr@4N / thr@N) / 4.
   *
   *  - `build`: the index build over the SAME input (build docs/s).
-  *  - `query`: batched distributed retrieval (`searchManyDistributed` — the
+  *  - `query`: batched distributed retrieval (`searchMany` on the
+  *    distributed kernel, forced by `driverKernelMaxPostings = 0` — the
   *    only batch shape that exists at the 10^12-doc target) over ONE shared
   *    index, built once untimed (batch q/s).
   *
@@ -229,7 +230,7 @@ object ScalingBench {
     writeLast("QUERY_SCALING_LAST.md",
       f"""# BENCH/QUERY_SCALING_LAST — batched distributed retrieval at N vs 4N cores
          |
-         |searchManyDistributed over one shared $nDocs-doc index (saltRange
+         |searchMany (distributed kernel) over one shared $nDocs-doc index (saltRange
          |8192 ⇒ ~${nDocs / 8192} salt groups), batch of $batchSize two-term
          |queries, k=10; fresh child JVM per leg, ABBA best-of-2, per-leg
          |warm-up untimed, best-of-3 batch runs measured.
@@ -256,12 +257,12 @@ object ScalingBench {
       val words = Bench.BenchQueries.flatMap(_.split(" ")).distinct
       val batch = (0 until batchSize).map(i =>
         s"${words(i % words.size)} ${words((i * 7 + 3) % words.size)}")
-      val s = new Searcher(spark, idxDir)
-      s.searchManyDistributed(batch.take(8), 10) // warm: JIT + dict + norms
-      s.searchManyDistributed(batch, 10) // warm: full batch once
+      val s = new Searcher(spark, Seq(idxDir), SearchConfig(driverKernelMaxPostings = 0))
+      s.searchMany(batch.take(8), 10) // warm: JIT + dict + norms
+      s.searchMany(batch, 10) // warm: full batch once
       val sm = if (sys.env.get("SPARK_GRAFT_TIMING").contains("1"))
         Some(StageMetrics.install(spark)) else None
-      val t = (1 to 3).map(_ => Bench.time(s.searchManyDistributed(batch, 10))._2).min
+      val t = (1 to 3).map(_ => Bench.time(s.searchMany(batch, 10))._2).min
       sm.foreach(_.report(s"batch=$batchSize cores=$cores (3 timed runs)"))
       s.close()
       println(f"""{"metric":"qleg","cores":$cores,"qps":${batch.size / t}%.2f,"sec":$t%.3f}""")

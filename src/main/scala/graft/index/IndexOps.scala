@@ -27,7 +27,7 @@ object IndexOps {
     * filter/facet already make them invisible (Solr RTG semantics).
     */
   def docs(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/docstats")
+    spark.read.schema(IndexBuilder.DocStatsSchema).parquet(s"$indexDir/docstats")
 
   /** Documents visible to readers: docstats minus committed tombstones. */
   def liveDocs(spark: SparkSession, indexDir: String): DataFrame =
@@ -353,8 +353,8 @@ object QueryFilter {
     */
   def matchingDocs(spark: SparkSession, indexDir: String, query: String): DataFrame =
     Tombstones.exclude(spark, indexDir,
-      filter(spark.read.parquet(s"$indexDir/docstats"),
-        spark.read.parquet(s"$indexDir/postings"),
+      filter(IndexOps.docs(spark, indexDir),
+        spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$indexDir/postings"),
         IndexMeta.fromProps(new Snapshot(indexDir).readProps()).buckets, query))
 
   /** `stats` rows matching the query, with `stats`' columns; tombstones are

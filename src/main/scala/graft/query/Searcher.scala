@@ -21,10 +21,10 @@ import scala.collection.mutable
   */
 case class Clause(word: String, perField: Map[String, String])
 
-/** One query's serializable plan within a batched retrieval job: index into
-  * the caller's query list, parsed clauses, resolved idf per (field, term),
-  * and the mm gate. Small by construction (a few strings and doubles per
-  * query term) — a whole batch ships to executors as one broadcast.
+/** One query's plan within a batch, on every route: index into the
+  * caller's query list, parsed clauses, resolved idf per (field, term), and
+  * the mm gate. Small by construction (a few strings and doubles per query
+  * term) — an executor route ships the whole batch as one broadcast.
   */
 case class BatchPlan(qi: Int, clauses: Array[Clause],
                      idfMap: Map[(String, String), Double], minMatch: Int)
@@ -52,13 +52,13 @@ object QueryPlan {
   * task; decode was the dominant share of 153 task-CPU-seconds/run).
   * Blocks decode LAZILY on first touch — a block every query WAND-skips is
   * never decoded at all — and the decoded arrays are shared read-only by
-  * all plans' iterators. Single-task use (one thread); bit-identical decode
-  * output by construction (same Codec calls).
+  * all plans' iterators, within one task or across the driver kernel's
+  * threads; bit-identical decode output by construction (same Codec calls).
   */
 final class DecodedBlocks(val blocks: Array[PostingBlock]) {
   DecodedBlocks.built.incrementAndGet()
-  // AtomicReferenceArray: the DRIVER batch path (searchMany) shares one
-  // cache across kernelPool threads — the race is benign (two threads
+  // AtomicReferenceArray: the driver kernel shares one cache across
+  // kernelPool threads — the race is benign (two threads
   // decode identical content; volatile set publishes a fully-written
   // array), and the volatile read is per BLOCK entry, not per posting
   private val docsArr =
@@ -222,8 +222,9 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   * so a spec or bench forces a regime by setting its bound to 0:
   *
   *  - `driverKernelMaxPostings = 0` forces the DISTRIBUTED KERNEL: a segment
-  *    whose matched postings exceed the bound scores on executors instead of
-  *    collecting its runs to the driver kernel. The bound, split evenly
+  *    whose postings for the batch's distinct terms exceed the bound scores
+  *    on executors instead of collecting its runs to the driver kernel, so
+  *    a batch's driver memory is bounded by the batch. The bound, split evenly
   *    across segments, also decides RESIDENCY: a non-empty segment in the
   *    broadcast regime (its norms and tombstone count fit their bounds)
   *    whose [[Searcher.residentBound]] (its postings bound nDocs × Σ avgLen
@@ -271,11 +272,19 @@ case class SearchConfig(
   * the given order) and ties break on it, so segments [A, B] score exactly
   * like one merged index of A then B.
   *
-  * Per query and segment, a three-way router picks the physical strategy
-  * (all rank-identical; EngineSpec and MultiSearcherSpec gate this):
+  * Every entry point is a batch: [[search]] is a batch of one and
+  * [[searchMany]] is the batch. Per segment, one router picks the physical
+  * strategy for the whole batch (all rank-identical; EngineSpec,
+  * MultiSearcherSpec and BatchSearchSpec gate this):
   *
-  *  - DRIVER KERNEL (default): posting runs are scored on the driver, norms
-  *    are read from the broadcast's local value. A RESIDENT segment (see
+  *  - DRIVER KERNEL (default, while the segment is in the broadcast regime
+  *    and its postings for the batch's distinct terms fit
+  *    `driverKernelMaxPostings`): the union of the batch's terms is fetched
+  *    once, then [[Searcher.scoreBatch]]'s kernel scores every plan on the
+  *    driver, plans fanned over [[Searcher.kernelPool]] and sharing one
+  *    decoded-block cache per (salt, field, term); a batch of one decodes
+  *    into reused buffers instead. Norms are read from the broadcast's local
+  *    value. A RESIDENT segment (see
   *    [[SearchConfig]]) loads on its first query, like a Lucene reader
   *    opening a segment's files, norms and liveDocs once: its postings and
   *    docstats scans (plus its tombstone files, if any) run as concurrent
@@ -287,14 +296,22 @@ case class SearchConfig(
   *    is at most its share of the bound and dies with the searcher. Other
   *    segments collect each query's missing terms' runs and cache them (the
   *    Lucene query-cache analog) — a repeat term runs no Spark job at all.
-  *  - DISTRIBUTED KERNEL (matched postings above `driverKernelMaxPostings`):
-  *    postings scan (term filter pushed to parquet row groups) ->
-  *    `groupByKey(_.salt)` shuffle -> DAAT/WAND kernel per salt group with
-  *    broadcast norms -> per-group top-k -> driver merge; two jobs per call
-  *    (the shuffle's map stage, then the scoring stage).
+  *  - DISTRIBUTED KERNEL (the batch's postings above
+  *    `driverKernelMaxPostings`): ONE `scoreBatch` job per segment for the
+  *    whole batch — postings scan (term filter pushed to parquet row
+  *    groups) -> `groupByKey(_.salt)` shuffle -> every plan's DAAT/WAND
+  *    kernel per salt group with broadcast norms -> per-group top-k ->
+  *    driver merge; two Spark jobs per call (the shuffle's map stage, then
+  *    the scoring stage).
   *  - DOCSTATS SHUFFLE (norms, tombstones or the fq beyond their broadcast
-  *    bounds): runs cogroup with docstats by salt range; nothing is
-  *    broadcast, unbounded in corpus size and delete volume.
+  *    bounds): the same `scoreBatch` job, its runs cogrouped with docstats
+  *    by salt range; nothing but the plans is broadcast, unbounded in
+  *    corpus size and delete volume.
+  *
+  * Queries sharing head terms share one fetch or scan, so a batch's cost
+  * tracks its distinct posting volume, not its size. A batch of one plans
+  * its executor jobs under the latency session, a larger batch under the
+  * throughput session.
   *
   * Thresholds come from one immutable [[SearchConfig]]. The searcher pins the
   * segments' snapshots and is dead after [[close]]; open a new one for the
@@ -417,13 +434,13 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     private def residentDfs: Map[(String, String), Long] =
       loaded.runs.map { case (key, rs) => key -> rs.iterator.map(_.df).sum }
 
-    /** The table a single fq resolves over: a resident segment's local
-      * docstats when the fq is a docstats predicate and its set fits
+    /** The table an fq conjunction resolves over: a resident segment's local
+      * docstats when no component reads postings and the set fits
       * `fqMaxBroadcast` (Catalyst folds the filter at optimisation time, so
       * it runs no job), else the docstats scan.
       */
-    def fqTable(fqs: String): DataFrame =
-      if (resident && meta.nDocs <= config.fqMaxBroadcast && !QueryFilter.readsPostings(fqs))
+    def fqTable(fq: Seq[String]): DataFrame =
+      if (resident && meta.nDocs <= config.fqMaxBroadcast && !fq.exists(QueryFilter.readsPostings))
         loaded.docstats
       else docstatsDF
 
@@ -518,9 +535,10 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private[graft] val driverRunFetches = new AtomicLong(0)
 
-  /** Single-fq resolutions (repeat fqs stay cached). Each is one docstats
-    * scan job, plus the postings stages of any `content:`/`path:` clause;
-    * a keyword, exists or `*:*` fq on a resident segment runs none.
+  /** fq resolutions, one per new (segment, fq conjunction); repeats stay
+    * cached. Each is one docstats scan job, plus the postings stages of any
+    * `content:`/`path:` clause; keyword, exists or `*:*` fqs on a resident
+    * segment run none.
     */
   private[graft] val fqResolves = new AtomicLong(0)
 
@@ -581,8 +599,9 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private lazy val querySession: SparkSession = newQuerySession(spark)
 
-  /** Session for BATCHED kernel jobs ([[searchManyDistributed]]): same
-    * context, SQL conf tuned for throughput instead of latency. The
+  /** Session for a batch's executor kernel jobs ([[searchMany]] with more
+    * than one plan): same context, SQL conf tuned for throughput instead of
+    * latency. The
     * round-6 profile (`ScalingBench query`, SPARK_GRAFT_TIMING): the batched
     * kernel stage coalesced to ~1.25x cores tasks (40 at 32 cores), so the
     * whole second scheduling wave ran 8 tasks on 32 cores — wall = 2x the
@@ -602,19 +621,6 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
   private def eachSegment[T](f: Segment => T): Seq[T] =
     inParallel(spark, segments, segmentPool)(f)
 
-  /** Parse, look up global dfs and idfs; None when nothing can match. */
-  private def plan(query: String, fields: Seq[String]): Option[Plan] = {
-    val cls = QueryPlan.clauses(query, fields)
-    if (cls.isEmpty) return None
-    val needed = cls.flatMap(_.perField.toSeq).toSet
-    val segDfs = eachSegment(_.dict.dfOf(needed))
-    val dfs = sumDfs(needed, segDfs)
-    if (dfs.isEmpty) None
-    else Some(Plan(cls, dfs.map { case (key, df) => key -> BM25.idf(totalDocs, df) },
-      BM25.minShouldMatch(cls.length),
-      segDfs.map(d => dfs.keysIterator.map(d.getOrElse(_, 0L)).sum).toIndexedSeq))
-  }
-
   /** Ranked retrieval, optionally constrained to an fq's matching docs
     * (Solr `q` + `fq` semantics: the filter never contributes to the score —
     * BM25 ranks exactly as without it; the filter gates which docs may
@@ -623,198 +629,131 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     * stays admissible: the filter only suppresses heap offers, so the
     * threshold is never higher than the unfiltered run's. The fq is
     * evaluated per segment on that segment's own docId space, which is
-    * identical to evaluating it on the merged index.
+    * identical to evaluating it on the merged index. A batch of one
+    * through [[searchMany]].
     */
   def search(query: String, k: Int, fields: Seq[String] = DefaultFields,
              fq: Option[String] = None): Array[Hit] =
-    plan(query, fields).fold(Array.empty[Hit])(searchPlanned(_, k, fq, null))
+    searchMany(Seq(query), k, fields, fq.toSeq).head
 
-  private def searchPlanned(p: Plan, k: Int, fq: Option[String],
-                            sharedDec: IndexedSeq[DecodeCache]): Array[Hit] = {
-    val top = new TopK(k)
-    eachSegment(seg => searchSegment(seg, p, k, fq,
-      if (sharedDec == null) null else sharedDec(seg.idx)))
-      .foreach(_.foreach(top.offer))
-    top.sortedHits
-  }
-
-  /** One segment's hits (global docIds) through the three-way router. A
-    * segment with no matching postings returns before fq resolution, so it
-    * never pays a filter job for a cache entry this query cannot read.
+  /** [[search]] under repeated filter queries, which INTERSECT (Solr's
+    * repeated `fq` params — Blacklight sends visibility AND type filters
+    * together, solrconfig.xml:79-143 consumers).
     */
-  private def searchSegment(seg: Segment, p: Plan, k: Int, fq: Option[String],
-                            sharedDec: DecodeCache): Array[Hit] = {
-    val postings = p.segPostings(seg.idx)
-    if (postings == 0) return Array.empty
-    val fqSet = fq.map(resolveFq(seg, _))
-    if (fqSet.exists(_.count == 0)) return Array.empty
-    // locals only from here on: executor closures must not capture `this`
-    val fqBc = fqSet.flatMap(_.sorted)
-    val (cls, idfMap, minMatch) = (p.clauses, p.idfMap, p.minMatch)
-    val fieldArr = DefaultFields.toArray
-    val avgLen = globalAvgLen
-    val hits: Array[Hit] =
-      if ((fq.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
-        // a big fq semi-joins docstats from its PERSISTED resolution; a
-        // broadcastable one rides the kernel predicate
-        shuffleScore(querySession, seg.dir, seg.filteredRuns(idfMap.keySet),
-          fqSet.flatMap(_.docs), fqBc,
-          (rs, ql, excl) => Kernel.scoreSalt(rs, ql, cls, fieldArr, idfMap,
-            avgLen, minMatch, k, excl))
-      else if (postings > config.driverKernelMaxPostings) {
-        val bc = seg.normsBc
-        val tsBc = seg.tombstonesBc
-        gatedJob {
-          seg.filteredRuns(idfMap.keySet)
-            .groupByKey(_.salt)
-            .flatMapGroups { (_, it) =>
-              val nt = bc.value
-              Kernel.scoreSalt(it.toArray, (fi, d) => nt.quantLen(fi, d),
-                cls, fieldArr, idfMap, avgLen, minMatch, k,
-                excludedFn(tsBc.value, fqBc.map(_.value).orNull))
-            }
-            .collect()
-        }
-      } else {
-        val nt = seg.normsBc.value // local value; no broadcast needed on driver
-        val excl = excludedFn(seg.tombstonesBc.value, fqBc.map(_.value).orNull)
-        seg.fetchRuns(idfMap.keySet).groupBy(_.salt).iterator.flatMap { case (salt, rs) =>
-          // batch calls (searchMany) pass a per-call shared decode cache:
-          // the batch's queries share head terms, so each (salt, field,
-          // term)'s blocks decode once for the whole batch instead of
-          // once per query (the distributed path's scoreBatch analog)
-          val dec =
-            if (sharedDec == null) null
-            else rs.groupBy(r => (r.field, r.term)).map { case (k2, arr) =>
-              k2 -> sharedDec.computeIfAbsent((salt, k2._1, k2._2),
-                _ => new DecodedBlocks(arr.sortBy(_.salt).flatMap(_.blocks)))
-            }
-          Kernel.scoreSalt(rs, (fi, d) => nt.quantLen(fi, d),
-            cls, fieldArr, idfMap, avgLen, minMatch, k, excl, dec)
-        }.toArray
-      }
-    if (seg.offset == 0) hits else hits.map(h => Hit(seg.offset + h.docId, h.score))
-  }
+  def search(query: String, k: Int, fields: Seq[String], fqs: Seq[String]): Array[Hit] =
+    searchMany(Seq(query), k, fields, fqs).head
 
-  /** Batched retrieval — the amortized-throughput shape for batch workloads:
-    * per segment, ONE Spark job fetches every cache-missing term of the
-    * batch's driver-kernel queries, then each query runs the standard
-    * router (driver-kernel queries become pure cache hits, so per-query
-    * marginal cost is just the kernel), fanned out over
-    * [[Searcher.kernelPool]] — the kernels are independent CPU-bound
-    * scorers, so batch throughput scales with driver cores (every shared
-    * structure is concurrent: run caches, LRU dict caches, counters). Each
-    * query's segments fan out on the separate segment pool, so the nested
-    * blocking is acyclic. Results are identical to calling [[search]] per
-    * query, in order.
-    */
   def searchMany(queries: Seq[String], k: Int,
                  fields: Seq[String] = DefaultFields,
-                 fq: Option[String] = None): Seq[Array[Hit]] = {
-    val plans = queries.map(plan(_, fields))
-    val planned = plans.flatten
-    // ONE decode cache per segment for the whole batch (thread-safe):
-    // queries sharing terms share the block decode. Decoded arrays are ~6×
-    // the packed bytes and live for the whole call, so the caches are only
-    // used while the batch's SUMMED planned postings (an overcount — shared
-    // terms count once per query) stay under a driver-safe cap.
-    val sharedDec =
-      if (planned.iterator.map(_.segPostings.sum).sum <= SharedDecodeMaxPostings)
-        segments.map(_ => new DecodeCache())
-      else null
-    // SAME router as [[search]]: only broadcast-regime segments run the
-    // driver kernel, so only they prefetch
-    eachSegment { seg =>
-      if (seg.broadcastRegime) {
-        val keys = planned.iterator.filter { p =>
-          val n = p.segPostings(seg.idx)
-          n > 0 && n <= config.driverKernelMaxPostings
-        }.flatMap(_.idfMap.keySet).toSet
-        if (keys.nonEmpty) seg.fetchRuns(keys)
-      }
+                 fq: Option[String] = None): Seq[Array[Hit]] =
+    searchMany(queries, k, fields, fq.toSeq)
+
+  /** Batched retrieval, the one search path: every query's dfs resolve in
+    * ONE lookup per segment, then each segment scores the whole batch
+    * through one router ([[Searcher]]): the driver kernel over the union of
+    * the batch's terms, fetched once, or ONE `scoreBatch` job. Repeated
+    * `fqs` INTERSECT; they canonicalize to one key (trimmed, deduped,
+    * sorted, so `Seq(a, b)` and `Seq(b, a)` share one cache entry) that
+    * resolves as one conjunction. Results are identical to calling
+    * [[search]] per query, in order (BatchSearchSpec gates every route bit
+    * for bit).
+    */
+  def searchMany(queries: Seq[String], k: Int, fields: Seq[String],
+                 fqs: Seq[String]): Seq[Array[Hit]] = {
+    val fq = fqs.map(_.trim).filter(_.nonEmpty).distinct.sorted
+    val parsed = queries.map(QueryPlan.clauses(_, fields))
+    val needed = parsed.iterator.flatMap(_.iterator.flatMap(_.perField)).toSet
+    val tops = Array.fill(queries.length)(new TopK(k))
+    if (needed.nonEmpty) {
+      val segDfs = eachSegment(_.dict.dfOf(needed))
+      val dfs = sumDfs(needed, segDfs)
+      val plans = parsed.zipWithIndex.flatMap { case (cls, qi) =>
+        val idf = cls.iterator.flatMap(_.perField)
+          .flatMap(key => dfs.get(key).map(df => key -> BM25.idf(totalDocs, df))).toMap
+        if (idf.isEmpty) None else Some(BatchPlan(qi, cls, idf, BM25.minShouldMatch(cls.length)))
+      }.toArray
+      if (plans.nonEmpty)
+        eachSegment(seg => scoreSegment(seg, plans, segDfs(seg.idx), k, fq))
+          .foreach(_.foreach { case (qi, h) => tops(qi).offer(h) })
     }
-    inParallel(spark, plans, kernelPool)(p =>
-      p.fold(Array.empty[Hit])(searchPlanned(_, k, fq, sharedDec)))
+    tops.map(_.sortedHits).toSeq
   }
 
-  /** Bulk retrieval for the SCALE regime — ONE Spark job per segment scores
-    * the whole batch. [[searchMany]] amortizes well while the driver kernel
-    * exists, but at the 10^12-doc target every query is distributed and the
-    * per-query path pays the Spark job floor (~0.2-0.3 s) batch-size times.
-    * Here all queries' terms ride one term-filtered scan per segment: runs
-    * group by salt as usual, and inside each salt group the kernel runs once
-    * PER QUERY over that query's terms' runs ([[Searcher.scoreBatch]]),
-    * emitting (queryIdx, Hit); the driver merges per-query top-k. Each
-    * segment follows [[search]]'s router minus the driver kernel: broadcast
-    * norms while they fit, else the docstats cogroup (norms never
-    * materialize, tombstones excluded by the distributed anti-join).
-    *
-    * Results are identical to calling [[search]] per query, in order
-    * (BatchSearchSpec gates every route bit-for-bit). Cost model: the job
-    * reads the union of the batch's posting runs once — queries sharing
-    * head terms share the scan — so batch latency tracks total distinct
-    * posting volume plus ONE job floor per segment, not batch size.
+  /** [[searchMany]] under its old name, kept only for the perfbench
+    * harness, which calls it by name. It does NOT choose a route: the
+    * segments route exactly as for [[searchMany]] (force the distributed
+    * kernel with `SearchConfig(driverKernelMaxPostings = 0)`).
     */
   def searchManyDistributed(queries: Seq[String], k: Int,
                             fields: Seq[String] = DefaultFields,
-                            fq: Option[String] = None): Seq[Array[Hit]] = {
-    val parsed = queries.map(QueryPlan.clauses(_, fields))
-    val needed = parsed.iterator.flatMap(_.iterator.flatMap(_.perField)).toSet
-    if (needed.isEmpty) return queries.map(_ => Array.empty[Hit])
-    // ONE df resolution per segment for the whole batch
-    val segDfs = eachSegment(_.dict.dfOf(needed))
-    val dfs = sumDfs(needed, segDfs)
-    val plans = parsed.zipWithIndex.flatMap { case (cls, qi) =>
-      val idf = cls.iterator.flatMap(_.perField)
-        .flatMap(key => dfs.get(key).map(df => key -> BM25.idf(totalDocs, df))).toMap
-      if (idf.isEmpty) None else Some(BatchPlan(qi, cls, idf, BM25.minShouldMatch(cls.length)))
-    }.toArray
-    if (plans.isEmpty) return queries.map(_ => Array.empty[Hit])
-    val allKeys = plans.iterator.flatMap(_.idfMap.keySet).toSet
+                            fq: Option[String] = None): Seq[Array[Hit]] =
+    searchMany(queries, k, fields, fq)
+
+  /** One segment's hits for a batch, tagged with their plan's query index
+    * (global docIds): the per-segment router. A segment with none of the
+    * batch's terms returns before fq resolution, so it never pays a filter
+    * job for a cache entry this batch cannot read.
+    */
+  private def scoreSegment(seg: Segment, plans: Array[BatchPlan],
+                           segDfs: Map[(String, String), Long], k: Int,
+                           fq: Seq[String]): Array[(Int, Hit)] = {
+    val keys = plans.iterator.flatMap(_.idfMap.keysIterator)
+      .filter(segDfs.getOrElse(_, 0L) > 0).toSet
+    if (keys.isEmpty) return Array.empty
+    val fqSet = if (fq.isEmpty) None else Some(resolveFq(seg, fq))
+    if (fqSet.exists(_.count == 0)) return Array.empty
+    // locals only from here on: executor closures must not capture `this`
+    val fqBc = fqSet.flatMap(_.sorted)
     val fieldArr = DefaultFields.toArray
     val avgLen = globalAvgLen
-    val plansBc = spark.sparkContext.broadcast(plans)
-    val tagged: Seq[Array[(Int, Hit)]] =
-      try eachSegment { seg =>
-        val segKeys = allKeys.filter(key => segDfs(seg.idx).getOrElse(key, 0L) > 0)
-        // same zero-match short-circuit before fq resolution as [[search]]
-        val fqSet = if (segKeys.isEmpty) None else fq.map(resolveFq(seg, _))
-        if (segKeys.isEmpty || fqSet.exists(_.count == 0)) Array.empty[(Int, Hit)]
-        else {
-          val fqBc = fqSet.flatMap(_.sorted)
-          val runs = seg.filteredRuns(segKeys, batch = true)
-          val local: Array[(Int, Hit)] =
-            if ((fq.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
-              shuffleScore(batchQuerySession, seg.dir, runs, fqSet.flatMap(_.docs), fqBc,
-                (rs, ql, excl) => scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, k, excl))
-            else {
-              val bc = seg.normsBc
-              val tsBc = seg.tombstonesBc
-              // r7 note: a plan-chunked variant (split the batch's plans
-              // across (chunk, salt) tasks to smooth the 2.8× max/median
-              // salt-collision tail, guide §2.6) was built and MEASURED
-              // WORSE here — 245.8 → 238.0 q/s at 32 cores: duplicating the
-              // run stream per chunk forfeits the per-task shared-decode
-              // cache (task CPU 80 → 86 s) and the packing gain never
-              // covered it. The one-task-per-salt-hash shape stands.
-              gatedJob {
-                runs.groupByKey(_.salt)
-                  .flatMapGroups { (_, it) =>
-                    val nt = bc.value
-                    scoreBatch(it.toArray, plansBc.value,
-                      (fi, d) => nt.quantLen(fi, d), fieldArr, avgLen, k,
-                      excludedFn(tsBc.value, fqBc.map(_.value).orNull))
-                  }
-                  .collect()
-              }
-            }
-          if (seg.offset == 0) local
-          else local.map { case (qi, h) => (qi, Hit(seg.offset + h.docId, h.score)) }
+    val batch = plans.length > 1
+    val hits: Array[(Int, Hit)] =
+      if ((fqSet.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
+        // a big fq semi-joins docstats from its PERSISTED resolution; a
+        // broadcastable one rides the kernel predicate
+        withBroadcast(spark, plans) { plansBc =>
+          shuffleScore(if (batch) batchQuerySession else querySession, seg.dir,
+            seg.filteredRuns(keys, batch), fqSet.flatMap(_.docs), fqBc,
+            (rs, ql, excl) => scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, k, excl))
         }
-      } finally destroyQuietly(plansBc)
-    val tops = Array.fill(queries.length)(new TopK(k))
-    tagged.foreach(_.foreach { case (qi, h) => tops(qi).offer(h) })
-    tops.map(_.sortedHits).toSeq
+      // the segment's postings of the batch's distinct terms; a resident
+      // segment always fits, its postings bound being within its share
+      else if (keys.iterator.map(segDfs).sum <= config.driverKernelMaxPostings) {
+        val nt = seg.normsBc.value // local value; no broadcast needed on driver
+        val quantLen = (fi: Int, d: Long) => nt.quantLen(fi, d)
+        val excl = excludedFn(seg.tombstonesBc.value, fqBc.map(_.value).orNull)
+        // a batch of one decodes into its iterators' reused buffers
+        val groups = seg.fetchRuns(keys).groupBy(_.salt).valuesIterator
+          .map(new SaltGroup(_, if (batch) Some(SharedDecodeMaxPostings) else None)).toArray
+        inParallel(spark, plans.toSeq, kernelPool) { p =>
+          groups.flatMap(g => g.score(p, quantLen, fieldArr, avgLen, k, excl).map(h => (p.qi, h)))
+        }.flatten.toArray
+      } else {
+        val bc = seg.normsBc
+        val tsBc = seg.tombstonesBc
+        // r7 note: a plan-chunked variant (split the batch's plans across
+        // (chunk, salt) tasks to smooth the 2.8× max/median salt-collision
+        // tail, guide §2.6) was built and MEASURED WORSE here — 245.8 →
+        // 238.0 q/s at 32 cores: duplicating the run stream per chunk
+        // forfeits the per-task shared-decode cache (task CPU 80 → 86 s)
+        // and the packing gain never covered it. The one-task-per-salt-hash
+        // shape stands.
+        withBroadcast(spark, plans) { plansBc =>
+          gatedJob {
+            seg.filteredRuns(keys, batch)
+              .groupByKey(_.salt)
+              .flatMapGroups { (_, it) =>
+                val nt = bc.value
+                scoreBatch(it.toArray, plansBc.value,
+                  (fi, d) => nt.quantLen(fi, d), fieldArr, avgLen, k,
+                  excludedFn(tsBc.value, fqBc.map(_.value).orNull))
+              }
+              .collect()
+          }
+        }
+      }
+    if (seg.offset == 0) hits
+    else hits.map { case (qi, h) => (qi, Hit(seg.offset + h.docId, h.score)) }
   }
 
   private def segmentOf(globalId: Long): Segment =
@@ -831,8 +770,12 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     * segment holding hits, global docIds and rank order preserved.
     */
   def searchDF(query: String, k: Int, fields: Seq[String] = DefaultFields,
-               fq: Option[String] = None): DataFrame = {
-    val bySeg = search(query, k, fields, fq).zipWithIndex
+               fq: Option[String] = None): DataFrame =
+    searchDF(query, k, fields, fq.toSeq)
+
+  /** [[searchDF]] under repeated filter queries, which intersect. */
+  def searchDF(query: String, k: Int, fields: Seq[String], fqs: Seq[String]): DataFrame = {
+    val bySeg = search(query, k, fields, fqs).zipWithIndex
       .groupBy { case (h, _) => segmentOf(h.docId).idx }
     // no hits: the first segment's empty join still carries the schema
     val used = segments.filter(s => bySeg.contains(s.idx))
@@ -852,15 +795,16 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
   // query shape: every catalog search carries visibility/type filters),
   // resolved per segment ----
 
-  /** Solr-filterCache analog: resolved (segment, fq) -> match set, bounded
+  /** Solr-filterCache analog: resolved (segment, fq conjunction) -> match
+    * set, keyed by the canonical component list, bounded
     * LRU. Eviction releases a big-fq entry's PERSISTED match set
     * (unpersist is in-flight-safe), so the bound really bounds storage;
     * evicted BROADCASTS stay in the [[close]] inventory (destroy under an
     * in-flight query is not safe).
     */
   private val fqCache =
-    new java.util.LinkedHashMap[(Int, String), FqSet](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Int, String), FqSet]): Boolean = {
+    new java.util.LinkedHashMap[(Int, Seq[String]), FqSet](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Int, Seq[String]), FqSet]): Boolean = {
         val evict = size() > FqCacheMaxEntries
         if (evict) e.getValue.docs.foreach { df =>
           try df.unpersist() catch { case scala.util.control.NonFatal(_) => }
@@ -870,13 +814,14 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       }
     }
   private val fqInFlight =
-    new ConcurrentHashMap[(Int, String), java.util.concurrent.CompletableFuture[FqSet]]()
+    new ConcurrentHashMap[(Int, Seq[String]), java.util.concurrent.CompletableFuture[FqSet]]()
 
-  /** Resolve an fq once per (segment, searcher); concurrent misses on the
-    * same key share one resolution (same in-flight pattern as [[DictProbe]]).
+  /** Resolve an fq conjunction once per (segment, searcher); concurrent
+    * misses on the same key share one resolution (same in-flight pattern as
+    * [[DictProbe]]).
     */
-  private def resolveFq(seg: Segment, fqs: String): FqSet = {
-    val key = (seg.idx, fqs)
+  private def resolveFq(seg: Segment, fq: Seq[String]): FqSet = {
+    val key = (seg.idx, fq)
     val hit = fqCache.synchronized(fqCache.get(key))
     if (hit != null) return hit
     val fut = new java.util.concurrent.CompletableFuture[FqSet]()
@@ -894,15 +839,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         return raced
       }
       try {
-        // composite key (multi-fq conjunction): resolve each component
-        // through this same entry — each caches individually, Solr
-        // filterCache-style — then intersect; the combined set caches
-        // under the canonical composite key like any other fq
-        val set =
-          if (fqs.contains(FqAndSep))
-            combineFq(fqs.split(java.util.regex.Pattern.quote(FqAndSep))
-              .toSeq.map(resolveFq(seg, _)))
-          else resolveSingleFq(seg, fqs)
+        val set = resolveConjunction(seg, fq)
         fqCache.synchronized(fqCache.put(key, set))
         fut.complete(set)
         set
@@ -944,80 +881,24 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     }
   }
 
-  /** One fq's match set on a segment: [[graft.index.QueryFilter.filter]]
-    * over the segment's own docstats ([[Segment.fqTable]]: driver-local on a
-    * resident segment, so a keyword, exists or `*:*` fq runs no job) and
+  /** An fq conjunction's match set on a segment: ONE predicate,
+    * [[graft.index.QueryFilter.filter]] folded over the components (each
+    * returns its input's columns, so the next filters its rows), over the
+    * segment's own docstats ([[Segment.fqTable]]: driver-local on a resident
+    * segment, so keyword, exists or `*:*` components run no job) and
     * postings DataFrames. Tombstoned docs stay in the set; every scoring
     * route excludes them already.
     */
-  private def resolveSingleFq(seg: Segment, fqs: String): FqSet = {
+  private def resolveConjunction(seg: Segment, fq: Seq[String]): FqSet = {
     fqResolves.incrementAndGet()
     persistedOrBroadcast(
-      QueryFilter.filter(seg.fqTable(fqs), seg.postingsDF, seg.meta.buckets, fqs)
+      fq.foldLeft(seg.fqTable(fq))(QueryFilter.filter(_, seg.postingsDF, seg.meta.buckets, _))
         .select($"docId"),
       seg.meta.nDocs)
   }
-
-  /** Intersect component resolutions (multi-fq conjunction, Solr docset ∩
-    * docset). The result is broadcastable whenever ANY component is
-    * (|∩| <= the smallest component <= fqMaxBroadcast), so the mixed
-    * small+big case always lands in the sorted-array regime; the all-big
-    * case chains docId semi-joins — nothing driver-materialized — and
-    * routes by the combined count exactly like a single big fq.
-    */
-  private def combineFq(sets: Seq[FqSet]): FqSet = {
-    if (sets.exists(_.count == 0))
-      return FqSet(0,
-        Some(track(spark.sparkContext.broadcast(Array.emptyLongArray))), None)
-    val smalls = sets.flatMap(_.sorted).map(_.value)
-    val bigs = sets.flatMap(_.docs)
-    if (bigs.isEmpty) {
-      val arr = smalls.reduce(intersectSorted)
-      FqSet(arr.length, Some(track(spark.sparkContext.broadcast(arr))), None)
-    } else if (smalls.nonEmpty) {
-      val seed = smalls.reduce(intersectSorted)
-      var df = spark.createDataset(seed.toSeq).toDF("docId")
-      bigs.foreach(b => df = df.join(b, Seq("docId"), "left_semi"))
-      val out = df.as[Long].collect()
-      java.util.Arrays.sort(out)
-      FqSet(out.length, Some(track(spark.sparkContext.broadcast(out))), None)
-    } else persistedOrBroadcast(bigs.tail.foldLeft(bigs.head)(_.join(_, Seq("docId"), "left_semi")),
-      sets.iterator.map(_.count).min)
-  }
-
-  // ---- multi-fq overloads: repeated filter queries INTERSECT (Solr's
-  // repeated `fq` params — Blacklight sends visibility AND type filters
-  // together, solrconfig.xml:79-143 consumers). Components resolve and
-  // cache individually (filterCache semantics); the intersection caches
-  // under a canonical composite key (trimmed/deduped/sorted), so
-  // Seq(a, b) and Seq(b, a) share one entry. ----
-
-  def search(query: String, k: Int, fields: Seq[String],
-             fqs: Seq[String]): Array[Hit] =
-    search(query, k, fields, combineFqParams(fqs))
-
-  def searchMany(queries: Seq[String], k: Int, fields: Seq[String],
-                 fqs: Seq[String]): Seq[Array[Hit]] =
-    searchMany(queries, k, fields, combineFqParams(fqs))
-
-  def searchManyDistributed(queries: Seq[String], k: Int, fields: Seq[String],
-                            fqs: Seq[String]): Seq[Array[Hit]] =
-    searchManyDistributed(queries, k, fields, combineFqParams(fqs))
-
-  def searchDF(query: String, k: Int, fields: Seq[String],
-               fqs: Seq[String]): DataFrame =
-    searchDF(query, k, fields, combineFqParams(fqs))
 }
 
 object Searcher {
-  /** Separator of the canonical multi-fq composite key (Solr semantics:
-    * repeated `fq` params INTERSECT — Blacklight sends visibility AND type
-    * filters together). NUL-framed so no Q1-grammar filter string can
-    * contain it; components are trimmed/deduped/sorted first so
-    * `Seq(a, b)` and `Seq(b, a)` share one cache entry.
-    */
-  private[query] val FqAndSep = "\u0000&&\u0000"
-
   /** Driver run-cache bound in (field, term) entries per searcher, split
     * evenly across its segments.
     */
@@ -1028,11 +909,10 @@ object Searcher {
     */
   private val FqCacheMaxEntries = 64
 
-  /** Cap on summed postings below which a batch shares one decoded-block
-    * cache: [[Searcher.searchMany]]'s planned postings on the driver,
-    * [[scoreBatch]]'s salt-group block postings on an executor. Decoded
-    * arrays are ~6× the packed bytes and live for the call or task; ~64M
-    * postings ≈ 1 GB decoded worst case.
+  /** Cap on a salt group's block postings below which a batch's plans
+    * share one decoded-block cache ([[SaltGroup]], on the driver or an
+    * executor). Decoded arrays are ~6× the packed bytes and live for the
+    * call or task; ~64M postings ≈ 1 GB decoded worst case.
     */
   private val SharedDecodeMaxPostings: Long = 64L << 20
 
@@ -1067,14 +947,6 @@ object Searcher {
     s
   }
 
-  /** One query's plan: parsed clauses, idf per (field, term) from the
-    * global dfs, the mm gate, and each segment's matched posting volume
-    * (the router's driver-vs-distributed selector).
-    */
-  private final case class Plan(clauses: Array[Clause],
-                                idfMap: Map[(String, String), Double],
-                                minMatch: Int, segPostings: IndexedSeq[Long])
-
   /** A resolved filter query on one segment — the filterCache entry. `count`
     * is the match-set size; exactly one form of the set is held: `sorted`,
     * the docIds as a sorted-array broadcast that the kernels binary-search
@@ -1084,11 +956,6 @@ object Searcher {
     */
   private final case class FqSet(count: Long, sorted: Option[Broadcast[Array[Long]]],
                                  docs: Option[DataFrame])
-
-  /** [[Searcher.searchMany]]'s per-segment shared decode cache, keyed by
-    * (salt, field, term).
-    */
-  private type DecodeCache = ConcurrentHashMap[(Int, String, String), DecodedBlocks]
 
   /** Global df per key from per-segment dfs (absent keys omitted); the
     * identity for one segment.
@@ -1129,28 +996,6 @@ object Searcher {
     }.toMap
   }
 
-  /** Canonicalize repeated fq params into the composite form the
-    * resolve/cache layer understands (None when no non-empty filter).
-    */
-  def combineFqParams(fqs: Seq[String]): Option[String] = {
-    val norm = fqs.map(_.trim).filter(_.nonEmpty).distinct.sorted
-    if (norm.isEmpty) None else Some(norm.mkString(FqAndSep))
-  }
-
-  /** Two-pointer intersection of sorted docId arrays (the small-regime
-    * multi-fq combine — Solr's docset ∩ docset).
-    */
-  private[query] def intersectSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = new Array[Long](math.min(a.length, b.length))
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) < b(j)) i += 1
-      else if (a(i) > b(j)) j += 1
-      else { out(n) = a(i); n += 1; i += 1; j += 1 }
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
-
   /** Kernel exclusion predicate: tombstoned (sorted-array membership) OR,
     * when an fq rides along, outside the filter's sorted docId set. STATIC
     * so executor closures capture two small arrays, never a Searcher.
@@ -1163,6 +1008,13 @@ object Searcher {
     else d => del(d) || java.util.Arrays.binarySearch(fqSorted, d) < 0
   }
 
+  /** `f` over a broadcast of `value`, destroyed when `f` returns. */
+  private def withBroadcast[A: scala.reflect.ClassTag, T](spark: SparkSession, value: A)(
+      f: Broadcast[A] => T): T = {
+    val bc = spark.sparkContext.broadcast(value)
+    try f(bc) finally destroyQuietly(bc)
+  }
+
   /** Destroy a broadcast, swallowing only NON-fatal failures (a broadcast
     * already destroyed elsewhere, a stopped context); InterruptedException
     * re-flags the thread so callers see the interrupt.
@@ -1173,14 +1025,12 @@ object Searcher {
       case scala.util.control.NonFatal(_) =>
     }
 
-  /** Cap on CONCURRENT Spark-job-launching queries across all searchers in
-    * this JVM. [[Searcher.searchMany]] fans queries across [[kernelPool]]
-    * (driver cores) — right for the CPU-bound driver kernels, but a batch
-    * whose queries fall through to a distributed strategy would otherwise
-    * launch up to ncores concurrent Spark ACTIONS, a thundering herd on the
-    * scheduler (head-term jobs serialize on executor slots anyway, so
-    * concurrency past a few buys nothing and inflates every job's wall
-    * time). Driver-kernel queries never touch this gate.
+  /** Cap on CONCURRENT Spark-job-launching searches across all searchers
+    * in this JVM. Concurrent callers whose segments route to an executor
+    * strategy would otherwise launch as many concurrent Spark ACTIONS, a
+    * thundering herd on the scheduler (head-term jobs serialize on executor
+    * slots anyway, so concurrency past a few buys nothing and inflates
+    * every job's wall time). The driver kernel never touches this gate.
     */
   val MaxConcurrentDistributedQueries: Int =
     math.min(4, math.max(2, Runtime.getRuntime.availableProcessors() / 8))
@@ -1257,17 +1107,40 @@ object Searcher {
     }
   }
 
+  /** One salt group's runs, grouped by (field, term) once, for scoring a
+    * batch's plans: each plan scores only its own terms' runs, and plans
+    * sharing a term share ONE decoded-block cache per (field, term) (lazily,
+    * block-at-a-time — blocks every plan skips never decode). Without it,
+    * each plan re-decoded the shared head terms' blocks from scratch
+    * (measured ~80× redundant decode per salt task at batch 1024 over the
+    * bench vocabulary). The cache is thread-safe, so the driver kernel fans
+    * plans over [[kernelPool]]. With no `sharedDecodeMaxPostings` (a batch
+    * of one), or when the group's summed block postings exceed it, each
+    * plan's iterators decode into their own reused buffers instead (same
+    * decode calls, bit-identical hits).
+    */
+  private[graft] final class SaltGroup(runs: Array[PostingRun],
+                                       sharedDecodeMaxPostings: Option[Long]) {
+    private val byKey = runs.groupBy(r => (r.field, r.term))
+    private val decCache: Map[(String, String), DecodedBlocks] = sharedDecodeMaxPostings match {
+      case Some(max) if runs.iterator.flatMap(_.blocks).map(_.n.toLong).sum <= max =>
+        byKey.map { case (key, rs) =>
+          key -> new DecodedBlocks(rs.sortBy(_.salt).flatMap(_.blocks))
+        }
+      case _ => Map.empty
+    }
+
+    def score(p: BatchPlan, quantLenOf: (Int, Long) => Int, fields: Array[String],
+              avgLen: Map[String, Double], k: Int, deleted: Long => Boolean): Iterator[Hit] =
+      if (!p.idfMap.keysIterator.exists(byKey.contains)) Iterator.empty
+      else Kernel.scoreGrouped(byKey, quantLenOf, p.clauses, fields, p.idfMap,
+        avgLen, p.minMatch, k, deleted, decCache)
+  }
+
   /** Score every plan of a batch against ONE salt group's runs — the
-    * executor-side kernel of [[Searcher.searchManyDistributed]]. Runs are
-    * grouped by (field, term) once; each plan scores only its own terms'
-    * runs (plans sharing a term share the decoded group). STATIC: the
-    * flatMapGroups closure must capture plans/norm/tombstone broadcasts
-    * only, never a Searcher.
-    *
-    * The shared decode cache is bounded like the driver batch path's: when
-    * the salt group's summed block postings exceed `maxDecodePostings`, each
-    * plan's iterators decode into their own buffers instead (same decode
-    * calls, bit-identical hits).
+    * executor-side kernel of [[Searcher.searchMany]]'s distributed routes,
+    * emitting (queryIdx, Hit). STATIC: the task closure must capture
+    * plans/norm/tombstone broadcasts only, never a Searcher.
     */
   private[graft] def scoreBatch(
       runs: Array[PostingRun],
@@ -1277,32 +1150,13 @@ object Searcher {
       avgLen: Map[String, Double],
       k: Int,
       deleted: Long => Boolean,
-      maxDecodePostings: Long = SharedDecodeMaxPostings): Iterator[(Int, Hit)] = {
+      maxDecodePostings: Long = SharedDecodeMaxPostings): Iterator[(Int, Hit)] =
     if (runs.isEmpty) Iterator.empty
     else {
-      val byKey = runs.groupBy(r => (r.field, r.term))
-      // ONE decoded-block cache per (field, term) for the WHOLE batch:
-      // queries sharing a term share the decode (lazily, block-at-a-time —
-      // blocks every query skips never decode). Without this, each of the
-      // batch's plans re-decoded the shared head terms' blocks from
-      // scratch (measured ~80× redundant decode per salt task at batch
-      // 1024 over the bench vocabulary).
-      var blockPostings = 0L
-      runs.foreach(r => r.blocks.foreach(b => blockPostings += b.n))
-      val decCache: Map[(String, String), DecodedBlocks] =
-        if (blockPostings > maxDecodePostings) null
-        else byKey.map { case (key, rs) =>
-          key -> new DecodedBlocks(rs.sortBy(_.salt).flatMap(_.blocks))
-        }
-      plans.iterator.flatMap { p =>
-        if (!p.idfMap.keysIterator.exists(byKey.contains)) Iterator.empty
-        else Kernel.scoreSalt(EmptyRuns, quantLenOf, p.clauses, fields, p.idfMap,
-          avgLen, p.minMatch, k, deleted, decCache, byKey).map(h => (p.qi, h))
-      }
+      val group = new SaltGroup(runs, Some(maxDecodePostings))
+      plans.iterator.flatMap(p =>
+        group.score(p, quantLenOf, fields, avgLen, k, deleted).map(h => (p.qi, h)))
     }
-  }
-
-  private val EmptyRuns: Array[PostingRun] = Array.empty
 
   /** `f` over `xs` in parallel on `pool`, order-preserving; zero or one
     * element runs inline (no pool hop). Failures propagate.
@@ -1332,18 +1186,18 @@ object Searcher {
       t
     })
 
-  /** Shared bounded pool for [[Searcher.searchMany]]'s per-query kernel
-    * fan-out, sized to the driver's cores (the kernels are CPU-bound).
-    * Daemon threads — never blocks JVM exit.
+  /** Shared bounded pool for the driver kernel's per-plan fan-out, sized
+    * to the driver's cores (the kernels are CPU-bound; its tasks never wait
+    * on a pool). Daemon threads — never blocks JVM exit.
     */
   private lazy val kernelPool: ExecutorService =
     daemonPool(math.max(2, Runtime.getRuntime.availableProcessors()), "graft-searchmany")
 
   /** Shared bounded pool for the per-segment fan-out: Spark jobs submitted
     * from separate threads overlap in the scheduler, while the bound keeps
-    * a very wide segment list from flooding it. Distinct from [[kernelPool]]
-    * and segment tasks never wait on it, so a query blocking on its
-    * segments cannot deadlock.
+    * a very wide segment list from flooding it. Distinct from
+    * [[kernelPool]], which segment tasks wait on and whose tasks wait on
+    * nothing, so a search blocking on its segments cannot deadlock.
     */
   private lazy val segmentPool: ExecutorService =
     daemonPool(8, "graft-multisearch")
@@ -1401,15 +1255,27 @@ object Kernel extends Serializable {
       avgLen: Map[String, Double],
       minMatch: Int,
       k: Int,
-      deleted: Long => Boolean = _ => false,
-      decCache: Map[(String, String), DecodedBlocks] = null,
-      byKeyPre: Map[(String, String), Array[PostingRun]] = null): Iterator[Hit] = {
+      deleted: Long => Boolean = _ => false): Iterator[Hit] =
+    scoreGrouped(runs.groupBy(r => (r.field, r.term)), quantLenOf, clauses, fields,
+      idfMap, avgLen, minMatch, k, deleted, Map.empty)
 
-    // byKeyPre: the batch kernel passes ONE prebuilt (field, term) lookup
-    // for the whole salt group instead of re-grouping per plan (the groupBy
-    // allocated tuples + maps batch × saltGroups times per job)
-    val byKey =
-      if (byKeyPre != null) byKeyPre else runs.groupBy(r => (r.field, r.term))
+  /** [[scoreSalt]] over runs already grouped by (field, term): the batch
+    * kernel builds that lookup ONCE per salt group instead of per plan (the
+    * groupBy allocated tuples + maps batch × saltGroups times per job).
+    * `decCache` holds the group's shared decoded blocks per (field, term);
+    * a term without an entry decodes into its iterator's reused buffers.
+    */
+  private[graft] def scoreGrouped(
+      byKey: Map[(String, String), Array[PostingRun]],
+      quantLenOf: (Int, Long) => Int,
+      clauses: Array[Clause],
+      fields: Array[String],
+      idfMap: Map[(String, String), Double],
+      avgLen: Map[String, Double],
+      minMatch: Int,
+      k: Int,
+      deleted: Long => Boolean,
+      decCache: Map[(String, String), DecodedBlocks]): Iterator[Hit] = {
     if (byKey.isEmpty) return Iterator.empty
     val fieldIdx: Map[String, Int] = fields.zipWithIndex.toMap
     val avgArr: Array[Double] = fields.map(avgLen)
@@ -1425,7 +1291,7 @@ object Kernel extends Serializable {
             val maxTf = rs.map(_.maxTf).max
             val minQL = rs.flatMap(_.blocks).map(_.minQuantLen).min
             val ub = BM25.maxTermScore(idf, maxTf, minQL, avgLen(f))
-            val cached = if (decCache != null) decCache.getOrElse(key, null) else null
+            val cached = decCache.getOrElse(key, null)
             legs += new Leg(ci, fieldIdx(f), idf, new PostingIterator(rs, cached), ub)
           case _ =>
         }

@@ -34,7 +34,7 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(meta.avgLen.values.forall(_ == 0.0), s"$what: ${meta.avgLen}")
     val s = new Searcher(spark, dir)
     assert(s.search("buffer", 10).isEmpty, what)
-    assert(s.searchManyDistributed(Seq("buffer", "def class"), 10).forall(_.isEmpty), what)
+    assert(s.searchMany(Seq("buffer", "def class"), 10).forall(_.isEmpty), what)
     assert(s.searchDF("buffer", 10).count() == 0, what)
     s.close()
   }

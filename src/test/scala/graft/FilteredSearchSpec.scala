@@ -189,12 +189,15 @@ class FilteredSearchSpec extends AnyFunSuite {
     val f = Some("lang:scala OR lang:java")
     val perQuery = queries.map(q => s.search(q, 10, fq = f).toSeq)
     assert(s.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery, "searchMany")
-    assert(s.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == perQuery,
-      "searchManyDistributed")
+    // the broadcast-norm executor job, forced by the driver kernel's bound
+    val bcast = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
+    assert(bcast.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery,
+      "broadcast-norm job")
+    assert(bcast.driverRunFetches.get() == 0, "the forced batch collected runs to the driver")
     val dist = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    assert(dist.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == perQuery,
-      "searchManyDistributed cogroup")
-    s.close(); dist.close()
+    assert(dist.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery,
+      "docstats cogroup job")
+    s.close(); bcast.close(); dist.close()
   }
 
   test("multi-fq conjunction == literal double post-filtering on every regime") {
@@ -227,11 +230,15 @@ class FilteredSearchSpec extends AnyFunSuite {
       assert(allBig.search(q, 10, allBig.DefaultFields,
         Seq("repo:repo-0003", "NOT lang:md")).toSeq == expect, s"all-big q='$q'")
     }
-    // component cache reuse: both components were already resolved above,
-    // so a NEW composite costs zero additional QueryFilter resolutions
+    // a NEW composite is one resolution of one conjunction, and runs no
+    // Spark job on a resident segment
+    assert(s.residentSegments == Seq(0))
     val before = s.fqResolves.get()
-    s.search("buffer", 10, s.DefaultFields, Seq("lang:scala", "NOT lang:md"))
-    assert(s.fqResolves.get() == before, "composite must reuse cached components")
+    val jobs = SparkJobs.count(spark, "graft-fq-composite") {
+      s.search("buffer", 10, s.DefaultFields, Seq("lang:scala", "NOT lang:md"))
+    }
+    assert(s.fqResolves.get() == before + 1, "a composite is one resolution")
+    assert(jobs == 0, s"a new composite ran $jobs Spark jobs on a resident segment")
     // empty component empties the conjunction
     assert(s.search("buffer", 10, s.DefaultFields,
       Seq("lang:scala", "repo:no-such-repo")).isEmpty)
@@ -240,8 +247,10 @@ class FilteredSearchSpec extends AnyFunSuite {
     val perQ = queries.map(q => s.search(q, 10, s.DefaultFields, fseq).toSeq)
     assert(s.searchMany(queries, 10, s.DefaultFields, fseq).map(_.toSeq) == perQ,
       "searchMany multi-fq")
-    assert(s.searchManyDistributed(queries, 10, s.DefaultFields, fseq)
-      .map(_.toSeq) == perQ, "searchManyDistributed multi-fq")
+    val dist = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
+    assert(dist.searchMany(queries, 10, dist.DefaultFields, fseq)
+      .map(_.toSeq) == perQ, "distributed kernel multi-fq")
+    dist.close()
     // segment-list plumbing (single segment: global == local ids)
     val m = new Searcher(spark, Seq(tmp))
     assert(queries.take(2).map(q =>
@@ -274,7 +283,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(queries.map(q => m2.search(q, 10, fq = f).toSeq) == expect, "multi dist")
     val m3 = new Searcher(spark, Seq(segA, segB), SearchConfig(normsMaxDocs = 0))
     assert(queries.map(q => m3.search(q, 10, fq = f).toSeq) == expect, "multi shuffle")
-    assert(m.searchManyDistributed(queries, 10, fq = f).map(_.toSeq) == expect,
+    assert(m.searchMany(queries, 10, fq = f).map(_.toSeq) == expect,
       "multi batched")
     m.close(); m2.close(); m3.close()
   }

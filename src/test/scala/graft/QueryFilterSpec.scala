@@ -128,6 +128,42 @@ class QueryFilterSpec extends AnyFunSuite {
     }
   }
 
+  /** 20 random pairs of filters, the repeated-fq input. */
+  lazy val fqPairs: Seq[(String, String)] = {
+    val rng = new scala.util.Random(20241019L)
+    Seq.fill(20)((randomFq(rng), randomFq(rng)))
+  }
+
+  test("random fq pairs: the folded conjunction == brute-force intersection") {
+    import spark.implicits._
+    val (dir, _, dead) = fixture
+    val meta = IndexMeta.fromProps(new Snapshot(dir).readProps())
+    val stats = spark.read.schema(IndexBuilder.DocStatsSchema).parquet(s"$dir/docstats")
+    val postings = spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$dir/postings")
+    // the searcher resolves repeated fqs the same way, over driver-local
+    // rows when it is resident and over scans when it is not
+    val resident = new Searcher(spark, dir)
+    val scanned = new Searcher(spark, Seq(dir),
+      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(meta) - 1))
+    var nonEmpty = 0
+    for ((f1, f2) <- fqPairs) {
+      val expect = bruteForce(f1).intersect(bruteForce(f2))
+      val conj = Seq(f1, f2).foldLeft(stats)(QueryFilter.filter(_, postings, meta.buckets, _))
+      val got = conj.select($"docId").as[Long].collect().filterNot(dead)
+      assert(got.length == got.distinct.length, s"duplicate rows for [$f1, $f2]")
+      assert(got.toSet == expect, s"fqs=[$f1, $f2]")
+      if (expect.nonEmpty) nonEmpty += 1
+      for (q <- Seq("buffer", "def class return")) {
+        val hits = resident.search(q, 10, resident.DefaultFields, Seq(f1, f2)).toSeq
+        assert(hits == scanned.search(q, 10, scanned.DefaultFields, Seq(f2, f1)).toSeq,
+          s"q='$q' fqs=[$f1, $f2]")
+        assert(hits.forall(h => expect(h.docId)), s"q='$q' fqs=[$f1, $f2]")
+      }
+    }
+    assert(nonEmpty > fqPairs.size / 4, "too few pairs match any doc")
+    resident.close(); scanned.close()
+  }
+
   test("matched rows carry exactly the docstats columns") {
     val (dir, _, _) = fixture
     // names and types, in order (a filter may tighten nullability)

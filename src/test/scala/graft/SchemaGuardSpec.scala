@@ -85,6 +85,21 @@ class SchemaGuardSpec extends AnyFunSuite {
     streamed.foreach(assertKnownSchemas(_, "streaming delta"))
   }
 
+  test("deleteInPlace resolves its keys with no schema-inference job") {
+    val dir = tmp("graftschemadelete")
+    IndexBuilder.build(spark, docs(0, 300), dir, cfg(true))
+    val s = spark
+    import s.implicits._
+    val victims = IndexOps.docs(spark, dir)
+      .select($"repo", $"path", $"commit").as[(String, String, String)].take(3).toSeq
+    // the key resolution and the tombstone commit; a read without the
+    // known schema would add an inference job
+    val jobs = SparkJobs.count(spark, "graft-delete-in-place") {
+      IndexOps.deleteInPlace(spark, dir, victims)
+    }
+    assert(jobs == 5, s"deleteInPlace ran $jobs Spark jobs")
+  }
+
   test("a fresh searcher's first query on a resident segment runs at most 3 jobs") {
     val dir = tmp("graftschemacold")
     IndexBuilder.build(spark, docs(0, 300), dir, cfg(true))
