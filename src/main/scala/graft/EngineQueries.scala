@@ -277,8 +277,8 @@ object EngineQueries {
     }),
 
     // Q8/ST + K4 at scale: base + delta segments searched by one Searcher
-    // with a mass delete-by-query on the base, across BOTH tombstone regimes
-    // (broadcast sorted-array vs forced distributed anti-join) — row per
+    // with a mass delete-by-query on the base, across BOTH tombstone forms
+    // (a DocSet in the kernel vs the shuffle's distributed anti-join) — row per
     // query asserting the two regimes stay rank-identical
     "ix_multisegment_delete" -> ((s, dir) => {
       import s.implicits._
@@ -307,8 +307,8 @@ object EngineQueries {
       graft.index.IndexOps.deleteByQueryInPlace(s, work, "repo:src9")
       val queries = Seq("data table merge", "graftmarker", "filter join sort")
       val bc = new Searcher(s, Seq(work, delta))
-      // force the distributed-anti-join regime
-      val sh = new Searcher(s, Seq(work, delta), SearchConfig(tombstonesMaxBroadcast = 0))
+      // force the distributed-anti-join side: the docstats shuffle
+      val sh = new Searcher(s, Seq(work, delta), SearchConfig(normsMaxDocs = 0))
       val rows = queries.map { q =>
         val a = bc.search(q, 10).toSeq
         val b = sh.search(q, 10).toSeq

