@@ -115,8 +115,7 @@ object Reindex {
       Seq("human_readable_language_tesim", "human_readable_language_sim")
         .filter(df.columns.contains).foreach { c =>
           out = out.withColumn(c,
-            when(size(coalesce(col("language_tesim"),
-              array().cast("array<string>"))) > 0, lit(null)).otherwise(col(c)))
+            when(array_size(col("language_tesim")) > 0, lit(null)).otherwise(col(c)))
         }
     }
     out
@@ -253,8 +252,7 @@ object Reindex {
     if (idVariants.nonEmpty) {
       val merged = array_distinct(concat(idVariants.map(c =>
         coalesce(col(c), array().cast("array<string>"))): _*))
-      out = out.withColumn("local_identifier_ssim",
-        when(size(merged) > 0, merged).otherwise(lit(null).cast("array<string>")))
+      out = out.withColumn("local_identifier_ssim", UrsusFunctions.nonEmptyOrNull(merged))
       idVariants.filterNot(_ == "local_identifier_ssim")
         .foreach(c => out = out.drop(c))
     }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object UrsusFunctions {
 
   /** Python str.strip() trims ALL whitespace; Spark's trim() only spaces. */
-  private def wsTrim(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
+  def wsTrim(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
 
   /** F3 parse_empty (feed_ursus/util.py:23-33): strip; "" -> null. */
   def parseEmpty(c: Column): Column = nullif(wsTrim(c), lit(""))
@@ -31,6 +31,12 @@ object UrsusFunctions {
 
   /** F2 parse_list (util.py:112-156): split multivalued cell on `|~|`. */
   def parseList(c: Column): Column = split(c, "\\|~\\|")
+
+  /** An empty string array as null: the reference's list fields are None
+    * when nothing remains. One `nullif`, so Spark evaluates `c` once (it
+    * pulls the common expression into the Project below).
+    */
+  def nonEmptyOrNull(c: Column): Column = nullif(c, array().cast("array<string>"))
 
   private val ArkPattern = "^ark:/\\d+(/([a-z]|[0-9])+)+$"
 
@@ -88,7 +94,7 @@ object UrsusFunctions {
     */
   def getYear(c: Column): Column = {
     val all = regexp_extract_all(c, lit("\\b(\\d\\d\\d\\d|\\d\\d\\d)\\b"), lit(0))
-    when(size(all) === 1, element_at(all, 1).cast("int"))
+    when(array_size(all) === 1, element_at(all, 1).cast("int"))
   }
 
   /** A7 integer_years (year_parser.py:12-35): expand `A/B` ranges to

@@ -4,17 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's record-level CSV -> Solr-doc projection
-  * (feed_ursus/ursus_solr_record.py:110-1645) re-expressed as ONE Spark
-  * `select` of pure column expressions — the main product of feed_ursus,
-  * covering its ~95 declared fields (header-alias coalesce + MARC parsing +
-  * controlled-vocabulary validation) and ~70 computed fields (facet copies,
-  * combined names/subjects, date machinery, access groups).
+  * (feed_ursus/ursus_solr_record.py:110-1645) re-expressed as two Spark
+  * `select`s of pure column expressions — the main product of feed_ursus:
+  * its ~95 declared fields (header-alias coalesce + MARC parsing +
+  * controlled-vocabulary validation), then its ~70 computed fields over them
+  * (facet copies, combined names/subjects, date machinery, access groups).
   *
   * Everything is Catalyst builtins (no UDFs): alias resolution is a
   * `coalesce`, MARC list parsing is `split`+`transform`+`filter`, vocabulary
   * serialization is `element_at` on a literal map (constant-folded into the
   * plan — no broadcast, no shuffle; the projection is map-only and scales
   * linearly at any corpus size).
+  *
+  * Each value is written once and evaluated once per row: a list column's
+  * parse chain turns empty into null with ONE `nullif`, whose argument Spark
+  * evaluates once (the optimizer pulls it into the Project below), no guard
+  * wraps a function that already propagates null, and a field that copies
+  * another (Solr's copyField) is a reference to it.
   *
   * Strictness: the reference REJECTS records failing validation (bad enum
   * label, start>end date range, bad preservation-copy path). A Spark
@@ -29,9 +35,6 @@ object UrsusRecord {
 
   private val nullStr: Column = lit(null).cast("string")
   private val nullArr: Column = lit(null).cast("array<string>")
-
-  /** Python str.strip() trims ALL whitespace; Spark's trim() only spaces. */
-  private def wsTrim(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
 
   /** Header-alias resolution (pydantic AliasChoices): first non-empty value
     * among the alias columns present in the frame. (The reference picks the
@@ -49,17 +52,14 @@ object UrsusRecord {
 
   /** MARCString: parse_marc + strip, empty -> null (util.py:94-100). */
   private def marcStr(df: DataFrame, aliases: String*): Column =
-    parseEmpty(parseMarc(rawFirst(df, aliases)))
+    nullif(parseMarc(rawFirst(df, aliases)), lit(""))
 
   /** MARCList[MARCString]: split on `|~|`, parse_marc each element, drop
-    * empties, null when nothing remains (util.py:112-165).
+    * empties, null when nothing remains (util.py:112-165). `split` yields no
+    * null element and parse_marc strips, so an empty element is `""`.
     */
-  private def marcListOf(raw: Column, replacement: String): Column = {
-    val parts = transform(split(raw, "\\|~\\|"),
-      e => parseEmpty(parseMarc(e, replacement)))
-    val clean = filter(parts, e => e.isNotNull)
-    when(size(clean) > 0, clean).otherwise(nullArr)
-  }
+  private def marcListOf(raw: Column, replacement: String): Column =
+    nonEmptyOrNull(filter(transform(parseList(raw), parseMarc(_, replacement)), _ =!= ""))
 
   private def marcList(df: DataFrame, aliases: String*): Column =
     marcListOf(rawFirst(df, aliases), " ")
@@ -71,30 +71,25 @@ object UrsusRecord {
   /** serialize_term(by="id"): label -> enum name (URI); unknown labels pass
     * through unchanged (util.py:239-300).
     */
-  private def termIds(arr: Column, vocab: Map[String, String]): Column = {
-    val labelToId = typedlit(vocab.map(_.swap))
-    when(arr.isNotNull, transform(arr, e => coalesce(element_at(labelToId, e), e)))
-      .otherwise(nullArr)
-  }
-
   private def termId(c: Column, vocab: Map[String, String]): Column =
     coalesce(element_at(typedlit(vocab.map(_.swap)), c), c)
 
+  private def termIds(arr: Column, vocab: Map[String, String]): Column =
+    transform(arr, termId(_, vocab))
+
   /** normalized_date element validity (util.py:44-57 + date_parser.py:29-47):
-    * must match the `A` or `A/B` grammar AND, for ranges, parse with A <= B.
-    * Invalid elements are dropped (the reference rejects the record).
+    * must match the `A` or `A/B` grammar AND parse, with A <= B for ranges.
+    * Invalid elements are dropped (the reference rejects the record): an
+    * endpoint that does not parse is a null, and a null `<=` drops it.
     */
   private def validNormalizedDates(arr: Column): Column = {
     val pat = "^-?\\d?\\d\\d\\d(-\\d\\d){0,2}(/-?\\d?\\d\\d\\d(-\\d\\d){0,2})?$"
-    val clean = filter(arr, d => {
-      val t = wsTrim(d)
-      val start = padThreeDigitYear(regexp_extract(t, "(.*)/(.*)", 1))
-      val end = padThreeDigitYear(regexp_extract(t, "(.*)/(.*)", 2))
-      t.rlike(pat) && (instr(t, "/") === 0 ||
-        (start.cast("timestamp").isNotNull && end.cast("timestamp").isNotNull &&
-          start.cast("timestamp") <= end.cast("timestamp")))
-    })
-    when(arr.isNotNull && size(clean) > 0, transform(clean, d => wsTrim(d))).otherwise(nullArr)
+    nonEmptyOrNull(filter(arr, d => {
+      val range = instr(d, "/") > 0
+      def endpoint(i: Int): Column = padThreeDigitYear(
+        when(range, regexp_extract(d, "(.*)/(.*)", i)).otherwise(d)).try_cast("timestamp")
+      d.rlike(pat) && endpoint(1) <= endpoint(2)
+    }))
   }
 
   /** pysolr _from_python: `%Y-%m-%dT%H:%M:%SZ` via strftime — note Python's
@@ -103,52 +98,19 @@ object UrsusRecord {
     * (matched against the actual pydantic model; FIXTURES.md §3).
     */
   private def solrDates(endpoints: Column): Column =
-    when(endpoints.isNotNull,
-      transform(endpoints, e => regexp_replace(
-        date_format(e.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"), "^0+", "")))
-      .otherwise(nullArr)
+    transform(endpoints, e =>
+      regexp_replace(date_format(e, "yyyy-MM-dd'T'HH:mm:ss'Z'"), "^0+", ""))
 
   /** Project a CSV-shaped frame (columns named by the reference's csv
-    * headers) into the UrsusSolrRecord columns.
-    *
-    * r7: the projection's ~170 Column trees are a PURE function of
-    * (input schema, now) — building them dominated the per-invocation cost
-    * (probe at sf0.1: 0.6 s tree construction + 0.3 s analysis vs 0.2 s
-    * execution), so they are memoized per (columns, now), for at most
-    * [[ProjCacheMaxEntries]] keys; a key past that bound builds its trees
-    * uncached. Column objects are immutable unresolved expression trees;
-    * reusing them across DataFrames of the same schema is exactly how
-    * builtins are shared.
+    * headers) into the UrsusSolrRecord columns: one select of the declared
+    * fields, then one of the computed fields over them. Each list column is
+    * parsed once, and a field that copies another names it.
     *
     * @param now fixed timestamp for `timestamp`/`system_modified_dtsi`
     *            (the reference stamps datetime.now; a fixed instant keeps
     *            the projection deterministic — pass None to omit)
     */
   def project(df: DataFrame, now: Option[String] = None): DataFrame = {
-    val key = (df.columns.toSeq, now)
-    val (dCols, cCols) = Option(projCache.get(key)).getOrElse {
-      val built = buildCols(df, now)
-      // inserts serialize on the map, so the bound holds under concurrency
-      projCache.synchronized {
-        if (projCache.size < ProjCacheMaxEntries) projCache.putIfAbsent(key, built)
-      }
-      built
-    }
-    df.select(dCols: _*).select(cCols: _*)
-  }
-
-  /** Bound on memoized (columns, now) keys: each entry pins ~170 Column
-    * trees for the JVM's lifetime, and every distinct `now` is a new key.
-    */
-  private[graft] val ProjCacheMaxEntries = 16
-
-  private val projCache = new java.util.concurrent.ConcurrentHashMap[
-    (Seq[String], Option[String]), (Seq[Column], Seq[Column])]()
-
-  private[graft] def projCacheSize: Int = projCache.size
-
-  private def buildCols(df: DataFrame,
-                        now: Option[String]): (Seq[Column], Seq[Column]) = {
     // ---- declared fields (ursus_solr_record.py:124-1565, alias lists
     // verbatim; MARCList / MARCString / MARCSubject typing per util.py) ----
     val declared: Seq[(String, Column)] = Seq(
@@ -159,12 +121,8 @@ object UrsusRecord {
       "language_tesim" -> marcList(df, "Language"),
       "human_readable_resource_type_tesim" -> marcList(df, "Type.typeOfResource"),
       // `pd` is a deprecated alias for `public domain` (:240-247)
-      "human_readable_rights_statement_tesim" -> {
-        val arr = marcList(df, "Rights.copyrightStatus")
-        when(arr.isNotNull,
-          transform(arr, e => when(e === "pd", "public domain").otherwise(e)))
-          .otherwise(nullArr)
-      },
+      "human_readable_rights_statement_tesim" -> transform(marcList(df, "Rights.copyrightStatus"),
+        e => when(e === "pd", "public domain").otherwise(e)),
       "visibility_ssi" -> {
         val vis = if (df.columns.contains("Visibility"))
           coalesce(wsTrim(col("Visibility")), lit("")) else nullStr
@@ -248,11 +206,8 @@ object UrsusRecord {
       "lyricist_tesim" -> marcList(df, "Name.lyricist"),
       "masthead_parameters_ssi" -> marcStr(df, "Masthead"),
       "medium_tesim" -> marcList(df, "Format.medium"),
-      "member_of_collection_ids_ssim" -> {
-        val arr = marcList(df, "Parent ARK")
-        when(arr.isNotNull, transform(arr, e => makeUrsusId(ensureArkPrefix(e))))
-          .otherwise(nullArr)
-      },
+      "member_of_collection_ids_ssim" ->
+        transform(marcList(df, "Parent ARK"), e => makeUrsusId(ensureArkPrefix(e))),
       "member_of_collections_ssim" -> marcList(df, "member_of_collections_ssim"),
       "musician_tesim" -> marcList(df, "Musician", "Name.musician"),
       "named_subject_tesim" -> marcSubjects(df, "Name.subject",
@@ -321,10 +276,7 @@ object UrsusRecord {
       "has_model_ssim" -> array(mapObjectType(rawFirst(df, Seq("Object Type")))))
 
     // ---- computed fields (ursus_solr_record.py @computed_field bodies) ----
-    // (they reference the DECLARED names only, so they run as the second
-    // select of [[project]] — no DataFrame is materialized here)
-    def simCopy(src: String): Column = col(src)
-    val langMap = typedlit(ControlledVocab.languageNames)
+    // (they reference the declared names, so they run as the second select)
     val simCopies = Seq(
       "architect", "arranger", "artist", "associated_name", "author",
       "calligrapher", "cartographer", "collector", "commentator", "composer",
@@ -338,7 +290,7 @@ object UrsusRecord {
       "subject_domain_topic", "subject_geographic", "subject_temporal",
       "subject_topic", "support", "title", "translator", "uniform_title",
       "writing_system")
-      .map(f => s"${f}_sim" -> simCopy(s"${f}_tesim"))
+      .map(f => s"${f}_sim" -> col(s"${f}_tesim"))
 
     val nameSources = Seq("architect", "arranger", "artist", "author",
       "calligrapher", "cartographer", "collector", "commentator", "composer",
@@ -352,27 +304,15 @@ object UrsusRecord {
       "subject_geographic", "subject_temporal")
       .map(f => coalesce(col(s"${f}_tesim"), array().cast("array<string>")))
 
-    val dateEndpoints = { // date_parser.get_dates: sorted(set(datetime)) —
-      // dedupe + sort happen on the PARSED instant, not the padded text, so
-      // '935' and '935-01-01' (same instant, different strings) collapse to
-      // one endpoint exactly like the reference's datetime set does
-      val pads = flatten(transform(col("normalized_date_tesim"), d =>
-        when(instr(d, "/") > 0,
-          array(padThreeDigitYear(regexp_extract(d, "(.*)/(.*)", 1)),
-            padThreeDigitYear(regexp_extract(d, "(.*)/(.*)", 2))))
-          .otherwise(array(padThreeDigitYear(d)))))
-      when(col("normalized_date_tesim").isNotNull,
-        array_sort(array_distinct(transform(pads, e => e.cast("timestamp")))))
-        .otherwise(lit(null).cast("array<timestamp>"))
-    }
+    // date_parser.get_dates: sorted(set(datetime)) — dedupe + sort happen on
+    // the PARSED instant, not the padded text, so '935' and '935-01-01' (same
+    // instant, different strings) collapse to one endpoint exactly like the
+    // reference's datetime set does
+    val dateEndpoints = array_sort(array_distinct(
+      transform(getDates(col("normalized_date_tesim")), _.cast("timestamp"))))
 
-    def nonEmptyOrNull(c: Column): Column =
-      when(size(c) > 0, c).otherwise(nullArr)
-
-    val accessGroups =
-      when(col("visibility_ssi").isin("open", "ucla"), array(lit("public")))
-        .otherwise(array().cast("array<string>"))
-
+    // A copy of another computed field names it (Solr's copyField); Spark
+    // resolves the name as a lateral alias of the field defined before it.
     val computed: Seq[(String, Column)] = Seq(
       "id" -> makeUrsusId(col("ark_ssi")),
       "iiif_text_direction_ssi" ->
@@ -381,16 +321,16 @@ object UrsusRecord {
         termId(col("human_readable_iiif_viewing_hint_ssi"), ControlledVocab.viewingHint),
       "language_sim" -> col("language_tesim"),
       "human_readable_language_tesim" -> nonEmptyOrNull(
-        filter(transform(coalesce(col("language_tesim"), array().cast("array<string>")),
-          c => element_at(langMap, c)), _.isNotNull)),
-      "human_readable_language_sim" -> nonEmptyOrNull(
-        filter(transform(coalesce(col("language_tesim"), array().cast("array<string>")),
-          c => element_at(langMap, c)), _.isNotNull)),
+        filter(transform(col("language_tesim"),
+          element_at(typedlit(ControlledVocab.languageNames), _)), _.isNotNull)),
+      "human_readable_language_sim" -> col("human_readable_language_tesim"),
       "human_readable_resource_type_sim" -> col("human_readable_resource_type_tesim"),
-      "resource_type_sim" -> termIds(col("human_readable_resource_type_tesim"), ControlledVocab.resourceType),
-      "resource_type_ssim" -> termIds(col("human_readable_resource_type_tesim"), ControlledVocab.resourceType),
-      "resource_type_tesim" -> termIds(col("human_readable_resource_type_tesim"), ControlledVocab.resourceType),
-      "rights_statement_tesim" -> termIds(col("human_readable_rights_statement_tesim"), ControlledVocab.rightsStatement),
+      "resource_type_tesim" ->
+        termIds(col("human_readable_resource_type_tesim"), ControlledVocab.resourceType),
+      "resource_type_sim" -> col("resource_type_tesim"),
+      "resource_type_ssim" -> col("resource_type_tesim"),
+      "rights_statement_tesim" ->
+        termIds(col("human_readable_rights_statement_tesim"), ControlledVocab.rightsStatement),
       "archival_collection_tesi" -> archivalCollection(
         col("archival_collection_title_ssi"), col("archival_collection_number_ssi"),
         col("archival_collection_box_ssi"), col("archival_collection_folder_ssi")),
@@ -400,25 +340,23 @@ object UrsusRecord {
       "combined_subject_ssim" -> nonEmptyOrNull(concat(subjSources: _*)),
       "condition_note_ssi" -> element_at(col("condition_note_tesim"), 1),
       "date_dtsim" -> solrDates(dateEndpoints),
-      "date_dtsort" -> element_at(solrDates(dateEndpoints), 1),
+      "date_dtsort" -> element_at(col("date_dtsim"), 1),
       "dlcs_collection_name_tesim" -> col("member_of_collections_ssim"),
-      "geographic_coordinates_ssim" -> nonEmptyOrNull(
-        filter(zip_with(coalesce(col("latitude_tesim"), array().cast("array<string>")),
-          coalesce(col("longitude_tesim"), array().cast("array<string>")),
-          (a, b) => when(a.isNotNull && b.isNotNull, concat(a, lit(", "), b))),
-          _.isNotNull)),
+      "geographic_coordinates_ssim" -> nonEmptyOrNull(filter(
+        zip_with(col("latitude_tesim"), col("longitude_tesim"), concat(_, lit(", "), _)),
+        _.isNotNull)),
       "sort_title_ssort" -> element_at(col("title_tesim"), 1),
-      "sort_title_tsort" -> element_at(col("title_tesim"), 1),
-      "year_isim" ->
-        when(col("normalized_date_tesim").isNotNull, integerYears(col("normalized_date_tesim")))
-          .otherwise(lit(null).cast("array<int>")),
-      "discover_access_group_ssim" -> accessGroups,
-      "read_access_group_ssim" -> accessGroups,
-      "download_access_group_ssim" -> accessGroups) ++
+      "sort_title_tsort" -> col("sort_title_ssort"),
+      "year_isim" -> integerYears(col("normalized_date_tesim")),
+      "discover_access_group_ssim" ->
+        when(col("visibility_ssi").isin("open", "ucla"), array(lit("public")))
+          .otherwise(array().cast("array<string>")),
+      "read_access_group_ssim" -> col("discover_access_group_ssim"),
+      "download_access_group_ssim" -> col("discover_access_group_ssim")) ++
       simCopies ++
       now.map(ts => "timestamp" -> lit(ts).cast("string")).toSeq
 
-    (declared.map { case (n, c) => c.as(n) },
-      col("*") +: computed.map { case (n, c) => c.as(n) })
+    df.select(declared.map { case (n, c) => c.as(n) }: _*)
+      .select(col("*") +: computed.map { case (n, c) => c.as(n) }: _*)
   }
 }

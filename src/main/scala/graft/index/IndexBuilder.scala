@@ -109,10 +109,12 @@ object IndexBuilder {
     * in-memory cache's decompress-recompress CPU (round 2 used the default
     * MEMORY_AND_DISK here; the cache build of full content cost more than
     * it saved, and could never fit at the 100 TB target).
+    *
+    * The persisted corpus is added to `persisted`; the caller unpersists it
+    * once the ranked frame's last job has run.
     */
-  private val pendingCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  def withDocIds(spark: SparkSession, docs: Dataset[CodeDoc], partitions: Int): DataFrame = {
+  def withDocIds(spark: SparkSession, docs: Dataset[CodeDoc], partitions: Int,
+                 persisted: mutable.Buffer[Dataset[_]]): DataFrame = {
     import spark.implicits._
     val keyCols = Seq(col("sha"), col("repo"), col("path"), col("commit"))
     val parted = docs.toDF()
@@ -121,7 +123,7 @@ object IndexBuilder {
       .repartitionByRange(partitions, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    pendingCaches.add(parted)
+    persisted += parted
     val counts = parted.groupBy(spark_partition_id().as("pid")).count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
@@ -292,11 +294,6 @@ object IndexBuilder {
 
     val needDocstats = !snap.stageDone("docstats")
     val needPostings = !snap.stageDone("postings")
-    val withIds: DataFrame =
-      if (needDocstats || needPostings)
-        timed("docIds")(withDocIds(spark, docs, cfg.shufflePartitions))
-      else null
-
     // ---- fused tokenize: ONE pass over content feeds BOTH the docstats
     // table (map-side written stats rows — no shuffle at all) and the posting
     // shuffle (map-side pre-encoded BlockChunks). content is decompressed
@@ -317,66 +314,76 @@ object IndexBuilder {
     val accLenP = spark.sparkContext.longAccumulator("graft.lenPath")
     val accLenR = spark.sparkContext.longAccumulator("graft.lenRepo")
 
-    lazy val emitted: Dataset[BuildEmit] = withIds
-      .select("docId", "sha", "repo", "path", "commit", "lang", "content")
-      .as[(Long, String, String, String, String, String, String)]
-      .mapPartitions { it =>
-        val enc = new ChunkEncoder(blockSize, saltRange, chunkDocs)
-        it.flatMap { case (docId, sha, repo, path, commit, lang, content) =>
-          val (chunks, stats) = enc.addDoc(docId, sha, repo, path, commit, lang, content)
-          accDocs.add(1L); accLenC.add(stats.lenContent)
-          accLenP.add(stats.lenPath); accLenR.add(stats.lenRepo)
-          chunks.map(c => BuildEmit(Some(c), None)) ++
-            Iterator.single(BuildEmit(None, Some(stats)))
-        } ++
-          new Iterator[BuildEmit] { // lazily flush AFTER input exhausts
-            private var flushed = false
-            private var v: Iterator[BlockChunk] = Iterator.empty
-            def hasNext: Boolean = {
-              if (!flushed) { v = enc.flushAll().iterator; flushed = true }
-              v.hasNext
+    // the frames this build persists, released once its postings stage is
+    // done or a stage throws
+    val persisted = mutable.ArrayBuffer.empty[Dataset[_]]
+    try {
+      val withIds: DataFrame =
+        if (needDocstats || needPostings)
+          timed("docIds")(withDocIds(spark, docs, cfg.shufflePartitions, persisted))
+        else null
+
+      lazy val emitted: Dataset[BuildEmit] = withIds
+        .select("docId", "sha", "repo", "path", "commit", "lang", "content")
+        .as[(Long, String, String, String, String, String, String)]
+        .mapPartitions { it =>
+          val enc = new ChunkEncoder(blockSize, saltRange, chunkDocs)
+          it.flatMap { case (docId, sha, repo, path, commit, lang, content) =>
+            val (chunks, stats) = enc.addDoc(docId, sha, repo, path, commit, lang, content)
+            accDocs.add(1L); accLenC.add(stats.lenContent)
+            accLenP.add(stats.lenPath); accLenR.add(stats.lenRepo)
+            chunks.map(c => BuildEmit(Some(c), None)) ++
+              Iterator.single(BuildEmit(None, Some(stats)))
+          } ++
+            new Iterator[BuildEmit] { // lazily flush AFTER input exhausts
+              private var flushed = false
+              private var v: Iterator[BlockChunk] = Iterator.empty
+              def hasNext: Boolean = {
+                if (!flushed) { v = enc.flushAll().iterator; flushed = true }
+                v.hasNext
+              }
+              def next(): BuildEmit = BuildEmit(Some(v.next()), None)
             }
-            def next(): BuildEmit = BuildEmit(Some(v.next()), None)
-          }
+        }
+      // persist only when both stages consume it (a resumed postings-only build
+      // reads the fused pass once — no point caching). Storage level:
+      // MEMORY_AND_DISK columnar is the measured winner here (DISK_ONLY
+      // serialized rows cost 23.6k -> 14.5k docs/s at 1.6M/16c: BuildEmit's
+      // binary payloads serialize poorly row-wise but pack well columnar) —
+      // the OPPOSITE of the withDocIds corpus cache, where rows are wide text.
+      val needBoth = needDocstats && needPostings
+      lazy val src: Dataset[BuildEmit] =
+        if (needBoth) {
+          persisted += emitted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          emitted
+        } else emitted
+
+      // ---- stage: docstats (map-side rows out of the fused pass; the timed
+      // cost here includes materializing the fused tokenize+encode cache).
+      // DataFrame select, NOT a typed flatMap: `stats.*` prunes the chunk
+      // binaries out of the cache scan (a typed flatMap deserializes the whole
+      // BuildEmit row — measured as most of this stage's CPU). ----
+      if (needDocstats) timed("docstats") {
+        src.toDF().filter($"stats".isNotNull).select($"stats.*")
+          .write.mode("overwrite").parquet(docstatsPath)
+        snap.markStageDone("docstats")
       }
-    // persist only when both stages consume it (a resumed postings-only build
-    // reads the fused pass once — no point caching). Storage level:
-    // MEMORY_AND_DISK columnar is the measured winner here (DISK_ONLY
-    // serialized rows cost 23.6k -> 14.5k docs/s at 1.6M/16c: BuildEmit's
-    // binary payloads serialize poorly row-wise but pack well columnar) —
-    // the OPPOSITE of the withDocIds corpus cache, where rows are wide text.
-    val needBoth = needDocstats && needPostings
-    lazy val src: Dataset[BuildEmit] =
-      if (needBoth) emitted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else emitted
 
-    // ---- stage: docstats (map-side rows out of the fused pass; the timed
-    // cost here includes materializing the fused tokenize+encode cache).
-    // DataFrame select, NOT a typed flatMap: `stats.*` prunes the chunk
-    // binaries out of the cache scan (a typed flatMap deserializes the whole
-    // BuildEmit row — measured as most of this stage's CPU). ----
-    if (needDocstats) timed("docstats") {
-      src.toDF().filter($"stats".isNotNull).select($"stats.*")
-        .write.mode("overwrite").parquet(docstatsPath)
-      snap.markStageDone("docstats")
-    }
-
-    // ---- stage: posting runs + per-partition lineage ----
-    //
-    // Shuffle format: map-side pre-encoded [[BlockChunk]]s, not raw postings.
-    // Each map partition holds a contiguous docId range (withDocIds rank), so
-    // per-(field, term) blocks delta+varint encode BEFORE the exchange and
-    // the reduce side only sorts + concatenates. This removes the per-posting
-    // term string (~70% of round-1 shuffle bytes) and the per-posting row
-    // overhead from the one wide shuffle: a head term crosses the wire
-    // ceil(df_chunk/blockSize) times per chunk instead of df times.
-    if (needPostings) timed("postings") {
-      // `chunk.*` select (not flatMap): prunes the stats columns from the scan
-      val chunks = src.toDF().filter($"chunk".isNotNull).select($"chunk.*")
-      assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
-    }
-    if (needBoth) src.unpersist()
-    while (!pendingCaches.isEmpty) { Option(pendingCaches.poll()).foreach(_.unpersist()) }
+      // ---- stage: posting runs + per-partition lineage ----
+      //
+      // Shuffle format: map-side pre-encoded [[BlockChunk]]s, not raw postings.
+      // Each map partition holds a contiguous docId range (withDocIds rank), so
+      // per-(field, term) blocks delta+varint encode BEFORE the exchange and
+      // the reduce side only sorts + concatenates. This removes the per-posting
+      // term string (~70% of round-1 shuffle bytes) and the per-posting row
+      // overhead from the one wide shuffle: a head term crosses the wire
+      // ceil(df_chunk/blockSize) times per chunk instead of df times.
+      if (needPostings) timed("postings") {
+        // `chunk.*` select (not flatMap): prunes the stats columns from the scan
+        val chunks = src.toDF().filter($"chunk".isNotNull).select($"chunk.*")
+        assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
+      }
+    } finally persisted.foreach(_.unpersist())
 
     // resume path: postings were committed by an earlier run, so the cache is
     // gone -- aggregate from the postings table (column-pruned scan)

@@ -116,8 +116,11 @@ object Tombstones {
 
   /** Distributed commit: write the (docId) DataFrame as the next tombstone
     * file WITHOUT driver materialization — the bulk delete-by-query /
-    * backfill-upsert shape. `knownCount` skips the count job when the caller
-    * already knows the DISTINCT id count (-1 = count here).
+    * backfill-upsert shape. `docIds` holds each id once (every caller
+    * resolves them from docstats, one row per docId, or dedupes them on the
+    * driver), so only the anti-join regime below runs a `distinct`.
+    * `knownCount` skips the count job when the caller already knows the id
+    * count (-1 = count here).
     *
     * Once the stored count reaches `dedupSkipBound`, deletes dedupe
     * against the already-visible tombstones on write (an anti-join over
@@ -137,7 +140,7 @@ object Tombstones {
       .flatMap(_.split(",")).filter(_.nonEmpty)
     val name = s"ts-${snap.currentId + 1}"
     val path = s"$indexDir/tombstones/$name.parquet"
-    val df0 = docIds.select(col("docId").cast("long").as("docId")).distinct()
+    val ids = docIds.select(col("docId").cast("long").as("docId"))
     // The prior-tombstone dedup anti-join costs O(cumulative deleted
     // history) PER COMMIT — a long upsert-heavy run between compactions
     // pays a growing re-scan for every small delete (ADVICE r5). It keeps
@@ -150,8 +153,8 @@ object Tombstones {
     val currentCount = props.get("tombstoneCount").map(_.toLong).getOrElse(0L)
     val dedupSkipped = prev.isEmpty || currentCount < dedupSkipBound
     val df =
-      if (dedupSkipped) df0
-      else df0.join(
+      if (dedupSkipped) ids
+      else ids.distinct().join(
         read(spark, prev.map(f => s"$indexDir/tombstones/$f.parquet")),
         Seq("docId"), "left_anti")
     // When both a count and a write run, persist so the caller's docIds

@@ -299,6 +299,19 @@ class EngineSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("a build that throws past its docIds stage leaves nothing persisted") {
+    import spark.implicits._
+    val few = spark.range(0, 20).as[Long].map(i => CodeCorpus.genDoc(i, 15))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keys.toSet
+    val dir = java.nio.file.Files.createTempDirectory("graftthrow").toString
+    // saltRange 0 divides by zero in the tokenize pass, after the docIds
+    // stage has persisted the sorted corpus
+    intercept[Exception](IndexBuilder.build(spark, few, dir, cfg.copy(saltRange = 0)))
+    val left = sc.getPersistentRDDs.keys.toSet -- before
+    assert(left.isEmpty, s"the failed build left RDDs $left persisted")
+  }
+
   test("postings round-trip: recomputed df/cf match dictionary") {
     import spark.implicits._
     val fromRuns = spark.read.parquet(s"$tmp/postings")

@@ -76,18 +76,19 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(Tombstones.table(spark, dir).get.count() == 4)
   }
 
-  test("deleteInPlace of 10 keys writes one tombstone file in 4 jobs") {
+  test("deleteInPlace of 10 keys writes one tombstone file in 3 jobs") {
     meta
     val dir = java.nio.file.Files.createTempDirectory("graftdel10").toString
     IndexBuilder.build(spark, docs, dir, cfg)
     val victims = IndexOps.docs(spark, dir)
       .select($"repo", $"path", $"commit").as[(String, String, String)].take(10).toSeq
-    // the key resolution, the commit's distinct and its write: no reader
-    // needs the file sorted, so no range-sampling job runs
+    // the key resolution and the commit's write: the ids are already
+    // distinct, so no dedup job runs, and no reader needs the file sorted,
+    // so no range-sampling job runs
     val jobs = SparkJobs.count(spark, "graft-delete-ten") {
       IndexOps.deleteInPlace(spark, dir, victims)
     }
-    assert(jobs == 4, s"deleteInPlace of 10 keys ran $jobs Spark jobs")
+    assert(jobs == 3, s"deleteInPlace of 10 keys ran $jobs Spark jobs")
     assert(graft.index.Tombstones.count(spark, dir) == 10)
     val written = graft.index.Tombstones.files(dir).flatMap(f =>
       new java.io.File(f).listFiles().filter(_.getName.endsWith(".parquet")))

@@ -97,7 +97,7 @@ class SchemaGuardSpec extends AnyFunSuite {
     val jobs = SparkJobs.count(spark, "graft-delete-in-place") {
       IndexOps.deleteInPlace(spark, dir, victims)
     }
-    assert(jobs == 4, s"deleteInPlace ran $jobs Spark jobs")
+    assert(jobs == 3, s"deleteInPlace ran $jobs Spark jobs")
   }
 
   test("a fresh searcher's first query on a resident segment runs at most 3 jobs") {

@@ -2,6 +2,10 @@ package graft
 
 import graft.docprep.{ControlledVocab, UrsusRecord}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, StringSplit}
+import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.functions.{col, concat, lit}
+import org.apache.spark.sql.types.{StructField, StructType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** UrsusRecord.project against the reference's own test vectors
@@ -13,8 +17,7 @@ class UrsusRecordSpec extends AnyFunSuite {
   private def one(cols: (String, String)*): DataFrame = {
     val base = Seq("Item ARK" -> "ark:/123/test", "Title" -> "Test Item")
     val all = (base.toMap ++ cols.toMap).toSeq
-    val schema = org.apache.spark.sql.types.StructType(
-      all.map(c => org.apache.spark.sql.types.StructField(c._1, org.apache.spark.sql.types.StringType)))
+    val schema = StructType(all.map(c => StructField(c._1, StringType)))
     spark.createDataFrame(
       java.util.List.of(Row(all.map(_._2): _*)), schema)
   }
@@ -146,13 +149,10 @@ class UrsusRecordSpec extends AnyFunSuite {
     assert(seqOf(r, "member_of_collection_ids_ssim") == Seq("xp6xn100zz-89112"))
   }
 
-  test("projection cache stays bounded across distinct `now` values") {
+  test("distinct `now` values stamp only the two timestamp fields") {
     val df = one("Visibility" -> "open", "Language" -> "eng")
-    val cap = UrsusRecord.ProjCacheMaxEntries
-    val nows = (0 to cap).map(i => f"2026-01-${i + 1}%02dT00:00:00Z")
+    val nows = (1 to 3).map(i => f"2026-01-$i%02dT00:00:00Z")
     val rows = nows.map(n => UrsusRecord.project(df, now = Some(n)).collect()(0))
-    assert(UrsusRecord.projCacheSize <= cap)
-    // cached and uncached projections agree: only the stamped fields differ
     val stamped = Set("timestamp", "system_modified_dtsi")
     def unstamped(r: Row): Seq[Any] =
       r.schema.fieldNames.toSeq.filterNot(stamped).map(r.getAs[Any])
@@ -161,6 +161,63 @@ class UrsusRecordSpec extends AnyFunSuite {
       assert(get[String](r, "system_modified_dtsi") == n)
       assert(unstamped(r) == unstamped(rows.head))
     }
+  }
+
+  test("edge cells: absent, null, empty, separator-only, subfield codes, pd, bad date endpoints") {
+    // every case writes the same cell into each of these source columns
+    val sources = Seq("Note", "Subject", "Rights.copyrightStatus", "Date.normalized", "Parent ARK")
+    val none: Map[String, Seq[Any]] = Seq("note_tesim", "subject_tesim",
+      "rights_statement_tesim", "normalized_date_tesim", "year_isim", "date_dtsim",
+      "member_of_collection_ids_ssim").map(_ -> null).toMap
+    def listed(v: String*) = Seq("note_tesim", "subject_tesim", "rights_statement_tesim")
+      .map(_ -> v.toSeq).toMap
+    val publicDomain = "http://vocabs.library.ucla.edu/rights/publicDomain"
+    val cases: Seq[(String, Option[String], Map[String, Seq[Any]])] = Seq(
+      ("absent column", None, none),
+      ("null cell", Some(null), none),
+      ("empty", Some(""), none),
+      ("separator only", Some("|~|"), none),
+      ("spaced separator", Some(" |~|  "), none),
+      ("subfield code only", Some("$a "), none ++ listed("$a") ++
+        Map("member_of_collection_ids_ssim" -> Seq("a$"))),
+      ("interior subfield element", Some("x|~| $a |~|y"), none ++ listed("x", "y") ++
+        Map("subject_tesim" -> Seq("x", "--", "y"), "member_of_collection_ids_ssim" -> Seq("x", "y"))),
+      ("pd alias", Some("pd"), none ++ listed("pd") ++
+        Map("rights_statement_tesim" -> Seq(publicDomain), "member_of_collection_ids_ssim" -> Seq("dp"))),
+      // month 13 matches the grammar but does not parse: the range and the
+      // single date are dropped, their valid neighbour kept
+      ("unparsable endpoints", Some("1941/1942-13|~|1942-13|~|1950"), none ++
+        listed("1941/1942-13", "1942-13", "1950") ++ Map(
+          "normalized_date_tesim" -> Seq("1950"), "year_isim" -> Seq(1950),
+          "date_dtsim" -> Seq("1950-01-01T00:00:00Z"),
+          "member_of_collection_ids_ssim" -> Seq("31-2491-1491", "1942-13", "0591"))))
+    cases.foreach { case (name, cell, expect) =>
+      val r = project(cell.toSeq.flatMap(v => sources.map(_ -> v)): _*)
+      expect.foreach { case (field, want) =>
+        val got = Option(r.getAs[scala.collection.Seq[Any]](field)).map(_.toSeq).orNull
+        assert(got == want, s"$name: $field")
+      }
+    }
+  }
+
+  test("plan shape: one split per list column, one language map") {
+    // one source column per list field, every output column selected; the
+    // cells are computed, so the optimizer can neither fold them nor
+    // evaluate the projection over a local relation
+    val lists = Seq("Title", "Language", "Subject", "Note", "Date.normalized", "Parent ARK",
+      "Rights.copyrightStatus", "Type.typeOfResource", "Description.latitude",
+      "Description.longitude", "Author", "Name.creator")
+    val cell = concat(lit("a|~|"), col("id").cast("string"))
+    val out = UrsusRecord.project(spark.range(1).select(lists.map(cell.as(_)): _*))
+    val exprs = out.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val splits = exprs.count(_.isInstanceOf[StringSplit])
+    val languageMaps = exprs.count {
+      case Literal(m: MapData, _) => m.numElements() == ControlledVocab.languageNames.size
+      case _ => false
+    }
+    assert(splits == lists.size, s"$splits splits for ${lists.size} list columns")
+    assert(languageMaps == 1, s"the language map appears $languageMaps times")
   }
 
   test("reference fixture csv projects end-to-end (tests/fixtures/anais_work_simple.csv)") {
