@@ -5,9 +5,6 @@ package graft.core
   */
 case class CodeDoc(repo: String, path: String, commit: String, lang: String, content: String)
 
-/** One tokenized posting before aggregation: (field, term, docId, tf). */
-case class TokenPosting(field: String, term: String, docId: Long, tf: Int)
-
 /** Per-document statistics row — one per (docId); per-field token lengths.
   * `sha` is sha256(content), the per-row integrity invariant vs the source
   * table (BASELINE.json input_hint).
@@ -23,6 +20,19 @@ case class DocStats(
     lenContent: Int,
     lenPath: Int,
     lenRepo: Int)
+
+/** The indexed fields in fieldId order: a [[BlockChunk]]'s `fieldId` is a
+  * field's position in `Names`, and [[DocStats]] holds its token count in
+  * the matching `LengthCols` column. The builder, the merge, the searchers
+  * and the filter compiler all take the field list from here.
+  */
+object IndexFields {
+  val Names: IndexedSeq[String] = Vector("content", "path", "repo")
+  val LengthCols: IndexedSeq[String] = Names.map(f => s"len${f.capitalize}")
+
+  /** A docstats row's field lengths, in fieldId order. */
+  def lengths(s: DocStats): Array[Int] = Array(s.lenContent, s.lenPath, s.lenRepo)
+}
 
 /** An encoded posting block: up to `blockSize` consecutive postings of one
   * (field, term). `firstDoc` is absolute; `docsDelta` holds FOR bit-packed

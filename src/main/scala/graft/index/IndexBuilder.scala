@@ -13,10 +13,10 @@ import scala.collection.mutable
   * `shufflePartitions` to O(cores); `saltRange` stays fixed — the number of
   * salts grows with the corpus, which IS the skew mitigation: a head term
   * present in 40% of docs is split into nDocs/saltRange independent runs that
-  * encode in parallel and concatenate in salt order by construction.
+  * encode in parallel and concatenate in salt order by construction. The
+  * indexed fields are not configurable: [[IndexFields]] fixes them.
   */
 case class IndexConfig(
-    fields: Seq[String] = Seq("content", "path", "repo"),
     buckets: Int = 64,
     blockSize: Int = 128,
     saltRange: Long = 1L << 20,
@@ -43,7 +43,12 @@ case class IndexConfig(
   *        -> typed flatMap tokenize -> (bucket, field, term, salt, docId, tf)
   *        -> repartition(bucket, field, salt) -> sortWithinPartitions
   *        -> mapPartitions streaming block encoder -> posting runs (parquet)
-  *        -> dictionary (global df/cf) -> lineage rows -> snapshot commit
+  *           + lineage rows
+  *        -> [[commit]]: dictionary (global df/cf) -> stats -> snapshot
+  *
+  * [[IndexOps.mergeSegments]] is the same pipeline fed from segments: its
+  * chunks come out of the same [[BlockBuf]], and it ends in the same
+  * shuffle, run assembly and [[commit]].
   *
   * Layout under `outDir`:
   *   docstats/    (docId, repo, path, commit, lang, sha, salt, len*)
@@ -73,28 +78,6 @@ object IndexBuilder {
   private[graft] val DocStatsSchema: StructType = Encoders.product[DocStats].schema
   private[graft] val PostingsSchema: StructType = Encoders.product[PostingRun].schema
   private[graft] val DictionarySchema: StructType = Encoders.product[DictEntry].schema
-
-  /** (nDocs, content, path and repo length sums) of a docstats table: one
-    * aggregate job; an empty table gives zeros, not null sums.
-    */
-  private[index] def lengthSums(spark: SparkSession, docstatsPath: String): (Long, Long, Long, Long) = {
-    val r = spark.read.schema(DocStatsSchema).parquet(docstatsPath)
-      .agg(count(lit(1)), Seq("lenContent", "lenPath", "lenRepo")
-        .map(c => coalesce(sum(col(c)), lit(0L))): _*)
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
-
-  /** The meta of a segment with these length sums; an empty one has
-    * average lengths 0.
-    */
-  private[index] def metaOf(sums: (Long, Long, Long, Long), cfg: IndexConfig): IndexMeta = {
-    val (nDocs, lenC, lenP, lenR) = sums
-    def avg(total: Long): Double = if (nDocs == 0) 0.0 else total.toDouble / nDocs
-    IndexMeta(nDocs = nDocs,
-      avgLen = Map("content" -> avg(lenC), "path" -> avg(lenP), "repo" -> avg(lenR)),
-      buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
-  }
 
   def bucketOf(term: String, buckets: Int): Int =
     math.floorMod(scala.util.hashing.MurmurHash3.stringHash(term, 0x9747b28c), buckets)
@@ -165,26 +148,10 @@ object IndexBuilder {
     (toks.length, m)
   }
 
-  /** Dictionary write: global per-(field, term) df/cf from run-level rows,
-    * range-partitioned + sorted by (field, term) so query-time probes prune
-    * to O(query terms) row groups ([[graft.query.DictProbe]]).
-    */
-  private def writeDictionary(runCols: DataFrame, dictPath: String, cfg: IndexConfig): Unit =
-    runCols
-      .groupBy(col("bucket"), col("field"), col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      // coalesce + sort-within (NOT repartitionByRange): probe pruning only
-      // needs tight per-row-group min/max on (field, term), which sorted
-      // files give regardless of which file a term lands in — and this
-      // skips a second exchange plus the range sampling job per build
-      .coalesce(math.max(1, cfg.buckets / 8))
-      .sortWithinPartitions(col("field"), col("term"))
-      .write.mode("overwrite").parquet(dictPath)
-
   /** The reduce side of the posting build, shared by [[build]] and
     * [[IndexOps.mergeSegments]]: shuffle pre-encoded [[BlockChunk]]s by
-    * (term, fieldId, salt), assemble runs, write postings + lineage +
-    * dictionary, mark stages. Lineage rows (ONE per partition) ride an
+    * (term, fieldId, salt), assemble runs, write postings + lineage, mark
+    * the postings stage. Lineage rows (ONE per partition) ride an
     * accumulator out of the same pass that writes the postings — no caching
     * of the run dataset. (Round 2 first persisted the runs to serve lineage
     * + dictionary; the columnar cache of the block binaries cost more CPU to
@@ -197,7 +164,6 @@ object IndexBuilder {
     import spark.implicits._
     val postingsPath = s"$outDir/postings"
     val lineagePath = s"$outDir/lineage"
-    val dictPath = s"$outDir/dictionary"
     val buckets = cfg.buckets
 
     val sorted = chunks
@@ -267,13 +233,47 @@ object IndexBuilder {
       spark.createDataset(rows).write.mode("overwrite").parquet(lineagePath)
     }
     snap.markStageDone("postings")
-    // dictionary from a NARROW re-read: parquet skips the untouched blocks
-    // column entirely, so this scans only (bucket, field, term, df, cf)
+  }
+
+  /** The tail of [[build]] and [[IndexOps.mergeSegments]], run once their
+    * docstats and postings stages are done: write the dictionary unless its
+    * stage is done, take the corpus stats from the docstats table, and
+    * commit the snapshot. The stats are one aggregate job; an empty table
+    * gives nDocs 0 and average lengths 0.
+    *
+    * The dictionary holds the global per-(field, term) df/cf, summed from a
+    * NARROW postings re-read (parquet skips the untouched blocks column) and
+    * sorted by (field, term) so query-time probes prune to O(query terms)
+    * row groups ([[graft.query.DictProbe]]).
+    */
+  private[index] def commit(spark: SparkSession, outDir: String, cfg: IndexConfig,
+                            snap: Snapshot): IndexMeta = {
     if (!snap.stageDone("dictionary")) timed("dictionary") {
-      writeDictionary(spark.read.schema(PostingsSchema).parquet(postingsPath)
-        .select($"bucket", $"field", $"term", $"df", $"cf"), dictPath, cfg)
+      spark.read.schema(PostingsSchema).parquet(s"$outDir/postings")
+        .groupBy(col("bucket"), col("field"), col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+        // coalesce + sort-within (NOT repartitionByRange): probe pruning only
+        // needs tight per-row-group min/max on (field, term), which sorted
+        // files give regardless of which file a term lands in — and this
+        // skips a second exchange plus the range sampling job per build
+        .coalesce(math.max(1, cfg.buckets / 8))
+        .sortWithinPartitions(col("field"), col("term"))
+        .write.mode("overwrite").parquet(s"$outDir/dictionary")
       snap.markStageDone("dictionary")
     }
+    val sums = timed("statsAgg") {
+      spark.read.schema(DocStatsSchema).parquet(s"$outDir/docstats")
+        .agg(count(lit(1)), IndexFields.LengthCols.map(c => coalesce(sum(col(c)), lit(0L))): _*)
+        .collect()(0)
+    }
+    val nDocs = sums.getLong(0)
+    val avgLen = IndexFields.Names.zipWithIndex.map { case (f, i) =>
+      f -> (if (nDocs == 0) 0.0 else sums.getLong(i + 1).toDouble / nDocs)
+    }.toMap
+    val meta = IndexMeta(nDocs = nDocs, avgLen = avgLen,
+      buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
+    snap.commit(meta.toProps + ("fields" -> IndexFields.Names.mkString(",")))
+    meta
   }
 
   /** Stage timing (stderr) — enabled with SPARK_GRAFT_TIMING=1. */
@@ -286,6 +286,10 @@ object IndexBuilder {
     r
   }
 
+  /** Build `docs` into a segment at `outDir` and return its committed meta.
+    * A rerun over the same directory skips the stages an earlier run marked
+    * done; the [[commit]] tail runs every time.
+    */
   def build(spark: SparkSession, docs: Dataset[CodeDoc], outDir: String,
             cfg: IndexConfig = IndexConfig()): IndexMeta = {
     import spark.implicits._
@@ -298,21 +302,9 @@ object IndexBuilder {
     // table (map-side written stats rows — no shuffle at all) and the posting
     // shuffle (map-side pre-encoded BlockChunks). content is decompressed
     // from the columnar cache exactly once, tokenized exactly once. ----
-    val docstatsPath = s"$outDir/docstats"
-    val postingsPath = s"$outDir/postings"
-    val lineagePath = s"$outDir/lineage"
-    val dictPath = s"$outDir/dictionary"
     val saltRange = cfg.saltRange
-    val buckets = cfg.buckets
     val blockSize = cfg.blockSize
     val chunkDocs = cfg.chunkDocs
-
-    // corpus stats ride accumulators out of the fused pass (saves the
-    // commit-time aggregate job when the pass ran this build)
-    val accDocs = spark.sparkContext.longAccumulator("graft.nDocs")
-    val accLenC = spark.sparkContext.longAccumulator("graft.lenContent")
-    val accLenP = spark.sparkContext.longAccumulator("graft.lenPath")
-    val accLenR = spark.sparkContext.longAccumulator("graft.lenRepo")
 
     // the frames this build persists, released once its postings stage is
     // done or a stage throws
@@ -330,8 +322,6 @@ object IndexBuilder {
           val enc = new ChunkEncoder(blockSize, saltRange, chunkDocs)
           it.flatMap { case (docId, sha, repo, path, commit, lang, content) =>
             val (chunks, stats) = enc.addDoc(docId, sha, repo, path, commit, lang, content)
-            accDocs.add(1L); accLenC.add(stats.lenContent)
-            accLenP.add(stats.lenPath); accLenR.add(stats.lenRepo)
             chunks.map(c => BuildEmit(Some(c), None)) ++
               Iterator.single(BuildEmit(None, Some(stats)))
           } ++
@@ -365,7 +355,7 @@ object IndexBuilder {
       // BuildEmit row — measured as most of this stage's CPU). ----
       if (needDocstats) timed("docstats") {
         src.toDF().filter($"stats".isNotNull).select($"stats.*")
-          .write.mode("overwrite").parquet(docstatsPath)
+          .write.mode("overwrite").parquet(s"$outDir/docstats")
         snap.markStageDone("docstats")
       }
 
@@ -384,88 +374,71 @@ object IndexBuilder {
         assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
       }
     } finally persisted.foreach(_.unpersist())
+    commit(spark, outDir, cfg, snap)
+  }
+}
 
-    // resume path: postings were committed by an earlier run, so the cache is
-    // gone -- aggregate from the postings table (column-pruned scan)
-    if (!snap.stageDone("dictionary")) timed("dictionaryResume") {
-      writeDictionary(spark.read.schema(PostingsSchema).parquet(postingsPath)
-        .select($"bucket", $"field", $"term", $"df", $"cf"), dictPath, cfg)
-      snap.markStageDone("dictionary")
-    }
+/** The one posting-block buffer of the build ([[ChunkEncoder]]) and the
+  * merge ([[IndexOps.mergeSegments]]): (docId, tf) postings of one
+  * (field, term), added in increasing docId order and cut into a
+  * delta+FOR-encoded [[BlockChunk]]. Its arrays grow 4 → blockSize by
+  * doubling, so the Zipf tail (df 1–2 per chunk) pays ~4 slots, not 128.
+  */
+private[index] final class BlockBuf(blockSize: Int) {
+  private var docs = new Array[Long](4)
+  private var tfs = new Array[Int](4)
+  private var size = 0
+  private var maxTf = 0
+  private var minQL = Int.MaxValue
+  private var cf = 0L
 
-    // ---- stage: snapshot commit ----
-    // When the docstats write ran, the fused pass computed inside ITS result
-    // stage, where Spark applies accumulator updates exactly once per task
-    // (retries don't double-count result-stage accumulators) — the commit
-    // stats are free. But if cached src partitions were lost and recomputed
-    // during the LATER postings job (a shuffle-map stage, where retries CAN
-    // double-count), the accumulators silently skew BM25's nDocs/avgLen.
-    // Guard: cross-check accDocs against the written docstats row count (a
-    // parquet count(*) is footer-metadata-only — cheap) and fall back to the
-    // full parquet aggregate on any mismatch or on resume paths.
-    val stats: (Long, Long, Long, Long) = timed("statsAgg") {
-      if (needDocstats && accDocs.value > 0 &&
-          spark.read.schema(DocStatsSchema).parquet(docstatsPath).count() == accDocs.value)
-        (accDocs.value, accLenC.value, accLenP.value, accLenR.value)
-      else lengthSums(spark, docstatsPath)
+  /** Postings buffered since the last cut. */
+  def n: Int = size
+
+  /** `ql` is the doc's quantized length, or a lower bound of it: the
+    * block's `minQuantLen` only has to keep WAND upper bounds admissible.
+    */
+  def add(docId: Long, tf: Int, ql: Int): Unit = {
+    if (size == docs.length) {
+      val cap = math.min(blockSize, docs.length * 2)
+      docs = java.util.Arrays.copyOf(docs, cap)
+      tfs = java.util.Arrays.copyOf(tfs, cap)
     }
-    val meta = metaOf(stats, cfg)
-    snap.commit(meta.toProps ++ Map("fields" -> cfg.fields.mkString(",")))
-    meta
+    docs(size) = docId; tfs(size) = tf; size += 1
+    if (tf > maxTf) maxTf = tf
+    if (ql < minQL) minQL = ql
+    cf += tf
+  }
+
+  /** The buffered postings (at least one) as a chunk; empties the buffer. */
+  def cut(fieldId: Int, term: String, salt: Int): BlockChunk = {
+    val c = BlockChunk(fieldId.toByte, term, salt,
+      firstDoc = docs(0), lastDoc = docs(size - 1), n = size,
+      maxTf = maxTf, minQuantLen = minQL, cf = cf,
+      docsDelta = Codec.encodeDocIds(java.util.Arrays.copyOf(docs, size)),
+      tfs = Codec.encodeTfs(java.util.Arrays.copyOf(tfs, size)))
+    size = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L
+    c
   }
 }
 
 /** Map-side pre-encoding combiner. Feed docs in increasing docId order (the
   * natural withDocIds partition order); per (field, term) it accumulates
-  * (docId, tf) in a small growable buffer and emits a finished
-  * delta+varint-encoded [[BlockChunk]] whenever the buffer reaches
-  * `blockSize`. Everything buffered is flushed every `chunkDocs` docs
-  * (bounding memory to the chunk's distinct-term count × a tail buffer) and
-  * at salt boundaries (blocks never span salts). Buffers grow 4 → blockSize
-  * by doubling, so the Zipf tail (df 1–2 per chunk) pays ~4 slots, not 128.
+  * postings in a [[BlockBuf]] and emits a finished [[BlockChunk]] whenever
+  * the buffer reaches `blockSize`. Everything buffered is flushed every
+  * `chunkDocs` docs (bounding memory to the chunk's distinct-term count × a
+  * tail buffer) and at salt boundaries (blocks never span salts).
   */
 final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
-  private val fieldNames = Array("content", "path", "repo")
-
-  private final class Buf {
-    var docs = new Array[Long](4)
-    var tfs = new Array[Int](4)
-    var n = 0
-    var maxTf = 0
-    var minQL = Int.MaxValue
-    var cf = 0L
-    def add(docId: Long, tf: Int, ql: Int): Unit = {
-      if (n == docs.length) {
-        val cap = math.min(blockSize, docs.length * 2)
-        docs = java.util.Arrays.copyOf(docs, cap)
-        tfs = java.util.Arrays.copyOf(tfs, cap)
-      }
-      docs(n) = docId; tfs(n) = tf; n += 1
-      if (tf > maxTf) maxTf = tf
-      if (ql < minQL) minQL = ql
-      cf += tf
-    }
-    def reset(): Unit = { n = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L }
-  }
-
-  private val bufs = Array.fill(3)(mutable.HashMap.empty[String, Buf])
+  private val nFields = IndexFields.Names.length
+  private val bufs = Array.fill(nFields)(mutable.HashMap.empty[String, BlockBuf])
   private var curSalt = -1
   private var docsSinceFlush = 0
 
-  private def cut(fi: Int, term: String, b: Buf): BlockChunk = {
-    val c = BlockChunk(fi.toByte, term, curSalt,
-      firstDoc = b.docs(0), lastDoc = b.docs(b.n - 1), n = b.n,
-      maxTf = b.maxTf, minQuantLen = b.minQL, cf = b.cf,
-      docsDelta = Codec.encodeDocIds(java.util.Arrays.copyOf(b.docs, b.n)),
-      tfs = Codec.encodeTfs(java.util.Arrays.copyOf(b.tfs, b.n)))
-    b.reset()
-    c
-  }
-
   private def flushInto(out: mutable.ArrayBuffer[BlockChunk]): Unit = {
     var fi = 0
-    while (fi < 3) {
-      bufs(fi).foreach { case (term, b) => if (b.n > 0) out += cut(fi, term, b) }
+    while (fi < nFields) {
+      bufs(fi).foreach { case (term, b) => if (b.n > 0) out += b.cut(fi, term, curSalt) }
       bufs(fi).clear()
       fi += 1
     }
@@ -483,19 +456,19 @@ final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
       if (docsSinceFlush > 0) flushInto(out)
       curSalt = salt
     }
-    val fieldVals = Array(content, path, repo)
-    val lens = new Array[Int](3)
+    val fieldVals = Array(content, path, repo) // IndexFields order
+    val lens = new Array[Int](nFields)
     var fi = 0
-    while (fi < 3) {
-      val (len, tfs) = IndexBuilder.termFreqs(fieldNames(fi), fieldVals(fi))
+    while (fi < nFields) {
+      val (len, tfs) = IndexBuilder.termFreqs(IndexFields.Names(fi), fieldVals(fi))
       lens(fi) = len
       val ql = SmallFloat.quantizeLength(len)
       val eit = tfs.entrySet().iterator()
       while (eit.hasNext) {
         val e = eit.next()
-        val b = bufs(fi).getOrElseUpdate(e.getKey, new Buf)
+        val b = bufs(fi).getOrElseUpdate(e.getKey, new BlockBuf(blockSize))
         b.add(docId, e.getValue.intValue, ql)
-        if (b.n == blockSize) out += cut(fi, e.getKey, b)
+        if (b.n == blockSize) out += b.cut(fi, e.getKey, curSalt)
       }
       fi += 1
     }
@@ -519,7 +492,6 @@ final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
   * previous run whenever the key changes.
   */
 final class RunAssembler(buckets: Int) {
-  private val fieldNames = Array("content", "path", "repo")
   private var fieldId: Byte = -1
   private var term: String = _
   private var salt = -1
@@ -529,7 +501,7 @@ final class RunAssembler(buckets: Int) {
   private var maxTf = 0
 
   private def finishRun(): PostingRun = {
-    val run = PostingRun(IndexBuilder.bucketOf(term, buckets), fieldNames(fieldId),
+    val run = PostingRun(IndexBuilder.bucketOf(term, buckets), IndexFields.Names(fieldId),
       term, salt, df, cf, maxTf, blocks.toArray)
     blocks.clear(); df = 0; cf = 0; maxTf = 0
     run

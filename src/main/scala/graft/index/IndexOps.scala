@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.core.{CodeDoc, DocStats, PostingRun}
+import graft.core.{BlockChunk, Codec, CodeDoc, DocStats, IndexFields, PostingRun}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.{FastRankRoaringBitmap, RoaringBitmap}
@@ -99,10 +99,13 @@ object IndexOps {
   /** Q8 in-place upsert: tombstone the replaced keys in the base segment and
     * build the incoming batch as a DELTA segment — a [[graft.query.Searcher]]
     * over (base, delta) then scores exactly like a merged rebuilt index, at
-    * O(incoming) cost. Key resolution is DISTRIBUTED (docstats semi-joined
-    * with the incoming keys; tombstone file written from the DataFrame), so
-    * a bulk backfill never materializes its key set on the driver. Returns
-    * the delta segment's meta.
+    * O(incoming) cost. Only `baseDir` is tombstoned: a key already live in
+    * an earlier delta segment stays live there too, so a searcher over the
+    * base and every delta sees both copies until [[maintain]] (or
+    * [[mergeSegments]]) folds the segments. Key resolution is DISTRIBUTED
+    * (docstats semi-joined with the incoming keys; tombstone file written
+    * from the DataFrame), so a bulk backfill never materializes its key set
+    * on the driver. Returns the delta segment's meta.
     */
   def upsertDelta(spark: SparkSession, baseDir: String, incoming: Dataset[CodeDoc],
                   deltaDir: String, cfg: IndexConfig = IndexConfig()): IndexMeta = {
@@ -127,9 +130,11 @@ object IndexOps {
   /** Segment compaction WITHOUT the raw corpus — the Lucene merge analog.
     * Re-keys every surviving document of the input segments into one dense
     * docId space (segment offsets, tombstones squeezed out), re-encodes
-    * posting blocks map-side from the segments' own posting lists, and runs
-    * the standard chunk-shuffle assembly. At 100 TB this is the compaction
-    * path: merging reads the (compressed) index, never the source table —
+    * posting blocks map-side from the segments' own posting lists through
+    * the build's [[BlockBuf]], and ends like [[IndexBuilder.build]]: the
+    * standard chunk-shuffle assembly, then [[IndexBuilder.commit]]. Stages
+    * resume like a build's. At 100 TB this is the compaction path: merging
+    * reads the (compressed) index, never the source table —
     * deletes become free space, delta segments fold into the base, and BM25
     * stats equal a fresh build over the surviving corpus exactly (tombstoned
     * docs vanish from N, df, cf, and avgLen).
@@ -155,8 +160,6 @@ object IndexOps {
     val offsets = survivors.scanLeft(0L)(_ + _)
     val saltRange = cfg.saltRange
     val blockSize = cfg.blockSize
-    val fieldIdOf: Map[String, Byte] =
-      cfg.fields.zipWithIndex.map { case (f, i) => f -> i.toByte }.toMap
 
     // both stages read each segment's set through one broadcast
     val tombBcs = tombs.map(spark.sparkContext.broadcast(_))
@@ -192,40 +195,31 @@ object IndexOps {
           spark.read.schema(IndexBuilder.PostingsSchema).parquet(s"$d/postings").as[PostingRun]
             .mapPartitions { runs =>
               val ts = rankable(tsB.value)
+              val buf = new BlockBuf(blockSize)
               runs.flatMap { run =>
-                val fid = fieldIdOf(run.field)
-                val out = scala.collection.mutable.ArrayBuffer.empty[graft.core.BlockChunk]
-                val docBuf = new Array[Long](blockSize)
-                val tfBuf = new Array[Int](blockSize)
-                var n = 0; var maxTf = 0; var minQL = Int.MaxValue; var cf = 0L
+                val fid = IndexFields.Names.indexOf(run.field)
+                val out = scala.collection.mutable.ArrayBuffer.empty[BlockChunk]
                 var curSalt = -1
-                def cut(): Unit = if (n > 0) {
-                  out += graft.core.BlockChunk(fid, run.term, curSalt,
-                    docBuf(0), docBuf(n - 1), n, maxTf, minQL, cf,
-                    graft.core.Codec.encodeDocIds(java.util.Arrays.copyOf(docBuf, n)),
-                    graft.core.Codec.encodeTfs(java.util.Arrays.copyOf(tfBuf, n)))
-                  n = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L
-                }
                 run.blocks.foreach { b =>
-                  val ids = graft.core.Codec.decodeDocIds(b.docsDelta, b.n)
-                  val tfs = graft.core.Codec.decodeTfs(b.tfs, b.n)
+                  val ids = Codec.decodeDocIds(b.docsDelta, b.n)
+                  val tfs = Codec.decodeTfs(b.tfs, b.n)
                   var j = 0
                   while (j < b.n) {
                     val old = ids(j)
                     if (!ts.contains(old.toInt)) {
                       val nid = off + old - ts.rankLong(old.toInt)
                       val salt = (nid / saltRange).toInt
-                      if (salt != curSalt) { cut(); curSalt = salt }
-                      docBuf(n) = nid; tfBuf(n) = tfs(j)
-                      if (tfs(j) > maxTf) maxTf = tfs(j)
-                      if (b.minQuantLen < minQL) minQL = b.minQuantLen
-                      cf += tfs(j); n += 1
-                      if (n == blockSize) cut()
+                      if (salt != curSalt) {
+                        if (buf.n > 0) out += buf.cut(fid, run.term, curSalt)
+                        curSalt = salt
+                      }
+                      buf.add(nid, tfs(j), b.minQuantLen)
+                      if (buf.n == blockSize) out += buf.cut(fid, run.term, curSalt)
                     }
                     j += 1
                   }
                 }
-                cut()
+                if (buf.n > 0) out += buf.cut(fid, run.term, curSalt)
                 out
               }
             }
@@ -234,11 +228,7 @@ object IndexOps {
         IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
       }
     } finally tombBcs.foreach(_.destroy())
-
-    // ---- meta + commit ----
-    val meta = IndexBuilder.metaOf(IndexBuilder.lengthSums(spark, s"$outDir/docstats"), cfg)
-    snap.commit(meta.toProps ++ Map("fields" -> cfg.fields.mkString(",")))
-    meta
+    IndexBuilder.commit(spark, outDir, cfg, snap)
   }
 
   /** A task's copy of a tombstone set that ranks in O(log containers):
@@ -389,12 +379,9 @@ object QueryFilter {
       val (pred, neg) = c match {
         case MatchAll => (lit(true), false)
         case ExistsClause(field, n) =>
-          val exists = field match {
-            case "content" => col("lenContent") > 0
-            case "path" => col("lenPath") > 0
-            case "repo" => col("lenRepo") > 0
-            case other => col(other).isNotNull
-          }
+          val fi = IndexFields.Names.indexOf(field)
+          val exists =
+            if (fi >= 0) col(IndexFields.LengthCols(fi)) > 0 else col(field).isNotNull
           (exists, n)
         case TermClause(field, _, n) if PostingsFields(field) =>
           (coalesce(col(marker(i)), lit(false)), n)

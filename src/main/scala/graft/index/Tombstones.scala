@@ -62,17 +62,16 @@ object Tombstones {
   }
 
   /** Committed tombstone count from snapshot properties — free (no data
-    * read); pre-count snapshots fall back to a parquet count. Counts STORED
-    * ROWS: an upper bound on the distinct deletes, within
-    * [[DedupSkipBound]] of them. Readers dedupe the actual ids on load.
+    * read); absent means 0, since every commit that names tombstone files
+    * also writes the count. Counts STORED ROWS: an upper bound on the
+    * distinct deletes, within [[DedupSkipBound]] of them. Readers dedupe the
+    * actual ids on load.
     */
-  def count(spark: SparkSession, indexDir: String): Long = {
-    val props = new Snapshot(indexDir).readProps()
-    props.get("tombstoneCount").map(_.toLong).getOrElse {
-      val fs = files(indexDir)
-      if (fs.isEmpty) 0L else read(spark, fs).count()
-    }
-  }
+  def count(indexDir: String): Long =
+    new Snapshot(indexDir).readProps().get("tombstoneCount").map(_.toLong).getOrElse(0L)
+
+  /** Tombstone count up to which [[exclude]] broadcasts the tombstones. */
+  private val BroadcastMax: Long = 1L << 22
 
   /** Visible tombstones as a DataFrame (docId) — the distributed form. */
   def table(spark: SparkSession, indexDir: String): Option[DataFrame] = {
@@ -90,16 +89,15 @@ object Tombstones {
   }
 
   /** Anti-join `df` (must carry docId) against the visible tombstones.
-    * Broadcasts the tombstone side only while it is small; beyond the
-    * threshold the join strategy is left to AQE (both sides shuffle on
-    * docId — unbounded).
+    * Broadcasts the tombstone side only while it is small; beyond
+    * [[BroadcastMax]] the join strategy is left to AQE (both sides shuffle
+    * on docId — unbounded).
     */
-  def exclude(spark: SparkSession, indexDir: String, df: DataFrame,
-              broadcastMax: Long = 1L << 22): DataFrame =
+  def exclude(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
     table(spark, indexDir) match {
       case None => df
       case Some(ts) =>
-        val side = if (count(spark, indexDir) <= broadcastMax) broadcast(ts) else ts
+        val side = if (count(indexDir) <= BroadcastMax) broadcast(ts) else ts
         df.join(side, Seq("docId"), "left_anti")
     }
 

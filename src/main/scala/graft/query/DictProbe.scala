@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-path dictionary lookup: per-query pushed-filter probes of the
-  * range-partitioned dictionary table, with a resolved-(field, term) -> df
+  * (field, term)-sorted dictionary table, with a resolved-(field, term) -> df
   * cache (negative results cached as 0 so absent terms never re-probe).
   *
-  * The dictionary is written `repartitionByRange(field, term)` +
-  * `sortWithinPartitions` (IndexBuilder), so a probe's `term IN (...)` filter
+  * The dictionary's files are each sorted by (field, term)
+  * (`IndexBuilder.commit`), so a probe's `term IN (...)` filter
   * prunes to O(query terms) parquet row groups via min/max stats — one tiny
   * job per batch of unseen terms, never a vocabulary-sized driver collect.
   * For small vocabularies (below `maxDriverTerms`) the whole table is

@@ -334,7 +334,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 
   require(segmentDirs.nonEmpty, "a searcher needs at least one segment")
 
-  val DefaultFields: Seq[String] = Seq("content", "path", "repo")
+  val DefaultFields: Seq[String] = IndexFields.Names
 
   /** Per-segment state, built lazily and reused across queries. The driver
     * dictionary and run-cache bounds are budgeted across the searcher: each
@@ -380,17 +380,17 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       normBuilds.incrementAndGet()
       spark.sparkContext.broadcast(
         if (resident) loaded.norms
-        else normTable(docstatsDF.select($"docId", $"lenContent", $"lenPath", $"lenRepo")
-          .as[(Long, Int, Int, Int)].collect().iterator))
+        else normTable(docstatsDF.select($"docId", lengthsCol)
+          .as[(Long, Array[Int])].collect().iterator))
     }
 
-    private def normTable(rows: Iterator[(Long, Int, Int, Int)]): NormTable = {
+    /** (docId, field lengths in fieldId order) rows as 1-byte norms. */
+    private def normTable(rows: Iterator[(Long, Array[Int])]): NormTable = {
       val fields = DefaultFields.toArray
       val arrs = fields.map(_ => new Array[Byte](meta.nDocs.toInt))
-      rows.foreach { case (id, lc, lp, lr) =>
-        arrs(0)(id.toInt) = SmallFloat.intToByte4(lc)
-        arrs(1)(id.toInt) = SmallFloat.intToByte4(lp)
-        arrs(2)(id.toInt) = SmallFloat.intToByte4(lr)
+      rows.foreach { case (id, lens) =>
+        var fi = 0
+        while (fi < lens.length) { arrs(fi)(id.toInt) = SmallFloat.intToByte4(lens(fi)); fi += 1 }
       }
       NormTable(fields, arrs)
     }
@@ -419,7 +419,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       val runs = postingsDF.as[PostingRun].collect().groupBy(r => (r.field, r.term))
       val rows = await(stats)
       new Loaded(runs,
-        normTable(rows.iterator.map(r => (r.docId, r.lenContent, r.lenPath, r.lenRepo))),
+        normTable(rows.iterator.map(r => (r.docId, IndexFields.lengths(r)))),
         querySession.createDataFrame(rows.toSeq),
         await(dead))
     }
@@ -833,6 +833,9 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
 }
 
 object Searcher {
+  /** docstats' field lengths as one array column, in fieldId order. */
+  private def lengthsCol = array(IndexFields.LengthCols.map(col): _*)
+
   /** Driver run-cache bound in (field, term) entries per searcher, split
     * evenly across its segments.
     */
@@ -1000,8 +1003,8 @@ object Searcher {
     val docstats = session.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
     val stats = Tombstones.exclude(session, dir,
         fq.foldLeft(docstats)(QueryFilter.filter(_, postings, buckets, _))
-          .select($"docId", $"salt", $"lenContent", $"lenPath", $"lenRepo"))
-      .as[(Long, Int, Int, Int, Int)]
+          .select($"docId", $"salt", lengthsCol))
+      .as[(Long, Int, Array[Int])]
     gatedJob {
       runs.groupByKey(_.salt)
         .cogroup(stats.groupByKey(_._2)) { case (_, runIt, statIt) =>
@@ -1012,13 +1015,7 @@ object Searcher {
             val ids = new mutable.HashMap[Long, Int]()
             arr.indices.foreach(ix => ids.update(arr(ix)._1, ix))
             def ql(fi: Int, d: Long): Int = ids.get(d) match {
-              case Some(ix) =>
-                val len = fi match {
-                  case 0 => arr(ix)._3
-                  case 1 => arr(ix)._4
-                  case _ => arr(ix)._5
-                }
-                SmallFloat.quantizeLength(len)
+              case Some(ix) => SmallFloat.quantizeLength(arr(ix)._3(fi))
               case None => 1 // tombstoned/filtered: excluded below
             }
             score(rs, ql, d => !ids.contains(d))

@@ -51,7 +51,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val dir = tmp("graftalldeleted")
     IndexBuilder.build(spark, docs(0, 120), dir, cfg(true))
     IndexOps.deleteByQueryInPlace(spark, dir, "*:*")
-    assert(Tombstones.count(spark, dir) == 120)
+    assert(Tombstones.count(dir) == 120)
     val out = tmp("graftalldeletedmerged")
     val merged = IndexOps.maintain(spark, dir, Nil, out, cfg(true))
     assert(merged.nonEmpty, "every document is deleted, so the policy compacts")
@@ -65,7 +65,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val expect = Seq("buffer", "def class return").map(q => before.search(q, 10).toSeq)
     val delta = tmp("graftemptyupsertdelta")
     assertEmpty(IndexOps.upsertDelta(spark, base, noDocs, delta, cfg(true)), delta, "delta")
-    assert(Tombstones.count(spark, base) == 0)
+    assert(Tombstones.count(base) == 0)
     val both = new Searcher(spark, Seq(base, delta))
     assert(Seq("buffer", "def class return").map(q => both.search(q, 10).toSeq) == expect)
     // the empty delta folds away

@@ -117,6 +117,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("probe-path dictionary (DictionaryMaxDriverTerms=0): identical answers, no full collect") {
+    meta // force the index build: the searcher reads its snapshot on open
     // vocabulary must never reach the driver
     val forced = new Searcher(spark, Seq(tmp), SearchConfig(dictionaryMaxDriverTerms = 0))
     val queries = Seq("buffer", "binary search tree implementation",

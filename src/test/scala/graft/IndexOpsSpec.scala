@@ -48,12 +48,12 @@ class IndexOpsSpec extends AnyFunSuite {
     // the upsert-heavy history that used to inflate the routing property
     // (VERDICT r4 nit)
     Tombstones.commitDeletes(spark, dir, Seq(1L, 2L, 3L, 3L), dedupSkipBound = 0L)
-    assert(Tombstones.count(spark, dir) == 3)
+    assert(Tombstones.count(dir) == 3)
     Tombstones.commitDeletes(spark, dir, Seq(2L, 3L, 4L), dedupSkipBound = 0L)
-    assert(Tombstones.count(spark, dir) == 4, "re-deletes must not inflate the count")
+    assert(Tombstones.count(dir) == 4, "re-deletes must not inflate the count")
     // distributed form overlapping everything so far
     Tombstones.commitDeletesDF(spark, dir, Seq(3L, 4L, 5L).toDF("docId"), dedupSkipBound = 0L)
-    assert(Tombstones.count(spark, dir) == 5)
+    assert(Tombstones.count(dir) == 5)
     assert(Tombstones.docSet(spark, dir).toArray.toSeq == Seq(1, 2, 3, 4, 5))
     // raw file rows (NOT deduped on read): one stored row per deleted id
     val raw = spark.read.parquet(Tombstones.files(dir): _*).count()
@@ -69,7 +69,7 @@ class IndexOpsSpec extends AnyFunSuite {
     // count = stored rows (the honest reader cost), never the anti-join
     Tombstones.commitDeletes(spark, dir, Seq(1L, 2L, 3L))
     Tombstones.commitDeletes(spark, dir, Seq(2L, 3L, 4L))
-    assert(Tombstones.count(spark, dir) == 6, "skip regime counts stored rows")
+    assert(Tombstones.count(dir) == 6, "skip regime counts stored rows")
     assert(spark.read.parquet(Tombstones.files(dir): _*).count() == 6)
     // reader surfaces are dedup-exact regardless of storage duplicates
     assert(Tombstones.docSet(spark, dir).toArray.toSeq == Seq(1, 2, 3, 4))
@@ -89,7 +89,7 @@ class IndexOpsSpec extends AnyFunSuite {
       IndexOps.deleteInPlace(spark, dir, victims)
     }
     assert(jobs == 3, s"deleteInPlace of 10 keys ran $jobs Spark jobs")
-    assert(graft.index.Tombstones.count(spark, dir) == 10)
+    assert(graft.index.Tombstones.count(dir) == 10)
     val written = graft.index.Tombstones.files(dir).flatMap(f =>
       new java.io.File(f).listFiles().filter(_.getName.endsWith(".parquet")))
     assert(written.length == 1, s"a small delete wrote ${written.length} files")
@@ -128,6 +128,26 @@ class IndexOpsSpec extends AnyFunSuite {
       val left = docIdBroadcasts() -- before
       assert(left.isEmpty, s"the merge left its tombstone broadcasts: $left")
     }
+  }
+
+  test("a merge resumed before its dictionary stage commits the clean merge's dictionary") {
+    meta
+    val dir = java.nio.file.Files.createTempDirectory("graftmergeres").toString
+    IndexBuilder.build(spark, docs, dir, cfg)
+    IndexOps.deleteByQueryInPlace(spark, dir, "repo:repo-0005")
+    val out = java.nio.file.Files.createTempDirectory("graftmergeresO").toString
+    val clean = IndexOps.mergeSegments(spark, Seq(dir), out, cfg)
+    def dictRows(): Set[graft.core.DictEntry] =
+      spark.read.schema(IndexBuilder.DictionarySchema).parquet(s"$out/dictionary")
+        .as[graft.core.DictEntry].collect().toSet
+    val cleanDict = dictRows()
+    assert(cleanDict.nonEmpty)
+    // a merge killed after its postings marker, before its dictionary marker
+    new scala.reflect.io.Directory(new java.io.File(s"$out/dictionary")).deleteRecursively()
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out, "_build", "stage.dictionary.done"))
+    val resumed = IndexOps.mergeSegments(spark, Seq(dir), out, cfg)
+    assert(resumed == clean)
+    assert(dictRows() == cleanDict, "the resumed merge must write the same dictionary")
   }
 
   test("hit count + facet over query results (A2/Q6)") {
@@ -214,7 +234,7 @@ class IndexOpsSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("repo") === repo).count()
     assert(nRepo > 0)
     IndexOps.deleteByQueryInPlace(spark, dir, s"repo:$repo")
-    assert(graft.index.Tombstones.count(spark, dir) == nRepo,
+    assert(graft.index.Tombstones.count(dir) == nRepo,
       "snapshot carries the committed tombstone count")
 
     // broadcast-regime searcher (the tombstones ride the kernel as a DocSet)
@@ -260,7 +280,7 @@ class IndexOpsSpec extends AnyFunSuite {
     val merged = IndexOps.maintain(spark, dir, Nil, out, cfg)
     assert(merged.nonEmpty, "30% tombstones must trigger compaction")
     assert(merged.get.nDocs == live, "merged segment holds exactly the survivors")
-    assert(graft.index.Tombstones.count(spark, out) == 0 &&
+    assert(graft.index.Tombstones.count(out) == 0 &&
       graft.index.Tombstones.files(out).isEmpty, "compaction squeezes tombstones out")
 
     // compaction updates BM25 stats to the survivor set (like a Lucene

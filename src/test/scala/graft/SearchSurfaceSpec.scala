@@ -1,11 +1,13 @@
 package graft
 
+import graft.index.IndexConfig
 import graft.query.{SearchConfig, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The search API's surface: every public `search*` entry point goes through
   * one router, and every `SearchConfig` field is a route bound that specs
-  * force. A new overload or knob has to change this gate on purpose.
+  * force. The build's `IndexConfig` is pinned the same way. A new overload
+  * or knob has to change this gate on purpose.
   */
 class SearchSurfaceSpec extends AnyFunSuite {
 
@@ -28,5 +30,10 @@ class SearchSurfaceSpec extends AnyFunSuite {
     assert(SearchConfig().productElementNames.toSeq == Seq(
       "driverKernelMaxPostings", "normsMaxDocs", "dictionaryMaxDriverTerms",
       "dictionaryMaxCacheTerms"))
+  }
+
+  test("IndexConfig has exactly its six build knobs") {
+    assert(IndexConfig().productElementNames.toSeq == Seq(
+      "buckets", "blockSize", "saltRange", "shufflePartitions", "chunkDocs", "bucketDirs"))
   }
 }
