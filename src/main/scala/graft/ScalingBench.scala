@@ -210,8 +210,7 @@ object ScalingBench {
         CodeCorpus.generate(spark, nDocs, nRepos = 100, partitions = 64)
           .write.mode("overwrite").parquet(src)
         IndexBuilder.build(spark, spark.read.parquet(src).as[graft.core.CodeDoc], idxDir,
-          IndexConfig(buckets = 64, saltRange = 8192, shufflePartitions = 64,
-            bucketDirs = true))
+          IndexConfig(buckets = 64, saltRange = 8192, shufflePartitions = 64))
         import scala.reflect.io.Directory
         new Directory(new java.io.File(src)).deleteRecursively()
       } finally spark.stop()

@@ -37,8 +37,7 @@ object SparkEntry {
       if (dir.exists()) { import scala.reflect.io.Directory; new Directory(dir).deleteRecursively() }
       IndexBuilder.build(spark, documentsAsCode(spark, sfDir), out,
         IndexConfig(buckets = 32, saltRange = 1L << 14,
-          shufflePartitions = spark.sparkContext.defaultParallelism,
-          bucketDirs = true)) // query-serving index: directory pruning on
+          shufflePartitions = spark.sparkContext.defaultParallelism))
       out
     })
   }

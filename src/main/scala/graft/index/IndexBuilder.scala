@@ -27,13 +27,13 @@ case class IndexConfig(
       * head-term strings over more postings (measured +15% build throughput
       * 4096 -> 16384 at 400k docs); shrink if executor memory is tight. */
     chunkDocs: Int = 16384,
-    /** Write postings under bucket=N partition directories. Query side prunes
-      * whole directories per term (footer IO ∝ query terms, not corpus) and
-      * reads either layout transparently (bucket is a partition column here,
-      * a data column otherwise). Costs ~3ms/file × shufflePartitions×buckets
-      * at write time — amortized at cluster scale where buckets are GB-sized,
-      * dominant for small fast builds. Turn on for query-serving indexes,
-      * off for build-throughput paths.
+    /** Ignored: the postings layout follows the segment's size
+      * ([[IndexBuilder.assembleAndWritePostings]]), not this flag. Bucket
+      * directories let a query open only its terms' buckets' files, but cost
+      * ~3 ms per file at write time and a file per (shuffle partition,
+      * bucket), so a segment a default searcher loads whole is written flat
+      * and only a larger one under `bucket=N` directories. Kept so callers
+      * that still pass it, the benchmark harness among them, compile.
       */
     bucketDirs: Boolean = false)
 
@@ -44,7 +44,8 @@ case class IndexConfig(
   *        -> repartition(bucket, field, salt) -> sortWithinPartitions
   *        -> mapPartitions streaming block encoder -> posting runs (parquet)
   *           + lineage rows
-  *        -> [[commit]]: dictionary (global df/cf) -> stats -> snapshot
+  *        (the layout by the corpus stats, [[statsMeta]], taken first)
+  *        -> [[commit]]: dictionary (global df/cf) -> snapshot
   *
   * [[IndexOps.mergeSegments]] is the same pipeline fed from segments: its
   * chunks come out of the same [[BlockBuf]], and it ends in the same
@@ -52,7 +53,9 @@ case class IndexConfig(
   *
   * Layout under `outDir`:
   *   docstats/    (docId, repo, path, commit, lang, sha, salt, len*)
-  *   postings/    [[PostingRun]] rows, (field,term)-sorted within files
+  *   postings/    [[PostingRun]] rows, (field,term)-sorted within files:
+  *                flat, or under bucket=N directories past the residency
+  *                bound ([[assembleAndWritePostings]])
   *   dictionary/  (bucket, field, term, df, cf)
   *   lineage/     [[LineageRow]] per build partition
   *   snapshots/, SNAPSHOT — snaptable commit ([[Snapshot]])
@@ -64,8 +67,10 @@ case class IndexConfig(
   *    stages recompute it instead of joining back — resume never needs the
   *    raw corpus co-shuffled with committed stages.
   *  - postings land term-major inside files (parquet row-group min/max stats
-  *    prune term lookups) under bucket=N directories (hash(term) directory
-  *    pruning: a query only opens the footers of its terms' buckets).
+  *    prune term lookups). A segment past the residency bound lands under
+  *    bucket=N directories (hash(term) directory pruning: a query only opens
+  *    the footers of its terms' buckets); a smaller one, which a searcher
+  *    loads whole, lands flat in one file per shuffle partition.
   */
 object IndexBuilder {
 
@@ -109,6 +114,7 @@ object IndexBuilder {
     persisted += parted
     val counts = parted.groupBy(spark_partition_id().as("pid")).count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    IndexMeta.requireDocIdRange(counts.iterator.map(_._2).sum, "build")
     var acc = 0L
     val offsets: Map[Int, Long] = counts.map { case (pid, n) =>
       val entry = pid -> acc; acc += n; entry
@@ -151,16 +157,29 @@ object IndexBuilder {
   /** The reduce side of the posting build, shared by [[build]] and
     * [[IndexOps.mergeSegments]]: shuffle pre-encoded [[BlockChunk]]s by
     * (term, fieldId, salt), assemble runs, write postings + lineage, mark
-    * the postings stage. Lineage rows (ONE per partition) ride an
-    * accumulator out of the same pass that writes the postings — no caching
-    * of the run dataset. (Round 2 first persisted the runs to serve lineage
+    * the postings stage.
+    *
+    * The layout follows the segment's size, known from `meta` before the
+    * write (Lucene's compound-file rule, `noCFSRatio`, likewise sizes a
+    * segment's files by its bytes). A segment whose
+    * [[IndexMeta.residentBound]] fits [[IndexMeta.DriverKernelMaxPostings]]
+    * is written FLAT, one file per shuffle partition with `bucket` a data
+    * column: a default searcher loads it whole on its first query, so
+    * per-term directory pruning would never run on it, and each of the
+    * `buckets` × partitions files a bucketed write leaves costs ~3 ms to
+    * write and to list. A larger segment is written under `bucket=N`
+    * directories, so a term lookup opens only its buckets' files. Readers
+    * read both layouts.
+    *
+    * Lineage rows (ONE per partition) ride an accumulator out of the same
+    * pass that writes the postings — no caching of the run dataset. (Round 2 first persisted the runs to serve lineage
     * + dictionary; the columnar cache of the block binaries cost more CPU to
     * build and re-scan — measured 65s at 400k docs/16 cores — than it
     * saved.) Task retries can add duplicate rows; the driver dedupes by pid.
     */
   private[index] def assembleAndWritePostings(
       spark: SparkSession, chunks: DataFrame, outDir: String,
-      cfg: IndexConfig, snap: Snapshot): Unit = {
+      cfg: IndexConfig, snap: Snapshot, meta: IndexMeta): Unit = {
     import spark.implicits._
     val postingsPath = s"$outDir/postings"
     val lineagePath = s"$outDir/lineage"
@@ -218,13 +237,13 @@ object IndexBuilder {
           }
       }
 
-    // bucketDirs: term lookups prune whole directories (a q-term query
-    // opens <= q/buckets of the files' footers — file-level pruning on top
-    // of the term-major row-group stats); see IndexConfig.bucketDirs for
-    // the write-cost tradeoff.
+    // bucketed: term lookups prune whole directories (a q-term query opens
+    // <= q/buckets of the files' footers — file-level pruning on top of the
+    // term-major row-group stats)
+    val flat = meta.residentBound <= IndexMeta.DriverKernelMaxPostings
     timed("postWrite") {
       val w = runs.write.mode("overwrite")
-      (if (cfg.bucketDirs) w.partitionBy("bucket") else w).parquet(postingsPath)
+      (if (flat) w else w.partitionBy("bucket")).parquet(postingsPath)
     }
     timed("lineageWrite") {
       import scala.jdk.CollectionConverters._
@@ -235,32 +254,13 @@ object IndexBuilder {
     snap.markStageDone("postings")
   }
 
-  /** The tail of [[build]] and [[IndexOps.mergeSegments]], run once their
-    * docstats and postings stages are done: write the dictionary unless its
-    * stage is done, take the corpus stats from the docstats table, and
-    * commit the snapshot. The stats are one aggregate job; an empty table
-    * gives nDocs 0 and average lengths 0.
-    *
-    * The dictionary holds the global per-(field, term) df/cf, summed from a
-    * NARROW postings re-read (parquet skips the untouched blocks column) and
-    * sorted by (field, term) so query-time probes prune to O(query terms)
-    * row groups ([[graft.query.DictProbe]]).
+  /** The segment's meta from its docstats table, taken by [[build]] and
+    * [[IndexOps.mergeSegments]] once their docstats stage is done and before
+    * the postings stage, whose layout it sizes; [[commit]] then commits it.
+    * One aggregate job; an empty table gives nDocs 0 and average lengths 0.
     */
-  private[index] def commit(spark: SparkSession, outDir: String, cfg: IndexConfig,
-                            snap: Snapshot): IndexMeta = {
-    if (!snap.stageDone("dictionary")) timed("dictionary") {
-      spark.read.schema(PostingsSchema).parquet(s"$outDir/postings")
-        .groupBy(col("bucket"), col("field"), col("term"))
-        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-        // coalesce + sort-within (NOT repartitionByRange): probe pruning only
-        // needs tight per-row-group min/max on (field, term), which sorted
-        // files give regardless of which file a term lands in — and this
-        // skips a second exchange plus the range sampling job per build
-        .coalesce(math.max(1, cfg.buckets / 8))
-        .sortWithinPartitions(col("field"), col("term"))
-        .write.mode("overwrite").parquet(s"$outDir/dictionary")
-      snap.markStageDone("dictionary")
-    }
+  private[index] def statsMeta(spark: SparkSession, outDir: String,
+                               cfg: IndexConfig): IndexMeta = {
     val sums = timed("statsAgg") {
       spark.read.schema(DocStatsSchema).parquet(s"$outDir/docstats")
         .agg(count(lit(1)), IndexFields.LengthCols.map(c => coalesce(sum(col(c)), lit(0L))): _*)
@@ -270,8 +270,34 @@ object IndexBuilder {
     val avgLen = IndexFields.Names.zipWithIndex.map { case (f, i) =>
       f -> (if (nDocs == 0) 0.0 else sums.getLong(i + 1).toDouble / nDocs)
     }.toMap
-    val meta = IndexMeta(nDocs = nDocs, avgLen = avgLen,
+    IndexMeta(nDocs = nDocs, avgLen = avgLen,
       buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
+  }
+
+  /** The tail of [[build]] and [[IndexOps.mergeSegments]], run once their
+    * docstats and postings stages are done: write the dictionary unless its
+    * stage is done and commit the snapshot of `meta` ([[statsMeta]]).
+    *
+    * The dictionary holds the global per-(field, term) df/cf, summed from a
+    * NARROW postings re-read (parquet skips the untouched blocks column) and
+    * sorted by (field, term) so query-time probes prune to O(query terms)
+    * row groups ([[graft.query.DictProbe]]).
+    */
+  private[index] def commit(spark: SparkSession, outDir: String, snap: Snapshot,
+                            meta: IndexMeta): IndexMeta = {
+    if (!snap.stageDone("dictionary")) timed("dictionary") {
+      spark.read.schema(PostingsSchema).parquet(s"$outDir/postings")
+        .groupBy(col("bucket"), col("field"), col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+        // coalesce + sort-within (NOT repartitionByRange): probe pruning only
+        // needs tight per-row-group min/max on (field, term), which sorted
+        // files give regardless of which file a term lands in — and this
+        // skips a second exchange plus the range sampling job per build
+        .coalesce(math.max(1, meta.buckets / 8))
+        .sortWithinPartitions(col("field"), col("term"))
+        .write.mode("overwrite").parquet(s"$outDir/dictionary")
+      snap.markStageDone("dictionary")
+    }
     snap.commit(meta.toProps + ("fields" -> IndexFields.Names.mkString(",")))
     meta
   }
@@ -288,7 +314,8 @@ object IndexBuilder {
 
   /** Build `docs` into a segment at `outDir` and return its committed meta.
     * A rerun over the same directory skips the stages an earlier run marked
-    * done; the [[commit]] tail runs every time.
+    * done; [[statsMeta]] and the [[commit]] tail run every time. Refuses
+    * more than [[IndexMeta.MaxDocs]] documents at its docIds stage.
     */
   def build(spark: SparkSession, docs: Dataset[CodeDoc], outDir: String,
             cfg: IndexConfig = IndexConfig()): IndexMeta = {
@@ -309,7 +336,7 @@ object IndexBuilder {
     // the frames this build persists, released once its postings stage is
     // done or a stage throws
     val persisted = mutable.ArrayBuffer.empty[Dataset[_]]
-    try {
+    val meta = try {
       val withIds: DataFrame =
         if (needDocstats || needPostings)
           timed("docIds")(withDocIds(spark, docs, cfg.shufflePartitions, persisted))
@@ -358,6 +385,7 @@ object IndexBuilder {
           .write.mode("overwrite").parquet(s"$outDir/docstats")
         snap.markStageDone("docstats")
       }
+      val meta = statsMeta(spark, outDir, cfg)
 
       // ---- stage: posting runs + per-partition lineage ----
       //
@@ -371,10 +399,11 @@ object IndexBuilder {
       if (needPostings) timed("postings") {
         // `chunk.*` select (not flatMap): prunes the stats columns from the scan
         val chunks = src.toDF().filter($"chunk".isNotNull).select($"chunk.*")
-        assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
+        assembleAndWritePostings(spark, chunks, outDir, cfg, snap, meta)
       }
+      meta
     } finally persisted.foreach(_.unpersist())
-    commit(spark, outDir, cfg, snap)
+    commit(spark, outDir, snap, meta)
   }
 }
 

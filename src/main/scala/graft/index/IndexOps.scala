@@ -132,8 +132,10 @@ object IndexOps {
     * docId space (segment offsets, tombstones squeezed out), re-encodes
     * posting blocks map-side from the segments' own posting lists through
     * the build's [[BlockBuf]], and ends like [[IndexBuilder.build]]: the
-    * standard chunk-shuffle assembly, then [[IndexBuilder.commit]]. Stages
-    * resume like a build's. At 100 TB this is the compaction path: merging
+    * corpus stats ([[IndexBuilder.statsMeta]]), the standard chunk-shuffle
+    * assembly, then [[IndexBuilder.commit]]. Stages resume like a build's.
+    * Refuses more than [[IndexMeta.MaxDocs]] surviving documents before
+    * any stage runs. At 100 TB this is the compaction path: merging
     * reads the (compressed) index, never the source table —
     * deletes become free space, delta segments fold into the base, and BM25
     * stats equal a fresh build over the surviving corpus exactly (tombstoned
@@ -157,13 +159,14 @@ object IndexOps {
     val metas = segmentDirs.map(d => IndexMeta.fromProps(new Snapshot(d).readProps()))
     val tombs = segmentDirs.map(d => Tombstones.docSet(spark, d))
     val survivors = metas.zip(tombs).map { case (m, t) => m.nDocs - t.getLongCardinality }
+    IndexMeta.requireDocIdRange(survivors.sum, s"merge into $outDir")
     val offsets = survivors.scanLeft(0L)(_ + _)
     val saltRange = cfg.saltRange
     val blockSize = cfg.blockSize
 
     // both stages read each segment's set through one broadcast
     val tombBcs = tombs.map(spark.sparkContext.broadcast(_))
-    try {
+    val meta = try {
       // ---- docstats: re-key + drop tombstoned, one map pass per segment ----
       if (!snap.stageDone("docstats")) {
         val parts = segmentDirs.zipWithIndex.map { case (d, i) =>
@@ -185,6 +188,7 @@ object IndexOps {
           .write.mode("overwrite").parquet(s"$outDir/docstats")
         snap.markStageDone("docstats")
       }
+      val meta = IndexBuilder.statsMeta(spark, outDir, cfg)
 
       // ---- postings: decode -> drop -> re-key -> re-encode chunks map-side,
       // then the shared chunk-shuffle assembly ----
@@ -225,10 +229,11 @@ object IndexOps {
             }
         }
         val chunks = chunkParts.map(_.toDF()).reduce(_ unionByName _)
-        IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
+        IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap, meta)
       }
+      meta
     } finally tombBcs.foreach(_.destroy())
-    IndexBuilder.commit(spark, outDir, cfg, snap)
+    IndexBuilder.commit(spark, outDir, snap, meta)
   }
 
   /** A task's copy of a tombstone set that ranks in O(log containers):

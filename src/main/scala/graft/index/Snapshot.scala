@@ -99,9 +99,50 @@ case class IndexMeta(
     "saltRange" -> saltRange.toString,
     "blockSize" -> blockSize.toString) ++
     avgLen.map { case (f, v) => s"avgLen.$f" -> v.toString }
+
+  /** An upper bound on the segment's postings, free from its snapshot props:
+    * a document posts each distinct (field, term) once, so the segment's
+    * summed field lengths (nDocs × Σ avgLen, each field's token total
+    * recovered exactly as in [[graft.query.Searcher.mergeAvgLen]]) bound its
+    * postings — and its vocabulary, which is never larger than its postings.
+    * 0 when empty.
+    */
+  def postingsBound: Long = avgLen.valuesIterator.map(a => Math.round(a * nDocs)).sum
+
+  /** The rows a resident segment holds on the driver: its postings bound
+    * plus one docstats row per document. Residency needs this to fit the
+    * segment's share of `driverKernelMaxPostings`
+    * ([[graft.query.SearchConfig]]); the builder writes a segment whose bound
+    * fits [[IndexMeta.DriverKernelMaxPostings]] with flat postings.
+    */
+  def residentBound: Long = postingsBound + nDocs
 }
 
 object IndexMeta {
+  /** The default `driverKernelMaxPostings` ([[graft.query.SearchConfig]]):
+    * the postings a driver kernel may hold. A segment whose
+    * [[IndexMeta.residentBound]] fits it is resident in a default
+    * one-segment searcher, which loads its postings whole, so the builder
+    * writes such a segment flat ([[IndexBuilder.assembleAndWritePostings]]).
+    */
+  val DriverKernelMaxPostings: Long = 4L << 20
+
+  /** The most documents a segment holds. Local docIds are Ints (norm
+    * tables are byte arrays indexed by docId, [[DocSet]]s are 32-bit
+    * bitmaps), and like Lucene's `IndexWriter.MAX_DOCS` the limit stays
+    * 128 below `Int.MaxValue`, under the JVM's largest array.
+    */
+  val MaxDocs: Long = Int.MaxValue - 128L
+
+  /** Refuse a segment of `nDocs` documents past [[MaxDocs]]; `what` names
+    * the segment or the operation in the message.
+    */
+  def requireDocIdRange(nDocs: Long, what: String): Unit =
+    require(nDocs <= MaxDocs,
+      s"$what: $nDocs documents exceed the segment limit of $MaxDocs " +
+        "(Int.MaxValue - 128: local docIds are Ints); split the input into " +
+        "more segments")
+
   /** Raised when a snapshot's persisted posting format does not match this
     * engine build — the loud-refusal half of the format-versioning fix
     * (VERDICT r6 what's-wrong #1; reference anchor: `luceneMatchVersion`,

@@ -227,7 +227,7 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *    on executors instead of collecting its runs to the driver kernel, so
   *    a batch's driver memory is bounded by the batch. The bound, split evenly
   *    across segments, also decides RESIDENCY: a non-empty segment in the
-  *    broadcast regime whose [[Searcher.residentBound]] (its postings bound
+  *    broadcast regime whose [[IndexMeta.residentBound]] (its postings bound
   *    nDocs × Σ avgLen plus nDocs docstats rows, free from its snapshot
   *    props) fits its share is loaded to the driver on first use: its
   *    postings, docstats rows and tombstones, by concurrent jobs. Its dfs,
@@ -249,7 +249,7 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *    split evenly across segments.
   */
 case class SearchConfig(
-    driverKernelMaxPostings: Long = 4L << 20,
+    driverKernelMaxPostings: Long = IndexMeta.DriverKernelMaxPostings,
     normsMaxDocs: Long = 1L << 31,
     dictionaryMaxDriverTerms: Long = 1L << 22,
     dictionaryMaxCacheTerms: Int = 1 << 20)
@@ -347,11 +347,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     val broadcastRegime: Boolean = meta.nDocs <= config.normsMaxDocs
 
     /** Served from driver memory ([[SearchConfig]]): a non-empty
-      * broadcast-regime segment whose [[Searcher.residentBound]] fits its
+      * broadcast-regime segment whose [[IndexMeta.residentBound]] fits its
       * share of `driverKernelMaxPostings`.
       */
     val resident: Boolean = meta.nDocs > 0 && broadcastRegime &&
-      residentBound(meta) <= config.driverKernelMaxPostings / segmentDirs.size
+      meta.residentBound <= config.driverKernelMaxPostings / segmentDirs.size
 
     // the postings bound also bounds the vocabulary, so a small segment's
     // dictionary is collected without a count job first; a resident one's
@@ -359,7 +359,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     val dict = new DictProbe(spark, s"$dir/dictionary",
       config.dictionaryMaxDriverTerms / segmentDirs.size,
       math.max(1, config.dictionaryMaxCacheTerms / segmentDirs.size),
-      vocabBound = postingsBound(meta),
+      vocabBound = meta.postingsBound,
       loaded = if (resident) Some(() => residentDfs) else None)
 
     /** Tombstoned docIds broadcast once as a [[DocSet]]; kernels skip its
@@ -406,7 +406,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     /** A resident segment's tables, loaded on first use (counted in
       * `driverRunFetches`): the docstats and tombstone scans run as jobs
       * concurrent with the postings collect, so the load takes about one
-      * job's latency. At most [[Searcher.residentBound]] rows; held by this
+      * job's latency. At most [[IndexMeta.residentBound]] rows; held by this
       * searcher only, so it dies with it.
       */
     private lazy val loaded: Loaded = {
@@ -456,8 +456,9 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
                      batch: Boolean = false): Dataset[PostingRun] = {
       val termList = keys.map(_._2).toSeq
       val fieldList = keys.map(_._1).toSeq
-      // bucket prunes PARTITION DIRECTORIES (only the terms' buckets are even
-      // listed); term/field prune row groups inside the surviving files
+      // on a bucketed segment, bucket prunes PARTITION DIRECTORIES (only the
+      // terms' buckets are even listed); term/field prune row groups inside
+      // the surviving files
       val bucketList = termList.map(b => IndexBuilder.bucketOf(b, meta.buckets)).distinct
       (if (batch) batchPostingsDF else postingsDF)
         .filter($"bucket".isin(bucketList: _*) &&
@@ -504,6 +505,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     var offset = 0L
     segmentDirs.zipWithIndex.map { case (dir, i) =>
       val meta = IndexMeta.fromProps(new Snapshot(dir).readProps())
+      IndexMeta.requireDocIdRange(meta.nDocs, s"segment $dir")
       val seg = new Segment(i, dir, meta, offset)
       offset += meta.nDocs
       seg
@@ -521,6 +523,12 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     require(segments.size == 1, s"meta is per segment; this searcher has ${segments.size}")
     segments.head.meta
   }
+
+  /** Segment `i`'s per-term postings fetch of `keys`, not run: its scan
+    * shows the bucket pruning a per-term fetch gets (SchemaGuardSpec).
+    */
+  private[graft] def termFetch(i: Int, keys: Set[(String, String)]): Dataset[PostingRun] =
+    segments(i).filteredRuns(keys)
 
   /** Norm-table builds: at most one docstats collect per segment. */
   private[graft] val normBuilds = new AtomicLong(0)
@@ -892,21 +900,6 @@ object Searcher {
     if (perSegment.size == 1) perSegment.head
     else keys.iterator.map(key => key -> perSegment.iterator.map(_.getOrElse(key, 0L)).sum)
       .filter(_._2 > 0).toMap
-
-  /** An upper bound on a segment's postings, free from its snapshot props:
-    * a document posts each distinct (field, term) once, so the segment's
-    * summed field lengths (nDocs × Σ avgLen, each field's token total
-    * recovered exactly as in [[mergeAvgLen]]) bound its postings — and its
-    * vocabulary, which is never larger than its postings. 0 when empty.
-    */
-  private[graft] def postingsBound(meta: IndexMeta): Long =
-    meta.avgLen.valuesIterator.map(a => Math.round(a * meta.nDocs)).sum
-
-  /** The rows a resident segment holds on the driver: its postings bound
-    * plus one docstats row per document. Residency needs this to fit the
-    * segment's share of `driverKernelMaxPostings` ([[SearchConfig]]).
-    */
-  private[graft] def residentBound(meta: IndexMeta): Long = postingsBound(meta) + meta.nDocs
 
   /** Exact global average field lengths: each segment's integer length sum
     * is recovered as round(avgLen · nDocs) — exact while sums stay below

@@ -20,7 +20,7 @@ class BatchSearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   val cfg: IndexConfig = IndexConfig(buckets = 16, blockSize = 64,
-    saltRange = 400, shufflePartitions = 8, bucketDirs = true)
+    saltRange = 400, shufflePartitions = 8)
 
   lazy val tmp: String = {
     val d = java.nio.file.Files.createTempDirectory("graftbatch").toString
@@ -196,7 +196,7 @@ class BatchSearchSpec extends AnyFunSuite {
     val bound = postings.map(_._2).max
     val union = probe.dfOf(postings.flatMap(_._1).toSet).values.sum
     assert(union > bound, s"the union's $union postings fit the bound $bound")
-    assert(Searcher.residentBound(probe.meta) > bound)
+    assert(probe.meta.residentBound > bound)
     probe.close()
     val s = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = bound))
     assert(s.residentSegments.isEmpty)
@@ -204,6 +204,25 @@ class BatchSearchSpec extends AnyFunSuite {
     assert(s.driverRunFetches.get() == 0, "the batch collected runs to the driver")
     assertSame(batched, batch.map(q => s.search(q, 10)), "bounded batch")
     assert(s.driverRunFetches.get() > 0, "each query alone fits the driver kernel")
+    s.close()
+  }
+
+  test("the batch kernel keeps its floor of 4x defaultParallelism tasks") {
+    // the throughput session floors the post-shuffle coalesce at 4x the
+    // default parallelism (spark.sql.adaptive.coalescePartitions.minPartitionNum,
+    // deprecated in Spark); without it AQE coalesces to one wave of
+    // defaultParallelism tasks. An index with more salt groups than the
+    // floor and a batch over its head terms lets the floor bind.
+    val p = spark.sparkContext.defaultParallelism
+    val d = java.nio.file.Files.createTempDirectory("graftbatchfloor").toString
+    val meta = IndexBuilder.build(spark,
+      CodeCorpus.generate(spark, 1600, nRepos = 20, partitions = 8), d, cfg.copy(saltRange = 25))
+    val saltGroups = (meta.nDocs + meta.saltRange - 1) / meta.saltRange
+    assert(saltGroups >= 4 * p, s"$saltGroups salt groups")
+    val s = new Searcher(spark, Seq(d), SearchConfig(driverKernelMaxPostings = 0))
+    val queries = CodeCorpus.Vocab.take(120).grouped(2).map(_.mkString(" ")).toSeq
+    val tasks = SparkJobs.lastStageTasks(spark, "graft-batch-floor")(s.searchMany(queries, 10))
+    assert(tasks >= 4 * p, s"the batch kernel stage ran $tasks tasks at parallelism $p")
     s.close()
   }
 

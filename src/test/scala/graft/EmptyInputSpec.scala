@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class EmptyInputSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def cfg(bucketDirs: Boolean) = IndexConfig(buckets = 8, blockSize = 64,
-    saltRange = 128, shufflePartitions = 4, bucketDirs = bucketDirs)
+  private val cfg = IndexConfig(buckets = 8, blockSize = 64,
+    saltRange = 128, shufflePartitions = 4)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -39,38 +39,35 @@ class EmptyInputSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("an empty build commits an empty segment, with and without bucket dirs") {
-    Seq(true, false).foreach { bucketDirs =>
-      val dir = tmp("graftemptybuild")
-      assertEmpty(IndexBuilder.build(spark, noDocs, dir, cfg(bucketDirs)), dir,
-        s"bucketDirs=$bucketDirs")
-    }
+  test("an empty build commits an empty segment") {
+    val dir = tmp("graftemptybuild")
+    assertEmpty(IndexBuilder.build(spark, noDocs, dir, cfg), dir, "build")
   }
 
   test("compacting a fully deleted index gives an empty segment") {
     val dir = tmp("graftalldeleted")
-    IndexBuilder.build(spark, docs(0, 120), dir, cfg(true))
+    IndexBuilder.build(spark, docs(0, 120), dir, cfg)
     IndexOps.deleteByQueryInPlace(spark, dir, "*:*")
     assert(Tombstones.count(dir) == 120)
     val out = tmp("graftalldeletedmerged")
-    val merged = IndexOps.maintain(spark, dir, Nil, out, cfg(true))
+    val merged = IndexOps.maintain(spark, dir, Nil, out, cfg)
     assert(merged.nonEmpty, "every document is deleted, so the policy compacts")
     assertEmpty(merged.get, out, "merged")
   }
 
   test("an upsert of nothing commits an empty delta and tombstones nothing") {
     val base = tmp("graftemptyupsertbase")
-    IndexBuilder.build(spark, docs(0, 120), base, cfg(true))
+    IndexBuilder.build(spark, docs(0, 120), base, cfg)
     val before = new Searcher(spark, base)
     val expect = Seq("buffer", "def class return").map(q => before.search(q, 10).toSeq)
     val delta = tmp("graftemptyupsertdelta")
-    assertEmpty(IndexOps.upsertDelta(spark, base, noDocs, delta, cfg(true)), delta, "delta")
+    assertEmpty(IndexOps.upsertDelta(spark, base, noDocs, delta, cfg), delta, "delta")
     assert(Tombstones.count(base) == 0)
     val both = new Searcher(spark, Seq(base, delta))
     assert(Seq("buffer", "def class return").map(q => both.search(q, 10).toSeq) == expect)
     // the empty delta folds away
     val out = tmp("graftemptyupsertmerged")
-    val merged = IndexOps.maintain(spark, base, Seq(delta), out, cfg(true), maxDeltas = 0)
+    val merged = IndexOps.maintain(spark, base, Seq(delta), out, cfg, maxDeltas = 0)
     assert(merged.map(_.nDocs).contains(120L))
     before.close(); both.close()
   }

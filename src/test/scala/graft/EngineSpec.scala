@@ -34,11 +34,8 @@ class EngineSpec extends AnyFunSuite {
 
   val NDocs = 1500
   // small saltRange so the corpus spans multiple salt ranges in tests
-  // bucketDirs on: the partitioned layout is the query-serving default, so
-  // the whole suite (rank identity, all three strategies, resume) gates it;
-  // GoldenSpec keeps the plain layout covered bit-for-bit.
   val cfg: IndexConfig = IndexConfig(buckets = 16, blockSize = 64,
-    saltRange = 400, shufflePartitions = 8, bucketDirs = true)
+    saltRange = 400, shufflePartitions = 8)
 
   lazy val tmp: String = java.nio.file.Files.createTempDirectory("graftidx").toString
   lazy val docs = CodeCorpus.generate(spark, NDocs, nRepos = 20, partitions = 8)
@@ -89,7 +86,7 @@ class EngineSpec extends AnyFunSuite {
     // a bound below the segment's postings bound keeps it non-resident (so
     // each new term fetches) while every query here still fits the driver
     // kernel
-    val bound = Searcher.postingsBound(meta) - 1
+    val bound = meta.postingsBound - 1
     val fresh = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = bound))
     assert(fresh.residentSegments.isEmpty)
     val first = fresh.search("buffer binary search", 10)

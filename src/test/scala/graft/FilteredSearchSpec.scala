@@ -26,7 +26,7 @@ class FilteredSearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   val cfg: IndexConfig = IndexConfig(buckets = 16, blockSize = 64,
-    saltRange = 400, shufflePartitions = 8, bucketDirs = true)
+    saltRange = 400, shufflePartitions = 8)
 
   val nDocs = 1500
 
@@ -147,7 +147,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     // a bound below the resident bound keeps the segment on per-term
     // fetches and docstats scans
     val probe = new Searcher(spark, tmp)
-    val bound = Searcher.residentBound(probe.meta)
+    val bound = probe.meta.residentBound
     probe.close()
     val s = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = bound - 1))
     assert(s.residentSegments.isEmpty)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, IndexOps, QueryFilter}
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta, IndexOps, QueryFilter, Snapshot}
+import graft.query.Searcher
 import org.scalatest.funsuite.AnyFunSuite
 
 class IndexOpsSpec extends AnyFunSuite {
@@ -35,6 +36,22 @@ class IndexOpsSpec extends AnyFunSuite {
     // NOT term OR ... (delete-by-query shape, importer.py:199-204)
     val notQ = QueryFilter.matchingDocs(spark, tmp, "NOT repo:repo-0007").count()
     assert(notQ == 600 - r7)
+  }
+
+  test("a segment past the Int docId range is refused at open and by a merge") {
+    val dir = java.nio.file.Files.createTempDirectory("graftmaxdocs").toString
+    IndexBuilder.build(spark, CodeCorpus.generate(spark, 40, nRepos = 2, partitions = 2), dir, cfg)
+    // local docIds are Ints: a snapshot claiming 2^31 docs must not open
+    // and then fail on its first query's norm table
+    val snap = new Snapshot(dir)
+    snap.commit(snap.readProps() + ("nDocs" -> "2147483648"))
+    val limit = IndexMeta.MaxDocs.toString
+    val atOpen = intercept[IllegalArgumentException](new Searcher(spark, dir))
+    assert(atOpen.getMessage.contains(limit), atOpen.getMessage)
+    val out = java.nio.file.Files.createTempDirectory("graftmaxdocsmerged").toString
+    val atMerge = intercept[IllegalArgumentException](
+      IndexOps.mergeSegments(spark, Seq(dir), out, cfg))
+    assert(atMerge.getMessage.contains(limit), atMerge.getMessage)
   }
 
   test("overlapping re-deletes: tombstoneCount exact, each id stored once") {

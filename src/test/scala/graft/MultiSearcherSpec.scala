@@ -24,10 +24,8 @@ class MultiSearcherSpec extends AnyFunSuite {
     val d2 = java.nio.file.Files.createTempDirectory("multiA").toString
     val d3 = java.nio.file.Files.createTempDirectory("multiB").toString
     IndexBuilder.build(spark, all, d1, cfg)
-    // segments use the bucket-partitioned layout, merged index the plain one:
-    // scoring identity across MIXED layouts proves reads are layout-agnostic
-    IndexBuilder.build(spark, a, d2, cfg.copy(bucketDirs = true))
-    IndexBuilder.build(spark, b, d3, cfg.copy(bucketDirs = true))
+    IndexBuilder.build(spark, a, d2, cfg)
+    IndexBuilder.build(spark, b, d3, cfg)
     (d1, d2, d3)
   }
 
@@ -203,7 +201,7 @@ class MultiSearcherSpec extends AnyFunSuite {
     val b = spark.range(600, 1200).as[Long].map(i => CodeCorpus.genDoc(i, 15))
     val dA = java.nio.file.Files.createTempDirectory("mergeA").toString
     val dB = java.nio.file.Files.createTempDirectory("mergeB").toString
-    IndexBuilder.build(spark, a, dA, cfg.copy(bucketDirs = true))
+    IndexBuilder.build(spark, a, dA, cfg)
     IndexBuilder.build(spark, b, dB, cfg)
     // tombstone 3 docs in A and 2 in B (by natural key)
     def keysOf(dir: String, ids: Seq[Long]) =

@@ -34,8 +34,7 @@ class QueryFilterSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftqf").toString
     IndexBuilder.build(spark, docs.toDS().repartition(4), dir,
-      IndexConfig(buckets = 16, blockSize = 64, saltRange = 128, shufflePartitions = 4,
-        bucketDirs = true))
+      IndexConfig(buckets = 16, blockSize = 64, saltRange = 128, shufflePartitions = 4))
     val idOf = spark.read.parquet(s"$dir/docstats")
       .select($"repo", $"path", $"commit", $"docId").as[(String, String, String, Long)]
       .collect().map { case (r, p, c, id) => (r, p, c) -> id }.toMap
@@ -144,7 +143,7 @@ class QueryFilterSpec extends AnyFunSuite {
     // rows when it is resident and over scans when it is not
     val resident = new Searcher(spark, dir)
     val scanned = new Searcher(spark, Seq(dir),
-      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(meta) - 1))
+      SearchConfig(driverKernelMaxPostings = meta.residentBound - 1))
     var nonEmpty = 0
     for ((f1, f2) <- fqPairs) {
       val expect = bruteForce(f1).intersect(bruteForce(f2))
@@ -181,7 +180,7 @@ class QueryFilterSpec extends AnyFunSuite {
     val meta = IndexMeta.fromProps(new Snapshot(dir).readProps())
     val resident = new Searcher(spark, dir)
     val scanned = new Searcher(spark, Seq(dir),
-      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(meta) - 1))
+      SearchConfig(driverKernelMaxPostings = meta.residentBound - 1))
     assert(resident.residentSegments == Seq(0))
     assert(scanned.residentSegments.isEmpty)
     var nonEmpty = 0

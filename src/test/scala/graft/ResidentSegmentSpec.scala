@@ -17,7 +17,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   val cfg: IndexConfig = IndexConfig(buckets = 8, blockSize = 64, saltRange = 128,
-    shufflePartitions = 4, bucketDirs = true)
+    shufflePartitions = 4)
 
   private def build(from: Long, n: Long): (String, IndexMeta) = {
     val s = spark
@@ -44,7 +44,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
   test("a resident segment answers a distinct-term stream with one postings job") {
     val resident = new Searcher(spark, segA)
     val perTerm = new Searcher(spark, Seq(segA),
-      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(metaA) - 1))
+      SearchConfig(driverKernelMaxPostings = metaA.residentBound - 1))
     assert(resident.residentSegments == Seq(0))
     assert(perTerm.residentSegments.isEmpty)
     val residentJobs = stream.zipWithIndex.map { case (q, i) =>
@@ -66,7 +66,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
   test("resident hits are bit-identical to per-term fetches and the distributed kernel") {
     val resident = new Searcher(spark, segA)
     val perTerm = new Searcher(spark, Seq(segA),
-      SearchConfig(driverKernelMaxPostings = Searcher.residentBound(metaA) - 1))
+      SearchConfig(driverKernelMaxPostings = metaA.residentBound - 1))
     val distributed = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = 0))
     val expect = answers(distributed)
     assert(expect.count(_.nonEmpty) > stream.size / 2)
@@ -81,7 +81,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
   }
 
   test("a halved share below a segment's bound falls back to per-term fetches") {
-    val bound = Searcher.residentBound(metaA)
+    val bound = metaA.residentBound
     val alone = new Searcher(spark, Seq(segA), SearchConfig(driverKernelMaxPostings = bound))
     assert(alone.residentSegments == Seq(0), "the bound fits the whole budget")
     val pair = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = bound))
@@ -106,7 +106,7 @@ class ResidentSegmentSpec extends AnyFunSuite {
     val meta = IndexBuilder.build(spark, spark.emptyDataset[CodeDoc](
       org.apache.spark.sql.Encoders.product[CodeDoc]), empty, cfg)
     assert(meta.nDocs == 0)
-    assert(Searcher.postingsBound(meta) == 0)
+    assert(meta.postingsBound == 0)
     val s = new Searcher(spark, Seq(segA, empty))
     assert(s.residentSegments == Seq(0))
     val alone = new Searcher(spark, segA)

@@ -1,23 +1,30 @@
 package graft
 
+import graft.core.CodeDoc
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, IndexOps, Tombstones}
-import graft.query.Searcher
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta, IndexOps, Tombstones}
+import graft.query.{SearchConfig, Searcher}
 import graft.streaming.StreamingIngest
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The searcher, the builder and the tombstone reader read docstats,
   * postings, dictionary and tombstones with known schemas instead of
   * inferring them (one job per table). A known schema that drifts from the
   * files reads nulls silently, so every writer's output is checked against
-  * the schemas the readers pass.
+  * the schemas the readers pass, in both postings layouts: flat for a
+  * segment a default searcher loads whole, `bucket=N` directories past
+  * that residency bound.
   */
 class SchemaGuardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def cfg(bucketDirs: Boolean) = IndexConfig(buckets = 8, blockSize = 64,
-    saltRange = 128, shufflePartitions = 4, bucketDirs = bucketDirs)
+  private val cfg = IndexConfig(buckets = 8, blockSize = 64,
+    saltRange = 128, shufflePartitions = 4)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -26,6 +33,39 @@ class SchemaGuardSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     spark.range(from, from + n, 1, 4).as[Long].map(i => CodeCorpus.genDoc(i, 10))
+  }
+
+  /** 400 docs of 11,000 content tokens each over a 2,000-term vocabulary:
+    * 4.4M postings-bound tokens, past the default residency bound, in a
+    * build of seconds (the bound counts tokens, not distinct terms).
+    */
+  private def bigDocs: Dataset[CodeDoc] = {
+    val s = spark
+    import s.implicits._
+    spark.range(0, 400, 1, 4).as[Long].map { i =>
+      val sb = new java.lang.StringBuilder(11000 * 6)
+      var j = 0
+      while (j < 11000) { sb.append('t').append((i * 7919 + j * 31) % 2000).append(' '); j += 1 }
+      CodeDoc(s"repo-${i % 4}", s"src/Big$i.scala", f"$i%012x", "scala", sb.toString)
+    }
+  }
+
+  /** A segment past the residency bound, with its meta. */
+  private lazy val big: (String, IndexMeta) = {
+    val dir = tmp("graftschemabig")
+    (dir, IndexBuilder.build(spark, bigDocs, dir, cfg))
+  }
+
+  private def postingsFiles(dir: String): Seq[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "postings"))
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally walk.close()
+  }
+
+  private def bucketDirNames(dir: String): Seq[String] = {
+    val list = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "postings"))
+    try list.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("bucket=")).toList
+    finally list.close()
   }
 
   /** Name -> type, nullability dropped: file reads are nullable anyway. */
@@ -56,38 +96,76 @@ class SchemaGuardSpec extends AnyFunSuite {
   }
 
   test("known schemas match every writer's files by name and type") {
-    val built = Seq(true, false).map { bucketDirs =>
-      val dir = tmp("graftschema")
-      IndexBuilder.build(spark, docs(0, 300), dir, cfg(bucketDirs))
-      assertKnownSchemas(dir, s"build bucketDirs=$bucketDirs")
-      dir
-    }
-    val base = built.head
+    val base = tmp("graftschema")
+    IndexBuilder.build(spark, docs(0, 300), base, cfg)
+    assertKnownSchemas(base, "flat build")
+    val (bigDir, _) = big
+    assertKnownSchemas(bigDir, "bucketed build")
     val delta = tmp("graftschemadelta")
-    IndexOps.upsertDelta(spark, base, docs(250, 100), delta, cfg(true))
+    IndexOps.upsertDelta(spark, base, docs(250, 100), delta, cfg)
     assertKnownSchemas(delta, "upsertDelta delta")
     assertTombstoneSchema(base, "upsertDelta")
     val s = spark
     import s.implicits._
-    val victims = spark.read.parquet(s"${built(1)}/docstats")
+    val victims = spark.read.parquet(s"$bigDir/docstats")
       .select($"repo", $"path", $"commit").as[(String, String, String)].take(3)
-    IndexOps.deleteInPlace(spark, built(1), victims.toSeq)
-    assertTombstoneSchema(built(1), "deleteInPlace")
+    IndexOps.deleteInPlace(spark, bigDir, victims.toSeq)
+    assertTombstoneSchema(bigDir, "deleteInPlace")
     val merged = tmp("graftschemamerged")
-    assert(IndexOps.maintain(spark, base, Seq(delta), merged, cfg(true), maxDeltas = 0).nonEmpty)
+    assert(IndexOps.maintain(spark, base, Seq(delta), merged, cfg, maxDeltas = 0).nonEmpty)
     assertKnownSchemas(merged, "maintain output")
     val src = tmp("graftschemasrc")
     val out = tmp("graftschemastream")
     docs(1000, 100).write.mode("overwrite").parquet(src)
-    StreamingIngest.ingestStream(spark, src, out, cfg(false)).awaitTermination()
+    StreamingIngest.ingestStream(spark, src, out, cfg).awaitTermination()
     val streamed = StreamingIngest.committedDeltas(out)
     assert(streamed.nonEmpty)
     streamed.foreach(assertKnownSchemas(_, "streaming delta"))
   }
 
+  test("the postings layout follows the segment's size") {
+    // a bench-sized segment: a default searcher loads it whole, so it is
+    // written flat, one file per shuffle partition at most
+    val small = tmp("graftschemaflat")
+    val smallMeta = IndexBuilder.build(spark, docs(0, 800), small, cfg)
+    assert(smallMeta.residentBound <= IndexMeta.DriverKernelMaxPostings)
+    val smallFiles = postingsFiles(small)
+    assert(smallFiles.nonEmpty && smallFiles.size <= cfg.shufflePartitions,
+      s"flat postings files: $smallFiles")
+    assert(bucketDirNames(small).isEmpty)
+    val flatSearcher = new Searcher(spark, small)
+    assert(flatSearcher.residentSegments == Seq(0))
+    flatSearcher.close()
+
+    // past the bound: bucket=N directories, and a per-term fetch opens only
+    // its terms' buckets
+    val (bigDir, bigMeta) = big
+    assert(bigMeta.residentBound > IndexMeta.DriverKernelMaxPostings)
+    val dirs = bucketDirNames(bigDir)
+    assert(dirs.nonEmpty && dirs.size <= cfg.buckets, s"bucket dirs: $dirs")
+    assert(postingsFiles(bigDir).forall(_.getParent.getFileName.toString.startsWith("bucket=")))
+    val searcher = new Searcher(spark, bigDir)
+    assert(searcher.residentSegments.isEmpty)
+    val terms = Seq("t1", "t2", "t3")
+    val buckets = terms.map(IndexBuilder.bucketOf(_, cfg.buckets)).distinct
+    assert(buckets.size < dirs.size)
+    val fetch = searcher.termFetch(0, terms.map("content" -> _).toSet)
+    assert(fetch.collect().map(_.term).toSet == terms.toSet)
+    val scan = fetch.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
+    assert(scan.size == 1)
+    assert(scan.head.metrics("numPartitions").value == buckets.size)
+    assert(scan.head.metrics("numFiles").value <= buckets.size * cfg.shufflePartitions)
+    // the per-term fetch and the distributed kernel read the bucketed
+    // layout alike
+    val distributed = new Searcher(spark, Seq(bigDir), SearchConfig(driverKernelMaxPostings = 0))
+    val hits = searcher.search("t1 t2 t3", 10)
+    assert(hits.nonEmpty && hits.toSeq == distributed.search("t1 t2 t3", 10).toSeq)
+    searcher.close(); distributed.close()
+  }
+
   test("deleteInPlace resolves its keys with no schema-inference job") {
     val dir = tmp("graftschemadelete")
-    IndexBuilder.build(spark, docs(0, 300), dir, cfg(true))
+    IndexBuilder.build(spark, docs(0, 300), dir, cfg)
     val s = spark
     import s.implicits._
     val victims = IndexOps.docs(spark, dir)
@@ -102,7 +180,7 @@ class SchemaGuardSpec extends AnyFunSuite {
 
   test("a fresh searcher's first query on a resident segment runs at most 3 jobs") {
     val dir = tmp("graftschemacold")
-    IndexBuilder.build(spark, docs(0, 300), dir, cfg(true))
+    IndexBuilder.build(spark, docs(0, 300), dir, cfg)
     val s = new Searcher(spark, dir)
     assert(s.residentSegments == Seq(0))
     // the open's postings and docstats scans, one fewer than the three
