@@ -41,22 +41,10 @@ object PlanAudit {
       .filter(col("bucket").isin(bucketList: _*) &&
         col("term").isin(terms: _*) &&
         col("field").isin("content", "path", "repo"))
-    // the postings layout follows the segment's size: bucket=N directories
-    // only past the residency bound, so the partition gate applies only there
-    val bucketed = Option(new java.io.File(s"$idx/postings").list()).toSeq.flatten
-      .exists(_.startsWith("bucket="))
-    val scanGate = "`PushedFilters` must include In(term, ...) and In(field, ...); " +
-      "`ReadSchema` must include only the PostingRun columns."
     dump("postings term lookup", postingsScan,
-      if (bucketed)
-        s"Gate (bucketed layout: residentBound ${searcher.meta.residentBound} is past " +
-          s"the default driverKernelMaxPostings): $scanGate Plus `PartitionFilters` " +
-          "must include bucket IN (...) — directory-level pruning."
-      else
-        s"Gate (flat layout: residentBound ${searcher.meta.residentBound} fits the " +
-          "default driverKernelMaxPostings, so the postings are one file per " +
-          "shuffle partition with `bucket` a data column and a default searcher " +
-          s"loads them whole): $scanGate")
+      "Gate (flat postings, one file per shuffle partition with `bucket` a data " +
+        "column): `PushedFilters` must include In(term, ...) and In(field, ...); " +
+        "`ReadSchema` must include only the PostingRun columns.")
 
     dump("q1_agg (partial+final hash aggregate)",
       RelationalQueries.queries("q1_agg")(spark, sfDir),

@@ -27,13 +27,13 @@ case class IndexConfig(
       * head-term strings over more postings (measured +15% build throughput
       * 4096 -> 16384 at 400k docs); shrink if executor memory is tight. */
     chunkDocs: Int = 16384,
-    /** Ignored: the postings layout follows the segment's size
-      * ([[IndexBuilder.assembleAndWritePostings]]), not this flag. Bucket
-      * directories let a query open only its terms' buckets' files, but cost
-      * ~3 ms per file at write time and a file per (shuffle partition,
-      * bucket), so a segment a default searcher loads whole is written flat
-      * and only a larger one under `bucket=N` directories. Kept so callers
-      * that still pass it, the benchmark harness among them, compile.
+    /** Ignored: postings are always written flat
+      * ([[IndexBuilder.assembleAndWritePostings]]). Writing them under
+      * `bucket=N` directories left a file per (shuffle partition, bucket),
+      * ~3 ms each to write and to list, and bought no file pruning: every task
+      * holds every bucket, so a term's bucket directory holds as many files
+      * as the flat table, whose term-sorted row groups already prune. Kept so
+      * callers that still pass it, the benchmark harness among them, compile.
       */
     bucketDirs: Boolean = false)
 
@@ -44,8 +44,7 @@ case class IndexConfig(
   *        -> repartition(bucket, field, salt) -> sortWithinPartitions
   *        -> mapPartitions streaming block encoder -> posting runs (parquet)
   *           + lineage rows
-  *        (the layout by the corpus stats, [[statsMeta]], taken first)
-  *        -> [[commit]]: dictionary (global df/cf) -> snapshot
+  *        -> [[commit]]: dictionary (global df/cf) -> stats -> snapshot
   *
   * [[IndexOps.mergeSegments]] is the same pipeline fed from segments: its
   * chunks come out of the same [[BlockBuf]], and it ends in the same
@@ -53,9 +52,8 @@ case class IndexConfig(
   *
   * Layout under `outDir`:
   *   docstats/    (docId, repo, path, commit, lang, sha, salt, len*)
-  *   postings/    [[PostingRun]] rows, (field,term)-sorted within files:
-  *                flat, or under bucket=N directories past the residency
-  *                bound ([[assembleAndWritePostings]])
+  *   postings/    [[PostingRun]] rows, (field,term)-sorted within files,
+  *                one file per shuffle partition (`bucket` a data column)
   *   dictionary/  (bucket, field, term, df, cf)
   *   lineage/     [[LineageRow]] per build partition
   *   snapshots/, SNAPSHOT — snaptable commit ([[Snapshot]])
@@ -67,18 +65,16 @@ case class IndexConfig(
   *    stages recompute it instead of joining back — resume never needs the
   *    raw corpus co-shuffled with committed stages.
   *  - postings land term-major inside files (parquet row-group min/max stats
-  *    prune term lookups). A segment past the residency bound lands under
-  *    bucket=N directories (hash(term) directory pruning: a query only opens
-  *    the footers of its terms' buckets); a smaller one, which a searcher
-  *    loads whole, lands flat in one file per shuffle partition.
+  *    prune term lookups), flat: no partition directories (see
+  *    [[IndexConfig.bucketDirs]]).
   */
 object IndexBuilder {
 
   /** The persisted tables' schemas. Every reader passes its table's schema,
     * so opening a table lists its files but runs no parquet schema-inference
-    * job, and a table with no data files (the bucketed postings of an empty
-    * build) reads as empty. SchemaGuardSpec checks them against what each
-    * writer leaves.
+    * job, and a table with no data files (an empty build's postings under
+    * the `bucket=N` layout earlier versions wrote) reads as empty.
+    * SchemaGuardSpec checks them against what each writer leaves.
     */
   private[graft] val DocStatsSchema: StructType = Encoders.product[DocStats].schema
   private[graft] val PostingsSchema: StructType = Encoders.product[PostingRun].schema
@@ -157,29 +153,18 @@ object IndexBuilder {
   /** The reduce side of the posting build, shared by [[build]] and
     * [[IndexOps.mergeSegments]]: shuffle pre-encoded [[BlockChunk]]s by
     * (term, fieldId, salt), assemble runs, write postings + lineage, mark
-    * the postings stage.
-    *
-    * The layout follows the segment's size, known from `meta` before the
-    * write (Lucene's compound-file rule, `noCFSRatio`, likewise sizes a
-    * segment's files by its bytes). A segment whose
-    * [[IndexMeta.residentBound]] fits [[IndexMeta.DriverKernelMaxPostings]]
-    * is written FLAT, one file per shuffle partition with `bucket` a data
-    * column: a default searcher loads it whole on its first query, so
-    * per-term directory pruning would never run on it, and each of the
-    * `buckets` × partitions files a bucketed write leaves costs ~3 ms to
-    * write and to list. A larger segment is written under `bucket=N`
-    * directories, so a term lookup opens only its buckets' files. Readers
-    * read both layouts.
-    *
-    * Lineage rows (ONE per partition) ride an accumulator out of the same
-    * pass that writes the postings — no caching of the run dataset. (Round 2 first persisted the runs to serve lineage
+    * the postings stage. The postings are written flat, one file per
+    * shuffle partition with `bucket` a data column; readers also read the
+    * `bucket=N` directories earlier versions wrote. Lineage rows (ONE per
+    * partition) ride an accumulator out of the same pass that writes the
+    * postings — no caching of the run dataset. (Round 2 first persisted the runs to serve lineage
     * + dictionary; the columnar cache of the block binaries cost more CPU to
     * build and re-scan — measured 65s at 400k docs/16 cores — than it
     * saved.) Task retries can add duplicate rows; the driver dedupes by pid.
     */
   private[index] def assembleAndWritePostings(
       spark: SparkSession, chunks: DataFrame, outDir: String,
-      cfg: IndexConfig, snap: Snapshot, meta: IndexMeta): Unit = {
+      cfg: IndexConfig, snap: Snapshot): Unit = {
     import spark.implicits._
     val postingsPath = s"$outDir/postings"
     val lineagePath = s"$outDir/lineage"
@@ -237,14 +222,7 @@ object IndexBuilder {
           }
       }
 
-    // bucketed: term lookups prune whole directories (a q-term query opens
-    // <= q/buckets of the files' footers — file-level pruning on top of the
-    // term-major row-group stats)
-    val flat = meta.residentBound <= IndexMeta.DriverKernelMaxPostings
-    timed("postWrite") {
-      val w = runs.write.mode("overwrite")
-      (if (flat) w else w.partitionBy("bucket")).parquet(postingsPath)
-    }
+    timed("postWrite")(runs.write.mode("overwrite").parquet(postingsPath))
     timed("lineageWrite") {
       import scala.jdk.CollectionConverters._
       val rows = lineageAcc.value.asScala.toSeq
@@ -254,13 +232,32 @@ object IndexBuilder {
     snap.markStageDone("postings")
   }
 
-  /** The segment's meta from its docstats table, taken by [[build]] and
-    * [[IndexOps.mergeSegments]] once their docstats stage is done and before
-    * the postings stage, whose layout it sizes; [[commit]] then commits it.
-    * One aggregate job; an empty table gives nDocs 0 and average lengths 0.
+  /** The tail of [[build]] and [[IndexOps.mergeSegments]], run once their
+    * docstats and postings stages are done: write the dictionary unless its
+    * stage is done, take the corpus stats from the docstats table, and
+    * commit the snapshot. The stats are one aggregate job; an empty table
+    * gives nDocs 0 and average lengths 0.
+    *
+    * The dictionary holds the global per-(field, term) df/cf, summed from a
+    * NARROW postings re-read (parquet skips the untouched blocks column) and
+    * sorted by (field, term) so query-time probes prune to O(query terms)
+    * row groups ([[graft.query.DictProbe]]).
     */
-  private[index] def statsMeta(spark: SparkSession, outDir: String,
-                               cfg: IndexConfig): IndexMeta = {
+  private[index] def commit(spark: SparkSession, outDir: String, cfg: IndexConfig,
+                            snap: Snapshot): IndexMeta = {
+    if (!snap.stageDone("dictionary")) timed("dictionary") {
+      spark.read.schema(PostingsSchema).parquet(s"$outDir/postings")
+        .groupBy(col("bucket"), col("field"), col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+        // coalesce + sort-within (NOT repartitionByRange): probe pruning only
+        // needs tight per-row-group min/max on (field, term), which sorted
+        // files give regardless of which file a term lands in — and this
+        // skips a second exchange plus the range sampling job per build
+        .coalesce(math.max(1, cfg.buckets / 8))
+        .sortWithinPartitions(col("field"), col("term"))
+        .write.mode("overwrite").parquet(s"$outDir/dictionary")
+      snap.markStageDone("dictionary")
+    }
     val sums = timed("statsAgg") {
       spark.read.schema(DocStatsSchema).parquet(s"$outDir/docstats")
         .agg(count(lit(1)), IndexFields.LengthCols.map(c => coalesce(sum(col(c)), lit(0L))): _*)
@@ -270,34 +267,8 @@ object IndexBuilder {
     val avgLen = IndexFields.Names.zipWithIndex.map { case (f, i) =>
       f -> (if (nDocs == 0) 0.0 else sums.getLong(i + 1).toDouble / nDocs)
     }.toMap
-    IndexMeta(nDocs = nDocs, avgLen = avgLen,
+    val meta = IndexMeta(nDocs = nDocs, avgLen = avgLen,
       buckets = cfg.buckets, saltRange = cfg.saltRange, blockSize = cfg.blockSize)
-  }
-
-  /** The tail of [[build]] and [[IndexOps.mergeSegments]], run once their
-    * docstats and postings stages are done: write the dictionary unless its
-    * stage is done and commit the snapshot of `meta` ([[statsMeta]]).
-    *
-    * The dictionary holds the global per-(field, term) df/cf, summed from a
-    * NARROW postings re-read (parquet skips the untouched blocks column) and
-    * sorted by (field, term) so query-time probes prune to O(query terms)
-    * row groups ([[graft.query.DictProbe]]).
-    */
-  private[index] def commit(spark: SparkSession, outDir: String, snap: Snapshot,
-                            meta: IndexMeta): IndexMeta = {
-    if (!snap.stageDone("dictionary")) timed("dictionary") {
-      spark.read.schema(PostingsSchema).parquet(s"$outDir/postings")
-        .groupBy(col("bucket"), col("field"), col("term"))
-        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-        // coalesce + sort-within (NOT repartitionByRange): probe pruning only
-        // needs tight per-row-group min/max on (field, term), which sorted
-        // files give regardless of which file a term lands in — and this
-        // skips a second exchange plus the range sampling job per build
-        .coalesce(math.max(1, meta.buckets / 8))
-        .sortWithinPartitions(col("field"), col("term"))
-        .write.mode("overwrite").parquet(s"$outDir/dictionary")
-      snap.markStageDone("dictionary")
-    }
     snap.commit(meta.toProps + ("fields" -> IndexFields.Names.mkString(",")))
     meta
   }
@@ -314,8 +285,8 @@ object IndexBuilder {
 
   /** Build `docs` into a segment at `outDir` and return its committed meta.
     * A rerun over the same directory skips the stages an earlier run marked
-    * done; [[statsMeta]] and the [[commit]] tail run every time. Refuses
-    * more than [[IndexMeta.MaxDocs]] documents at its docIds stage.
+    * done; the [[commit]] tail runs every time. Refuses more than
+    * [[IndexMeta.MaxDocs]] documents at its docIds stage.
     */
   def build(spark: SparkSession, docs: Dataset[CodeDoc], outDir: String,
             cfg: IndexConfig = IndexConfig()): IndexMeta = {
@@ -336,7 +307,7 @@ object IndexBuilder {
     // the frames this build persists, released once its postings stage is
     // done or a stage throws
     val persisted = mutable.ArrayBuffer.empty[Dataset[_]]
-    val meta = try {
+    try {
       val withIds: DataFrame =
         if (needDocstats || needPostings)
           timed("docIds")(withDocIds(spark, docs, cfg.shufflePartitions, persisted))
@@ -385,7 +356,6 @@ object IndexBuilder {
           .write.mode("overwrite").parquet(s"$outDir/docstats")
         snap.markStageDone("docstats")
       }
-      val meta = statsMeta(spark, outDir, cfg)
 
       // ---- stage: posting runs + per-partition lineage ----
       //
@@ -399,11 +369,10 @@ object IndexBuilder {
       if (needPostings) timed("postings") {
         // `chunk.*` select (not flatMap): prunes the stats columns from the scan
         val chunks = src.toDF().filter($"chunk".isNotNull).select($"chunk.*")
-        assembleAndWritePostings(spark, chunks, outDir, cfg, snap, meta)
+        assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
       }
-      meta
     } finally persisted.foreach(_.unpersist())
-    commit(spark, outDir, snap, meta)
+    commit(spark, outDir, cfg, snap)
   }
 }
 

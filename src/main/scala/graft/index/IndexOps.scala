@@ -132,11 +132,11 @@ object IndexOps {
     * docId space (segment offsets, tombstones squeezed out), re-encodes
     * posting blocks map-side from the segments' own posting lists through
     * the build's [[BlockBuf]], and ends like [[IndexBuilder.build]]: the
-    * corpus stats ([[IndexBuilder.statsMeta]]), the standard chunk-shuffle
-    * assembly, then [[IndexBuilder.commit]]. Stages resume like a build's.
-    * Refuses more than [[IndexMeta.MaxDocs]] surviving documents before
-    * any stage runs. At 100 TB this is the compaction path: merging
-    * reads the (compressed) index, never the source table —
+    * standard chunk-shuffle assembly, then [[IndexBuilder.commit]]. Stages
+    * resume like a build's. Refuses more than [[IndexMeta.MaxDocs]]
+    * surviving documents before any stage runs. At 100 TB this is the
+    * compaction path: merging reads the (compressed) index, never the
+    * source table —
     * deletes become free space, delta segments fold into the base, and BM25
     * stats equal a fresh build over the surviving corpus exactly (tombstoned
     * docs vanish from N, df, cf, and avgLen).
@@ -166,7 +166,7 @@ object IndexOps {
 
     // both stages read each segment's set through one broadcast
     val tombBcs = tombs.map(spark.sparkContext.broadcast(_))
-    val meta = try {
+    try {
       // ---- docstats: re-key + drop tombstoned, one map pass per segment ----
       if (!snap.stageDone("docstats")) {
         val parts = segmentDirs.zipWithIndex.map { case (d, i) =>
@@ -188,7 +188,6 @@ object IndexOps {
           .write.mode("overwrite").parquet(s"$outDir/docstats")
         snap.markStageDone("docstats")
       }
-      val meta = IndexBuilder.statsMeta(spark, outDir, cfg)
 
       // ---- postings: decode -> drop -> re-key -> re-encode chunks map-side,
       // then the shared chunk-shuffle assembly ----
@@ -229,11 +228,10 @@ object IndexOps {
             }
         }
         val chunks = chunkParts.map(_.toDF()).reduce(_ unionByName _)
-        IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap, meta)
+        IndexBuilder.assembleAndWritePostings(spark, chunks, outDir, cfg, snap)
       }
-      meta
     } finally tombBcs.foreach(_.destroy())
-    IndexBuilder.commit(spark, outDir, snap, meta)
+    IndexBuilder.commit(spark, outDir, cfg, snap)
   }
 
   /** A task's copy of a tombstone set that ranks in O(log containers):

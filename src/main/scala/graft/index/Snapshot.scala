@@ -112,21 +112,12 @@ case class IndexMeta(
   /** The rows a resident segment holds on the driver: its postings bound
     * plus one docstats row per document. Residency needs this to fit the
     * segment's share of `driverKernelMaxPostings`
-    * ([[graft.query.SearchConfig]]); the builder writes a segment whose bound
-    * fits [[IndexMeta.DriverKernelMaxPostings]] with flat postings.
+    * ([[graft.query.SearchConfig]]).
     */
   def residentBound: Long = postingsBound + nDocs
 }
 
 object IndexMeta {
-  /** The default `driverKernelMaxPostings` ([[graft.query.SearchConfig]]):
-    * the postings a driver kernel may hold. A segment whose
-    * [[IndexMeta.residentBound]] fits it is resident in a default
-    * one-segment searcher, which loads its postings whole, so the builder
-    * writes such a segment flat ([[IndexBuilder.assembleAndWritePostings]]).
-    */
-  val DriverKernelMaxPostings: Long = 4L << 20
-
   /** The most documents a segment holds. Local docIds are Ints (norm
     * tables are byte arrays indexed by docId, [[DocSet]]s are 32-bit
     * bitmaps), and like Lucene's `IndexWriter.MAX_DOCS` the limit stays

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * vocabulary known without a job (the [[Searcher]] passes its segment's
   * [[graft.index.IndexMeta.postingsBound]]), already proves it. Set
   * `maxDriverTerms = 0` to force the probe path (the strategies are
-  * answer-identical; EngineSpec gates this). The table is read with its known schema, so no read runs a
-  * schema-inference job. When the caller already holds the dfs (a resident
+  * answer-identical; EngineSpec gates this). The table is read with its
+  * known schema, so no read runs a schema-inference job. When the caller already holds the dfs (a resident
   * segment sums them from its loaded runs), `loaded` supplies the collected
   * map instead of the dictionary collect.
   *

@@ -249,7 +249,7 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   *    split evenly across segments.
   */
 case class SearchConfig(
-    driverKernelMaxPostings: Long = IndexMeta.DriverKernelMaxPostings,
+    driverKernelMaxPostings: Long = 4L << 20,
     normsMaxDocs: Long = 1L << 31,
     dictionaryMaxDriverTerms: Long = 1L << 22,
     dictionaryMaxCacheTerms: Int = 1 << 20)
@@ -456,9 +456,9 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
                      batch: Boolean = false): Dataset[PostingRun] = {
       val termList = keys.map(_._2).toSeq
       val fieldList = keys.map(_._1).toSeq
-      // on a bucketed segment, bucket prunes PARTITION DIRECTORIES (only the
-      // terms' buckets are even listed); term/field prune row groups inside
-      // the surviving files
+      // on the bucket=N layout earlier versions wrote, bucket prunes
+      // PARTITION DIRECTORIES (only the terms' buckets are even listed);
+      // term/field prune row groups inside the surviving files
       val bucketList = termList.map(b => IndexBuilder.bucketOf(b, meta.buckets)).distinct
       (if (batch) batchPostingsDF else postingsDF)
         .filter($"bucket".isin(bucketList: _*) &&

@@ -1,11 +1,9 @@
 package graft
 
-import graft.core.CodeDoc
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig, IndexMeta, IndexOps, Tombstones}
+import graft.index.{IndexBuilder, IndexConfig, IndexOps, Tombstones}
 import graft.query.{SearchConfig, Searcher}
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,9 +14,9 @@ import scala.jdk.CollectionConverters._
   * postings, dictionary and tombstones with known schemas instead of
   * inferring them (one job per table). A known schema that drifts from the
   * files reads nulls silently, so every writer's output is checked against
-  * the schemas the readers pass, in both postings layouts: flat for a
-  * segment a default searcher loads whole, `bucket=N` directories past
-  * that residency bound.
+  * the schemas the readers pass, and against the flat postings layout every
+  * writer leaves. Segments that earlier versions wrote under `bucket=N`
+  * directories must still read, alone and beside flat segments.
   */
 class SchemaGuardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -35,37 +33,32 @@ class SchemaGuardSpec extends AnyFunSuite {
     spark.range(from, from + n, 1, 4).as[Long].map(i => CodeCorpus.genDoc(i, 10))
   }
 
-  /** 400 docs of 11,000 content tokens each over a 2,000-term vocabulary:
-    * 4.4M postings-bound tokens, past the default residency bound, in a
-    * build of seconds (the bound counts tokens, not distinct terms).
+  private def walk[T](dir: java.nio.file.Path)(f: Iterator[java.nio.file.Path] => T): T = {
+    val paths = java.nio.file.Files.walk(dir)
+    try f(paths.iterator().asScala) finally paths.close()
+  }
+
+  /** Flat postings: at most one file per shuffle partition, no partition
+    * directory.
     */
-  private def bigDocs: Dataset[CodeDoc] = {
-    val s = spark
-    import s.implicits._
-    spark.range(0, 400, 1, 4).as[Long].map { i =>
-      val sb = new java.lang.StringBuilder(11000 * 6)
-      var j = 0
-      while (j < 11000) { sb.append('t').append((i * 7919 + j * 31) % 2000).append(' '); j += 1 }
-      CodeDoc(s"repo-${i % 4}", s"src/Big$i.scala", f"$i%012x", "scala", sb.toString)
-    }
+  private def assertFlatPostings(indexDir: String, what: String): Unit = {
+    val postings = java.nio.file.Paths.get(indexDir, "postings")
+    val files = walk(postings)(_.filter(_.getFileName.toString.endsWith(".parquet")).toList)
+    assert(files.nonEmpty && files.size <= cfg.shufflePartitions, s"$what postings: $files")
+    assert(files.forall(_.getParent == postings), s"$what postings: $files")
   }
 
-  /** A segment past the residency bound, with its meta. */
-  private lazy val big: (String, IndexMeta) = {
-    val dir = tmp("graftschemabig")
-    (dir, IndexBuilder.build(spark, bigDocs, dir, cfg))
-  }
-
-  private def postingsFiles(dir: String): Seq[java.nio.file.Path] = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "postings"))
-    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
-    finally walk.close()
-  }
-
-  private def bucketDirNames(dir: String): Seq[String] = {
-    val list = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "postings"))
-    try list.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("bucket=")).toList
-    finally list.close()
+  /** Rewrite a segment's postings under `bucket=N` directories, the layout
+    * earlier versions wrote with `bucketDirs = true`.
+    */
+  private def toBucketDirs(indexDir: String): Unit = {
+    val postings = java.nio.file.Paths.get(indexDir, "postings")
+    val flat = java.nio.file.Paths.get(indexDir, "postings-flat")
+    java.nio.file.Files.move(postings, flat)
+    spark.read.schema(IndexBuilder.PostingsSchema).parquet(flat.toString)
+      .sortWithinPartitions("bucket", "term")
+      .write.partitionBy("bucket").parquet(postings.toString)
+    walk(flat)(_.toList.reverse.foreach(java.nio.file.Files.delete))
   }
 
   /** Name -> type, nullability dropped: file reads are nullable anyway. */
@@ -98,69 +91,75 @@ class SchemaGuardSpec extends AnyFunSuite {
   test("known schemas match every writer's files by name and type") {
     val base = tmp("graftschema")
     IndexBuilder.build(spark, docs(0, 300), base, cfg)
-    assertKnownSchemas(base, "flat build")
-    val (bigDir, _) = big
-    assertKnownSchemas(bigDir, "bucketed build")
     val delta = tmp("graftschemadelta")
     IndexOps.upsertDelta(spark, base, docs(250, 100), delta, cfg)
-    assertKnownSchemas(delta, "upsertDelta delta")
     assertTombstoneSchema(base, "upsertDelta")
     val s = spark
     import s.implicits._
-    val victims = spark.read.parquet(s"$bigDir/docstats")
+    val victims = spark.read.parquet(s"$delta/docstats")
       .select($"repo", $"path", $"commit").as[(String, String, String)].take(3)
-    IndexOps.deleteInPlace(spark, bigDir, victims.toSeq)
-    assertTombstoneSchema(bigDir, "deleteInPlace")
+    IndexOps.deleteInPlace(spark, delta, victims.toSeq)
+    assertTombstoneSchema(delta, "deleteInPlace")
     val merged = tmp("graftschemamerged")
     assert(IndexOps.maintain(spark, base, Seq(delta), merged, cfg, maxDeltas = 0).nonEmpty)
-    assertKnownSchemas(merged, "maintain output")
     val src = tmp("graftschemasrc")
     val out = tmp("graftschemastream")
     docs(1000, 100).write.mode("overwrite").parquet(src)
     StreamingIngest.ingestStream(spark, src, out, cfg).awaitTermination()
     val streamed = StreamingIngest.committedDeltas(out)
     assert(streamed.nonEmpty)
-    streamed.foreach(assertKnownSchemas(_, "streaming delta"))
+    (Seq(base -> "build", delta -> "upsertDelta delta", merged -> "maintain output") ++
+      streamed.map(_ -> "streaming delta")).foreach { case (dir, what) =>
+      assertKnownSchemas(dir, what)
+      assertFlatPostings(dir, what)
+    }
   }
 
-  test("the postings layout follows the segment's size") {
-    // a bench-sized segment: a default searcher loads it whole, so it is
-    // written flat, one file per shuffle partition at most
-    val small = tmp("graftschemaflat")
-    val smallMeta = IndexBuilder.build(spark, docs(0, 800), small, cfg)
-    assert(smallMeta.residentBound <= IndexMeta.DriverKernelMaxPostings)
-    val smallFiles = postingsFiles(small)
-    assert(smallFiles.nonEmpty && smallFiles.size <= cfg.shufflePartitions,
-      s"flat postings files: $smallFiles")
-    assert(bucketDirNames(small).isEmpty)
-    val flatSearcher = new Searcher(spark, small)
-    assert(flatSearcher.residentSegments == Seq(0))
-    flatSearcher.close()
+  test("a segment with bucket=N postings reads like a flat one, alone and beside a flat delta") {
+    val dir = tmp("graftschemabucketed")
+    val meta = IndexBuilder.build(spark, docs(0, 300), dir, cfg)
+    val queries = Seq("buffer", "def class return", "binary search tree")
+    val fq = Some("NOT lang:md")
+    def answers(s: Searcher) =
+      queries.map(q => (s.search(q, 10).toSeq, s.search(q, 10, fq = fq).toSeq))
+    val flat = new Searcher(spark, dir)
+    val expect = answers(flat)
+    assert(expect.forall(_._1.nonEmpty))
+    flat.close()
+    toBucketDirs(dir)
+    val dirs = walk(java.nio.file.Paths.get(dir, "postings"))(
+      _.map(_.getFileName.toString).filter(_.startsWith("bucket=")).toList)
+    assert(dirs.size == cfg.buckets, s"bucket dirs: $dirs")
 
-    // past the bound: bucket=N directories, and a per-term fetch opens only
-    // its terms' buckets
-    val (bigDir, bigMeta) = big
-    assert(bigMeta.residentBound > IndexMeta.DriverKernelMaxPostings)
-    val dirs = bucketDirNames(bigDir)
-    assert(dirs.nonEmpty && dirs.size <= cfg.buckets, s"bucket dirs: $dirs")
-    assert(postingsFiles(bigDir).forall(_.getParent.getFileName.toString.startsWith("bucket=")))
-    val searcher = new Searcher(spark, bigDir)
-    assert(searcher.residentSegments.isEmpty)
-    val terms = Seq("t1", "t2", "t3")
+    // every route: resident, per-term fetch, distributed
+    val routes = Seq(SearchConfig(), SearchConfig(driverKernelMaxPostings = meta.postingsBound - 1),
+      SearchConfig(driverKernelMaxPostings = 0))
+    routes.foreach { c =>
+      val s = new Searcher(spark, Seq(dir), c)
+      try assert(answers(s) == expect, s"bucket=N layout, $c") finally s.close()
+    }
+    // a per-term fetch lists only its terms' bucket directories
+    val fetcher = new Searcher(spark, Seq(dir), routes(1))
+    assert(fetcher.residentSegments.isEmpty)
+    val terms = Seq("buffer", "binary", "search")
     val buckets = terms.map(IndexBuilder.bucketOf(_, cfg.buckets)).distinct
-    assert(buckets.size < dirs.size)
-    val fetch = searcher.termFetch(0, terms.map("content" -> _).toSet)
+    assert(buckets.size < cfg.buckets)
+    val fetch = fetcher.termFetch(0, terms.map("content" -> _).toSet)
     assert(fetch.collect().map(_.term).toSet == terms.toSet)
     val scan = fetch.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
-    assert(scan.size == 1)
-    assert(scan.head.metrics("numPartitions").value == buckets.size)
-    assert(scan.head.metrics("numFiles").value <= buckets.size * cfg.shufflePartitions)
-    // the per-term fetch and the distributed kernel read the bucketed
-    // layout alike
-    val distributed = new Searcher(spark, Seq(bigDir), SearchConfig(driverKernelMaxPostings = 0))
-    val hits = searcher.search("t1 t2 t3", 10)
-    assert(hits.nonEmpty && hits.toSeq == distributed.search("t1 t2 t3", 10).toSeq)
-    searcher.close(); distributed.close()
+    assert(scan.size == 1 && scan.head.metrics("numPartitions").value == buckets.size)
+    fetcher.close()
+
+    // beside a flat delta: every route answers alike over the mixed layouts
+    val delta = tmp("graftschemaflatdelta")
+    IndexOps.upsertDelta(spark, dir, docs(250, 100), delta, cfg)
+    assertFlatPostings(delta, "upsertDelta delta")
+    val mixed = routes.map { c =>
+      val s = new Searcher(spark, Seq(dir, delta), c)
+      try answers(s) finally s.close()
+    }
+    assert(mixed.head.forall(_._1.nonEmpty))
+    assert(mixed.forall(_ == mixed.head))
   }
 
   test("deleteInPlace resolves its keys with no schema-inference job") {
