@@ -222,12 +222,11 @@ object Bench {
       return base
     }
 
-    // ---- scale-path strategies: at the 10^12-doc target the driver-local
-    // kernel does not exist — these distributed shapes are the ONLY query
-    // paths, so they get the same first-class measurement (VERDICT r3 #1).
-    // The distributed paths never cache runs, so repeat passes on one
-    // searcher re-run the full job — min-of-3 is load filtering, not cache
-    // warming.
+    // ---- scale-path strategy: at the 10^12-doc target the driver-local
+    // kernel does not exist — the distributed kernel is the ONLY query
+    // path, so it gets the same first-class measurement (VERDICT r3 #1).
+    // It never caches runs, so repeat passes on one searcher re-run the
+    // full job — min-of-3 is load filtering, not cache warming.
     def p50of(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     // forced-distributed broadcast kernel: runs stay executor-side
     // (flatMapGroups by salt), norms read from the broadcast
@@ -235,12 +234,6 @@ object Bench {
     dist.search(BenchQueries.head, 10)
     val distLats = minPerQuery(Seq.fill(3)(
       BenchQueries.map(q => time(dist.search(q, 10))._2)))
-    // beyond-norms shuffle strategy: postings cogrouped with docstats by
-    // salt range — unbounded corpus size, nothing broadcast
-    val shuf = new Searcher(spark, Seq(out), SearchConfig(normsMaxDocs = 0))
-    shuf.search(BenchQueries.head, 10)
-    val shufLats = minPerQuery(Seq.fill(3)(
-      BenchQueries.map(q => time(shuf.search(q, 10))._2)))
 
     // batched retrieval throughput: 64 distinct two-term queries. Driver
     // regime: searchMany (ONE fetch of the batch's terms, then the driver
@@ -290,7 +283,7 @@ object Bench {
       BenchQueries.map(q => time(multi.search(q, 10))._2)))
     multi.close()
     (searcher +: (coldSearchers ++ batchColdSearchers ++
-      Seq(dist, shuf, batcher, batcherD))).foreach(_.close())
+      Seq(dist, batcher, batcherD))).foreach(_.close())
     val sentinelEndMs = spinSentinelMs()
     val sentinelEndMtMs = spinSentinelMtMs()
 
@@ -301,8 +294,6 @@ object Bench {
     base ++ Map(
       "ix_query_p50_ms_distributed" -> p50of(distLats) * 1000,
       "ix_query_max_ms_distributed" -> distLats.max * 1000,
-      "ix_query_p50_ms_shuffle" -> p50of(shufLats) * 1000,
-      "ix_query_max_ms_shuffle" -> shufLats.max * 1000,
       "ix_multisearch_p50_ms" -> p50of(multiLats) * 1000,
       // ix_batch_qps == the warm regime for round-over-round continuity
       // (the r5 record was already warm-regime under this key; r4's was

@@ -277,9 +277,9 @@ object EngineQueries {
     }),
 
     // Q8/ST + K4 at scale: base + delta segments searched by one Searcher
-    // with a mass delete-by-query on the base, across BOTH tombstone forms
-    // (a DocSet in the kernel vs the shuffle's distributed anti-join) — row per
-    // query asserting the two regimes stay rank-identical
+    // with a mass delete-by-query on the base, its tombstones a DocSet tested
+    // on the driver kernel vs on executors (the distributed kernel) — row per
+    // query asserting the two routes stay rank-identical
     "ix_multisegment_delete" -> ((s, dir) => {
       import s.implicits._
       val base = SparkEntry.indexFor(s, dir)
@@ -307,8 +307,8 @@ object EngineQueries {
       graft.index.IndexOps.deleteByQueryInPlace(s, work, "repo:src9")
       val queries = Seq("data table merge", "graftmarker", "filter join sort")
       val bc = new Searcher(s, Seq(work, delta))
-      // force the distributed-anti-join side: the docstats shuffle
-      val sh = new Searcher(s, Seq(work, delta), SearchConfig(normsMaxDocs = 0))
+      // force the executor side: the distributed kernel
+      val sh = new Searcher(s, Seq(work, delta), SearchConfig(driverKernelMaxPostings = 0))
       val rows = queries.map { q =>
         val a = bc.search(q, 10).toSeq
         val b = sh.search(q, 10).toSeq
@@ -517,8 +517,8 @@ object EngineQueries {
         |  AS t(query, rank, docId, score, matches_per_query)""".stripMargin,
 
     // multisegment base+delta+delete golden: pins hit counts, top-1 ids, and
-    // (via regimes_identical=true) the broadcast-vs-anti-join tombstone
-    // regime identity after an upsert delta and a mass delete-by-query
+    // (via regimes_identical=true) the driver-vs-executor tombstone route
+    // identity after an upsert delta and a mass delete-by-query
     "ix_multisegment_delete" ->
       """SELECT * FROM (VALUES
         |  ('data table merge', CAST(10 AS INT), CAST(389 AS BIGINT), true),

@@ -111,21 +111,6 @@ object PlanAudit {
         "so predicate pushdown can't re-inline the tokenize below the " +
         "projections.")
 
-    // round 5: the big-fq regime's filtered docstats side — the shape every
-    // fq-over-broadcast-bound query cogroups against (the docstats shuffle
-    // route with fq): QueryFilter's match set SEMI-joins docstats, nothing driver-
-    // materialized
-    val fqStats = spark.read.parquet(s"$idx/docstats")
-      .select(col("docId"), col("salt"), col("lenContent"), col("lenPath"), col("lenRepo"))
-      .join(graft.index.QueryFilter.matchingDocs(spark, idx, "lang:en OR lang:de")
-        .select(col("docId")), Seq("docId"), "left_semi")
-    dump("fq semi-join (beyond-FqMaxBroadcast regime)", fqStats,
-      "Gate: LeftSemi join of docstats against the filter-query match set " +
-        "(keyword clauses resolve as pushed docstats predicates — see " +
-        "PushedFilters on the right-side scan); no Exchange on the docstats " +
-        "side beyond what the join itself requires, and no driver " +
-        "materialization anywhere in the plan.")
-
     // round 5: exact-substring span dedup — the span-gram inverted index
     dump("q_substring_spans (exact-substring span dedup)",
       RelationalQueries.queries("q_substring_spans")(spark, sfDir),

@@ -88,9 +88,7 @@ object IndexOps {
     * with [[QueryFilter.matchingDocs]] (pushed-filter scans), write them as
     * a tombstone file straight from the DataFrame, commit. NOTHING is
     * driver-materialized. Searchers read the tombstones back as a
-    * [[DocSet]] in the broadcast regime, or anti-join them on the
-    * docstats-shuffle route ([[graft.query.SearchConfig]]`.normsMaxDocs`).
-    * Returns the new snapshot id.
+    * [[DocSet]] on every route. Returns the new snapshot id.
     */
   def deleteByQueryInPlace(spark: SparkSession, indexDir: String, query: String): Long =
     Tombstones.commitDeletesDF(spark, indexDir,

@@ -18,12 +18,12 @@ import scala.jdk.CollectionConverters._
   * tombstone data. Commit-gated like everything else: a killed delete leaves
   * the old snapshot; readers only ever see fully-committed tombstone sets.
   *
-  * Readers take them in one of two forms, by the segment's scoring route
-  * (the Searcher routes on its norms bound, never on this count):
-  *  - a [[DocSet]] ([[docSet]]; Lucene's liveDocs analog) in the broadcast
-  *    regime, tested for membership in the kernel;
-  *  - a distributed anti-join ([[exclude]]) on the docstats-shuffle route,
-  *    which treats "no docstats row" as deleted; nothing reaches the driver.
+  * Readers take them in one of two forms:
+  *  - a [[DocSet]] ([[docSet]]; Lucene's liveDocs analog) on every search
+  *    route, tested for membership in the kernel;
+  *  - a distributed anti-join ([[exclude]]) for the live-doc reads
+  *    ([[IndexOps.liveDocs]], realtime get, [[QueryFilter.matchingDocs]]);
+  *    nothing reaches the driver.
   * Space is O(deleted docs) until [[IndexOps.deleteByIds]]-style compaction
   * or [[IndexOps.mergeSegments]] rebuilds.
   */
@@ -180,7 +180,7 @@ object Tombstones {
   * are a Roaring bitmap of ONE segment's local docIds (Chambi et al., SPE
   * 2016) — the per-segment bitset Lucene keeps for liveDocs and cached
   * filters. It never exceeds ~nDocs/8 bytes, 1/24 of the 3 B/doc norm table
-  * the broadcast regime already ships. Local docIds are dense ranks below
+  * every search route already broadcasts. Local docIds are dense ranks below
   * the segment's nDocs, so they fit an Int.
   */
 object DocSet {

@@ -218,30 +218,21 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
 }
 
 /** Search thresholds, fixed for a searcher's lifetime. Each bounds one
-  * driver- or broadcast-resident structure; past it a segment routes to the
-  * strategy that keeps that data distributed. Every route is rank-identical,
-  * so a spec or bench forces a regime by setting its bound to 0:
+  * driver-resident structure; past it a segment routes to the strategy that
+  * keeps that data distributed. Every route is rank-identical, so a spec or
+  * bench forces a route by setting its bound to 0:
   *
   *  - `driverKernelMaxPostings = 0` forces the DISTRIBUTED KERNEL: a segment
   *    whose postings for the batch's distinct terms exceed the bound scores
   *    on executors instead of collecting its runs to the driver kernel, so
   *    a batch's driver memory is bounded by the batch. The bound, split evenly
-  *    across segments, also decides RESIDENCY: a non-empty segment in the
-  *    broadcast regime whose [[IndexMeta.residentBound]] (its postings bound
-  *    nDocs × Σ avgLen plus nDocs docstats rows, free from its snapshot
-  *    props) fits its share is loaded to the driver on first use: its
-  *    postings, docstats rows and tombstones, by concurrent jobs. Its dfs,
-  *    norms, tombstone set and docstats-predicate fqs then come from driver
-  *    memory with no job. What a resident segment holds never exceeds its
-  *    share of the bound.
-  *  - `normsMaxDocs = 0` forces the DOCSTATS SHUFFLE: a segment with more
-  *    docs never broadcasts its norms (1 byte/doc/field; 1 << 31 docs is
-  *    ~6 GB); its runs cogroup with docstats by salt range instead, a
-  *    distributed anti-join excludes its tombstones and the fq filters its
-  *    docstats scan. At or below it the segment is in the BROADCAST REGIME:
-  *    its tombstones and each resolved fq are a [[graft.index.DocSet]]
-  *    (~nDocs/8 bytes at most, 1/24 of its norms) that rides the kernel's
-  *    exclusion predicate.
+  *    across segments, also decides RESIDENCY: a non-empty segment whose
+  *    [[IndexMeta.residentBound]] (its postings bound nDocs × Σ avgLen plus
+  *    nDocs docstats rows, free from its snapshot props) fits its share is
+  *    loaded to the driver on first use: its postings, docstats rows and
+  *    tombstones, by concurrent jobs. Its dfs, norms, tombstone set and
+  *    docstats-predicate fqs then come from driver memory with no job. What
+  *    a resident segment holds never exceeds its share of the bound.
   *  - `dictionaryMaxDriverTerms = 0` forces per-query dictionary probes
   *    ([[DictProbe]]); below it a segment's vocabulary is collected to the
   *    driver once. The bound is global, split evenly across segments.
@@ -250,7 +241,6 @@ case class NormTable(fields: Array[String], bytes: Array[Array[Byte]]) {
   */
 case class SearchConfig(
     driverKernelMaxPostings: Long = 4L << 20,
-    normsMaxDocs: Long = 1L << 31,
     dictionaryMaxDriverTerms: Long = 1L << 22,
     dictionaryMaxCacheTerms: Int = 1 << 20)
 
@@ -270,30 +260,35 @@ case class SearchConfig(
   * like one merged index of A then B.
   *
   * Every entry point is a batch: [[search]] is a batch of one and
-  * [[searchMany]] is the batch. Per segment, one router picks the physical
-  * strategy for the whole batch (all rank-identical; EngineSpec,
-  * MultiSearcherSpec and BatchSearchSpec gate this):
+  * [[searchMany]] is the batch. Per segment, one router picks one of three
+  * physical strategies for the whole batch, by size only (all
+  * rank-identical; EngineSpec, MultiSearcherSpec and BatchSearchSpec gate
+  * this). On every route the segment's norms are one broadcast table of 1
+  * byte/doc/field, and its tombstones and the fq are
+  * [[graft.index.DocSet]]s (~nDocs/8 bytes at most) tested in the kernel.
+  * The open refuses a segment past [[IndexMeta.MaxDocs]] docs, which bounds
+  * the norm table at ~2 GB per field.
   *
-  *  - DRIVER KERNEL (default, while the segment is in the broadcast regime
-  *    and its postings for the batch's distinct terms fit
-  *    `driverKernelMaxPostings`): the union of the batch's terms is fetched
-  *    once, then [[Searcher.scoreBatch]]'s kernel scores every plan on the
-  *    driver, plans fanned over [[Searcher.kernelPool]] and sharing one
-  *    decoded-block cache per (salt, field, term); a batch of one decodes
-  *    into reused buffers instead. Norms are read from the broadcast's local
-  *    value, and tombstones and the fq are [[graft.index.DocSet]]s tested
-  *    in the kernel. A RESIDENT segment (see
-  *    [[SearchConfig]]) loads on its first query, like a Lucene reader
-  *    opening a segment's files, norms and liveDocs once: its postings and
-  *    docstats scans (plus its tombstone files, if any) run as concurrent
-  *    jobs. Every later query, new terms and new keyword, exists or `*:*`
-  *    fqs included, runs no Spark job: dfs are summed from the loaded runs,
-  *    norms and the tombstone set come from the loaded rows, and an fq
-  *    runs [[graft.index.QueryFilter.filter]] over the docstats rows as a
-  *    local relation, which Catalyst folds at optimisation time. Its memory
-  *    is at most its share of the bound and dies with the searcher. Other
-  *    segments collect each query's missing terms' runs and cache them (the
-  *    Lucene query-cache analog) — a repeat term runs no Spark job at all.
+  *  - RESIDENT DRIVER KERNEL (default, while the segment's
+  *    [[IndexMeta.residentBound]] fits its share of
+  *    `driverKernelMaxPostings`; see [[SearchConfig]]): the segment loads on
+  *    its first query, like a Lucene reader opening a segment's files, norms
+  *    and liveDocs once: its postings and docstats scans (plus its tombstone
+  *    files, if any) run as concurrent jobs. Every later query, new terms
+  *    and new keyword, exists or `*:*` fqs included, runs no Spark job: dfs
+  *    are summed from the loaded runs, norms and the tombstone set come from
+  *    the loaded rows, and an fq runs [[graft.index.QueryFilter.filter]] over
+  *    the docstats rows as a local relation, which Catalyst folds at
+  *    optimisation time. Its memory is at most its share of the bound and
+  *    dies with the searcher. [[Searcher.scoreBatch]]'s kernel scores every
+  *    plan on the driver, plans fanned over [[Searcher.kernelPool]] and
+  *    sharing one decoded-block cache per (salt, field, term); a batch of
+  *    one decodes into reused buffers instead.
+  *  - PER-TERM FETCH (a non-resident segment whose postings for the batch's
+  *    distinct terms fit `driverKernelMaxPostings`): the batch's missing
+  *    terms' runs are collected in one job and cached (the Lucene
+  *    query-cache analog), so a repeat term runs no Spark job at all; the
+  *    same driver kernel scores them with the broadcast's local norms.
   *  - DISTRIBUTED KERNEL (the batch's postings above
   *    `driverKernelMaxPostings`): ONE `scoreBatch` job per segment for the
   *    whole batch — postings scan (term filter pushed to parquet row
@@ -301,11 +296,6 @@ case class SearchConfig(
   *    kernel per salt group with broadcast norms -> per-group top-k ->
   *    driver merge; two Spark jobs per call (the shuffle's map stage, then
   *    the scoring stage).
-  *  - DOCSTATS SHUFFLE (norms beyond `normsMaxDocs`): the same `scoreBatch`
-  *    job, its runs cogrouped by salt range with the docstats scan, which
-  *    anti-joins the tombstones and applies the fq as a predicate; nothing
-  *    but the plans is broadcast, unbounded in corpus size and delete
-  *    volume.
   *
   * Queries sharing head terms share one fetch or scan, so a batch's cost
   * tracks its distinct posting volume, not its size. A batch of one plans
@@ -343,14 +333,11 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private final class Segment(val idx: Int, val dir: String, val meta: IndexMeta,
                               val offset: Long) {
-    /** Norms fit their broadcast bound ([[SearchConfig]]). */
-    val broadcastRegime: Boolean = meta.nDocs <= config.normsMaxDocs
-
-    /** Served from driver memory ([[SearchConfig]]): a non-empty
-      * broadcast-regime segment whose [[IndexMeta.residentBound]] fits its
-      * share of `driverKernelMaxPostings`.
+    /** Served from driver memory ([[SearchConfig]]): a non-empty segment
+      * whose [[IndexMeta.residentBound]] fits its share of
+      * `driverKernelMaxPostings`.
       */
-    val resident: Boolean = meta.nDocs > 0 && broadcastRegime &&
+    val resident: Boolean = meta.nDocs > 0 &&
       meta.residentBound <= config.driverKernelMaxPostings / segmentDirs.size
 
     // the postings bound also bounds the vocabulary, so a small segment's
@@ -363,7 +350,7 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
       loaded = if (resident) Some(() => residentDfs) else None)
 
     /** Tombstoned docIds broadcast once as a [[DocSet]]; kernels skip its
-      * members. Only the broadcast regime touches this.
+      * members.
       */
     lazy val tombstonesBc: Broadcast[RoaringBitmap] = track(spark.sparkContext.broadcast(
       if (resident) loaded.tombstones else Tombstones.docSet(spark, dir)))
@@ -544,11 +531,10 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     */
   private[graft] val driverRunFetches = new AtomicLong(0)
 
-  /** fq resolutions, one per new (broadcast-regime segment, fq
-    * conjunction); repeats stay cached. Each is one docstats scan job, plus
-    * the postings stages of any `content:`/`path:` clause; keyword, exists
-    * or `*:*` fqs on a resident segment run none. The docstats-shuffle route
-    * resolves none: its scan applies the fq inline.
+  /** fq resolutions, one per new (segment, fq conjunction); repeats stay
+    * cached. Each is one docstats scan job, plus the postings stages of any
+    * `content:`/`path:` clause; keyword, exists or `*:*` fqs on a resident
+    * segment run none.
     */
   private[graft] val fqResolves = new AtomicLong(0)
 
@@ -697,24 +683,17 @@ class Searcher(spark: SparkSession, segmentDirs: Seq[String],
     val keys = plans.iterator.flatMap(_.idfMap.keysIterator)
       .filter(segDfs.getOrElse(_, 0L) > 0).toSet
     if (keys.isEmpty) return Array.empty
-    // in the broadcast regime the fq's set rides the kernel's exclusion
-    // predicate with the tombstones'; the shuffle filters its docstats scan
-    val fqSet = if (fq.isEmpty || !seg.broadcastRegime) None else Some(resolveFq(seg, fq))
+    // the fq's set rides the kernel's exclusion predicate with the tombstones'
+    val fqSet = if (fq.isEmpty) None else Some(resolveFq(seg, fq))
     if (fqSet.exists(_.isEmpty)) return Array.empty
     // locals only from here on: executor closures must not capture `this`
     val fieldArr = DefaultFields.toArray
     val avgLen = globalAvgLen
     val batch = plans.length > 1
     val hits: Array[(Int, Hit)] =
-      if (!seg.broadcastRegime)
-        withBroadcast(spark, plans) { plansBc =>
-          shuffleScore(if (batch) batchQuerySession else querySession, seg.dir,
-            seg.meta.buckets, seg.filteredRuns(keys, batch), fq,
-            (rs, ql, excl) => scoreBatch(rs, plansBc.value, ql, fieldArr, avgLen, k, excl))
-        }
       // the segment's postings of the batch's distinct terms; a resident
       // segment always fits, its postings bound being within its share
-      else if (keys.iterator.map(segDfs).sum <= config.driverKernelMaxPostings) {
+      if (keys.iterator.map(segDfs).sum <= config.driverKernelMaxPostings) {
         val nt = seg.normsBc.value // local value; no broadcast needed on driver
         val quantLen = (fi: Int, d: Long) => nt.quantLen(fi, d)
         val excl = excludedFn(seg.tombstonesBc.value, fqSet)
@@ -975,49 +954,6 @@ object Searcher {
     finally { inFlightDistributed.decrementAndGet(); distributedGate.release() }
   }
 
-  /** The docstats-cogroup scoring job of the shuffle strategy:
-    * term-filtered runs cogroup BY SALT RANGE with the segment's docstats
-    * scan, from which the fq's predicate ([[graft.index.QueryFilter.filter]]
-    * folded over `fq`) and a tombstone anti-join drop rows; `score` runs
-    * once per salt group against an injected quantized-length lookup and
-    * the exclusion predicate "no surviving docstats row". Per-task memory
-    * is one salt range of docstats — corpus-size independent. STATIC so the
-    * task closure captures `score`'s locals only, never a searcher; `score`
-    * itself must capture only local vals/broadcasts.
-    */
-  private[query] def shuffleScore[T](
-      session: SparkSession, dir: String, buckets: Int,
-      runs: Dataset[PostingRun],
-      fq: Seq[String],
-      score: (Array[PostingRun], (Int, Long) => Int, Long => Boolean) => Iterator[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Array[T] = {
-    import session.implicits._
-    lazy val postings = session.read.schema(PostingsSchema).parquet(s"$dir/postings")
-    val docstats = session.read.schema(DocStatsSchema).parquet(s"$dir/docstats")
-    val stats = Tombstones.exclude(session, dir,
-        fq.foldLeft(docstats)(QueryFilter.filter(_, postings, buckets, _))
-          .select($"docId", $"salt", lengthsCol))
-      .as[(Long, Int, Array[Int])]
-    gatedJob {
-      runs.groupByKey(_.salt)
-        .cogroup(stats.groupByKey(_._2)) { case (_, runIt, statIt) =>
-          val rs = runIt.toArray
-          if (rs.isEmpty) Iterator.empty
-          else {
-            val arr = statIt.toArray
-            val ids = new mutable.HashMap[Long, Int]()
-            arr.indices.foreach(ix => ids.update(arr(ix)._1, ix))
-            def ql(fi: Int, d: Long): Int = ids.get(d) match {
-              case Some(ix) => SmallFloat.quantizeLength(arr(ix)._3(fi))
-              case None => 1 // tombstoned/filtered: excluded below
-            }
-            score(rs, ql, d => !ids.contains(d))
-          }
-        }
-        .collect()
-    }
-  }
-
   /** One salt group's runs, grouped by (field, term) once, for scoring a
     * batch's plans: each plan scores only its own terms' runs, and plans
     * sharing a term share ONE decoded-block cache per (field, term) (lazily,
@@ -1049,7 +985,7 @@ object Searcher {
   }
 
   /** Score every plan of a batch against ONE salt group's runs — the
-    * executor-side kernel of [[Searcher.searchMany]]'s distributed routes,
+    * executor side of [[Searcher.searchMany]]'s distributed kernel,
     * emitting (queryIdx, Hit). STATIC: the task closure must capture
     * plans/norm/tombstone broadcasts only, never a Searcher.
     */
@@ -1124,7 +1060,7 @@ object Searcher {
 /** The per-salt-range scoring kernel. Pure Scala over primitive arrays — the
   * idiomatic high-performance escape hatch (SURVEY.md §4). DAAT with WAND
   * threshold pruning: clauses are scored document-at-a-time; norm lookup is
-  * injected (broadcast dense table or cogrouped docstats slice).
+  * injected (a lookup into the segment's broadcast norm table).
   */
 object Kernel extends Serializable {
 

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Batched retrieval: searchMany must return EXACTLY what per-query search
   * returns — same docIds, same scores, same order — on every strategy route
-  * (driver kernel, broadcast flatMapGroups, docstats cogroup, mixed
-  * multi-segment), with tombstones, for ONE Spark job per index (or per
+  * (driver kernel, distributed flatMapGroups, mixed multi-segment), with
+  * tombstones, for ONE Spark job per index (or per
   * segment) on the executor routes. The per-query reference is a default
   * searcher (the driver kernel on these small indexes); the batched side
   * forces its route by config. Plus the backpressure gate: concurrent
@@ -61,16 +61,6 @@ class BatchSearchSpec extends AnyFunSuite {
     s.close(); d.close()
   }
 
-  test("batched distributed == per-query search (forced docstats-cogroup route)") {
-    // beyond-norms regime: nothing broadcast, cogroup only
-    val ref = new Searcher(spark, tmp)
-    val perQuery = batch.map(q => ref.search(q, 10))
-    val s = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    val batched = s.searchMany(batch, 10)
-    assertSame(batched, perQuery, "cogroup")
-    ref.close(); s.close()
-  }
-
   test("batched distributed respects tombstones on both routes") {
     // fresh copy so the shared index stays pristine
     val work = java.nio.file.Files.createTempDirectory("graftbatchdel").toString
@@ -83,9 +73,7 @@ class BatchSearchSpec extends AnyFunSuite {
     val bcast = new Searcher(spark, Seq(work), SearchConfig(driverKernelMaxPostings = 0))
     assertSame(bcast.searchMany(batch, 10), perQuery, "tombstone broadcast")
     assert(bcast.driverRunFetches.get() == 0, "the forced batch collected runs to the driver")
-    val shuf = new Searcher(spark, Seq(work), SearchConfig(normsMaxDocs = 0))
-    assertSame(shuf.searchMany(batch, 10), perQuery, "tombstone cogroup")
-    ref.close(); bcast.close(); shuf.close()
+    ref.close(); bcast.close()
   }
 
   test("multi-segment batched == per-query search across mixed strategy routes") {
@@ -109,11 +97,7 @@ class BatchSearchSpec extends AnyFunSuite {
     assert(m2.driverRunFetches.get() == 0,
       "forced-distributed batch must not collect runs to the driver")
 
-    // route 3: forced docstats cogroup per segment
-    val m3 = new Searcher(spark, Seq(segA, segB), SearchConfig(normsMaxDocs = 0))
-    assertSame(m3.searchMany(batch, 10), perQuery, "multi shuffle")
-
-    m1.close(); m2.close(); m3.close()
+    m1.close(); m2.close()
   }
 
   test("batched retrieval job count is independent of batch size") {
@@ -145,22 +129,6 @@ class BatchSearchSpec extends AnyFunSuite {
     }
     assert(residentJobs == 0, s"a resident batch ran $residentJobs Spark jobs")
     s.close(); resident.close()
-  }
-
-  test("searchMany honors the shuffle-regime router: no broadcast materialization") {
-    // mass-delete / beyond-norms regime: search() routes every query to the
-    // shuffle strategy; searchMany must follow the SAME router — the
-    // pre-fix path took the broadcast strategy unconditionally, lazily
-    // materializing the full tombstone array + norm table on the driver in
-    // exactly the regimes the bounds exist to keep distributed
-    // corpus "outgrew" broadcast norms
-    val s = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    val expected = batch.map(q => s.search(q, 10).toSeq)
-    val got = s.searchMany(batch, 10).map(_.toSeq)
-    assert(got == expected, "shuffle-regime batch must equal per-query search")
-    assert(s.liveBroadcastCount == 0,
-      "shuffle-regime batch must not materialize norm/tombstone broadcasts")
-    s.close()
   }
 
   test("concurrent distributed queries are capped by the global gate") {

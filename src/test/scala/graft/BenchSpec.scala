@@ -8,14 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("engineBench returns exactly its 20 keys, finite and non-negative") {
+  test("engineBench returns exactly its 18 keys, finite and non-negative") {
     val m = Bench.engineBench(spark, 2000)
     assert(m.keySet == Set(
       "ix_build_sec", "ix_build_docs_per_sec",
       "ix_query_p50_ms", "ix_query_max_ms", "ix_query_p50_ms_warm", "ix_query_p50_ms_fq",
       "ix_spin_sentinel_ms", "ix_spin_sentinel_mt_ms",
       "ix_query_p50_ms_distributed", "ix_query_max_ms_distributed",
-      "ix_query_p50_ms_shuffle", "ix_query_max_ms_shuffle",
       "ix_multisearch_p50_ms",
       "ix_batch_qps", "ix_batch_qps_cold", "ix_batch_qps_warm", "ix_batch_qps_distributed",
       "ix_spin_sentinel_end_ms", "ix_spin_sentinel_end_mt_ms",

@@ -1,16 +1,17 @@
 package graft
 
 import graft.corpus.CodeCorpus
-import graft.index.{DocSet, IndexBuilder, IndexConfig, Tombstones}
+import graft.index.{DocSet, IndexBuilder, IndexConfig, QueryFilter, Tombstones}
 import graft.query.{SearchConfig, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Deletes and filters are one doc-set type, [[DocSet]]: in the broadcast
-  * regime a segment's tombstones and each resolved fq ride the kernel's
-  * exclusion predicate as Roaring bitmaps of its local docIds. The docstats
-  * shuffle builds neither (it anti-joins the tombstones and filters its
-  * docstats scan with the fq), so it is the reference route here.
+/** Deletes and filters are one doc-set type, [[DocSet]]: on every route a
+  * segment's tombstones and each resolved fq ride the kernel's exclusion
+  * predicate as Roaring bitmaps of its local docIds. The reference is
+  * literal post-filtering of the full unfiltered ranking with
+  * [[QueryFilter.matchingDocs]] (an anti-join of the tombstones), which
+  * builds no DocSet.
   */
 class DocSetSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -54,19 +55,29 @@ class DocSetSpec extends AnyFunSuite {
   }
 
   test("all-docs and postings fqs with a majority delete: DocSets hit-identical on every route") {
+    val s = spark
+    import s.implicits._
     val queries = Seq("buffer", "lazy implicit", "def class import return",
       "if else match case")
-    for (dirs <- Seq(segments.take(1).map(_._1), segments.map(_._1))) {
+    for (segs <- Seq(segments.take(1), segments)) {
+      val dirs = segs.map(_._1)
       val driver = new Searcher(spark, dirs)
       val dist = new Searcher(spark, dirs, SearchConfig(driverKernelMaxPostings = 0))
-      val shuf = new Searcher(spark, dirs, SearchConfig(normsMaxDocs = 0))
-      val unfiltered = queries.map(q => shuf.search(q, 10).toSeq)
+      val offsets = segs.scanLeft(0L)(_ + _._2)
+      val full = queries.map(q => driver.search(q, offsets.last.toInt))
+      val unfiltered = full.map(_.take(10).toSeq)
       assert(unfiltered.forall(_.nonEmpty), "every query must score some survivor")
-      // the last fq reads postings: a DocSet scan job on every segment, a
-      // postings join in the shuffle's docstats scan
+      // the last fq reads postings: a DocSet scan job on every segment
       for (fq <- Seq(None, Some("*:*"), Some("content:*"), Some("NOT content:lazy"))) {
         val ctx = s"segments=${dirs.size} fq=$fq"
-        val expect = queries.map(q => shuf.search(q, 10, fq = fq).toSeq)
+        val expect = fq.fold(unfiltered) { f =>
+          // each segment's matching local ids, re-based by its offset
+          val ok = dirs.zip(offsets).flatMap { case (dir, off) =>
+            QueryFilter.matchingDocs(spark, dir, f).select($"docId").as[Long].collect()
+              .map(_ + off)
+          }.toSet
+          full.map(_.filter(h => ok(h.docId)).take(10).toSeq)
+        }
         // an fq matching every doc filters nothing
         if (!fq.exists(_.startsWith("NOT"))) assert(expect == unfiltered, ctx)
         assert(queries.map(q => driver.search(q, 10, fq = fq).toSeq) == expect, s"driver $ctx")
@@ -78,14 +89,12 @@ class DocSetSpec extends AnyFunSuite {
         val (_, local) = driver.locate(h.docId)
         assert(local % 3 == 0, s"deleted doc $local of a segment scored for '$q'")
       }
-      // each broadcast-regime route resolved the three fqs on every segment
-      // to a DocSet; the shuffle route resolved none
+      // each route resolved the three fqs on every segment to a DocSet
       assert(driver.fqResolves.get() == 3 * dirs.size)
       assert(dist.fqResolves.get() == 3 * dirs.size)
-      assert(shuf.fqResolves.get() == 0)
       assert(driver.residentSegments == dirs.indices, "the default searcher is resident")
       assert(dist.driverRunFetches.get() == 0, "the forced kernel collected runs to the driver")
-      driver.close(); dist.close(); shuf.close()
+      driver.close(); dist.close()
     }
   }
 }

@@ -177,15 +177,6 @@ class EngineSpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
-  test("NormsMaxDocs=0 auto-routes to the shuffle strategy, identical answers") {
-    meta // force the index build
-    // corpus "too big" for broadcast norms
-    val big = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    Seq("buffer", "parse merge", "binary search tree implementation").foreach { q =>
-      assert(big.search(q, 10).toSeq == searcher.search(q, 10).toSeq, s"[$q]")
-    }
-  }
-
   test("per-row content sha256 integrity: docstats sha == sha256(source content)") {
     import spark.implicits._
     val stats = spark.read.parquet(s"$tmp/docstats").select("sha").as[String].collect().toSet
@@ -216,22 +207,26 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("all three physical strategies are rank-identical") {
-    // the default config runs the driver-local kernel here; each forced
-    // config pins one other route
+    // the default config runs the resident driver kernel here; each forced
+    // config pins one other route: a bound just below the resident bound
+    // (above any query's postings) keeps per-term fetches, 0 the
+    // distributed kernel
+    val fetched = new Searcher(spark, Seq(tmp),
+      SearchConfig(driverKernelMaxPostings = meta.residentBound - 1))
     val grouped = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
-    val shuffle = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     queries.foreach { case (q, k) =>
-      val a = searcher.search(q, k).toSeq // driver-local kernel
-      val a2 = grouped.search(q, k).toSeq // distributed grouped kernel
-      val b = shuffle.search(q, k).toSeq // docstats cogroup
-      assert(a == b, s"[$q] driver-kernel vs shuffle")
-      assert(a2 == b, s"[$q] grouped-broadcast vs shuffle")
+      val a = searcher.search(q, k).toSeq // resident driver kernel
+      val b = fetched.search(q, k).toSeq // per-term fetch, driver kernel
+      val c = grouped.search(q, k).toSeq // distributed grouped kernel
+      assert(a == b, s"[$q] resident vs per-term fetch")
+      assert(a == c, s"[$q] resident vs grouped-broadcast")
     }
+    assert(searcher.residentSegments == Seq(0) && fetched.residentSegments.isEmpty)
     assert(searcher.driverRunFetches.get() > 0, "default config must use the driver kernel")
-    assert(grouped.driverRunFetches.get() == 0 && shuffle.driverRunFetches.get() == 0,
-      "forced routes must not collect runs to the driver")
-    assert(shuffle.liveBroadcastCount == 0, "the shuffle route broadcasts nothing")
-    grouped.close(); shuffle.close()
+    assert(fetched.driverRunFetches.get() > 0, "per-term fetches collect runs to the driver")
+    assert(grouped.driverRunFetches.get() == 0,
+      "the forced distributed kernel must not collect runs to the driver")
+    fetched.close(); grouped.close()
   }
 
   test("mm gates multi-term matches") {

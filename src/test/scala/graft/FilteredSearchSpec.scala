@@ -18,9 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * unfiltered ranking (k = corpus size), intersected with
   * [[QueryFilter.matchingDocs]], first k taken. The engine must reproduce it
   * bit-for-bit on every strategy route — driver kernel and forced-distributed
-  * flatMapGroups (the fq as a DocSet in the kernel), forced docstats-cogroup
-  * (the fq as a predicate on its docstats scan) — with tombstones, batched,
-  * and across segments.
+  * flatMapGroups, the fq a DocSet in the kernel on both — with tombstones,
+  * batched, and across segments.
   */
 class FilteredSearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -73,35 +72,17 @@ class FilteredSearchSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("fq identical on the forced-distributed and cogroup routes") {
+  test("fq identical on the forced-distributed route") {
     val base = new Searcher(spark, tmp)
     val dist = new Searcher(spark, Seq(tmp), SearchConfig(driverKernelMaxPostings = 0))
-    // the fq as a predicate on the docstats shuffle's scan
-    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
     // distributed routes cost a Spark job per (q, fq): two queries spanning
     // head-term and multi-term mm shapes x three fq grammar shapes keep the
     // route-identity gate while bounding suite wall time
     for (q <- queries.take(2); f <- fqs.take(3)) {
       val expect = base.search(q, 10, fq = Some(f)).toSeq
       assert(dist.search(q, 10, fq = Some(f)).toSeq == expect, s"dist q='$q' fq='$f'")
-      assert(shuf.search(q, 10, fq = Some(f)).toSeq == expect, s"shuf q='$q' fq='$f'")
     }
-    base.close(); dist.close(); shuf.close()
-  }
-
-  test("the shuffle route's inline fq predicate == the kernel's fq DocSet") {
-    // every fq filters the docstats shuffle's scan
-    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    val bc = new Searcher(spark, tmp)
-    for (q <- queries.take(2); f <- fqs.take(3)) {
-      assert(shuf.search(q, 10, fq = Some(f)).toSeq ==
-        bc.search(q, 10, fq = Some(f)).toSeq, s"q='$q' fq='$f'")
-    }
-    // the broadcast regime resolves one set per distinct fq; the shuffle
-    // route resolves none
-    assert(bc.fqResolves.get() == 3, s"expected 3 fq sets, got ${bc.fqResolves.get()}")
-    assert(shuf.fqResolves.get() == 0, "the shuffle route must not resolve a set")
-    shuf.close(); bc.close()
+    base.close(); dist.close()
   }
 
   test("fq matching nothing returns empty; fq fills k from matching docs only") {
@@ -122,14 +103,15 @@ class FilteredSearchSpec extends AnyFunSuite {
       new java.io.File(tmp), new java.io.File(work))
     graft.index.IndexOps.deleteByQueryInPlace(spark, work, "repo:repo-0001")
     val s = new Searcher(spark, work)
-    val shuf = new Searcher(spark, Seq(work), SearchConfig(normsMaxDocs = 0))
+    // the tombstone and fq DocSets tested on executors
+    val dist = new Searcher(spark, Seq(work), SearchConfig(driverKernelMaxPostings = 0))
     for (f <- Seq("lang:scala OR lang:java", "lang:c OR repo:repo-0001")) {
       val ok = allowed(work, f) // matchingDocs already excludes tombstones
       val expect = reference(s, "buffer", 10, ok)
-      assert(s.search("buffer", 10, fq = Some(f)).toSeq == expect, s"bcast fq='$f'")
-      assert(shuf.search("buffer", 10, fq = Some(f)).toSeq == expect, s"shuf fq='$f'")
+      assert(s.search("buffer", 10, fq = Some(f)).toSeq == expect, s"driver fq='$f'")
+      assert(dist.search("buffer", 10, fq = Some(f)).toSeq == expect, s"dist fq='$f'")
     }
-    s.close(); shuf.close()
+    s.close(); dist.close()
   }
 
   test("fq resolution is cached: repeat fqs cost zero extra jobs") {
@@ -160,10 +142,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(s.fqResolves.get() == 1)
     val ok = allowed(tmp, f.get)
     assert(hits.toSeq == reference(s, "buffer", 10, ok))
-    // the shuffle route returns the same hits from its inline predicate
-    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    assert(shuf.search("buffer", 10, fq = f).toSeq == hits.toSeq)
-    s.close(); shuf.close()
+    s.close()
   }
 
   test("a new keyword fq on a resident segment runs no job") {
@@ -190,10 +169,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(bcast.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery,
       "broadcast-norm job")
     assert(bcast.driverRunFetches.get() == 0, "the forced batch collected runs to the driver")
-    val dist = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    assert(dist.searchMany(queries, 10, fq = f).map(_.toSeq) == perQuery,
-      "docstats cogroup job")
-    s.close(); bcast.close(); dist.close()
+    s.close(); bcast.close()
   }
 
   test("multi-fq conjunction == literal double post-filtering on every regime") {
@@ -210,15 +186,6 @@ class FilteredSearchSpec extends AnyFunSuite {
       // canonical composite key: order must not matter
       assert(s.search(q, 10, s.DefaultFields, Seq(f2, f1)).toSeq == expect,
         s"order-independence q='$q'")
-    }
-    // the shuffle route folds both components into its docstats scan's
-    // predicate: same bits as the kernel's conjunction DocSet
-    val shuf = new Searcher(spark, Seq(tmp), SearchConfig(normsMaxDocs = 0))
-    for (q <- queries.take(2)) {
-      val ok = allowed(tmp, "repo:repo-0003").intersect(allowed(tmp, "NOT lang:md"))
-      val expect = reference(s, q, 10, ok)
-      assert(shuf.search(q, 10, shuf.DefaultFields,
-        Seq("repo:repo-0003", "NOT lang:md")).toSeq == expect, s"shuffle q='$q'")
     }
     // a NEW composite is one resolution of one conjunction, and runs no
     // Spark job on a resident segment
@@ -245,7 +212,7 @@ class FilteredSearchSpec extends AnyFunSuite {
     val m = new Searcher(spark, Seq(tmp))
     assert(queries.take(2).map(q =>
       m.search(q, 10, m.DefaultFields, fseq).toSeq) == perQ.take(2), "multi")
-    m.close(); s.close(); shuf.close()
+    m.close(); s.close()
   }
 
   test("multi-segment fq: per-segment evaluation equals the merged-index filter") {
@@ -271,10 +238,8 @@ class FilteredSearchSpec extends AnyFunSuite {
     val expect = queries.map(q => m.search(q, 10, fq = f).toSeq)
     val m2 = new Searcher(spark, Seq(segA, segB), SearchConfig(driverKernelMaxPostings = 0))
     assert(queries.map(q => m2.search(q, 10, fq = f).toSeq) == expect, "multi dist")
-    val m3 = new Searcher(spark, Seq(segA, segB), SearchConfig(normsMaxDocs = 0))
-    assert(queries.map(q => m3.search(q, 10, fq = f).toSeq) == expect, "multi shuffle")
     assert(m.searchMany(queries, 10, fq = f).map(_.toSeq) == expect,
       "multi batched")
-    m.close(); m2.close(); m3.close()
+    m.close(); m2.close()
   }
 }

@@ -238,7 +238,7 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(searcher0.search("buffer", 10).toSeq == before.toSeq)
   }
 
-  test("mass delete-by-query: distributed tombstones, shuffle route identical, no driver set") {
+  test("mass delete-by-query: distributed tombstones, executor route identical, no driver set") {
     meta
     val dir = java.nio.file.Files.createTempDirectory("graftmass").toString
     IndexBuilder.build(spark, docs, dir, cfg)
@@ -254,15 +254,15 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(graft.index.Tombstones.count(dir) == nRepo,
       "snapshot carries the committed tombstone count")
 
-    // broadcast-regime searcher (the tombstones ride the kernel as a DocSet)
+    // the tombstones ride the kernel as a DocSet, tested on the driver
     val sBc = new graft.query.Searcher(spark, dir)
     val bcHits = sBc.search("buffer", 10)
-    // normsMaxDocs=0 routes search() to the shuffle strategy, where
-    // exclusion is a distributed anti-join
+    // driverKernelMaxPostings=0 routes search() to the distributed kernel,
+    // where the DocSet is tested on executors
     val sSh = new graft.query.Searcher(spark, Seq(dir),
-      graft.query.SearchConfig(normsMaxDocs = 0))
+      graft.query.SearchConfig(driverKernelMaxPostings = 0))
     val shHits = sSh.search("buffer", 10)
-    assert(bcHits.toSeq == shHits.toSeq, "both delete regimes rank-identical")
+    assert(bcHits.toSeq == shHits.toSeq, "both routes rank-identical")
     val deletedIds = spark.read.parquet(s"$dir/docstats")
       .filter(org.apache.spark.sql.functions.col("repo") === repo)
       .select("docId").as[Long].collect().toSet

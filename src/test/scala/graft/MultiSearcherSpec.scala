@@ -126,13 +126,6 @@ class MultiSearcherSpec extends AnyFunSuite {
     assert(gotDist == expected, "distributed-kernel hits differ")
     assert(dist.driverRunFetches.get() == 0,
       "forced-distributed path collected posting runs to the driver")
-
-    // force the beyond-norms branch: docstats cogroup, norms never built
-    val shuf = new Searcher(spark, Seq(segADir, segBDir), SearchConfig(normsMaxDocs = 0))
-    val gotShuf = queries.map(q => shuf.search(q, 10).toSeq)
-    assert(gotShuf == expected, "shuffle-cogroup hits differ")
-    assert(shuf.driverRunFetches.get() == 0 && shuf.normBuilds.get() == 0,
-      "shuffle path must touch neither driver runs nor dense norms")
   }
 
   test("searchMany: batched results identical to per-query search, in order") {

@@ -6,7 +6,7 @@ import graft.index.{IndexBuilder, IndexConfig, IndexMeta}
 import graft.query.{SearchConfig, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Resident segments: a broadcast-regime segment whose resident bound
+/** Resident segments: a non-empty segment whose resident bound
   * (postings bound nDocs × Σ avgLen, plus nDocs docstats rows) fits its
   * share of `driverKernelMaxPostings` loads its postings and docstats by
   * concurrent jobs on its first query and answers every later query with no

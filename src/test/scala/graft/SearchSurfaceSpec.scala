@@ -30,10 +30,9 @@ class SearchSurfaceSpec extends AnyFunSuite {
       "searchManyDistributed(Seq, int, Seq, Option)"))
   }
 
-  test("SearchConfig has exactly its four route bounds") {
+  test("SearchConfig has exactly its three route bounds") {
     assert(SearchConfig().productElementNames.toSeq == Seq(
-      "driverKernelMaxPostings", "normsMaxDocs", "dictionaryMaxDriverTerms",
-      "dictionaryMaxCacheTerms"))
+      "driverKernelMaxPostings", "dictionaryMaxDriverTerms", "dictionaryMaxCacheTerms"))
   }
 
   test("IndexConfig has exactly its six build knobs") {
