@@ -306,12 +306,12 @@ object EngineQueries {
       // mass delete on the base: drop one whole source
       graft.index.IndexOps.deleteByQueryInPlace(s, work, "repo:src9")
       val queries = Seq("data table merge", "graftmarker", "filter join sort")
-      val bc = new Searcher(s, Seq(work, delta))
+      val driver = new Searcher(s, Seq(work, delta))
       // force the executor side: the distributed kernel
-      val sh = new Searcher(s, Seq(work, delta), SearchConfig(driverKernelMaxPostings = 0))
+      val dist = new Searcher(s, Seq(work, delta), SearchConfig(driverKernelMaxPostings = 0))
       val rows = queries.map { q =>
-        val a = bc.search(q, 10).toSeq
-        val b = sh.search(q, 10).toSeq
+        val a = driver.search(q, 10).toSeq
+        val b = dist.search(q, 10).toSeq
         (q, a.length, a.headOption.map(_.docId).getOrElse(-1L), a == b)
       }
       rows.toDF("query", "hits", "top1", "regimes_identical").orderBy(col("query"))
